@@ -20,6 +20,41 @@ Differences from the reference, all documented in SURVEY.md:
   ``MatchError`` (``:117-146``).
 - **Cache lifecycle**: the split point is cached (as the reference does,
   ``:65``) and unpersisted after all sinks are written.
+
+Streaming dataflows drain with ``availableNow`` ``foreachBatch``
+queries into the batch sink writers, on one of two paths chosen from
+the spec (:func:`fans_out`):
+
+- **Row-local flows run as one query.** When every source streams,
+  every step is row-local
+  (``add_fields``, ``validate_fields`` without a ``unique`` rule,
+  ``filter``, ``select``, ``drop``, ``rename``) and no sink is an upsert
+  state table, one query drains the union of the sources, each row
+  tagged with its source. Each micro-batch goes through the ordinary
+  batch path: the same node builder runs on the micro-batch (per-source
+  nodes are sliced back out by tag), the validation split is cached
+  once, every sink is written from that cache, and the cache is
+  released before the callback returns. This is the reference's
+  read-once, cache, write-everywhere pattern (``:64-65``) applied per
+  micro-batch. Before the query starts, Spark's streaming-support check
+  runs on each sink's streaming plan, so a stream-only error (a
+  non-time window in an ``add_fields`` expression) still raises. A
+  ``SinkLedger`` under the checkpoint makes a replayed micro-batch skip
+  the sinks that already hold it.
+- **Stateful flows run one query per sink** (``foreach_batch_sink``):
+  watermark + aggregate, dedup, join, window, topk, sort, limit, sql,
+  a ``unique`` rule, or an upsert sink (it merges into a state table),
+  and flows that mix streaming and batch sources. These need streaming
+  state or a streaming-only analysis check, and per-micro-batch batch
+  semantics would silently change their answers.
+
+Every streaming sink must be append-only, and all of them are checked
+before any query starts. The one-query path keeps its checkpoint where
+the first sink's per-sink checkpoint lives,
+``<sinks[0].paths[0]>/<sinks[0].name>.checkpoint``, so single-sink
+flows resume from their existing checkpoint. A multi-sink row-local
+flow used to keep one checkpoint per sink; those of sinks 2..n are no
+longer read, and the first sink's checkpoint governs the whole flow.
 """
 
 from __future__ import annotations
@@ -29,7 +64,13 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_kafka_airflow_pipeline_spark.io.sinks import write_sink
+from spark_kafka_airflow_pipeline_spark.io import sinks as io_sinks
+from spark_kafka_airflow_pipeline_spark.io.sinks import (
+    SinkLedger,
+    check_append_only,
+    start_foreach_batch,
+    write_sink,
+)
 from spark_kafka_airflow_pipeline_spark.io.sources import read_source, read_sources_union
 from spark_kafka_airflow_pipeline_spark.metadata import (
     Dataflow,
@@ -42,6 +83,39 @@ from spark_kafka_airflow_pipeline_spark.transforms.validate_fields import (
 )
 
 log = logging.getLogger(__name__)
+
+#: Step types whose every output row depends on one input row.
+ROW_LOCAL_STEPS = frozenset(
+    {"add_fields", "validate_fields", "filter", "select", "drop", "rename"})
+#: Column carrying each row's source name in a fanned-out stream.
+SOURCE_TAG = "__source__"
+
+
+def fans_out(flow: Dataflow) -> bool:
+    """True when a streaming dataflow drains as ONE query whose
+    micro-batches are fanned out to every sink: it has sinks, every
+    source streams, every step is row-local, no validation is the
+    dataset-level ``unique`` rule and no sink is an upsert state table."""
+    return (bool(flow.sinks) and all(s.streaming for s in flow.sources)
+            and all(t.type in ROW_LOCAL_STEPS
+                    and not any("unique" in v.validations
+                                for v in t.params.validations)
+                    for t in flow.transformations)
+            and all(s.format.lower() != "upsert" for s in flow.sinks))
+
+
+def _check_streamable(spark: SparkSession, df: DataFrame) -> None:
+    """Run Spark's streaming-support check on a streaming node's plan.
+
+    A fanned-out flow applies its steps to batch micro-batch frames,
+    where Spark would not check them, so an operation a stream cannot
+    run (a non-time window function in an ``add_fields`` expression,
+    say) must raise here, with Spark's own error, rather than be
+    computed per micro-batch."""
+    jvm = spark._jvm
+    jvm.org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker \
+        .checkForStreaming(df._jdf.queryExecution().analyzed(),
+                           jvm.org.apache.spark.sql.streaming.OutputMode.Append())
 
 
 class PipelineExecutor:
@@ -73,38 +147,27 @@ class PipelineExecutor:
         return {df.name: self.run_dataflow(df) for df in metadata.dataflows}
 
     def run_dataflow(self, flow: Dataflow) -> dict[str, DataFrame]:
-        nodes, cached = self._build(flow)
+        one_query = fans_out(flow)
+        frames, stream = self._read(
+            flow, SOURCE_TAG if one_query and len(flow.sources) > 1 else None)
+        nodes, cached = self._build(flow, frames)
         try:
+            # every sink is checked before any is written, so a bad one
+            # leaves no partial output or checkpoint behind
             for sink in flow.sinks:
                 if sink.input not in nodes:
                     raise KeyError(
                         f"sink of dataflow {flow.name!r} references unknown node "
                         f"{sink.input!r}; known nodes: {sorted(nodes)}")
-                out = nodes[sink.input]
-                if out.isStreaming:
-                    # streaming dataflow: drain what the source has via
-                    # foreachBatch into the same batch sink writers
-                    # (availableNow = bounded run; a service deployment
-                    # would start() and keep the query handle instead).
-                    # Checkpoint lives beside the sink output.
-                    from spark_kafka_airflow_pipeline_spark.io.sinks import (
-                        foreach_batch_sink,
-                    )
-
-                    q = foreach_batch_sink(
-                        out, sink,
-                        checkpoint=f"{sink.paths[0]}/{sink.name}.checkpoint",
-                        available_now=True)
-                    q.awaitTermination()
-                elif self.observe_metrics:
-                    from pyspark.sql import Observation
-
-                    obs = Observation(f"{flow.name}/{sink.input}/{sink.name}")
-                    write_sink(out.observe(
-                        obs, F.count(F.lit(1)).alias("rows")), sink)
-                    self.sink_metrics[(flow.name, sink.input, sink.name)] = obs.get
-                else:
-                    write_sink(out, sink)
+                if nodes[sink.input].isStreaming:
+                    check_append_only(sink)
+                if one_query:
+                    _check_streamable(self.spark, nodes[sink.input])
+            if one_query:
+                self._drain_fanned_out(flow, stream, frames)
+            else:
+                for sink in flow.sinks:
+                    self._write(flow, sink, nodes[sink.input])
         finally:
             # cached frames are tracked explicitly at _apply time: the
             # split point caches its internal ANNOTATED parent, whose
@@ -119,21 +182,88 @@ class PipelineExecutor:
         """Materialize the node registry without writing sinks. NB: any
         split-point cache stays alive — callers that never write sinks
         manage (or accept) that lifecycle themselves."""
-        return self._build(flow)[0]
+        return self._build(flow, self._read(flow)[0])[0]
 
-    def _build(self, flow: Dataflow) -> tuple[dict[str, DataFrame], list[DataFrame]]:
-        nodes: dict[str, DataFrame] = {}
+    def _read(self, flow: Dataflow, tag: str | None = None
+              ) -> tuple[dict[str, DataFrame], DataFrame]:
+        """``({source name: frame, "__sources__": union}, union)``; with
+        ``tag``, the second union carries each row's source name in that
+        column while ``__sources__`` stays the untagged union."""
+        frames = {s.name: read_source(self.spark, s) for s in flow.sources}
+        union_all = read_sources_union(self.spark, flow.sources, tag=tag)
+        frames["__sources__"] = union_all if tag is None else union_all.drop(tag)
+        return frames, union_all
+
+    def _build(self, flow: Dataflow, frames: dict[str, DataFrame]
+               ) -> tuple[dict[str, DataFrame], list[DataFrame]]:
+        """Apply the flow's transformations to ``frames`` (one frame per
+        source name plus ``__sources__``, their union): the batch run,
+        the streaming node registry and each fanned-out micro-batch all
+        build their nodes here."""
+        nodes = dict(frames)
         cached: list[DataFrame] = []
-        for source in flow.sources:
-            nodes[source.name] = read_source(self.spark, source)
         source_names = {s.name for s in flow.sources}
-        union_all = read_sources_union(self.spark, flow.sources)
-        nodes["__sources__"] = union_all
-
         for t in flow.transformations:
             upstream = self._resolve_input(t, nodes, source_names)
             self._apply(t, upstream, nodes, cached)
         return nodes, cached
+
+    # -- sinks ----------------------------------------------------------
+
+    def _write(self, flow: Dataflow, sink, out: DataFrame) -> None:
+        """Write one sink: batch, observed batch, or (stateful streaming
+        flows) its own ``foreachBatch`` query."""
+        if out.isStreaming:
+            # checkpoint lives beside the sink output; availableNow =
+            # bounded run (a service deployment would start() and keep
+            # the query handle instead)
+            io_sinks.foreach_batch_sink(
+                out, sink, checkpoint=f"{sink.paths[0]}/{sink.name}.checkpoint",
+                available_now=True).awaitTermination()
+        elif self.observe_metrics:
+            from pyspark.sql import Observation
+
+            obs = Observation(f"{flow.name}/{sink.input}/{sink.name}")
+            write_sink(out.observe(obs, F.count(F.lit(1)).alias("rows")), sink)
+            self.sink_metrics[(flow.name, sink.input, sink.name)] = obs.get
+        else:
+            write_sink(out, sink)
+
+    def _drain_fanned_out(self, flow: Dataflow, stream: DataFrame,
+                          frames: dict[str, DataFrame]) -> None:
+        """Drain a row-local streaming flow as one query over ``stream``
+        (the sources' union, tagged when there are several): each
+        micro-batch runs the batch path and writes every sink."""
+        first = flow.sinks[0]
+        checkpoint = f"{first.paths[0]}/{first.name}.checkpoint"
+        ledger = SinkLedger(self.spark, f"{checkpoint}/sinks")
+        schemas = {s.name: frames[s.name].schema for s in flow.sources}
+
+        def write_batch(batch: DataFrame, batch_id: int) -> None:
+            ledger.start(batch_id)
+            if len(schemas) > 1:
+                slices = {"__sources__": batch.drop(SOURCE_TAG)}
+                for name, schema in schemas.items():
+                    # the union may have widened a column's type; cast
+                    # back to the source's own schema
+                    slices[name] = batch.filter(F.col(SOURCE_TAG) == name).select(
+                        *[F.col(f.name).cast(f.dataType).alias(f.name)
+                          for f in schema])
+            else:
+                slices = dict.fromkeys([*schemas, "__sources__"], batch)
+            nodes, cached = self._build(flow, slices)
+            try:
+                for i, sink in enumerate(flow.sinks):
+                    key = f"{i}-{sink.name}"
+                    if not ledger.holds(batch_id, key):
+                        write_sink(nodes[sink.input], sink)
+                        ledger.record(batch_id, key)
+            finally:
+                for df in cached:
+                    df.unpersist()
+
+        start_foreach_batch(stream, write_batch, checkpoint,
+                            available_now=True).awaitTermination()
 
     # -- internals ----------------------------------------------------
 
@@ -166,8 +296,10 @@ class PipelineExecutor:
         if kind == "add_fields":
             nodes[t.name] = add_fields(df, t.params.addFields)
         elif kind == "validate_fields":
-            # streaming frames cannot cache; the split re-evaluates per
-            # micro-batch instead (bounded work per batch)
+            # a streaming frame is only planned here: its rows are
+            # split per micro-batch, either on the batch path of a
+            # fanned-out flow (where the split caches) or inside a
+            # stateful flow's per-sink query
             ok, ko, cached_parent = validate_fields_split(
                 df, t.params.validations, cache=not df.isStreaming)
             if cached_parent is not None:

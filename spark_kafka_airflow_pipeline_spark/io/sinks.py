@@ -137,29 +137,19 @@ def write_stream_to_kafka(df: DataFrame, bootstrap_servers: str, topic: str,
             .start())
 
 
-def foreach_batch_sink(df: DataFrame, sink: Sink, checkpoint: str,
-                       available_now: bool = False):
-    """Streaming wrapper that reuses the batch ``write_sink`` per
-    micro-batch — the idiomatic way to stream into any batch-only
-    format. ``available_now=True`` drains everything currently in the
-    source and stops (bounded backfill / test runs); the default runs
-    continuously.
+def check_append_only(sink: Sink) -> None:
+    """Reject a sink that is unsafe to write once per micro-batch.
 
     Only ``saveMode: append`` is accepted: each micro-batch issues one
     batch write, so an OVERWRITE sink would clobber every previous
-    batch's output — silent data loss on any multi-batch stream. A
-    non-append mode raises up front rather than at the Nth micro-batch.
-
-    Exactly-once note: the checkpoint records which source files/offsets
-    were already processed, so a RERUN against the same checkpoint
-    skips everything previously seen (no duplicate appends) — delete
-    the checkpoint directory to reprocess from scratch.
-    """
+    batch's output — silent data loss on any multi-batch stream. The
+    upsert sink is exempt: each micro-batch MERGES into its state (its
+    overwrite IS the merge), so it is multi-batch-safe by construction
+    whatever the declared saveMode. Callers check every sink of a
+    dataflow before starting any query, so a bad sink leaves no partial
+    output or checkpoint behind."""
     if (sink.saveMode.lower() != "append"
             and sink.format.lower() != "upsert"):
-        # the upsert sink is exempt: each micro-batch MERGES into state
-        # (its overwrite IS the merge), so it is multi-batch-safe by
-        # construction regardless of the declared saveMode
         raise ValueError(
             f"streaming sink {sink.name!r} has saveMode "
             f"{sink.saveMode!r}: foreachBatch re-runs the batch writer "
@@ -167,11 +157,74 @@ def foreach_batch_sink(df: DataFrame, sink: Sink, checkpoint: str,
             "clobber previous batches). Declare the sink as append, or "
             "run the dataflow as batch.")
 
-    def _write(batch_df: DataFrame, _batch_id: int) -> None:
-        write_sink(batch_df, sink)
 
-    writer = (df.writeStream.foreachBatch(_write)
+class SinkLedger:
+    """Which sinks already hold a micro-batch, for a query that writes
+    several sinks from one ``foreachBatch`` callback.
+
+    When sink *k* fails, Spark replays the whole batch on restart, and
+    sinks 1..k-1 would append it a second time. The callback records
+    each ``(batch_id, sink)`` after its write and skips recorded ones.
+    Records are empty marker files ``<root>/<batch_id>/<key>`` on the
+    checkpoint's Hadoop file system. Spark starts batch N+1 only after
+    committing batch N, so ``start(N + 1)`` drops batch N's markers and
+    at most one batch's markers stay on disk."""
+
+    def __init__(self, spark, root: str):
+        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self._root = root
+        self._fs = self._path(root).getFileSystem(
+            spark._jsc.hadoopConfiguration())
+
+    def _marker(self, batch_id: int, key: str | None = None):
+        return self._path(f"{self._root}/{batch_id}"
+                          + ("" if key is None else f"/{key}"))
+
+    def start(self, batch_id: int) -> None:
+        self._fs.delete(self._marker(batch_id - 1), True)
+
+    def holds(self, batch_id: int, key: str) -> bool:
+        return self._fs.exists(self._marker(batch_id, key))
+
+    def record(self, batch_id: int, key: str) -> None:
+        self._fs.create(self._marker(batch_id, key), True).close()
+
+
+def start_foreach_batch(df: DataFrame, write_batch, checkpoint: str,
+                        available_now: bool = False):
+    """Start a ``foreachBatch`` query calling ``write_batch(frame,
+    batch_id)`` per micro-batch. ``available_now=True`` drains everything
+    currently in the source and stops (bounded backfill / test runs);
+    the default runs continuously.
+
+    Exactly-once note: the checkpoint records which source files/offsets
+    were already processed, so a RERUN against the same checkpoint
+    skips everything previously seen (no duplicate appends) — delete
+    the checkpoint directory to reprocess from scratch.
+    """
+    writer = (df.writeStream.foreachBatch(write_batch)
               .option("checkpointLocation", checkpoint))
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
+
+
+def foreach_batch_sink(df: DataFrame, sink: Sink, checkpoint: str,
+                       available_now: bool = False):
+    """One streaming query that reuses the batch ``write_sink`` per
+    micro-batch — the idiomatic way to stream into any batch-only
+    format. The executor uses it, one query per sink, only for
+    dataflows with stateful steps (watermark + aggregate, dedup, join,
+    ...) or an upsert sink; a row-local streaming dataflow drains as one
+    query fanned out to every sink (``executor.fans_out``).
+
+    The sink must pass :func:`check_append_only`; see
+    :func:`start_foreach_batch` for ``available_now`` and the
+    checkpoint's exactly-once contract.
+    """
+    check_append_only(sink)
+
+    def _write(batch_df: DataFrame, _batch_id: int) -> None:
+        write_sink(batch_df, sink)
+
+    return start_foreach_batch(df, _write, checkpoint, available_now)

@@ -21,6 +21,7 @@ from collections.abc import Iterable
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.metadata import Source
 
@@ -45,10 +46,17 @@ def read_source(spark: SparkSession, source: Source) -> DataFrame:
     return reader.load(source.path)
 
 
-def read_sources_union(spark: SparkSession, sources: Iterable[Source]) -> DataFrame:
+def read_sources_union(spark: SparkSession, sources: Iterable[Source],
+                       tag: str | None = None) -> DataFrame:
     """Read every source and fold into one frame (``:106-113``),
-    by-name with missing-column tolerance instead of positional."""
-    frames = [read_source(spark, s) for s in sources]
+    by-name with missing-column tolerance instead of positional.
+
+    With ``tag``, each row also carries its source's name in a column
+    of that name, so per-source frames can be sliced back out of the
+    union (the executor's one-query streaming drain)."""
+    frames = [read_source(spark, s) if tag is None else
+              read_source(spark, s).withColumn(tag, F.lit(s.name))
+              for s in sources]
     if not frames:
         raise ValueError("dataflow has no sources")
     return reduce(
@@ -67,8 +75,6 @@ def parse_kafka_records(records: DataFrame, value_schema: str) -> DataFrame:
     real ``format("kafka")`` source produces — Catalyst sees the same
     expressions either way.
     """
-    from pyspark.sql import functions as F
-
     return records.select(
         F.col("key").cast("string").alias("key"),
         F.from_json(F.col("value").cast("string"), value_schema).alias("v"),

@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from spark_kafka_airflow_pipeline_spark import (
     AddField,
@@ -572,6 +573,35 @@ def test_user_analytics_example_pipeline(spark, tmp_path):
     assert out, "sink wrote no files"
 
 
+class _StartedQueries(StreamingQueryListener):
+    """Counts the streaming queries started while it is registered."""
+
+    def __init__(self):
+        self.started = 0
+
+    def onQueryStarted(self, event):
+        self.started += 1
+
+    def onQueryProgress(self, event):
+        pass
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        pass
+
+
+def _write_json(path, rows):
+    path.parent.mkdir(parents=True, exist_ok=True)
+    path.write_text("\n".join(json.dumps(r) for r in rows))
+
+
+def _rows(df):
+    """A frame's rows as a sorted list, column-order-insensitive."""
+    return sorted(repr(sorted(r.asDict().items())) for r in df.collect())
+
+
 def test_streaming_dataflow_matches_batch(spark, tmp_path):
     """The same metadata with streaming:true on the source must produce
     the same sink contents as the batch run — transformations are
@@ -612,6 +642,72 @@ def test_streaming_dataflow_matches_batch(spark, tmp_path):
     assert sorted(r["name"] for r in ko.collect()) == ["Miguel", "Xabier"]
     assert sorted(r[ERROR_COLUMN][0] for r in ko.collect()) == [
         "age-notNull", "office-notEmpty"]
+
+    # Two sources of two files each, one file per trigger: a row-local
+    # flow drains as ONE query whose two micro-batches fan out to every
+    # sink. Source b has a column a lacks; a step that reads source a
+    # alone must see only a's rows and columns.
+    b_rows = [{"name": "Ane", "age": 45, "office": "BIO", "team": "x"},
+              {"name": "Jon", "age": 28, "office": "", "team": "y"},
+              {"name": "Leire", "office": "MAD", "team": "x"}]
+    schemas = {"src_a": schema, "src_b": schema + ", team string"}
+    for name, rows in (("src_a", FIXTURE_ROWS), ("src_b", b_rows)):
+        for i in range(2):
+            _write_json(tmp_path / name / f"part{i}.json", rows[i::2])
+    sinks = (("ok_upper", "ok", "PARQUET"), ("validation_ko", "ko", "PARQUET"),
+             ("ok_upper", "ok_json", "JSON"), ("a_only", "a_only", "PARQUET"))
+
+    def run(mode):
+        out = tmp_path / mode
+        PipelineExecutor(spark).process(parse_metadata({"dataflows": [{
+            "name": "fan-out",
+            "sources": [{"name": n, "path": str(tmp_path / n),
+                         "format": "JSON", "schema": schemas[n],
+                         "streaming": mode == "stream",
+                         "options": {"maxFilesPerTrigger": "1"}}
+                        for n in schemas],
+            "transformations": [
+                # input src_a of several sources: the union (reference
+                # semantics, PipelineProcessor.scala:29)
+                {"name": "validation", "type": "validate_fields", "params": {
+                    "input": "src_a", "validations": [
+                        {"field": "office", "validations": ["notEmpty"]},
+                        {"field": "age", "validations": ["notNull"]}]}},
+                {"name": "ok_upper", "type": "add_fields", "params": {
+                    "input": "validation_ok", "addFields": [
+                        {"name": "name_upper", "function": "upper(name)"}]}},
+                {"name": "a_only", "type": "filter", "params": {
+                    "input": "src_a", "expr": "name IS NOT NULL"}},
+            ],
+            "sinks": [{"input": node, "name": name, "paths": [str(out)],
+                       "format": fmt, "saveMode": "APPEND"}
+                      for node, name, fmt in sinks],
+        }]}))
+        return {name: spark.read.format(fmt.lower()).load(str(out / name))
+                for _, name, fmt in sinks}
+
+    batch = run("batch")
+    jsc = spark.sparkContext._jsc
+    # ids, not a count: the shared session's cleaner may drop other
+    # tests' caches meanwhile
+    cached_before = set(jsc.getPersistentRDDs())
+    listener = _StartedQueries()
+    spark.streams.addListener(listener)
+    try:
+        stream = run("stream")
+        jsc.sc().listenerBus().waitUntilEmpty()
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.started == 1
+    assert set(jsc.getPersistentRDDs()) <= cached_before
+    for name, df in batch.items():
+        assert stream[name].columns == df.columns, name
+        assert _rows(stream[name]) == _rows(df), name
+    assert stream["a_only"].columns == ["name", "age", "office"]
+    assert sorted(r["name"] for r in stream["a_only"].collect()) == sorted(
+        r["name"] for r in FIXTURE_ROWS)
+    assert sorted(r["name"] for r in stream["ok"].collect()) == [
+        "Ane", "Fran"]
 
 
 def test_corpus_prep_example_pipeline(spark, tmp_path):
@@ -675,6 +771,123 @@ def test_streaming_dataflow_rejects_overwrite_sink(spark, tmp_path):
     })
     with pytest.raises(ValueError, match="only 'append' is safe"):
         PipelineExecutor(spark).process(meta)
+
+
+def _person_stream(tmp_path, transformations, sinks, rows=FIXTURE_ROWS):
+    """A streaming dataflow over ``rows`` in two files (one micro-batch
+    each) with the given steps and sinks."""
+    for i in range(2):
+        _write_json(tmp_path / "in" / f"part{i}.json", rows[i::2])
+    return parse_metadata({"dataflows": [{
+        "name": "person-stream",
+        "sources": [{"name": "person_inputs", "path": str(tmp_path / "in"),
+                     "format": "JSON", "streaming": True,
+                     "schema": "name string, age long, office string",
+                     "options": {"maxFilesPerTrigger": "1"}}],
+        "transformations": transformations,
+        "sinks": sinks,
+    }]}).dataflows[0]
+
+
+@pytest.mark.parametrize("steps", [
+    [],
+    [{"name": "d", "type": "dedup", "params": {
+        "input": "person_inputs", "columns": ["name"]}}],
+], ids=["one_query", "per_sink"])
+def test_streaming_dataflow_rejects_overwrite_before_writing(
+        spark, tmp_path, steps):
+    """Every streaming sink is checked before any query starts: with
+    sinks [APPEND, OVERWRITE], the run raises and leaves neither sink
+    directory nor a checkpoint behind, on the row-local one-query path
+    and on the stateful per-sink path alike."""
+    from spark_kafka_airflow_pipeline_spark.executor import fans_out
+
+    node = steps[-1]["name"] if steps else "person_inputs"
+    flow = _person_stream(tmp_path, steps, [
+        {"input": node, "name": "first", "paths": [str(tmp_path / "o")],
+         "format": "PARQUET", "saveMode": "APPEND"},
+        {"input": node, "name": "second", "paths": [str(tmp_path / "p")],
+         "format": "PARQUET", "saveMode": "OVERWRITE"}])
+    assert fans_out(flow) == (not steps)
+    with pytest.raises(ValueError, match="only 'append' is safe"):
+        PipelineExecutor(spark).run_dataflow(flow)
+    assert not (tmp_path / "o").exists()
+    assert not (tmp_path / "p").exists()
+
+
+def test_fanned_out_replay_skips_written_sinks(spark, tmp_path, monkeypatch):
+    """Replay must not re-append. When the second sink's write fails,
+    Spark replays the whole micro-batch on restart; the sink ledger
+    under the checkpoint makes the first sink skip it. After a rerun on
+    the same checkpoint, the first sink holds every ok row exactly once
+    and the second every ko row."""
+    from spark_kafka_airflow_pipeline_spark import executor
+
+    rows = [{"name": "Fran", "age": 31, "office": "RIO"},
+            {"name": "Ane", "age": 45, "office": "BIO"},
+            {"name": "Xabier", "age": 39, "office": ""},
+            {"name": "Miguel", "office": "RIO"}]
+    # every micro-batch (one file) holds one ok and one ko row
+    flow = _person_stream(tmp_path, [
+        {"name": "validation", "type": "validate_fields", "params": {
+            "validations": [
+                {"field": "office", "validations": ["notEmpty"]},
+                {"field": "age", "validations": ["notNull"]}]}}], [
+        {"input": "validation_ok", "name": "ok",
+         "paths": [str(tmp_path / "o")], "format": "PARQUET",
+         "saveMode": "APPEND"},
+        {"input": "validation_ko", "name": "ko",
+         "paths": [str(tmp_path / "k")], "format": "PARQUET",
+         "saveMode": "APPEND"}], rows)
+
+    write_sink, failed = executor.write_sink, []
+
+    def flaky(df, sink):
+        if sink.name == "ko" and not failed:
+            failed.append(sink.name)
+            raise RuntimeError("injected sink failure")
+        write_sink(df, sink)
+
+    monkeypatch.setattr(executor, "write_sink", flaky)
+    with pytest.raises(Exception, match="injected sink failure"):
+        PipelineExecutor(spark).run_dataflow(flow)
+    assert spark.read.parquet(str(tmp_path / "o" / "ok")).count() == 1
+    PipelineExecutor(spark).run_dataflow(flow)
+    ok = spark.read.parquet(str(tmp_path / "o" / "ok"))
+    ko = spark.read.parquet(str(tmp_path / "k" / "ko"))
+    assert sorted(r["name"] for r in ok.collect()) == ["Ane", "Fran"]
+    assert sorted(r["name"] for r in ko.collect()) == ["Miguel", "Xabier"]
+    # the ledger keeps at most the last batch's markers
+    ledger = tmp_path / "o" / "ok.checkpoint" / "sinks"
+    assert [p.name for p in ledger.iterdir()] == ["1"]
+
+
+@pytest.mark.parametrize("step", [
+    {"name": "v", "type": "validate_fields", "params": {
+        "input": "person_inputs",
+        "validations": [{"field": "office", "validations": ["unique"]}]}},
+    {"name": "v", "type": "add_fields", "params": {
+        "input": "person_inputs", "addFields": [
+            {"name": "rn", "function": "row_number() OVER (ORDER BY name)"}]}},
+], ids=["unique_rule", "window_expression"])
+def test_streaming_stream_only_errors_still_raise(spark, tmp_path, step):
+    """A streaming flow whose steps need a non-time window (the
+    dataset-level ``unique`` rule, or a window function in an
+    add_fields expression) must fail as Spark fails it on a stream, not
+    compute the window per micro-batch. ``unique`` takes the per-sink
+    path; the add_fields expression is caught by the streaming check
+    the one-query path runs before it starts."""
+    from spark_kafka_airflow_pipeline_spark.executor import fans_out
+
+    node = "v_ok" if step["type"] == "validate_fields" else "v"
+    flow = _person_stream(tmp_path, [step], [
+        {"input": node, "name": "out", "paths": [str(tmp_path / "o")],
+         "format": "PARQUET", "saveMode": "APPEND"}])
+    assert fans_out(flow) == (step["type"] == "add_fields")
+    with pytest.raises(Exception,
+                       match="NON_TIME_WINDOW_NOT_SUPPORTED_IN_STREAMING"):
+        PipelineExecutor(spark).run_dataflow(flow)
+    assert not (tmp_path / "o" / "out").exists()
 
 
 def test_declarative_topk_global_and_grouped(spark, sf_dir):

@@ -360,7 +360,10 @@ def test_metadata_streaming_session_restart_recovery(spark, sf_dir,
     import glob
     import shutil
 
-    from spark_kafka_airflow_pipeline_spark.executor import PipelineExecutor
+    from spark_kafka_airflow_pipeline_spark.executor import (
+        PipelineExecutor,
+        fans_out,
+    )
     from spark_kafka_airflow_pipeline_spark.metadata import parse_metadata
 
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -408,10 +411,12 @@ def test_metadata_streaming_session_restart_recovery(spark, sf_dir,
         }]}).dataflows[0]
 
     def run(src, out_root):
+        flow = flow_meta(src, out_root)
+        assert not fans_out(flow)  # stateful: one query per sink
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
-            PipelineExecutor(spark).run_dataflow(flow_meta(src, out_root))
+            PipelineExecutor(spark).run_dataflow(flow)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -459,7 +464,10 @@ def test_metadata_streaming_upsert_restart_recovery(spark, sf_dir,
     import shutil
     from pathlib import Path
 
-    from spark_kafka_airflow_pipeline_spark.executor import PipelineExecutor
+    from spark_kafka_airflow_pipeline_spark.executor import (
+        PipelineExecutor,
+        fans_out,
+    )
     from spark_kafka_airflow_pipeline_spark.metadata import parse_metadata
 
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -498,10 +506,12 @@ def test_metadata_streaming_upsert_restart_recovery(spark, sf_dir,
         }]}).dataflows[0]
 
     def run(src, out_root):
+        flow = flow_meta(src, out_root)
+        assert not fans_out(flow)  # stateful: one query per sink
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", "8")
         try:
-            PipelineExecutor(spark).run_dataflow(flow_meta(src, out_root))
+            PipelineExecutor(spark).run_dataflow(flow)
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -543,3 +553,44 @@ def test_metadata_streaming_upsert_restart_recovery(spark, sf_dir,
     text = "".join(p.read_text() for p in logs)
     assert text.count("h1.parquet") == 1
     assert text.count("h2.parquet") == 1
+
+
+def test_stateful_metadata_streams_keep_per_sink_path(spark, sf_dir,
+                                                      monkeypatch):
+    """Flows with stateful steps (watermark + aggregate) keep one
+    ``foreach_batch_sink`` query per sink: the metadata tumbling and
+    session entries never reach the one-query drain, and still match
+    their DuckDB oracles."""
+    import sys
+    from pathlib import Path
+
+    from spark_kafka_airflow_pipeline_spark import executor
+    from spark_kafka_airflow_pipeline_spark.io import sinks
+    from spark_kafka_airflow_pipeline_spark.streaming import pipelines as sp
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+    from tests.oracle_harness import compare, duckdb_connection
+
+    def one_query(*_args, **_kwargs):
+        raise AssertionError("a stateful flow took the one-query path")
+
+    started, per_sink = [], sinks.foreach_batch_sink
+
+    def spy(df, sink, **kwargs):
+        started.append(sink.name)
+        return per_sink(df, sink, **kwargs)
+
+    monkeypatch.setattr(executor.PipelineExecutor, "_drain_fanned_out",
+                        one_query)
+    monkeypatch.setattr(sinks, "foreach_batch_sink", spy)
+    con = duckdb_connection(sf_dir)
+    try:
+        for fn, sql in ((sp.metadata_streaming_tumbling,
+                         sp.METADATA_STREAMING_SQL),
+                        (sp.metadata_streaming_session,
+                         sp.METADATA_SESSION_SQL)):
+            problems = compare(fn(spark, sf_dir), con, sql)
+            assert not problems, f"{fn.__name__}: {problems}"
+    finally:
+        con.close()
+    assert started == ["agg", "sess"]
