@@ -33,9 +33,12 @@ def main() -> None:
         if a.startswith("--reps"):
             if "=" in a:
                 reps = int(a.split("=", 1)[1])
-            else:
+            elif i + 1 < len(raw):
                 i += 1
                 reps = int(raw[i])
+            else:
+                sys.exit("usage: time_all.py [sf_dir] [--reps=N] [name ...]"
+                         " (--reps needs a value)")
         elif not a.startswith("--"):
             argv.append(a)
         i += 1

@@ -28,8 +28,8 @@ from spark_kafka_airflow_pipeline_spark.metadata import (
     DataflowMetadata,
     Sink,
     Source,
+    SpecError,
     Transformation,
-    TransformationParams,
     Validation,
     load_metadata,
     parse_metadata,
@@ -44,8 +44,8 @@ __all__ = [
     "PipelineExecutor",
     "Sink",
     "Source",
+    "SpecError",
     "Transformation",
-    "TransformationParams",
     "Validation",
     "get_spark",
     "load_metadata",

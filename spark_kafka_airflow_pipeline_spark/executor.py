@@ -16,8 +16,10 @@ Differences from the reference, all documented in SURVEY.md:
   ``:59``).
 - **Single-pass split** with exact partitioning NULL semantics
   (see ``transforms.validate_fields``).
-- **Unknown sink tags raise** a named error instead of Scala
-  ``MatchError`` (``:117-146``).
+- **Unknown sink tags fail at parse time** (``metadata.SpecError``)
+  instead of as a Scala ``MatchError`` mid-run (``:117-146``).
+- **One step table.** ``STEPS`` has a builder for each entry of
+  ``metadata.STEP_PARAMS``, the one list of step types.
 - **Cache lifecycle**: the split point is cached (as the reference does,
   ``:65``) and unpersisted after all sinks are written.
 
@@ -59,9 +61,11 @@ longer read, and the first sink's checkpoint governs the whole flow.
 
 from __future__ import annotations
 
+import functools
 import logging
+from typing import Any, Callable, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.io import sinks as io_sinks
@@ -76,6 +80,7 @@ from spark_kafka_airflow_pipeline_spark.metadata import (
     Dataflow,
     DataflowMetadata,
     Transformation,
+    node_names,
 )
 from spark_kafka_airflow_pipeline_spark.transforms import add_fields
 from spark_kafka_airflow_pipeline_spark.transforms.validate_fields import (
@@ -84,9 +89,189 @@ from spark_kafka_airflow_pipeline_spark.transforms.validate_fields import (
 
 log = logging.getLogger(__name__)
 
+
+class _Run(NamedTuple):
+    """What a step builder sees besides its params and input frame."""
+
+    spark: SparkSession
+    nodes: dict[str, DataFrame]  # every node built so far
+    cached: list[DataFrame]      # unpersisted once the sinks are written
+    debug_show: bool
+
+
+def _sort_keys(columns: list[str]) -> list[Column]:
+    """``"-col"`` sorts descending, a bare name ascending."""
+    return [F.col(c[1:]).desc() if c.startswith("-") else F.col(c)
+            for c in columns]
+
+
+def _validate_fields(run: _Run, p, df: DataFrame):
+    # a streaming frame is only planned here: its rows are split per
+    # micro-batch, either on the batch path of a fanned-out flow (where
+    # the split caches) or inside a stateful flow's per-sink query
+    ok, ko, cached_parent = validate_fields_split(
+        df, p.validations, cache=not df.isStreaming)
+    if cached_parent is not None:
+        run.cached.append(cached_parent)
+    if run.debug_show and not ok.isStreaming:
+        ok.show(truncate=False)
+        ko.show(truncate=False)
+    return ok, ok, ko  # in node_names order: <name>, <name>_ok, <name>_ko
+
+
+def _sql(run: _Run, p, df: DataFrame) -> DataFrame:
+    for name, frame in run.nodes.items():
+        if not name.startswith("__"):
+            frame.createOrReplaceTempView(name)
+    return run.spark.sql(p.sql)
+
+
+def _aggregate(run: _Run, p, df: DataFrame) -> DataFrame:
+    # groupBy entries are full expression strings ("x AS alias"
+    # allowed), so configs can group on computed keys, e.g. the
+    # streaming time bucket window(ts, '1 hour') AS w
+    return df.groupBy(*[F.expr(g) for g in p.groupBy]).agg(
+        *[F.expr(a.function).alias(a.name) for a in p.aggregates])
+
+
+def _union(run: _Run, p, df: DataFrame) -> DataFrame:
+    return functools.reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [run.nodes[n] for n in p.inputs] or [df])
+
+
+def _dedup_near(run: _Run, p, df: DataFrame) -> DataFrame:
+    # near-duplicate removal as a DECLARATIVE step: the same
+    # MinHash-LSH pipeline the operator library exposes (signature
+    # pass -> banded buckets -> estimate filter -> exact-Jaccard
+    # verify), then keep-first survivorship — drop every doc that is
+    # the LARGER end of a verified pair (deterministic; the kept set is
+    # exactly the pair-graph minima). All bounded-bucket, no all-pairs
+    # join — the operator library's scale posture carries over verbatim.
+    from spark_kafka_airflow_pipeline_spark.functions import text as T
+    from spark_kafka_airflow_pipeline_spark.operators.dedup import (
+        estimate_filter_pairs,
+        lsh_band_candidates,
+        md5_minhash_verified_pairs,
+        minhash_signature_agg,
+        verify_pairs_jaccard,
+    )
+
+    d = df.select(F.col(p.idColumn).alias("doc_id"),
+                  F.col(p.textColumn).alias("text"))
+    if p.hashFamily == "md5":
+        # portable family: every hash is md5-derived, so the declared
+        # step is value-hash provable against a DuckDB twin
+        # (MINHASH_MD5_SQL) — the config-driven path to the engine's
+        # oracled near-dedup
+        grams = (d.select("doc_id", T.split_tokens("text").alias("toks"))
+                 .select("doc_id",
+                         F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
+                         .alias("grams")))
+        pairs = md5_minhash_verified_pairs(grams, p.threshold)
+    else:
+        tokens = lambda c: T.shingles(c, 3)  # noqa: E731
+        sigs = minhash_signature_agg(d, num_hashes=16, tokens=tokens)
+        cand = lsh_band_candidates(sigs, 16, 4, distinct=False,
+                                   carry="minhash")
+        good = estimate_filter_pairs(cand, 16, p.threshold)
+        pairs = verify_pairs_jaccard(good, d, tokens, p.threshold)
+    drop = pairs.select(F.col("doc_b").alias(p.idColumn)).distinct()
+    return df.join(drop, p.idColumn, "left_anti")
+
+
+def _fingerprint(run: _Run, p, df: DataFrame) -> DataFrame:
+    # winnowing fingerprint summary as a DECLARATIVE step: annotate
+    # each row with its MOSS (k=3, w=4) fingerprint stats (count / xor
+    # checksum / min) — the config-driven path to the oracled
+    # winnow_fingerprints operator; the join back on the id preserves
+    # the full input schema
+    from spark_kafka_airflow_pipeline_spark.operators.textops import (
+        winnow_summary,
+    )
+
+    summary = winnow_summary(df.select(F.col(p.idColumn).alias("doc_id"),
+                                       F.col(p.textColumn).alias("text")))
+    return df.join(summary.withColumnsRenamed({"doc_id": p.idColumn}),
+                   p.idColumn)
+
+
+def _window(run: _Run, p, df: DataFrame) -> DataFrame:
+    # each field is a Spark SQL expression string evaluated over ONE
+    # shared window spec, so a multi-field step costs a single shuffle
+    # on the partition keys (the engine's window discipline — see
+    # operators.relational)
+    spec = Window.partitionBy(*p.partitionBy)
+    if p.orderBy:
+        spec = spec.orderBy(*_sort_keys(p.orderBy))
+    for f in p.fields:
+        df = df.withColumn(f.name, F.expr(f.function).over(spec))
+    return df
+
+
+def _topk(run: _Run, p, df: DataFrame) -> DataFrame:
+    # global (orderBy+limit lowers to TakeOrderedAndProject —
+    # per-partition heaps, no full sort) or per-group via one
+    # row_number window (single shuffle on the partition keys). Authors
+    # should order by a tie-breaking key set so the selected row SET is
+    # unique.
+    keys = _sort_keys(p.orderBy)
+    if not p.partitionBy:
+        return df.orderBy(*keys).limit(p.n)
+    spec = Window.partitionBy(*p.partitionBy).orderBy(*keys)
+    return (df.withColumn("__rn", F.row_number().over(spec))
+            .filter(F.col("__rn") <= p.n).drop("__rn"))
+
+
+class Step(NamedTuple):
+    """One step type: ``build(run, params, input frame)`` returns the
+    frame for each of ``metadata.node_names`` (a bare frame for one)."""
+
+    build: Callable[[_Run, Any, DataFrame], Any]
+    #: every output row depends on one input row
+    row_local: bool = False
+    #: one of the reference's own types: with several sources, an input
+    #: naming one of them reads their union (PipelineProcessor.scala:29)
+    reference: bool = False
+
+
+#: One builder per step type of ``metadata.STEP_PARAMS``. The builders
+#: hold no checks: ``parse_metadata`` has rejected every bad spec.
+STEPS: dict[str, Step] = {
+    "add_fields": Step(lambda run, p, df: add_fields(df, p.addFields),
+                       row_local=True, reference=True),
+    "validate_fields": Step(_validate_fields, row_local=True, reference=True),
+    "sql": Step(_sql),
+    "filter": Step(lambda run, p, df: df.filter(p.expr), row_local=True),
+    "select": Step(lambda run, p, df: df.select(*p.columns), row_local=True),
+    "drop": Step(lambda run, p, df: df.drop(*p.columns), row_local=True),
+    "rename": Step(lambda run, p, df: df.withColumnsRenamed(p.mapping),
+                   row_local=True),
+    "dedup": Step(lambda run, p, df: df.dropDuplicates(p.columns or None)),
+    "sort": Step(lambda run, p, df: df.orderBy(*_sort_keys(p.columns))),
+    "limit": Step(lambda run, p, df: df.limit(p.n)),
+    "join": Step(lambda run, p, df: df.join(
+        run.nodes[p.right], on=p.on or None, how=p.how)),
+    "aggregate": Step(_aggregate),
+    # event-time watermark: the declarative knob that bounds streaming
+    # state (and admits append-mode window aggs); a no-op on batch
+    # frames, as in Spark
+    "watermark": Step(lambda run, p, df: df.withWatermark(p.column, p.delay)),
+    "union": Step(_union),
+    "window": Step(_window),
+    "topk": Step(_topk),
+    "dedup_near": Step(_dedup_near),
+    "fingerprint": Step(_fingerprint),
+    # set ops; ``all`` keeps duplicate multiplicity (SQL INTERSECT ALL /
+    # EXCEPT ALL). Both plan as one shuffle on the full row.
+    "intersect": Step(lambda run, p, df: (
+        df.intersectAll if p.all else df.intersect)(run.nodes[p.right])),
+    "except": Step(lambda run, p, df: (
+        df.exceptAll if p.all else df.subtract)(run.nodes[p.right])),
+}
+
 #: Step types whose every output row depends on one input row.
-ROW_LOCAL_STEPS = frozenset(
-    {"add_fields", "validate_fields", "filter", "select", "drop", "rename"})
+ROW_LOCAL_STEPS = frozenset(k for k, step in STEPS.items() if step.row_local)
 #: Column carrying each row's source name in a fanned-out stream.
 SOURCE_TAG = "__source__"
 
@@ -98,8 +283,8 @@ def fans_out(flow: Dataflow) -> bool:
     dataset-level ``unique`` rule and no sink is an upsert state table."""
     return (bool(flow.sinks) and all(s.streaming for s in flow.sources)
             and all(t.type in ROW_LOCAL_STEPS
-                    and not any("unique" in v.validations
-                                for v in t.params.validations)
+                    and not any("unique" in v.validations for v in
+                                getattr(t.params, "validations", ()))
                     for t in flow.transformations)
             and all(s.format.lower() != "upsert" for s in flow.sinks))
 
@@ -155,10 +340,6 @@ class PipelineExecutor:
             # every sink is checked before any is written, so a bad one
             # leaves no partial output or checkpoint behind
             for sink in flow.sinks:
-                if sink.input not in nodes:
-                    raise KeyError(
-                        f"sink of dataflow {flow.name!r} references unknown node "
-                        f"{sink.input!r}; known nodes: {sorted(nodes)}")
                 if nodes[sink.input].isStreaming:
                     check_append_only(sink)
                 if one_query:
@@ -169,7 +350,7 @@ class PipelineExecutor:
                 for sink in flow.sinks:
                     self._write(flow, sink, nodes[sink.input])
         finally:
-            # cached frames are tracked explicitly at _apply time: the
+            # cached frames are tracked explicitly at build time: the
             # split point caches its internal ANNOTATED parent, whose
             # ok/ko children report is_cached == False — scanning node
             # outputs would find nothing and leak the cache entry per
@@ -200,13 +381,14 @@ class PipelineExecutor:
         source name plus ``__sources__``, their union): the batch run,
         the streaming node registry and each fanned-out micro-batch all
         build their nodes here."""
-        nodes = dict(frames)
-        cached: list[DataFrame] = []
-        source_names = {s.name for s in flow.sources}
+        run = _Run(self.spark, dict(frames), [], self.debug_show)
+        sources = {s.name for s in flow.sources}
         for t in flow.transformations:
-            upstream = self._resolve_input(t, nodes, source_names)
-            self._apply(t, upstream, nodes, cached)
-        return nodes, cached
+            out = STEPS[t.type].build(
+                run, t.params, _resolve_input(t, run.nodes, sources))
+            run.nodes.update(zip(node_names(t),
+                                 out if isinstance(out, tuple) else (out,)))
+        return run.nodes, run.cached
 
     # -- sinks ----------------------------------------------------------
 
@@ -265,256 +447,21 @@ class PipelineExecutor:
         start_foreach_batch(stream, write_batch, checkpoint,
                             available_now=True).awaitTermination()
 
-    # -- internals ----------------------------------------------------
 
-    def _resolve_input(self, t: Transformation, nodes: dict[str, DataFrame],
-                       source_names: set[str]) -> DataFrame:
-        name = t.params.input
-        if name is None:
-            return nodes["__sources__"]
-        if (name in source_names and len(source_names) > 1
-                and t.type in ("add_fields", "validate_fields")):
-            # reference parity for the REFERENCE's transformation types:
-            # multi-source dataflows consume the union regardless of the
-            # configured input (PipelineProcessor.scala:29). Engine
-            # extensions (join/aggregate/union/...) address individual
-            # sources — a join's build side must not silently become the
-            # union of both join inputs.
-            log.info("transformation %s: input %r is one of several sources; "
-                     "using the union of all sources (reference semantics)",
-                     t.name, name)
-            return nodes["__sources__"]
-        if name not in nodes:
-            raise KeyError(f"transformation {t.name!r} references unknown input "
-                           f"{name!r}; known nodes: {sorted(nodes)}")
-        return nodes[name]
-
-    def _apply(self, t: Transformation, df: DataFrame,
-               nodes: dict[str, DataFrame],
-               cached: list[DataFrame]) -> None:
-        kind = t.type
-        if kind == "add_fields":
-            nodes[t.name] = add_fields(df, t.params.addFields)
-        elif kind == "validate_fields":
-            # a streaming frame is only planned here: its rows are
-            # split per micro-batch, either on the batch path of a
-            # fanned-out flow (where the split caches) or inside a
-            # stateful flow's per-sink query
-            ok, ko, cached_parent = validate_fields_split(
-                df, t.params.validations, cache=not df.isStreaming)
-            if cached_parent is not None:
-                cached.append(cached_parent)
-            if self.debug_show and not ok.isStreaming:
-                ok.show(truncate=False)
-                ko.show(truncate=False)
-            nodes[f"{t.name}_ok"] = ok
-            nodes[f"{t.name}_ko"] = ko
-            nodes[t.name] = ok  # bare name == valid split, for chaining
-        elif kind == "sql":
-            for name, frame in nodes.items():
-                if not name.startswith("__"):
-                    frame.createOrReplaceTempView(name)
-            nodes[t.name] = self.spark.sql(t.params.sql)
-        elif kind == "filter":
-            nodes[t.name] = df.filter(t.params.expr)
-        elif kind == "select":
-            nodes[t.name] = df.select(*t.params.columns)
-        elif kind == "drop":
-            nodes[t.name] = df.drop(*t.params.columns)
-        elif kind == "dedup":
-            cols = t.params.columns or None
-            nodes[t.name] = df.dropDuplicates(cols)
-        elif kind == "sort":
-            # "-col" sorts descending, bare name ascending
-            if not t.params.columns:
-                raise ValueError(f"sort {t.name!r} declares no columns")
-            keys = [F.col(c[1:]).desc() if c.startswith("-") else F.col(c)
-                    for c in t.params.columns]
-            nodes[t.name] = df.orderBy(*keys)
-        elif kind == "limit":
-            if t.params.n is None or t.params.n < 0:
-                raise ValueError(f"limit {t.name!r} needs a non-negative 'n'")
-            nodes[t.name] = df.limit(t.params.n)
-        elif kind == "rename":
-            if not t.params.mapping:
-                raise ValueError(f"rename {t.name!r} declares no mapping")
-            nodes[t.name] = df.withColumnsRenamed(t.params.mapping)
-        elif kind == "join":
-            if t.params.right not in nodes:
-                raise KeyError(f"join {t.name!r} references unknown right "
-                               f"node {t.params.right!r}; known: {sorted(nodes)}")
-            if not t.params.on and t.params.how != "cross":
-                # a metadata file that omits 'on' would silently plan a
-                # cartesian product — a runaway job at scale; cartesian
-                # intent must be explicit via how="cross"
-                raise ValueError(
-                    f"join {t.name!r} declares no join keys ('on'); "
-                    f"set how='cross' to request a cartesian product")
-            nodes[t.name] = df.join(nodes[t.params.right],
-                                    on=t.params.on or None,
-                                    how=t.params.how)
-        elif kind == "aggregate":
-            aggs = [F.expr(a.function).alias(a.name)
-                    for a in t.params.aggregates]
-            if not aggs:
-                raise ValueError(f"aggregate {t.name!r} declares no aggregates")
-            # groupBy entries are full expression strings ("x AS alias"
-            # allowed), so configs can group on computed keys — e.g. the
-            # streaming time bucket window(ts, '1 hour') AS w. Plain
-            # column names parse unchanged.
-            keys = [F.expr(g) for g in t.params.groupBy]
-            nodes[t.name] = df.groupBy(*keys).agg(*aggs)
-        elif kind == "watermark":
-            # event-time watermark: the declarative knob that bounds
-            # streaming state (and admits append-mode window aggs).
-            # Harmless no-op semantics on batch frames, same as Spark.
-            if not t.params.column or not t.params.delay:
-                raise ValueError(
-                    f"watermark {t.name!r} needs 'column' and 'delay'")
-            nodes[t.name] = df.withWatermark(t.params.column, t.params.delay)
-        elif kind == "union":
-            names = t.params.inputs
-            missing = [n for n in names if n not in nodes]
-            if missing:
-                raise KeyError(f"union {t.name!r} references unknown nodes "
-                               f"{missing}; known: {sorted(nodes)}")
-            frames = [nodes[n] for n in names] or [df]
-            out = frames[0]
-            for f in frames[1:]:
-                out = out.unionByName(f, allowMissingColumns=True)
-            nodes[t.name] = out
-        elif kind == "dedup_near":
-            # near-duplicate removal as a DECLARATIVE step: the same
-            # MinHash-LSH pipeline the operator library exposes
-            # (signature pass -> banded buckets -> estimate filter ->
-            # exact-Jaccard verify), then keep-first survivorship —
-            # drop every doc that is the LARGER end of a verified pair
-            # (deterministic; the kept set is exactly the pair-graph
-            # minima). All bounded-bucket, no all-pairs join — the
-            # operator library's scale posture carries over verbatim.
-            from spark_kafka_airflow_pipeline_spark.functions import (
-                text as T,
-            )
-            from spark_kafka_airflow_pipeline_spark.operators.dedup import (
-                estimate_filter_pairs,
-                lsh_band_candidates,
-                minhash_signature_agg,
-                verify_pairs_jaccard,
-            )
-
-            if not t.params.idColumn:
-                raise ValueError(
-                    f"dedup_near {t.name!r} needs 'idColumn' (a unique "
-                    "document id)")
-            d = df.select(F.col(t.params.idColumn).alias("doc_id"),
-                          F.col(t.params.textColumn).alias("text"))
-            if t.params.hashFamily == "md5":
-                # portable family: every hash is md5-derived, so the
-                # declared step is value-hash provable against a DuckDB
-                # twin (MINHASH_MD5_SQL) — the config-driven path to
-                # the engine's oracled near-dedup
-                from spark_kafka_airflow_pipeline_spark.operators.dedup import (
-                    md5_minhash_verified_pairs,
-                )
-
-                grams = (d.select(
-                    "doc_id", T.split_tokens("text").alias("toks"))
-                    .select(
-                        "doc_id",
-                        F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                        .alias("grams")))
-                pairs = md5_minhash_verified_pairs(
-                    grams, t.params.threshold)
-            else:
-                tokens = lambda c: T.shingles(c, 3)  # noqa: E731
-                sigs = minhash_signature_agg(d, num_hashes=16,
-                                             tokens=tokens)
-                cand = lsh_band_candidates(sigs, 16, 4, distinct=False,
-                                           carry="minhash")
-                good = estimate_filter_pairs(cand, 16, t.params.threshold)
-                pairs = verify_pairs_jaccard(good, d, tokens,
-                                             t.params.threshold)
-            drop = pairs.select(
-                F.col("doc_b").alias(t.params.idColumn)).distinct()
-            nodes[t.name] = df.join(drop, t.params.idColumn, "left_anti")
-        elif kind == "fingerprint":
-            # winnowing fingerprint summary as a DECLARATIVE step:
-            # annotate each row with its MOSS (k=3, w=4) fingerprint
-            # stats (count / xor checksum / min) — the config-driven
-            # path to the oracled winnow_fingerprints operator; the
-            # join back on the id preserves the full input schema
-            from spark_kafka_airflow_pipeline_spark.operators.textops import (
-                _winnow_selected,
-            )
-
-            if not t.params.idColumn:
-                raise ValueError(
-                    f"fingerprint {t.name!r} needs 'idColumn' (a unique "
-                    "document id)")
-            d = df.select(F.col(t.params.idColumn).alias("doc_id"),
-                          F.col(t.params.textColumn).alias("text"))
-            summary = (_winnow_selected(d)
-                       .groupBy("doc_id")
-                       .agg(F.count(F.lit(1)).alias("n_fps"),
-                            F.expr("bit_xor(fp)").alias("fp_xor"),
-                            F.min("fp").alias("fp_min"))
-                       .withColumnsRenamed({"doc_id": t.params.idColumn}))
-            nodes[t.name] = df.join(summary, t.params.idColumn)
-        elif kind == "window":
-            # declarative window functions: each field is a Spark SQL
-            # expression string evaluated over ONE shared window spec,
-            # so a multi-field step costs a single shuffle on the
-            # partition keys (the engine's window discipline — see
-            # operators.relational). "-col" in orderBy sorts descending.
-            if not t.params.fields:
-                raise ValueError(f"window {t.name!r} declares no fields")
-            from pyspark.sql import Window
-
-            spec = Window.partitionBy(*t.params.partitionBy) if \
-                t.params.partitionBy else Window.partitionBy()
-            if t.params.orderBy:
-                keys = [F.col(c[1:]).desc() if c.startswith("-")
-                        else F.col(c) for c in t.params.orderBy]
-                spec = spec.orderBy(*keys)
-            out = df
-            for f in t.params.fields:
-                out = out.withColumn(f.name, F.expr(f.function).over(spec))
-            nodes[t.name] = out
-        elif kind == "topk":
-            # declarative top-k: global (orderBy+limit lowers to
-            # TakeOrderedAndProject — per-partition heaps, no full
-            # sort) or per-group via one row_number window (single
-            # shuffle on the partition keys). Authors should order by a
-            # tie-breaking key set so the selected row SET is unique.
-            if t.params.n is None or t.params.n <= 0:
-                raise ValueError(f"topk {t.name!r} needs a positive 'n'")
-            if not t.params.orderBy:
-                raise ValueError(f"topk {t.name!r} declares no orderBy")
-            keys = [F.col(c[1:]).desc() if c.startswith("-") else F.col(c)
-                    for c in t.params.orderBy]
-            if t.params.partitionBy:
-                from pyspark.sql import Window
-
-                spec = Window.partitionBy(*t.params.partitionBy).orderBy(*keys)
-                nodes[t.name] = (
-                    df.withColumn("__rn", F.row_number().over(spec))
-                    .filter(F.col("__rn") <= t.params.n).drop("__rn"))
-            else:
-                nodes[t.name] = df.orderBy(*keys).limit(t.params.n)
-        elif kind in ("intersect", "except"):
-            # declarative set ops; params.all keeps duplicate
-            # multiplicity (SQL INTERSECT ALL / EXCEPT ALL). Both plan
-            # as one shuffle on the full row, like any distinct.
-            if t.params.right not in nodes:
-                raise KeyError(f"{kind} {t.name!r} references unknown right "
-                               f"node {t.params.right!r}; known: {sorted(nodes)}")
-            right = nodes[t.params.right]
-            if kind == "intersect":
-                nodes[t.name] = (df.intersectAll(right) if t.params.all
-                                 else df.intersect(right))
-            else:
-                nodes[t.name] = (df.exceptAll(right) if t.params.all
-                                 else df.subtract(right))
-        else:
-            raise ValueError(f"unknown transformation type {kind!r} "
-                             f"(node {t.name!r})")
+def _resolve_input(t: Transformation, nodes: dict[str, DataFrame],
+                   sources: set[str]) -> DataFrame:
+    name = t.params.input
+    if name is None:
+        return nodes["__sources__"]
+    if name in sources and len(sources) > 1 and STEPS[t.type].reference:
+        # reference parity for the REFERENCE's transformation types:
+        # multi-source dataflows consume the union regardless of the
+        # configured input (PipelineProcessor.scala:29). Engine
+        # extensions (join/aggregate/union/...) address individual
+        # sources — a join's build side must not silently become the
+        # union of both join inputs.
+        log.info("transformation %s: input %r is one of several sources; "
+                 "using the union of all sources (reference semantics)",
+                 t.name, name)
+        return nodes["__sources__"]
+    return nodes[name]

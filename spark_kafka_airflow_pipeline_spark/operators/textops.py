@@ -1702,18 +1702,23 @@ WITH toks AS (
 """
 
 
-def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document winnowing fingerprint summary: how many fingerprints
-    the (k=3, w=4) scheme selects plus an order-independent xor
-    checksum — the compact signature a fingerprint index stores per
-    document. See ``_winnow_selected`` for the algorithm and the
-    engine-portable packed-key construction."""
-    d = table(spark, sf_dir, "documents")
+def winnow_summary(d: DataFrame) -> DataFrame:
+    """Per-document winnowing fingerprint summary of a ``(doc_id,
+    text)`` frame: how many fingerprints the (k=3, w=4) scheme selects
+    plus an order-independent xor checksum and the minimum — the
+    compact signature a fingerprint index stores per document. See
+    ``_winnow_selected`` for the algorithm and the engine-portable
+    packed-key construction."""
     return (_winnow_selected(d)
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_fps"),
                  F.expr("bit_xor(fp)").alias("fp_xor"),
                  F.min("fp").alias("fp_min")))
+
+
+def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``winnow_summary`` of the documents table."""
+    return winnow_summary(table(spark, sf_dir, "documents"))
 
 
 WINNOW_FINGERPRINTS_SQL = _WINNOW_SEL_CTE + """

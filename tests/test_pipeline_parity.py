@@ -12,6 +12,7 @@ from pyspark.sql.streaming import StreamingQueryListener
 from spark_kafka_airflow_pipeline_spark import (
     AddField,
     PipelineExecutor,
+    SpecError,
     Validation,
     parse_metadata,
 )
@@ -305,7 +306,7 @@ def test_join_without_keys_rejected(spark, sf_dir):
         }]}).dataflows[0]
 
     with pytest.raises(ValueError, match="no join keys"):
-        PipelineExecutor(spark).build_nodes(flow({}))
+        flow({})
     nodes = PipelineExecutor(spark).build_nodes(flow({"how": "cross"}))
     assert nodes["j"].count() == 25 * 5  # nation x region cartesian
 
@@ -338,18 +339,15 @@ def test_split_cache_released_after_sinks(spark, tmp_path):
     assert cache_manager.isEmpty(), "split cache leaked after sinks"
 
 
-def test_unknown_sink_tag_raises(spark, tmp_path):
-    meta = parse_metadata({"dataflows": [{
-        "name": "bad", "sources": [
-            {"name": "s", "path": str(tmp_path), "format": "parquet"}],
-        "transformations": [],
-        "sinks": [{"input": "nope", "name": "x", "paths": [str(tmp_path)],
-                   "format": "parquet", "saveMode": "overwrite"}],
-    }]})
-    df = spark.createDataFrame([(1,)], "a int")
-    df.write.mode("overwrite").parquet(str(tmp_path))
-    with pytest.raises(KeyError, match="unknown node"):
-        PipelineExecutor(spark).run_dataflow(meta.dataflows[0])
+def test_unknown_sink_tag_raises(tmp_path):
+    with pytest.raises(SpecError, match="unknown node"):
+        parse_metadata({"dataflows": [{
+            "name": "bad", "sources": [
+                {"name": "s", "path": str(tmp_path), "format": "parquet"}],
+            "transformations": [],
+            "sinks": [{"input": "nope", "name": "x", "paths": [str(tmp_path)],
+                       "format": "parquet", "saveMode": "overwrite"}],
+        }]})
 
 
 def test_declarative_sort_limit_rename(spark, sf_dir):
@@ -469,33 +467,31 @@ def test_declarative_dedup_near(spark, sf_dir):
         spark.read.parquet(f"{sf_dir}/documents.parquet").columns)
 
 
-def test_dedup_near_requires_id_column(spark, sf_dir):
-    meta = parse_metadata({"dataflows": [{
-        "name": "bad",
-        "sources": [{"name": "docs",
-                     "path": f"{sf_dir}/documents.parquet"}],
-        "transformations": [
-            {"name": "kept", "type": "dedup_near",
-             "params": {"input": "docs"}},
-        ],
-        "sinks": [],
-    }]})
+def test_dedup_near_requires_id_column(sf_dir):
     with pytest.raises(ValueError, match="idColumn"):
-        PipelineExecutor(spark).build_nodes(meta.dataflows[0])
+        parse_metadata({"dataflows": [{
+            "name": "bad",
+            "sources": [{"name": "docs",
+                         "path": f"{sf_dir}/documents.parquet"}],
+            "transformations": [
+                {"name": "kept", "type": "dedup_near",
+                 "params": {"input": "docs"}},
+            ],
+            "sinks": [],
+        }]})
 
 
-def test_window_without_fields_rejected(spark, sf_dir):
-    meta = parse_metadata({"dataflows": [{
-        "name": "bad",
-        "sources": [{"name": "o", "path": f"{sf_dir}/orders.parquet"}],
-        "transformations": [
-            {"name": "w", "type": "window",
-             "params": {"input": "o", "partitionBy": ["o_custkey"]}},
-        ],
-        "sinks": [],
-    }]})
+def test_window_without_fields_rejected(sf_dir):
     with pytest.raises(ValueError, match="declares no fields"):
-        PipelineExecutor(spark).build_nodes(meta.dataflows[0])
+        parse_metadata({"dataflows": [{
+            "name": "bad",
+            "sources": [{"name": "o", "path": f"{sf_dir}/orders.parquet"}],
+            "transformations": [
+                {"name": "w", "type": "window",
+                 "params": {"input": "o", "partitionBy": ["o_custkey"]}},
+            ],
+            "sinks": [],
+        }]})
 
 
 def test_sink_metrics_observed(spark, tmp_path):
@@ -958,17 +954,16 @@ def test_declarative_set_ops(spark, sf_dir):
             == a.filter("o_orderstatus = 'P'").count())
 
 
-def test_topk_without_order_rejected(spark, sf_dir):
-    meta = parse_metadata({"dataflows": [{
-        "name": "bad",
-        "sources": [{"name": "o", "path": f"{sf_dir}/orders.parquet"}],
-        "transformations": [
-            {"name": "t", "type": "topk", "params": {"input": "o", "n": 3}},
-        ],
-        "sinks": [],
-    }]})
+def test_topk_without_order_rejected(sf_dir):
     with pytest.raises(ValueError, match="declares no orderBy"):
-        PipelineExecutor(spark).build_nodes(meta.dataflows[0])
+        parse_metadata({"dataflows": [{
+            "name": "bad",
+            "sources": [{"name": "o", "path": f"{sf_dir}/orders.parquet"}],
+            "transformations": [
+                {"name": "t", "type": "topk", "params": {"input": "o", "n": 3}},
+            ],
+            "sinks": [],
+        }]})
 
 
 def test_metadata_compiled_q3_matches_handwritten(spark, sf_dir):
@@ -1019,3 +1014,144 @@ def test_every_bundled_example_runs_end_to_end(spark, tmp_path):
             files = [p for p in (root / name).rglob("part-*")
                      if not p.name.endswith(".crc")]
             assert files, f"{cfg.name}: sink {name!r} wrote no files"
+
+
+# -- parse-time spec checks (no Spark session) ----------------------------
+
+def _spec(steps=(), sinks=()):
+    return {"dataflows": [{
+        "name": "f", "sources": [{"name": "s", "path": "/in"}],
+        "transformations": list(steps), "sinks": list(sinks)}]}
+
+
+def _step(name, kind, **params):
+    return {"name": name, "type": kind, "params": params}
+
+
+def _sink(node, **keys):
+    return {"input": node, "name": "out", "paths": ["/out"], **keys}
+
+
+_COUNT = [{"name": "n", "function": "count(1)"}]
+
+
+@pytest.mark.parametrize("spec,problem", [
+    # a typo'd key used to turn a grouped aggregate into a global one
+    (_spec([_step("a", "aggregate", groupby=["k"], aggregates=_COUNT)]),
+     "aggregate 'a'].params: unknown key 'groupby'"),
+    # "MD5" used to run the fast family silently
+    (_spec([_step("d", "dedup_near", idColumn="id", hashFamily="MD5")]),
+     "hashFamily 'MD5' is not 'fast' or 'md5'"),
+    # a lower-case key used to leave the sink at the default append
+    (_spec(sinks=[_sink("s", savemode="overwrite")]),
+     "sinks\\['out'\\]: unknown key 'savemode'"),
+    (_spec(sinks=[_sink("s", saveMode="replace")]), "unknown saveMode 'replace'"),
+    (_spec([_step("a", "agregate")]), "unknown step type 'agregate'"),
+    (_spec([_step("l", "limit", n="5")]), "n: expected int, got '5'"),
+    (_spec([_step("l", "limit", n=-1)]), "needs a non-negative 'n'"),
+    (_spec([_step("t", "topk", n=0, orderBy=["x"])]), "needs a positive 'n'"),
+    (_spec(sinks=[_sink("nope")]), "input names unknown node 'nope'"),
+    (_spec([_step("a", "filter", input="b", expr="x > 0"),
+            _step("b", "filter", expr="x > 1")]),
+     "input names node 'b' before the step that builds it"),
+    (_spec([_step("a", "filter", input="v_ok", expr="x > 0"),
+            _step("v", "validate_fields")]),
+     "input names node 'v_ok' before the step that builds it"),
+    (_spec([_step("j", "join", right="r", on=["k"])]),
+     "right names unknown node 'r'"),
+    (_spec([_step("u", "union", inputs=["s", "t"])]),
+     "inputs names unknown node 't'"),
+    # used to surface as a KeyError inside the first write
+    (_spec(sinks=[_sink("s", format="upsert")]),
+     "an upsert sink needs option 'keys'"),
+], ids=["groupby_typo", "hash_family_case", "savemode_typo",
+        "unknown_save_mode", "unknown_type", "string_n", "negative_limit",
+        "zero_topk", "dangling_sink_input", "forward_input",
+        "forward_split_input", "dangling_join_right",
+        "dangling_union_inputs", "upsert_without_options"])
+def test_parse_rejects_malformed_spec(spec, problem):
+    """Each malformed spec fails in ``parse_metadata`` itself, before any
+    Spark session or job, with a SpecError naming the problem."""
+    with pytest.raises(SpecError, match=problem):
+        parse_metadata(spec)
+
+
+def test_parse_lists_every_problem():
+    """One SpecError carries every problem in the spec, not the first."""
+    spec = _spec([_step("a", "agregate"), _step("l", "limit", n="5")],
+                 [_sink("nope")])
+    with pytest.raises(SpecError) as err:
+        parse_metadata(spec)
+    assert len(err.value.problems) == 3
+    for problem in ("unknown step type 'agregate'",
+                    "expected int, got '5'", "unknown node 'nope'"):
+        assert problem in str(err.value)
+
+
+class _Parsed(Exception):
+    """Stops a spec-building query once its spec has parsed."""
+
+
+def test_every_in_repo_spec_parses(monkeypatch):
+    """The strict parser accepts every spec the repo ships: the example
+    configs as they are on disk, the specs the catalog queries build,
+    and the benchmark's ETL spec."""
+    import importlib
+    import inspect
+    import pathlib
+    import sys
+    from types import SimpleNamespace
+
+    from spark_kafka_airflow_pipeline_spark import metadata
+    from spark_kafka_airflow_pipeline_spark.operators import pipelineops
+    from spark_kafka_airflow_pipeline_spark.streaming import pipelines
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    examples = sorted((repo / "examples").glob("*.json"))
+    assert len(examples) >= 6
+    for cfg in examples:
+        parse_metadata(json.loads(cfg.read_text()))
+
+    monkeypatch.syspath_prepend(str(repo / "perfbench"))
+    workloads = importlib.import_module("workloads")
+    for streaming in (False, True):
+        parse_metadata(workloads.etl_spec("/in", "/out", streaming, 1))
+    sys.modules.pop("workloads", None)
+
+    # each query builds its spec, then runs it; stop it once it parsed
+    parse = metadata.parse_metadata
+
+    def parse_and_stop(raw):
+        parse(raw)
+        raise _Parsed
+
+    monkeypatch.setattr(metadata, "parse_metadata", parse_and_stop)
+    monkeypatch.setattr(pipelines, "_metadata_stream_env",
+                        lambda spark, sf_dir, tag: ("CAST(ts AS TIMESTAMP)",
+                                                    "/out"))
+    session = SimpleNamespace(conf=SimpleNamespace(set=lambda *_: None))
+    builders = [fn for mod in (pipelineops, pipelines)
+                for fn in vars(mod).values()
+                if inspect.isfunction(fn) and fn.__module__ == mod.__name__
+                and "parse_metadata(" in inspect.getsource(fn)]
+    assert len(builders) == 7
+    for build in builders:
+        with pytest.raises(_Parsed):
+            build(session, "/sf")
+
+
+def test_step_table_has_one_builder_per_step_type():
+    """The executor builds exactly the step types the parser accepts,
+    and the row-local set read off its table is the one the one-query
+    streaming drain was written for."""
+    from spark_kafka_airflow_pipeline_spark.executor import (
+        ROW_LOCAL_STEPS,
+        STEPS,
+    )
+    from spark_kafka_airflow_pipeline_spark.metadata import STEP_PARAMS
+
+    assert STEPS.keys() == STEP_PARAMS.keys()
+    assert ROW_LOCAL_STEPS == {"add_fields", "validate_fields", "filter",
+                               "select", "drop", "rename"}
+    assert {k for k, step in STEPS.items() if step.reference} == {
+        "add_fields", "validate_fields"}

@@ -176,25 +176,23 @@ def test_executor_watermark_and_expr_groupby_batch(spark, sf_dir):
     assert got == want
 
 
-def test_watermark_node_validates_params(spark, sf_dir):
+def test_watermark_node_validates_params(sf_dir):
     import pytest
 
-    from spark_kafka_airflow_pipeline_spark.executor import PipelineExecutor
     from spark_kafka_airflow_pipeline_spark.metadata import parse_metadata
 
-    meta = parse_metadata({"dataflows": [{
-        "name": "bad",
-        "sources": [{"name": "orders",
-                     "path": f"{sf_dir}/orders.parquet",
-                     "format": "parquet"}],
-        "transformations": [
-            {"name": "wm", "type": "watermark", "params": {
-                "input": "orders", "column": "o_orderdate"}},
-        ],
-        "sinks": [],
-    }]})
     with pytest.raises(ValueError, match="watermark"):
-        PipelineExecutor(spark).build_nodes(meta.dataflows[0])
+        parse_metadata({"dataflows": [{
+            "name": "bad",
+            "sources": [{"name": "orders",
+                         "path": f"{sf_dir}/orders.parquet",
+                         "format": "parquet"}],
+            "transformations": [
+                {"name": "wm", "type": "watermark", "params": {
+                    "input": "orders", "column": "o_orderdate"}},
+            ],
+            "sinks": [],
+        }]})
 
 
 def test_rendezvous_stability(spark, sf_dir):
