@@ -172,8 +172,7 @@ def _dedup_near(run: _Run, p, df: DataFrame) -> DataFrame:
     else:
         tokens = lambda c: T.shingles(c, 3)  # noqa: E731
         sigs = minhash_signature_agg(d, num_hashes=16, tokens=tokens)
-        cand = lsh_band_candidates(sigs, 16, 4, distinct=False,
-                                   carry="minhash")
+        cand = lsh_band_candidates(sigs, 16, 4, carry="minhash")
         good = estimate_filter_pairs(cand, 16, p.threshold)
         pairs = verify_pairs_jaccard(good, d, tokens, p.threshold)
     drop = pairs.select(F.col("doc_b").alias(p.idColumn)).distinct()

@@ -34,13 +34,6 @@ def char_count(text: Column | str) -> Column:
     return F.length(_c(text))
 
 
-def avg_token_length(text: Column | str) -> Column:
-    """Mean token length = non-space chars / tokens."""
-    t = F.trim(_c(text))
-    nonspace = F.length(F.regexp_replace(t, _WS, ""))
-    return F.when(token_count(t) > 0, nonspace / token_count(t))
-
-
 def punctuation_ratio(text: Column | str) -> Column:
     """Fraction of characters that are not alphanumeric or whitespace."""
     t = _c(text)

@@ -316,7 +316,8 @@ def register(spark) -> None:  # noqa: ANN001
     DataSource support) must surface here, not later as a confusing
     format-not-found."""
     # a reader that implements pushFilters refuses to plan unless the
-    # pushdown feature flag is on (Spark 4.1 guards the new API)
+    # pushdown feature flag is on (Spark 4.1 guards the new API); the
+    # one conf the package writes outside session.py (see its policy)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     for src in (SeqDataSource, JsonlSinkDataSource):
         try:

@@ -40,6 +40,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_kafka_airflow_pipeline_spark.session import pin_table_confs
+
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
@@ -124,21 +126,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet scan of one test table. Column pruning + predicate
     pushdown happen automatically once the caller selects/filters.
 
-    The events table stores TIMESTAMP(NANOS), which Spark's reader
-    rejects unless nanos are read as long — so that conf is set at
-    runtime (it must work under the caller's SparkSession, not only
-    ours) and the nanos column is converted back to a timestamp
-    (truncated to micros, matching how DuckDB reads the same file).
+    The table-read confs are pinned first (``session.pin_table_confs``:
+    it must work under the caller's SparkSession, not only ours). The
+    events table's nanos column arrives as a long under them and is
+    converted back to a timestamp (truncated to micros, matching how
+    DuckDB reads the same file).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # parquet timestamps without isAdjustedToUTC would otherwise load as
-    # TIMESTAMP_NTZ, which withWatermark and numeric casts reject — read
-    # them as TIMESTAMP (wall-clock identical under the UTC session tz)
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # timestamps are compared as formatted wall-clock strings against a
-    # timezone-naive DuckDB oracle — pin UTC even under a caller-built
-    # session (the driver uses its own SparkSession)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_table_confs(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F

@@ -203,7 +203,6 @@ def lsh_band_candidates(signatures: DataFrame, num_hashes: int, bands: int,
                         id_col: str = "doc_id",
                         sig_col: str = "minhash",
                         max_bucket: int = MAX_BUCKET_CLIQUE,
-                        distinct: bool = True,
                         carry: str | None = None) -> DataFrame:
     """Candidate near-dup pairs from banded LSH over an array-typed
     signature column: split the signature into ``bands`` slices, hash
@@ -212,7 +211,6 @@ def lsh_band_candidates(signatures: DataFrame, num_hashes: int, bands: int,
     Plan shape (scales to 100 TB):
       1. explode to (band, bucket, doc)                (narrow)
       2. group docs per bucket, explode combinations   (one shuffle)
-      3. distinct candidate pairs                      (shuffle on pair)
     Intra-bucket pairs come from collect_list + combinations, NOT a
     bucket self-join — the signature pipeline runs exactly once (a
     self-join would recompute it per side).
@@ -224,9 +222,9 @@ def lsh_band_candidates(signatures: DataFrame, num_hashes: int, bands: int,
     once per join side; carrying costs only ``bands`` copies of the
     (small, fixed-size) signature through one shuffle.
 
-    ``distinct=False`` skips the final pair-dedup shuffle for callers
-    whose next step is a pair-keyed groupBy that collapses multi-band
-    duplicates anyway; a pair can then appear up to ``bands`` times.
+    Pairs are NOT deduplicated: a pair can appear up to ``bands`` times.
+    The callers collapse multi-band duplicates downstream (a pair-keyed
+    groupBy or dedup), so a dedup shuffle here would be paid twice.
 
     Adversarial skew guard: a bucket's clique expansion is capped at
     ``max_bucket`` members (C(256,2) ~ 32k pairs); members beyond the
@@ -278,7 +276,7 @@ def lsh_band_candidates(signatures: DataFrame, num_hashes: int, bands: int,
     pair_structs = F.filter(F.concat(clique_pairs, star_pairs),
                             lambda p: p.isNotNull())
     out = ["p.doc_a", "p.doc_b"] + (["p.carry_a", "p.carry_b"] if carry else [])
-    pairs = (
+    return (
         banded.groupBy("band", "bucket")
         # sort_array on the member structs orders by id (first field),
         # keeping the star center (min id) deterministic
@@ -288,7 +286,6 @@ def lsh_band_candidates(signatures: DataFrame, num_hashes: int, bands: int,
         .select(F.explode(pair_structs).alias("p"))
         .select(*out)
     )
-    return pairs.dropDuplicates(["doc_a", "doc_b"]) if distinct else pairs
 
 
 def estimate_filter_pairs(cand: DataFrame, num_hashes: int,
@@ -407,8 +404,7 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
     # pick the fast space
     tokens = lambda c: T.shingle_hashes_of(T.token_hashes(c), 3)  # noqa: E731
     sigs = minhash_signature_agg(d, num_hashes=num_hashes, tokens=tokens)
-    cand = lsh_band_candidates(sigs, num_hashes, bands, distinct=False,
-                               carry="minhash")
+    cand = lsh_band_candidates(sigs, num_hashes, bands, carry="minhash")
     good = estimate_filter_pairs(cand, num_hashes, jaccard_threshold)
     return verify_pairs_jaccard(good, d, tokens, jaccard_threshold)
 
@@ -457,8 +453,7 @@ def incremental_dedup_minhash(spark: SparkSession, sf_dir: str,
         "doc_id", arr.alias("minhash"),
         F.struct(arr.alias("minhash"), F.col("is_new").alias("is_new"))
         .alias("cw"))
-    cand = lsh_band_candidates(sigs, num_hashes, bands, distinct=False,
-                               carry="cw")
+    cand = lsh_band_candidates(sigs, num_hashes, bands, carry="cw")
     cross = cand.filter(
         F.col("carry_a.is_new") != F.col("carry_b.is_new"))
     terms = "+".join(
@@ -569,8 +564,7 @@ def ngram_jaccard_dups(spark: SparkSession, sf_dir: str,
     grams = lambda ch: T.shingle_hashes_of(ch, 3)  # noqa: E731
     sigs = minhash_signature_agg(d, text_col="ch", num_hashes=num_hashes,
                                  tokens=grams)
-    cand = lsh_band_candidates(sigs, num_hashes, bands, distinct=False,
-                               carry="minhash")
+    cand = lsh_band_candidates(sigs, num_hashes, bands, carry="minhash")
     good = estimate_filter_pairs(cand, num_hashes, threshold)
     return verify_pairs_jaccard(
         good, d, grams, threshold, featurize="docs",
@@ -605,8 +599,7 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str,
                   for b in range(4)]).alias("bands"),
     )
     cand = lsh_band_candidates(band_sigs, num_hashes=4, bands=4,
-                               sig_col="bands", distinct=False,
-                               carry="sig")
+                               sig_col="bands", carry="sig")
     return (
         cand.withColumn("hamming",
                         F.bit_count(F.col("carry_a").bitwiseXOR(F.col("carry_b"))))

@@ -27,17 +27,6 @@ FEATURE_SCHEMA = ("doc_id long, n_bytes int, first_byte int, "
                   "checksum_mod int")
 
 
-def decode_image(payload: bytes) -> "object":
-    """Real decoder entry point — unavailable in this container.
-
-    On a production cluster: ``from PIL import Image; return
-    Image.open(io.BytesIO(payload))``.
-    """
-    raise NotImplementedError(
-        "image codecs are not installed in this environment; "
-        "_fake_decode provides the deterministic test double")
-
-
 def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     """Deterministic stand-in for decode+feature-extract: byte length,
     first byte, additive checksum mod 251. Pure function of the payload

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.metadata import AddField, Validation
 from spark_kafka_airflow_pipeline_spark.operators.base import QueryFn, table
+from spark_kafka_airflow_pipeline_spark.session import pin_table_confs
 from spark_kafka_airflow_pipeline_spark.transforms import (
     ERROR_COLUMN,
     add_fields,
@@ -227,9 +228,7 @@ def metadata_compiled_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the confs base.table pins (the executor reads parquet straight
     # from the metadata paths, bypassing the test-table loader)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_table_confs(spark)
     # the engine's portable double-sum discipline (relational.SQL_DSUM):
     # per-term DECIMAL(20,6) makes the sum accumulation-order-free
     dsum_expr = ("CAST(SUM(CAST(l_extendedprice * (1 - l_discount) "
@@ -308,7 +307,7 @@ def metadata_corpus_refinery(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_kafka_airflow_pipeline_spark.executor import PipelineExecutor
     from spark_kafka_airflow_pipeline_spark.metadata import parse_metadata
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_table_confs(spark)
     meta = parse_metadata({"dataflows": [{
         "name": "refinery",
         "sources": [
@@ -395,9 +394,7 @@ def metadata_privacy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from spark_kafka_airflow_pipeline_spark.executor import PipelineExecutor
     from spark_kafka_airflow_pipeline_spark.metadata import parse_metadata
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_table_confs(spark)
     report_sql = """
         WITH kgroups AS (
           SELECT lang, source, n_chars DIV 100 AS len_bucket,

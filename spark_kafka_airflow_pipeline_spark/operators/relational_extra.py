@@ -23,6 +23,7 @@ from spark_kafka_airflow_pipeline_spark.operators.relational import (
     SQL_DSUM,
     dsum,
 )
+from spark_kafka_airflow_pipeline_spark.session import scoped_conf
 
 
 def _ts(s: str):
@@ -955,21 +956,23 @@ def sql_api_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold over a generated step table) — loop semantics vs
     set semantics, identical integers."""
     table(spark, sf_dir, "orders").createOrReplaceTempView("__sqls_orders")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    return spark.sql("""
-    BEGIN
-      DECLARE thr BIGINT DEFAULT 0;
-      DECLARE n_below BIGINT DEFAULT 0;
-      DECLARE n_total BIGINT DEFAULT 0;
-      SET n_total = (SELECT COUNT(*) FROM __sqls_orders);
-      WHILE n_below * 10 < n_total * 6 DO
-        SET thr = thr + 50000;
-        SET n_below = (SELECT COUNT(*) FROM __sqls_orders
-                       WHERE o_totalprice <= thr);
-      END WHILE;
-      SELECT thr AS threshold, n_below, n_total;
-    END
-    """)
+    # spark.sql runs a script eagerly: the returned frame is the final
+    # SELECT's rows, so the conf is only needed for this call
+    with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
+        return spark.sql("""
+        BEGIN
+          DECLARE thr BIGINT DEFAULT 0;
+          DECLARE n_below BIGINT DEFAULT 0;
+          DECLARE n_total BIGINT DEFAULT 0;
+          SET n_total = (SELECT COUNT(*) FROM __sqls_orders);
+          WHILE n_below * 10 < n_total * 6 DO
+            SET thr = thr + 50000;
+            SET n_below = (SELECT COUNT(*) FROM __sqls_orders
+                           WHERE o_totalprice <= thr);
+          END WHILE;
+          SELECT thr AS threshold, n_below, n_total;
+        END
+        """)
 
 
 SQL_API_SCRIPTING_SQL = """

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from spark_kafka_airflow_pipeline_spark.io.bucketing import write_bucketed
 from spark_kafka_airflow_pipeline_spark.operators.base import QueryFn, ppm, table
 from spark_kafka_airflow_pipeline_spark.operators.relational import SQL_DSUM, dsum
+from spark_kafka_airflow_pipeline_spark.session import scoped_conf
 
 #: bucket count for the orders/lineitem pair. Test-scale value; on a
 #: real cluster size it so one bucket ~ 100-500 MB of the LARGER table
@@ -516,10 +517,7 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, confs):
         o = (table(spark, sf_dir, "orders")
              .filter(F.col("o_orderpriority") == "1-URGENT")
              .select("o_orderkey"))
@@ -531,18 +529,12 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                          "revenue")))
         # materialize (and PIN) the result under the scoped confs: a
         # bare collect() here would leave the returned frame to re-plan
-        # hint-free after the finally block restores the confs, paying
+        # hint-free after the scope restores the confs, paying
         # the join twice and losing the bloom filter on the re-run
         # (VERDICT r5 #4). The cached result is one aggregate row.
         out.persist()
         out.count()
         return out
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 BLOOM_JOIN_SQL = f"""

@@ -13,6 +13,20 @@ production path (see ``io.sources.read_kafka_stream``).
 Scale: state is keyed on (window x event_type) / dedup keys, so state
 size is bounded by key cardinality, not stream length; watermarks bound
 state for sessionization.
+
+Queries that differ only in a parameter share one builder:
+
+- ``_events_stream``: the event-table stream every query reads, under
+  the table-read confs (``session.pin_table_confs``).
+- ``_drain_scope``: the state-partition pin every drain runs under
+  (``_drain_to_memory``, ``_exec_metadata_stream``,
+  ``streaming_foreachbatch_upsert``), scoped with ``session.scoped_conf``.
+- ``_purchase_click_join``: the inner, left-outer and full-outer
+  stream-stream joins, which differ only in the join type.
+- ``_session_counts``: the fixed-gap and dynamic-gap session windows.
+- ``_window_spec``: the metadata spec of the tumbling, sliding and
+  session legs of ``metadata_streaming_*``, which differ only in the
+  window expression and the output columns.
 """
 
 from __future__ import annotations
@@ -20,24 +34,22 @@ from __future__ import annotations
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spark_kafka_airflow_pipeline_spark import metadata
 from spark_kafka_airflow_pipeline_spark.operators.base import QueryFn, table
 from spark_kafka_airflow_pipeline_spark.operators.relational import dsum, SQL_DSUM
+from spark_kafka_airflow_pipeline_spark.session import pin_table_confs, scoped_conf
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (schema must be
     explicit on a stream — inference needs a batch scan)."""
-    # raw on-disk schema (ts arrives as nanos-long under the nanosAsLong
-    # conf — see operators.base.table); the stream declares the raw
+    # raw on-disk schema (ts arrives as nanos-long under the table-read
+    # confs — see operators.base.table); the stream declares the raw
     # schema, then converts ts back to a timestamp
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # NTZ timestamps are rejected by withWatermark — read as TIMESTAMP
-    # (see operators.base.table)
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_table_confs(spark)
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (spark.readStream.schema(raw_schema)
               .option("pathGlobFilter", "events.parquet")
@@ -52,36 +64,35 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
+def _drain_scope(spark: SparkSession):
+    """Scope for starting a drain: the stateful shuffle-partition count
+    is pinned small (8) for it. A streaming query creates one
+    state-store instance per shuffle partition and pays its init+commit
+    per micro-batch, so a session left at the 200-partition default
+    spends ~10x longer on state bookkeeping than on data at test scale
+    (measured: tumbling window 8.7s at 32 partitions vs 3.0s at 8, same
+    results). On a real cluster this is sized to key cardinality x
+    executor count — it is a per-query knob, not a code change. The
+    session value is restored on exit so batch queries are unaffected;
+    the query keeps the count it started with (it runs on a clone of
+    the session)."""
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(
+        min(8, spark.sparkContext.defaultParallelism))})
+
+
 def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     """Run the streaming query until the source is exhausted, return the
     memory-sink table. Complete mode for aggregations (emits every
     window regardless of watermark position at end-of-stream), append
-    for row streams.
-
-    The stateful shuffle-partition count is pinned small (8) for the
-    drain: a streaming query creates one state-store instance per
-    shuffle partition and pays its init+commit per micro-batch, so a
-    session left at the 200-partition default spends ~10x longer on
-    state bookkeeping than on data at test scale (measured: tumbling
-    window 8.7s at 32 partitions vs 3.0s at 8, same results). On a real
-    cluster this is sized to key cardinality x executor count — it is a
-    per-query knob, not a code change. The session value is restored
-    afterwards so batch queries are unaffected.
+    for row streams. The drain runs under ``_drain_scope``.
     """
     spark = stream_df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(8, spark.sparkContext.defaultParallelism)))
-    try:
-        q = (stream_df.writeStream.format("memory").queryName(name)
-             .outputMode(output_mode)
-             .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with _drain_scope(spark):
+        (stream_df.writeStream.format("memory").queryName(name)
+         .outputMode(output_mode)
+         .trigger(availableNow=True)
+         .start().awaitTermination())
     return spark.table(name)
 
 
@@ -203,13 +214,22 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition in integer microseconds (exact on boundary events, no
     double rounding), cumulative-sums them into session ids, and takes
     MIN(ts)/COUNT(*) per island."""
-    stream = _events_stream(spark, sf_dir)
+    return _session_counts(spark, sf_dir, "30 minutes")
+
+
+def _session_counts(spark: SparkSession, sf_dir: str,
+                    gap: str | Column) -> DataFrame:
+    """Per-user session windows with watermark 1 hour and the given
+    ``gap`` (a duration string, or a Column for a per-event gap):
+    ``(user_id, session_start, n_events)`` per session, drained in
+    complete mode."""
     agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
+        _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id",
-                F.date_format("sw.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
+                F.date_format("sw.start", "yyyy-MM-dd HH:mm:ss")
+                .alias("session_start"),
                 "n_events")
     )
     return _drain_to_memory(agg, "complete")
@@ -253,22 +273,12 @@ def streaming_session_window_dynamic(spark: SparkSession,
     same empirically-pinned rule as the fixed-gap query above); the
     running max over all previous events equals the current session's
     end because session ends are monotone along the event order."""
-    stream = _events_stream(spark, sf_dir)
     # session_window requires CalendarIntervalType — string durations
     # cast to it; the INTERVAL literal parses as DayTimeIntervalType
     # and is rejected
-    gap = F.expr("CASE WHEN event_type = 'purchase' "
-                 "THEN '10 minutes' ELSE '30 minutes' END")
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id",
-                F.date_format("sw.start", "yyyy-MM-dd HH:mm:ss")
-                .alias("session_start"),
-                "n_events")
-    )
-    return _drain_to_memory(agg, "complete")
+    return _session_counts(spark, sf_dir, F.expr(
+        "CASE WHEN event_type = 'purchase' "
+        "THEN '10 minutes' ELSE '30 minutes' END"))
 
 
 STREAMING_SESSION_DYNAMIC_SQL = """
@@ -382,23 +392,27 @@ def streaming_stream_stream_join(spark: SparkSession,
     for correlating two Kafka topics. Emits matched pairs in append
     mode; on a drained stream the pair set equals the batch range join,
     so this IS oracle-checkable."""
-    purchases = (_events_stream(spark, sf_dir)
-                 .filter(F.col("event_type") == "purchase")
-                 .select(F.col("user_id").alias("p_user"),
-                         F.col("event_id").alias("purchase_id"),
-                         F.col("ts").alias("p_ts"))
-                 .withWatermark("p_ts", "1 hour"))
-    clicks = (_events_stream(spark, sf_dir)
-              .filter(F.col("event_type") == "click")
-              .select(F.col("user_id").alias("c_user"),
-                      F.col("event_id").alias("click_id"),
-                      F.col("ts").alias("c_ts"))
-              .withWatermark("c_ts", "1 hour"))
-    joined = purchases.join(
-        clicks,
+    return _purchase_click_join(spark, sf_dir, "inner")
+
+
+def _purchase_click_join(spark: SparkSession, sf_dir: str,
+                         how: str) -> DataFrame:
+    """Purchases joined (``how``) to the same user's clicks in the hour
+    before, both streams watermarked 1 hour, drained in append mode as
+    ``(purchase_id, click_id)`` pairs."""
+    def side(event_type: str, p: str, id_col: str) -> DataFrame:
+        return (_events_stream(spark, sf_dir)
+                .filter(F.col("event_type") == event_type)
+                .select(F.col("user_id").alias(f"{p}_user"),
+                        F.col("event_id").alias(id_col),
+                        F.col("ts").alias(f"{p}_ts"))
+                .withWatermark(f"{p}_ts", "1 hour"))
+
+    joined = side("purchase", "p", "purchase_id").join(
+        side("click", "c", "click_id"),
         F.expr("p_user = c_user AND "
                "c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts < p_ts"),
-        "inner",
+        how,
     ).select("purchase_id", "click_id")
     return _drain_to_memory(joined, "append")
 
@@ -432,25 +446,7 @@ def streaming_stream_stream_left_join(spark: SparkSession,
     oracled rather than hand-waved). Verified empirically: the
     one-batch-flushes-nothing hypothesis was WRONG (the no-data batch
     exists), and the oracle below reproduces the drain value-exactly."""
-    purchases = (_events_stream(spark, sf_dir)
-                 .filter(F.col("event_type") == "purchase")
-                 .select(F.col("user_id").alias("p_user"),
-                         F.col("event_id").alias("purchase_id"),
-                         F.col("ts").alias("p_ts"))
-                 .withWatermark("p_ts", "1 hour"))
-    clicks = (_events_stream(spark, sf_dir)
-              .filter(F.col("event_type") == "click")
-              .select(F.col("user_id").alias("c_user"),
-                      F.col("event_id").alias("click_id"),
-                      F.col("ts").alias("c_ts"))
-              .withWatermark("c_ts", "1 hour"))
-    joined = purchases.join(
-        clicks,
-        F.expr("p_user = c_user AND "
-               "c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts < p_ts"),
-        "left_outer",
-    ).select("purchase_id", "click_id")
-    return _drain_to_memory(joined, "append")
+    return _purchase_click_join(spark, sf_dir, "left_outer")
 
 
 STREAMING_LEFT_JOIN_SQL = """
@@ -493,25 +489,7 @@ def streaming_stream_stream_full_join(spark: SparkSession,
     eviction horizons fall straight out of the join condition's time
     bounds, and the oracle reproduces the drain value-exactly (same
     empirically-pinned methodology as the left-outer twin above)."""
-    purchases = (_events_stream(spark, sf_dir)
-                 .filter(F.col("event_type") == "purchase")
-                 .select(F.col("user_id").alias("p_user"),
-                         F.col("event_id").alias("purchase_id"),
-                         F.col("ts").alias("p_ts"))
-                 .withWatermark("p_ts", "1 hour"))
-    clicks = (_events_stream(spark, sf_dir)
-              .filter(F.col("event_type") == "click")
-              .select(F.col("user_id").alias("c_user"),
-                      F.col("event_id").alias("click_id"),
-                      F.col("ts").alias("c_ts"))
-              .withWatermark("c_ts", "1 hour"))
-    joined = purchases.join(
-        clicks,
-        F.expr("p_user = c_user AND "
-               "c_ts >= p_ts - INTERVAL 1 HOUR AND c_ts < p_ts"),
-        "full_outer",
-    ).select("purchase_id", "click_id")
-    return _drain_to_memory(joined, "append")
+    return _purchase_click_join(spark, sf_dir, "full_outer")
 
 
 STREAMING_FULL_JOIN_SQL = """
@@ -811,63 +789,22 @@ def metadata_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     applies the same cutoff, so the emission rule itself is
     value-hash-pinned. Scale: state is bounded by (window x type)
     cardinality; the sink write is the batch writer per micro-batch."""
-    ts_expr, out_root = _metadata_stream_env(spark, sf_dir, "tumbling")
-    from spark_kafka_airflow_pipeline_spark.metadata import parse_metadata
-    meta = parse_metadata({"dataflows": [{
-        "name": "stream_agg",
-        "sources": [
-            # file-stream sources take a DIRECTORY; the glob option
-            # narrows it to the events table (same as _events_stream)
-            {"name": "events", "path": sf_dir, "format": "parquet",
-             "streaming": True,
-             "options": {"pathGlobFilter": "events.parquet"}},
-        ],
-        "transformations": [
-            {"name": "typed", "type": "add_fields", "params": {
-                "input": "events", "addFields": [
-                    # raw source type -> timestamp (integer division
-                    # for nanos-long: the engine's exact-epoch
-                    # discipline)
-                    {"name": "ts_t", "function": ts_expr}]}},
-            {"name": "marked", "type": "watermark", "params": {
-                "input": "typed", "column": "ts_t", "delay": "1 hour"}},
-            {"name": "windowed", "type": "aggregate", "params": {
-                "input": "marked",
-                "groupBy": ["window(ts_t, '1 hour') AS w", "event_type"],
-                "aggregates": [
-                    {"name": "n_events", "function": "COUNT(*)"},
-                    {"name": "sum_cents", "function":
-                        "CAST(SUM(CAST(floor(value * 100 + 0.5) "
-                        "AS BIGINT)) AS BIGINT)"}]}},
-            {"name": "fmt", "type": "add_fields", "params": {
-                "input": "windowed", "addFields": [{
-                    "name": "window_start",
-                    "function":
-                        "date_format(w.start, 'yyyy-MM-dd HH:mm:ss')"}]}},
-            {"name": "out", "type": "select", "params": {
-                "input": "fmt", "columns": [
-                    "window_start", "event_type", "n_events",
-                    "sum_cents"]}},
-        ],
-        "sinks": [{"input": "out", "name": "agg", "paths": [out_root],
-                   "format": "parquet", "saveMode": "append"}],
-    }]})
-    return _exec_metadata_stream(spark, meta, out_root, "agg")
+    return _exec_metadata_stream(spark, metadata.parse_metadata(_window_spec(
+        spark, sf_dir, "agg", "window(ts_t, '1 hour')", "event_type",
+        "window_start", _WINDOW_COLUMNS)))
 
 
 def _metadata_stream_env(spark: SparkSession, sf_dir: str,
                          tag: str) -> tuple[str, str]:
     """Shared scaffolding for metadata-compiled streaming topologies:
-    session confs, a per-(sf_dir, tag) drain directory wiped fresh,
+    the table-read confs, a per-(sf_dir, tag) drain directory wiped fresh,
     and the event-time cast adapted to the source's physical ts type
     (nanos-long under the nanosAsLong conf vs plain/NTZ timestamp,
     varies by SF dir — same branching as ``_events_stream``)."""
     import hashlib
     import shutil
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin_table_confs(spark)
     token = hashlib.md5(f"{sf_dir}:{tag}".encode()).hexdigest()[:10]
     out_root = f"/tmp/spark_graft_meta_stream/{token}"
     shutil.rmtree(out_root, ignore_errors=True)  # fresh drain per run
@@ -878,21 +815,75 @@ def _metadata_stream_env(spark: SparkSession, sf_dir: str,
     return ts_expr, out_root
 
 
-def _exec_metadata_stream(spark: SparkSession, meta, out_root: str,
-                          sink_name: str) -> DataFrame:
+def _events_source(sf_dir: str) -> dict:
+    """The metadata source of every ``metadata_streaming_*`` spec."""
+    # file-stream sources take a DIRECTORY; the glob option narrows it
+    # to the events table (same as _events_stream)
+    return {"name": "events", "path": sf_dir, "format": "parquet",
+            "streaming": True, "options": {"pathGlobFilter": "events.parquet"}}
+
+
+#: Output columns of the event-type windows, and the aggregate behind
+#: each aggregate column a ``_window_spec`` can ask for.
+_WINDOW_COLUMNS = ["window_start", "event_type", "n_events", "sum_cents"]
+_WINDOW_AGGS = {
+    "n_events": "COUNT(*)",
+    "sum_cents": "CAST(SUM(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)",
+}
+
+
+def _window_spec(spark: SparkSession, sf_dir: str, tag: str, window: str,
+                 key: str, start: str, columns: list[str]) -> dict:
+    """The metadata spec of the ``metadata_streaming_*`` window legs:
+    ``streaming: true`` file source -> ``add_fields`` event-time cast
+    -> ``watermark`` (1 hour) -> ``aggregate`` grouped by ``window``
+    (a window or session_window expression over ``ts_t``) and ``key``
+    -> ``add_fields`` rendering the window start as ``start`` ->
+    ``select`` of ``columns`` -> parquet sink ``tag`` in a fresh drain
+    directory. The aggregates are the ``_WINDOW_AGGS`` that
+    ``columns`` names."""
+    ts_expr, out_root = _metadata_stream_env(spark, sf_dir, tag)
+    return {"dataflows": [{
+        "name": f"stream_{tag}",
+        "sources": [_events_source(sf_dir)],
+        "transformations": [
+            {"name": "typed", "type": "add_fields", "params": {
+                "input": "events", "addFields": [
+                    # raw source type -> timestamp (integer division
+                    # for nanos-long: the engine's exact-epoch
+                    # discipline)
+                    {"name": "ts_t", "function": ts_expr}]}},
+            {"name": "marked", "type": "watermark", "params": {
+                "input": "typed", "column": "ts_t", "delay": "1 hour"}},
+            {"name": "windowed", "type": "aggregate", "params": {
+                "input": "marked", "groupBy": [f"{window} AS w", key],
+                "aggregates": [{"name": c, "function": f}
+                               for c, f in _WINDOW_AGGS.items()
+                               if c in columns]}},
+            {"name": "fmt", "type": "add_fields", "params": {
+                "input": "windowed", "addFields": [{
+                    "name": start,
+                    "function":
+                        "date_format(w.start, 'yyyy-MM-dd HH:mm:ss')"}]}},
+            {"name": "out", "type": "select", "params": {
+                "input": "fmt", "columns": columns}},
+        ],
+        "sinks": [{"input": "out", "name": tag, "paths": [out_root],
+                   "format": "parquet", "saveMode": "append"}],
+    }]}
+
+
+def _exec_metadata_stream(spark: SparkSession, meta) -> DataFrame:
     """Run one metadata dataflow through the SAME executor path as
-    batch configs and read the drained sink back as a batch frame."""
+    batch configs, under ``_drain_scope``, and read its (first) sink
+    back as a batch frame."""
     from spark_kafka_airflow_pipeline_spark.executor import PipelineExecutor
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(8, spark.sparkContext.defaultParallelism)))
-    try:
-        PipelineExecutor(spark).run_dataflow(meta.dataflows[0])
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return spark.read.parquet(f"{out_root}/{sink_name}")
+    flow = meta.dataflows[0]
+    with _drain_scope(spark):
+        PipelineExecutor(spark).run_dataflow(flow)
+    sink = flow.sinks[0]
+    return spark.read.parquet(f"{sink.paths[0]}/{sink.name}")
 
 
 def metadata_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -913,40 +904,9 @@ def metadata_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     the emission rule itself is value-hash-gated. State is bounded by
     live sessions per user; the executor drain is availableNow +
     foreachBatch into the batch sink writer, checkpoint beside it."""
-    ts_expr, out_root = _metadata_stream_env(spark, sf_dir, "session")
-    from spark_kafka_airflow_pipeline_spark.metadata import parse_metadata
-    meta = parse_metadata({"dataflows": [{
-        "name": "stream_sessions",
-        "sources": [
-            {"name": "events", "path": sf_dir, "format": "parquet",
-             "streaming": True,
-             "options": {"pathGlobFilter": "events.parquet"}},
-        ],
-        "transformations": [
-            {"name": "typed", "type": "add_fields", "params": {
-                "input": "events", "addFields": [
-                    {"name": "ts_t", "function": ts_expr}]}},
-            {"name": "marked", "type": "watermark", "params": {
-                "input": "typed", "column": "ts_t", "delay": "1 hour"}},
-            {"name": "sessions", "type": "aggregate", "params": {
-                "input": "marked",
-                "groupBy": ["session_window(ts_t, '30 minutes') AS sw",
-                            "user_id"],
-                "aggregates": [
-                    {"name": "n_events", "function": "COUNT(*)"}]}},
-            {"name": "fmt", "type": "add_fields", "params": {
-                "input": "sessions", "addFields": [{
-                    "name": "session_start",
-                    "function":
-                        "date_format(sw.start, 'yyyy-MM-dd HH:mm:ss')"}]}},
-            {"name": "out", "type": "select", "params": {
-                "input": "fmt", "columns": [
-                    "user_id", "session_start", "n_events"]}},
-        ],
-        "sinks": [{"input": "out", "name": "sess", "paths": [out_root],
-                   "format": "parquet", "saveMode": "append"}],
-    }]})
-    return _exec_metadata_stream(spark, meta, out_root, "sess")
+    return _exec_metadata_stream(spark, metadata.parse_metadata(_window_spec(
+        spark, sf_dir, "sess", "session_window(ts_t, '30 minutes')",
+        "user_id", "session_start", ["user_id", "session_start", "n_events"])))
 
 
 METADATA_SESSION_SQL = """
@@ -1005,44 +965,9 @@ def metadata_streaming_sliding(spark: SparkSession,
     the overlap fan-out and the emission rule are value-hash-pinned.
     State is bounded by (live windows x type): at any watermark only
     two window slots per type are open."""
-    ts_expr, out_root = _metadata_stream_env(spark, sf_dir, "sliding")
-    from spark_kafka_airflow_pipeline_spark.metadata import parse_metadata
-    meta = parse_metadata({"dataflows": [{
-        "name": "stream_sliding",
-        "sources": [
-            {"name": "events", "path": sf_dir, "format": "parquet",
-             "streaming": True,
-             "options": {"pathGlobFilter": "events.parquet"}},
-        ],
-        "transformations": [
-            {"name": "typed", "type": "add_fields", "params": {
-                "input": "events", "addFields": [
-                    {"name": "ts_t", "function": ts_expr}]}},
-            {"name": "marked", "type": "watermark", "params": {
-                "input": "typed", "column": "ts_t", "delay": "1 hour"}},
-            {"name": "windowed", "type": "aggregate", "params": {
-                "input": "marked",
-                "groupBy": ["window(ts_t, '2 hours', '1 hour') AS w",
-                            "event_type"],
-                "aggregates": [
-                    {"name": "n_events", "function": "COUNT(*)"},
-                    {"name": "sum_cents", "function":
-                        "CAST(SUM(CAST(floor(value * 100 + 0.5) "
-                        "AS BIGINT)) AS BIGINT)"}]}},
-            {"name": "fmt", "type": "add_fields", "params": {
-                "input": "windowed", "addFields": [{
-                    "name": "window_start",
-                    "function":
-                        "date_format(w.start, 'yyyy-MM-dd HH:mm:ss')"}]}},
-            {"name": "out", "type": "select", "params": {
-                "input": "fmt", "columns": [
-                    "window_start", "event_type", "n_events",
-                    "sum_cents"]}},
-        ],
-        "sinks": [{"input": "out", "name": "slide", "paths": [out_root],
-                   "format": "parquet", "saveMode": "append"}],
-    }]})
-    return _exec_metadata_stream(spark, meta, out_root, "slide")
+    return _exec_metadata_stream(spark, metadata.parse_metadata(_window_spec(
+        spark, sf_dir, "slide", "window(ts_t, '2 hours', '1 hour')",
+        "event_type", "window_start", _WINDOW_COLUMNS)))
 
 
 METADATA_SLIDING_SQL = """
@@ -1080,14 +1005,9 @@ def metadata_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same argument as ``streaming_foreachbatch_upsert``): final state
     == one batch window, whatever the micro-batching was."""
     ts_expr, out_root = _metadata_stream_env(spark, sf_dir, "upsert")
-    from spark_kafka_airflow_pipeline_spark.metadata import parse_metadata
-    meta = parse_metadata({"dataflows": [{
+    meta = metadata.parse_metadata({"dataflows": [{
         "name": "stream_upsert",
-        "sources": [
-            {"name": "events", "path": sf_dir, "format": "parquet",
-             "streaming": True,
-             "options": {"pathGlobFilter": "events.parquet"}},
-        ],
+        "sources": [_events_source(sf_dir)],
         "transformations": [
             {"name": "typed", "type": "add_fields", "params": {
                 "input": "events", "addFields": [
@@ -1105,7 +1025,7 @@ def metadata_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                    "options": {"keys": "user_id",
                                "orderBy": "ts_us,event_id"}}],
     }]})
-    state = _exec_metadata_stream(spark, meta, out_root, "state")
+    state = _exec_metadata_stream(spark, meta)
     return state.select(
         "user_id", F.col("event_id").alias("last_event_id"),
         F.col("ts_us").alias("last_ts_us"),
@@ -1178,38 +1098,32 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str,
                   .localCheckpoint(eager=True))
         latest.write.mode("overwrite").parquet(state_dir)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(min(8, spark.sparkContext.defaultParallelism)))
     try:
-        stream = (spark.readStream.schema(src.schema)
-                  .option("maxFilesPerTrigger", "1")
-                  .parquet(f"{root}/in"))
-        q = (stream.writeStream.foreachBatch(merge)
+        with _drain_scope(spark):
+            (spark.readStream.schema(src.schema)
+             .option("maxFilesPerTrigger", "1")
+             .parquet(f"{root}/in")
+             .writeStream.foreachBatch(merge)
              .option("checkpointLocation", f"{root}/ckpt")
              .trigger(availableNow=True)
-             .start())
-        q.awaitTermination()
-        out_schema = ("user_id long, last_event_id long, last_ts_us long,"
-                      " last_type string, last_cents long")
+             .start().awaitTermination())
         if not Path(state_dir).exists():
             # empty source -> zero micro-batches -> no state was ever
             # written (module empty-input invariant: empty in, empty
             # out with the declared schema)
-            return spark.createDataFrame([], out_schema)
-        out = (spark.read.parquet(state_dir)
-               .select("user_id",
-                       F.col("event_id").alias("last_event_id"),
-                       F.unix_micros("ts").alias("last_ts_us"),
-                       F.col("event_type").alias("last_type"),
-                       F.floor(F.col("value") * 100 + 0.5).cast("bigint")
-                       .alias("last_cents"))
-               .localCheckpoint(eager=True))
+            return spark.createDataFrame([], (
+                "user_id long, last_event_id long, last_ts_us long,"
+                " last_type string, last_cents long"))
+        return (spark.read.parquet(state_dir)
+                .select("user_id",
+                        F.col("event_id").alias("last_event_id"),
+                        F.unix_micros("ts").alias("last_ts_us"),
+                        F.col("event_type").alias("last_type"),
+                        F.floor(F.col("value") * 100 + 0.5).cast("bigint")
+                        .alias("last_cents"))
+                .localCheckpoint(eager=True))
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(root, ignore_errors=True)
-    return out
 
 
 STREAMING_UPSERT_SQL = """

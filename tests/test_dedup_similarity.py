@@ -92,7 +92,9 @@ def test_ngram_blocking_skew(spark, tmp_path):
     # the operator's own band geometry (32 hashes, 4 bands x 8 rows)
     sigs = dedup.minhash_signature_agg(
         docs, num_hashes=32, tokens=lambda c: T.char_ngrams(c, 3))
-    cand = dedup.lsh_band_candidates(sigs, num_hashes=32, bands=4)
+    # a pair repeats once per band it shares: count distinct pairs
+    cand = dedup.lsh_band_candidates(sigs, num_hashes=32, bands=4).dropDuplicates(
+        ["doc_a", "doc_b"])
     n_cand = cand.count()
     # all-pairs within the shared-prefix block would be 499_500
     assert n_cand < 5_000, f"skewed candidate blowup: {n_cand} pairs"
@@ -151,7 +153,9 @@ def test_mega_cluster_cap(spark, tmp_path):
 
     sigs = dedup.minhash_signature_agg(
         spark.read.parquet(str(d / "documents.parquet")))
-    cand = dedup.lsh_band_candidates(sigs, num_hashes=16, bands=4)
+    # a pair repeats once per band it shares: count distinct pairs
+    cand = dedup.lsh_band_candidates(sigs, num_hashes=16, bands=4).dropDuplicates(
+        ["doc_a", "doc_b"])
     n_cand = cand.count()
     cap_bound = (dedup.MAX_BUCKET_CLIQUE * (dedup.MAX_BUCKET_CLIQUE - 1)) // 2 \
         + (10_000 - dedup.MAX_BUCKET_CLIQUE)

@@ -455,7 +455,7 @@ def test_declarative_dedup_near(spark, sf_dir):
          .select("doc_id", "text"))
     tokens = lambda c: T.shingles(c, 3)  # noqa: E731
     sigs = minhash_signature_agg(d, num_hashes=16, tokens=tokens)
-    cand = lsh_band_candidates(sigs, 16, 4, distinct=False, carry="minhash")
+    cand = lsh_band_candidates(sigs, 16, 4, carry="minhash")
     pairs = verify_pairs_jaccard(
         estimate_filter_pairs(cand, 16, 0.5), d, tokens, 0.5)
     dropped = {r.doc_b for r in pairs.select("doc_b").collect()}
