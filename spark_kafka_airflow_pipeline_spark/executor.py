@@ -141,40 +141,18 @@ def _union(run: _Run, p, df: DataFrame) -> DataFrame:
 
 
 def _dedup_near(run: _Run, p, df: DataFrame) -> DataFrame:
-    # near-duplicate removal as a DECLARATIVE step: the same
-    # MinHash-LSH pipeline the operator library exposes (signature
-    # pass -> banded buckets -> estimate filter -> exact-Jaccard
-    # verify), then keep-first survivorship — drop every doc that is
-    # the LARGER end of a verified pair (deterministic; the kept set is
-    # exactly the pair-graph minima). All bounded-bucket, no all-pairs
-    # join — the operator library's scale posture carries over verbatim.
-    from spark_kafka_airflow_pipeline_spark.functions import text as T
-    from spark_kafka_airflow_pipeline_spark.operators.dedup import (
-        estimate_filter_pairs,
-        lsh_band_candidates,
-        md5_minhash_verified_pairs,
-        minhash_signature_agg,
-        verify_pairs_jaccard,
-    )
+    # near-duplicate removal as a DECLARATIVE step: the operator
+    # library's word-shingle pair pipeline under the declared hash
+    # family (md5 is the oracled MINHASH_MD5_SQL family), then
+    # keep-first survivorship — drop every doc that is the LARGER end
+    # of a verified pair (deterministic; the kept set is exactly the
+    # pair-graph minima). No all-pairs join.
+    from spark_kafka_airflow_pipeline_spark.operators import dedup
 
     d = df.select(F.col(p.idColumn).alias("doc_id"),
                   F.col(p.textColumn).alias("text"))
-    if p.hashFamily == "md5":
-        # portable family: every hash is md5-derived, so the declared
-        # step is value-hash provable against a DuckDB twin
-        # (MINHASH_MD5_SQL) — the config-driven path to the engine's
-        # oracled near-dedup
-        grams = (d.select("doc_id", T.split_tokens("text").alias("toks"))
-                 .select("doc_id",
-                         F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                         .alias("grams")))
-        pairs = md5_minhash_verified_pairs(grams, p.threshold)
-    else:
-        tokens = lambda c: T.shingles(c, 3)  # noqa: E731
-        sigs = minhash_signature_agg(d, num_hashes=16, tokens=tokens)
-        cand = lsh_band_candidates(sigs, 16, 4, carry="minhash")
-        good = estimate_filter_pairs(cand, 16, p.threshold)
-        pairs = verify_pairs_jaccard(good, d, tokens, p.threshold)
+    pairs = dedup.near_dup_pairs(d, dedup.FAMILIES[p.hashFamily],
+                                 p.threshold)
     drop = pairs.select(F.col("doc_b").alias(p.idColumn)).distinct()
     return df.join(drop, p.idColumn, "left_anti")
 

@@ -216,8 +216,8 @@ class TextParams(Params):
 @_step("dedup_near")
 class DedupNearParams(TextParams):
     threshold: float = 0.5  # Jaccard cutoff
-    # "fast" (xxhash64, production) or "md5" (portable hashes,
-    # oracle-provable)
+    # a key of operators.dedup.FAMILIES: "fast" (xxhash64, production)
+    # or "md5" (portable hashes, oracle-provable)
     hashFamily: str = "fast"
 
     def _problems(self):

@@ -2,32 +2,66 @@
 
 - **exact**: hash-groupBy on the raw text (and on the canonical
   fingerprint) — one shuffle on the dedup key, keep min doc_id.
-- **MinHash + banding LSH**: shingle -> 16-hash MinHash signature ->
-  band buckets -> within-bucket combinations -> verify with true
-  Jaccard. All JVM expressions (``xxhash64``), deterministic seed, no
-  pyspark.ml dependency, no Python in the hot path.
+- **MinHash-LSH near-dups**: word-shingle pairs, char-3-gram pairs,
+  clusters and incremental batch-vs-corpus screens, each a short
+  composition of the four shared stages below over one hash family.
 - **SimHash**: 64-bit signature over char n-grams; ``simhash_buckets``
   groups identical signatures (Hamming-0), ``simhash_near_dups`` bands
   the signature 4 x 16 bits for exact recall at Hamming <= 3.
-- **n-gram Jaccard**: char-level MinHash band blocking + pairwise
-  verify (prefix blocking was a skew bomb on natural-language text).
 
-Scale: the pairwise step only ever runs on LSH bucket candidates —
-never a full cross join. Buckets are murmur3 of (band-slice); bucket
-clique expansion is capped at ``MAX_BUCKET_CLIQUE`` members with star
-pairs for the overflow, so even an adversarial mega-cluster of
-identical documents costs O(n) candidates. The verify join's broadcast
-decision is AQE's, made from runtime sizes (see
-``verify_pairs_jaccard``).
+Hash families are data (``HashFamily``): a gram hash ``h(g)``, one
+coordinate hash per signature slot (slot i is ``min_g coord_i(h)``),
+bands x rows, and the banding rule:
 
-The exact variants are SQL-oracle-able; MinHash/SimHash use Spark's
-murmur3/xxhash64 which DuckDB lacks, so those register rows-only checks
-(driver records weaker coverage; SURVEY.md §5).
+- fast, ``xxhash_family(num_hashes, bands)``: ``h = xxhash64(42, g)``,
+  coordinate ``xxhash64(i, h)``; bands x rows per query (4 x 4 word
+  shingles, 4 x 8 char grams); capped-bucket banding.
+- ``MD5_WORD``: ``h`` = first 15 md5 hex digits of the gram mod p,
+  coordinate ``(a_i * h + b_i) mod p`` over 8 fixed ``(a, b)``; 4 x 2;
+  exact banding.
+- ``MD5_CHAR``: the same ``h`` with 32 md5-derived ``(a, b)``; 4 x 8;
+  exact banding.
+
+The fast family is the production path (JVM-only hashes, rows-only
+checks: DuckDB lacks xxhash64/murmur3). The md5 families are
+bit-identical in Spark and DuckDB, so every query built on them has an
+exact SQL oracle (``*_SQL`` below) and each fast query has an oracled
+md5 counterpart. The oracle SQL shares text fragments only with other
+SQL strings, never with the Spark code, so it stays an independent
+restatement.
+
+The four near-dup stages, one implementation each:
+
+1. **Signature aggregate** (``_signature``; ``minhash_signature_agg``
+   featurizes text for the fast family): one doc-keyed codegen
+   HashAggregate of coordinate mins, packed into a ``minhash`` array.
+2. **Banding.** Fast families use ``lsh_band_candidates``: murmur3
+   buckets of band slices with the clique cap of ``MAX_BUCKET_CLIQUE``
+   members, so a mega-cluster costs O(n) star pairs. md5 families (and
+   ``simhash_md5_pairs``) use ``_band_join``: an exact band-key
+   self-join that the oracle mirrors.
+   The two compute different pair sets above the cap (the largest md5
+   char-gram bucket at sf0.1 has 409 members, the largest md5 SimHash
+   bucket 1,371), so the family selects the banding.
+3. **Signature-agreement count** (``_agree``): how many signature
+   coordinates a candidate pair shares — the estimate pre-filter of
+   the fast family, the integer floor of ``MD5_CHAR`` and the sketch
+   estimate of ``minhash_estimate_error``.
+4. **Exact-Jaccard verify** (``verify_pairs_jaccard``) over distinct
+   feature sets, on candidates only.
+
+Scale: the pairwise step only ever runs on banding candidates — never a
+full cross join. The verify join's broadcast decision is AQE's, made
+from runtime sizes (see ``verify_pairs_jaccard``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import hashlib
+from dataclasses import dataclass
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.functions import text as T
@@ -126,67 +160,144 @@ FROM ranked WHERE rn = 1
 """
 
 
-def minhash_signature_agg(d: DataFrame, id_col: str = "doc_id",
-                          text_col: str = "text", num_hashes: int = 16,
-                          k: int = 3, seed: int = 42,
-                          tokens=None) -> DataFrame:
-    """Scalable MinHash: explode shingles to rows, compute the
-    ``num_hashes`` family mins as whole-stage-codegen aggregates (one
-    shuffle on the doc id). Each family is an INDEPENDENT hash: one
-    xxhash64 per shingle string, then xxhash64(i, h64) per family —
-    hashing the 8-byte long per family is far cheaper than re-hashing
-    the string, and a distinct first argument makes a distinct function.
+# ----------------------------------------------------------------------
+# hash families (data) and the four near-dup stages
+# ----------------------------------------------------------------------
+
+_MH_P = 1_000_000_007  # modulus: products stay under int64
+_MH_COEFFS = ((384752429, 284920291), (583158611, 132907219),
+              (748192853, 952760839), (114027587, 844302611),
+              (270028169, 724470217), (906347687, 151834219),
+              (482970317, 641053969), (867043411, 308805101))
+
+_NG_BANDS, _NG_ROWS = 4, 8
+# 32 md5-derived permutation coefficients — deterministic constants
+# baked identically into the Spark expressions and the SQL oracle
+# (no RNG; a != 0 mod p)
+_NG_COEFFS = tuple(
+    (int(hashlib.md5(f"ng-a{i}".encode()).hexdigest()[:12], 16)
+     % (_MH_P - 1) + 1,
+     int(hashlib.md5(f"ng-b{i}".encode()).hexdigest()[:12], 16) % _MH_P)
+    for i in range(_NG_BANDS * _NG_ROWS))
+
+
+@dataclass(frozen=True)
+class HashFamily:
+    """One MinHash hash family (see the module docstring's list):
+    ``gram_hash`` maps a gram column to the long ``h``, ``coord(i)``
+    is the SQL of signature coordinate ``i`` over ``h``, and ``exact``
+    picks the banding — the exact band-key self-join (``_band_join``)
+    instead of the capped buckets of ``lsh_band_candidates``."""
+
+    gram_hash: Callable[[Column], Column]
+    coord: Callable[[int], str]
+    num_hashes: int
+    bands: int
+    exact: bool
+
+    def band_keys(self) -> list[Column]:
+        """The exact banding's keys over the ``minhash`` array: band
+        index and that band's coordinates, ``:``-joined."""
+        rows = self.num_hashes // self.bands
+        return [F.concat_ws(":", F.lit(j), *[F.col("minhash")[j * rows + r]
+                                             for r in range(rows)])
+                for j in range(self.bands)]
+
+
+def xxhash_family(num_hashes: int = 16, bands: int = 4,
+                  seed: int = 42) -> HashFamily:
+    """The fast family: one xxhash64 per gram, then ``xxhash64(i, h)``
+    per coordinate — hashing the 8-byte long per coordinate is far
+    cheaper than re-hashing the gram, and a distinct first argument
+    makes a distinct function (measured ~25% cheaper than the murmur3
+    ``hash(i, h)`` equivalent at sf0.1).
 
     NB: the obvious "universal family" shortcut ``min(h * odd_i + c_i)``
     is WRONG here twice over: without 64-bit wraparound the transform is
-    MONOTONE, so every family selects the same argmin shingle and the
+    MONOTONE, so every coordinate selects the same argmin gram and the
     whole signature degenerates to one effective hash function (at
     sf0.1 that admitted 60% of all doc pairs as LSH candidates —
     7.5M pairs from 5000 docs), and under ANSI mode (Spark 4 default)
-    the wraparound that would fix it throws ARITHMETIC_OVERFLOW.
+    the wraparound that would fix it throws ARITHMETIC_OVERFLOW. The md5
+    families avoid both by reducing ``h`` mod p first."""
+    return HashFamily(lambda g: F.xxhash64(F.lit(seed), g),
+                      lambda i: f"xxhash64({i}, h)", num_hashes, bands,
+                      exact=False)
 
-    ``tokens`` overrides the feature extractor: a function
-    ``text_column -> array<string> Column`` (default: word ``k``-
-    shingles; pass ``lambda c: T.char_ngrams(c, 3)`` for character-level
-    MinHash).
 
-    With only min-aggregates the whole aggregation stays a codegen'd
+def _md5_family(coeffs, bands: int) -> HashFamily:
+    return HashFamily(
+        lambda g: (F.conv(F.substring(F.md5(g), 1, 15), 16, 10)
+                   .cast("bigint") % _MH_P),
+        lambda i: f"({coeffs[i][0]} * h + {coeffs[i][1]}) % {_MH_P}",
+        len(coeffs), bands, exact=True)
+
+
+MD5_WORD = _md5_family(_MH_COEFFS, 4)
+MD5_CHAR = _md5_family(_NG_COEFFS, _NG_BANDS)
+
+#: the executor's ``dedup_near`` families, keyed by its ``hashFamily``
+FAMILIES = {"fast": xxhash_family(), "md5": MD5_WORD}
+
+
+def _signature(hashed: DataFrame, family: HashFamily, id_col: str = "doc_id",
+               extra: dict[str, Column] | None = None) -> DataFrame:
+    """Stage 1, the signature aggregate: ``(id, h)`` gram-hash rows ->
+    ``(id, *extra, minhash)``, the ``family`` coordinate mins as one
+    doc-keyed aggregate (one shuffle). ``extra`` names further
+    aggregates that ride the same pass.
+
+    With only min-aggregates the aggregation stays a codegen'd
     HashAggregate — adding any collection aggregate (e.g. a per-doc
     feature set) demotes it to ObjectHashAggregate and ships
-    corpus-sized array state through the shuffle; the verify step
+    corpus-sized array state through the shuffle; the fast verify
     instead re-tokenizes ONLY candidate docs (see
     ``verify_pairs_jaccard``)."""
-    tokens = tokens or (lambda c: T.shingles(c, k))
+    extra = extra or {}
+    ms = [f"m{i}" for i in range(family.num_hashes)]
+    # F.expr instead of nested Column calls: one py4j roundtrip per
+    # coordinate instead of four (plan-build time is real at 16-32)
+    mins = hashed.groupBy(id_col).agg(
+        *[c.alias(n) for n, c in extra.items()],
+        *[F.expr(f"min({family.coord(i)}) as {m}") for i, m in enumerate(ms)],
+    )
+    return mins.select(id_col, *extra, F.array(*ms).alias("minhash"))
+
+
+def _text_signature(d: DataFrame, family: HashFamily, tokens,
+                    id_col: str = "doc_id", text_col: str = "text",
+                    keep: tuple[str, ...] = ()) -> DataFrame:
+    """Stage 1 over a feature column: explode ``tokens(text_col)`` to
+    rows, hash each feature once, aggregate (``_signature``). ``keep``
+    columns ride the doc-id groupBy as ``first`` aggregates."""
     # single-file tables arrive as ONE input split; spread rows before
     # the compute-heavy explode+hash so all cores work (at 100 TB the
     # scan has thousands of splits and this repartition coalesces into
     # the shuffle that groupBy needs anyway)
     par = d.sparkSession.sparkContext.defaultParallelism
     sh = (d.repartition(par, id_col)
-          .select(F.col(id_col),
+          .select(F.col(id_col), *keep,
                   F.explode(tokens(F.col(text_col))).alias("s")))
     # feature may be a string (shingle text) or a long (hash-chain gram
-    # identity, e.g. T.shingle_hashes_of) — xxhash64 hashes either
-    h = F.xxhash64(F.lit(seed), F.col("s"))
-    # xxhash64(i, h) per family: measured ~25% cheaper than the
-    # murmur3 `hash(i, h)` equivalent at sf0.1 (both are independent
-    # families via the distinct first argument; the multiply-add
-    # shortcut is out — ANSI mode makes the wraparound throw).
-    # F.expr instead of nested Column calls: one py4j roundtrip per
-    # family instead of four (plan-build time is real at 16-32 hashes).
-    mins = sh.select(id_col, h.alias("h")).groupBy(id_col).agg(
-        *[F.expr(f"min(xxhash64({i}, h)) as m{i}")
-          for i in range(num_hashes)],
-    )
-    return mins.select(
-        id_col,
-        F.array(*[f"m{i}" for i in range(num_hashes)]).alias("minhash"))
+    # identity, e.g. T.shingle_hashes_of) — both families hash either
+    hashed = sh.select(id_col, *keep, family.gram_hash(F.col("s")).alias("h"))
+    return _signature(hashed, family, id_col, {c: F.first(c) for c in keep})
 
 
-def _hash_token_fn(seed: int):
-    """Closure factory for the token->hash lambda (a plain 2-arg lambda
-    in a HOF would be reinterpreted as (element, index))."""
-    return lambda s: F.xxhash64(F.lit(seed), s)
+def minhash_signature_agg(d: DataFrame, id_col: str = "doc_id",
+                          text_col: str = "text", num_hashes: int = 16,
+                          k: int = 3, seed: int = 42,
+                          tokens=None) -> DataFrame:
+    """Scalable fast-family MinHash (``xxhash_family``): ``(id_col,
+    minhash)`` with ``num_hashes`` coordinates, one corpus pass.
+
+    ``tokens`` overrides the feature extractor: a function
+    ``text_column -> array<string> Column`` (default: word ``k``-
+    shingles; pass ``lambda c: T.char_ngrams(c, 3)`` for character-level
+    MinHash)."""
+    tokens = tokens or (lambda c: T.shingles(c, k))
+    return _text_signature(d, xxhash_family(num_hashes, seed=seed), tokens,
+                           id_col, text_col)
 
 
 # Bound on the all-pairs (clique) expansion within one LSH bucket.
@@ -204,9 +315,10 @@ def lsh_band_candidates(signatures: DataFrame, num_hashes: int, bands: int,
                         sig_col: str = "minhash",
                         max_bucket: int = MAX_BUCKET_CLIQUE,
                         carry: str | None = None) -> DataFrame:
-    """Candidate near-dup pairs from banded LSH over an array-typed
-    signature column: split the signature into ``bands`` slices, hash
-    each slice to a bucket, emit within-bucket pairs.
+    """Stage 2 for the fast families: candidate near-dup pairs from
+    banded LSH over an array-typed signature column: split the
+    signature into ``bands`` slices, hash each slice to a bucket, emit
+    within-bucket pairs.
 
     Plan shape (scales to 100 TB):
       1. explode to (band, bucket, doc)                (narrow)
@@ -288,20 +400,61 @@ def lsh_band_candidates(signatures: DataFrame, num_hashes: int, bands: int,
     )
 
 
+def _band_join(sig: DataFrame, keys: list[Column],
+               carry: tuple[str, ...] = ()) -> DataFrame:
+    """Stage 2 for the md5 families: exact banding, every pair of docs
+    that shares a band key, once — distinct ``(doc_a < doc_b)`` plus
+    each ``carry`` column as ``<c>_a`` / ``<c>_b``. The oracles mirror
+    this self-join literally.
+
+    Callers pass a materialized ``sig`` (localCheckpoint), one
+    fixed-width row per doc, and the keys explode from ONE array
+    projection: the r9 census found the old 4-union + self-join form
+    re-ran the tokenize+signature pipeline 8x (once per union arm per
+    join side)."""
+    bands = sig.select("doc_id", *carry,
+                       F.explode(F.array(*keys)).alias("bk"))
+    a, b = bands.alias("a"), bands.alias("b")
+    return (a.join(b, (F.col("a.bk") == F.col("b.bk"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"),
+                    *[F.col(f"{s}.{c}").alias(f"{c}_{s}")
+                      for c in carry for s in "ab"])
+            .distinct())
+
+
+def _agree(a: str, b: str, n: int) -> str:
+    """Stage 3, the signature-agreement count: SQL for the number of
+    the first ``n`` coordinates on which signature arrays ``a`` and
+    ``b`` agree (an int; over ``n`` it is the unbiased MinHash Jaccard
+    estimate)."""
+    return "+".join(f"if({a}[{i}]={b}[{i}],1,0)" for i in range(n))
+
+
+def _pair_sides(pairs: DataFrame, docs: DataFrame, *cols: str) -> DataFrame:
+    """Join per-doc ``cols`` of ``docs`` onto both ends of ``(doc_a,
+    doc_b)`` pairs as ``<c>_a`` / ``<c>_b``."""
+    for s in "ab":
+        pairs = pairs.join(docs.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in cols]), f"doc_{s}")
+    return pairs
+
+
 def estimate_filter_pairs(cand: DataFrame, num_hashes: int,
                           jaccard_threshold: float) -> DataFrame:
     """Cheap pair-local pre-filter on candidate pairs that carry their
     MinHash signatures (``carry_a``/``carry_b``): keep pairs whose
-    signature-agreement fraction (an unbiased Jaccard estimate) clears
-    ``jaccard_threshold`` minus 3.5 binomial sigma — pairs genuinely at
-    the threshold survive with P > 0.9997, while the spurious bulk of a
-    high-collision blocking key (char-gram buckets admit ~150k
-    candidates per 255 true pairs at sf0.1 — 0.17% precision) is
-    dropped before the expensive exact verify. Pure codegen comparisons,
-    no joins, no tokenization."""
-    terms = "+".join(
-        f"if(carry_a[{i}]=carry_b[{i}],1,0)" for i in range(num_hashes))
-    est = F.expr(f"({terms})/{num_hashes}d")
+    signature-agreement fraction (``_agree``, an unbiased Jaccard
+    estimate) clears ``jaccard_threshold`` minus 3.5 binomial sigma —
+    pairs genuinely at the threshold survive with P > 0.9997, while the
+    spurious bulk of a high-collision blocking key (char-gram buckets
+    admit ~150k candidates per 255 true pairs at sf0.1 — 0.17%
+    precision) is dropped before the expensive exact verify. Pure
+    codegen comparisons, no joins, no tokenization."""
+    est = F.expr(f"({_agree('carry_a', 'carry_b', num_hashes)})"
+                 f"/{num_hashes}d")
     sigma = (jaccard_threshold * (1 - jaccard_threshold) / num_hashes) ** 0.5
     tau = max(0.0, jaccard_threshold - 3.5 * sigma)
     return cand.filter(est >= tau).select("doc_a", "doc_b")
@@ -309,34 +462,44 @@ def estimate_filter_pairs(cand: DataFrame, num_hashes: int,
 
 def verify_pairs_jaccard(cand: DataFrame, docs: DataFrame, tokens,
                          jaccard_threshold: float,
-                         seed: int = 42,
-                         featurize: str = "pairs",
-                         doc_features=None) -> DataFrame:
-    """Keep candidate (doc_a, doc_b) pairs whose TRUE Jaccard (on the
-    64-bit feature-hash sets — identical to string-set Jaccard up to
-    hash collisions) clears the threshold.
+                         seed: int = 42) -> DataFrame:
+    """Stage 4: keep candidate (doc_a, doc_b) pairs whose TRUE Jaccard
+    over the docs' distinct feature sets clears the threshold.
 
     The pair list is MELTED to (pair, side, doc_id) and joined with
-    ``docs``; ``featurize`` picks WHERE tokenization runs, matching the
-    candidate regime:
+    ``docs``; ``tokens`` picks WHERE the feature sets come from,
+    matching the candidate regime:
 
-    - ``"pairs"`` (default): tokenize + ``array_distinct`` as per-row
-      expressions on the JOINED rows — O(candidate pairs), nothing
-      corpus-wide. Right when candidates are rare relative to the
-      corpus (word-shingle MinHash: ~255 candidates from 5000 docs at
-      sf0.1). A doc in k pairs tokenizes k times; k is bounded by the
-      bucket clique cap.
-    - ``"docs"``: tokenize ONCE per document as a corpus projection and
-      join the feature sets to the melted pairs — one extra corpus
-      pass, but each doc featurizes exactly once. Right when the
-      blocking key is low-precision and candidates blanket the corpus
+    - ``tokens`` given: ``docs`` is ``(doc_id, text)`` and each joined
+      row tokenizes + ``array_distinct``-s its 64-bit feature hashes
+      (identical to string-set Jaccard up to hash collisions) —
+      O(candidate pairs), nothing corpus-wide. Right when candidates
+      are rare relative to the corpus (word-shingle MinHash: ~255
+      candidates from 5000 docs at sf0.1). A doc in k pairs tokenizes
+      k times; k is bounded by the bucket clique cap.
+    - ``tokens=None``: ``docs`` already holds one feature array per
+      document as ``sh`` — a corpus projection (each doc featurizes
+      exactly once) or a materialized frame. Right when the blocking
+      key is low-precision and candidates blanket the corpus
       (char-trigram buckets: ~150k candidates at sf0.1; tokenizing per
-      pair-slot there was measured 5x slower than the corpus pass).
+      pair slot there was measured 5x slower than the corpus pass), and
+      for the md5 families, whose exact feature sets are materialized
+      anyway.
 
-    Neither mode uses a collection AGGREGATE: the r2 shape that fused
-    ``collect_set(h)`` into the signature aggregate demoted the whole
-    16-min HashAggregate to ObjectHashAggregate (no whole-stage
-    codegen) and shuffled a corpus-sized array per doc.
+    Jaccard is ``|A ∩ B| / |A ∪ B|`` from ``array_intersect`` /
+    ``array_union``, both distinct-set operations, so a multiset
+    feature array scores exactly like its distinct set (r10 ADVICE: a
+    caller passing raw shingles must not get different values; pinned
+    by tests/test_dedup_similarity.py) and DuckDB's ``list_intersect``
+    restates it exactly. Joining one feature ARRAY per pair side
+    replaced the explode-join verify (r10), which fanned every
+    candidate out to ~|grams| join rows before the count (20x soak:
+    167M intermediate rows, x94.5 wall for x3943 output).
+
+    No collection AGGREGATE: the r2 shape that fused ``collect_set(h)``
+    into the signature aggregate demoted the whole 16-min HashAggregate
+    to ObjectHashAggregate (no whole-stage codegen) and shuffled a
+    corpus-sized array per doc.
 
     Broadcast posture: NO hint, NO driver-side count — AQE decides at
     runtime from the ACTUAL shuffle sizes. A small candidate set (the
@@ -356,14 +519,10 @@ def verify_pairs_jaccard(cand: DataFrame, docs: DataFrame, tokens,
             F.struct(F.lit("a").alias("side"), F.col("doc_a").alias("doc_id")),
             F.struct(F.lit("b").alias("side"), F.col("doc_b").alias("doc_id")),
         )).alias("s")).select("doc_a", "doc_b", "s.side", "s.doc_id")
-    sh_expr = F.array_distinct(F.transform(tokens(F.col("text")),
-                                           _hash_token_fn(seed)))
-    if featurize == "docs":
-        feats = (doc_features(docs) if doc_features is not None
-                 else docs.select("doc_id", sh_expr.alias("sh")))
-        joined = melted.join(feats, "doc_id")
-    else:
-        joined = melted.join(docs, "doc_id").withColumn("sh", sh_expr)
+    joined = melted.join(docs, "doc_id")
+    if tokens is not None:
+        joined = joined.withColumn("sh", F.array_distinct(F.transform(
+            tokens(F.col("text")), xxhash_family(seed=seed).gram_hash)))
     pairs = (
         joined.groupBy("doc_a", "doc_b")
         .agg(F.first(F.when(F.col("side") == "a", F.col("sh")),
@@ -379,34 +538,87 @@ def verify_pairs_jaccard(cand: DataFrame, docs: DataFrame, tokens,
     )
 
 
+def _md5_word_signature(d: DataFrame, family: HashFamily,
+                        *keep: str) -> tuple[DataFrame, DataFrame]:
+    """md5 word-gram prep plus stage 1: ``(doc_id, *keep, sh)`` distinct
+    word 3-gram strings of a ``(doc_id, text, *keep)`` frame, and their
+    ``family`` signature ``(doc_id, *keep, minhash)``, each materialized
+    once (localCheckpoint).
+
+    The grams feed the signature, the exact verify and any caller's own
+    reuse; without the barrier each consumer re-tokenized the corpus
+    (r9 scan census). It also sits BEFORE banding explodes the grams
+    (r17): over a live lineage, InferFiltersFromGenerate derives
+    ``size(grams) > 0`` from the explode and filter pushdown INLINES the
+    whole tokenize+shingle construction into that per-row Filter — the
+    gram pipeline evaluated twice per row, and the transform-lambda's
+    captured split() re-evaluated per element (measured 5.7 s vs 2.6 s
+    for the zip_with form, vs 1.9 s with this barrier at sf0.1). The
+    signature is one fixed-width row per doc, read twice by the band
+    self-join."""
+    grams = (d.select("doc_id", *keep, T.split_tokens("text").alias("toks"))
+             .select("doc_id", *keep,
+                     F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
+                     .alias("sh"))
+             .localCheckpoint(eager=True))
+    sig = _text_signature(grams, family, lambda sh: sh, text_col="sh",
+                          keep=keep).localCheckpoint(eager=True)
+    return grams, sig
+
+
+def near_dup_pairs(d: DataFrame, family: HashFamily, threshold: float,
+                   tokens=None) -> DataFrame:
+    """Verified word-3-shingle near-dup pairs ``(doc_a, doc_b,
+    jaccard)``, doc_a < doc_b, of a ``(doc_id, text)`` frame under
+    ``family``; the cross join never happens.
+
+    - Fast family: ONE corpus tokenize (the signature pass) -> capped
+      buckets carrying the signatures -> agreement pre-filter
+      (``estimate_filter_pairs``) -> exact verify that re-tokenizes
+      ONLY the docs in surviving pairs. ``tokens`` overrides the
+      features (default: distinct word 3-shingle strings).
+    - md5 families: materialized grams and signature
+      (``_md5_word_signature``) -> exact banding -> exact verify over
+      the materialized gram sets. No agreement pre-filter: its oracle
+      applies none."""
+    if family.exact:
+        grams, sig = _md5_word_signature(d, family)
+        return verify_pairs_jaccard(_band_join(sig, family.band_keys()),
+                                    grams, None, threshold)
+    tokens = tokens or (lambda c: T.shingles(c, 3))
+    n = family.num_hashes
+    sigs = _text_signature(d, family, tokens)
+    cand = lsh_band_candidates(sigs, n, family.bands, carry="minhash")
+    good = estimate_filter_pairs(cand, n, threshold)
+    return verify_pairs_jaccard(good, d, tokens, threshold)
+
+
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str,
                       num_hashes: int = 16, bands: int = 4,
                       jaccard_threshold: float = 0.5) -> DataFrame:
-    """MinHash-LSH near-duplicate pairs, verified with true shingle
-    Jaccard. Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
-
-    ONE corpus tokenize total (the codegen min-agg signature pass) ->
-    banded buckets -> within-bucket combinations carrying the
-    signatures -> signature-agreement pre-filter
-    (``estimate_filter_pairs``, codegen, no joins) -> exact Jaccard
-    verify that re-tokenizes ONLY the docs in surviving pairs
-    (O(survivors), see ``verify_pairs_jaccard``). The full cross join
-    never happens and no stage re-reads the corpus. Rows-only
-    correctness check (xxhash64 not in DuckDB).
-    """
+    """MinHash-LSH near-duplicate pairs (fast family, ``near_dup_pairs``)
+    verified with true shingle Jaccard. Returns (doc_a, doc_b, jaccard)
+    with doc_a < doc_b. Rows-only check; ``minhash_md5_pairs`` is its
+    oracled counterpart."""
     d = table(spark, sf_dir, "documents").select("doc_id", "text")
     # gram IDENTITY (hash-of-token-hashes), not gram text: the k-1
     # zip_with passes move fixed-width longs instead of building
     # O(k^2)-char shingle strings — measured 3x faster on the sf0.1
     # signature pass (0.20s vs 0.63s), same Jaccard up to 64-bit
-    # collisions; the md5 twin keeps the string family for
-    # portability, this murmur3/xxhash production path is free to
-    # pick the fast space
+    # collisions; the md5 family keeps the string grams for
+    # portability, this production path is free to pick the fast space
     tokens = lambda c: T.shingle_hashes_of(T.token_hashes(c), 3)  # noqa: E731
-    sigs = minhash_signature_agg(d, num_hashes=num_hashes, tokens=tokens)
-    cand = lsh_band_candidates(sigs, num_hashes, bands, carry="minhash")
-    good = estimate_filter_pairs(cand, num_hashes, jaccard_threshold)
-    return verify_pairs_jaccard(good, d, tokens, jaccard_threshold)
+    return near_dup_pairs(d, xxhash_family(num_hashes, bands),
+                          jaccard_threshold, tokens)
+
+
+def _new_vs_corpus(cross: DataFrame, a_new: Column, *cols) -> DataFrame:
+    """Orient cross-side candidate pairs as (doc_a = new doc, doc_b =
+    corpus doc), keeping ``cols``."""
+    return cross.select(
+        F.when(a_new, F.col("doc_a")).otherwise(F.col("doc_b")).alias("doc_a"),
+        F.when(a_new, F.col("doc_b")).otherwise(F.col("doc_a")).alias("doc_b"),
+        *cols)
 
 
 def incremental_dedup_minhash(spark: SparkSession, sf_dir: str,
@@ -432,41 +644,20 @@ def incremental_dedup_minhash(spark: SparkSession, sf_dir: str,
     also capped out is reached only through the (possibly same-side,
     filtered) star center. Rows-only check (xxhash64 not in DuckDB).
     """
-    d = table(spark, sf_dir, "documents").select("doc_id", "text", "source")
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id", "text", (F.col("source") == new_source).alias("is_new"))
     # hash-chain gram identity — same fast feature space as
     # minhash_lsh_pairs (see the rationale there)
     tokens = lambda c: T.shingle_hashes_of(T.token_hashes(c), 3)  # noqa: E731
-    par = spark.sparkContext.defaultParallelism
-    base = d.select("doc_id", "text",
-                    (F.col("source") == new_source).alias("is_new"))
-    sh = (base.repartition(par, "doc_id")
-          .select("doc_id", "is_new",
-                  F.explode(tokens(F.col("text"))).alias("s")))
-    mins = (sh.select("doc_id", "is_new",
-                      F.xxhash64(F.lit(42), "s").alias("h"))
-            .groupBy("doc_id")
-            .agg(F.first("is_new").alias("is_new"),
-                 *[F.expr(f"min(xxhash64({i}, h)) as m{i}")
-                   for i in range(num_hashes)]))
-    arr = F.array(*[f"m{i}" for i in range(num_hashes)])
-    sigs = mins.select(
-        "doc_id", arr.alias("minhash"),
-        F.struct(arr.alias("minhash"), F.col("is_new").alias("is_new"))
-        .alias("cw"))
+    sigs = (_text_signature(d, xxhash_family(num_hashes, bands), tokens,
+                            keep=("is_new",))
+            .withColumn("cw", F.struct("minhash", "is_new")))
     cand = lsh_band_candidates(sigs, num_hashes, bands, carry="cw")
-    cross = cand.filter(
-        F.col("carry_a.is_new") != F.col("carry_b.is_new"))
-    terms = "+".join(
-        f"if(carry_a.minhash[{i}]=carry_b.minhash[{i}],1,0)"
-        for i in range(num_hashes))
-    est = F.expr(f"({terms})/{num_hashes}d")
-    sigma = (jaccard_threshold * (1 - jaccard_threshold) / num_hashes) ** 0.5
-    tau = max(0.0, jaccard_threshold - 3.5 * sigma)
-    good = (cross.filter(est >= tau)
-            .select(F.when(F.col("carry_a.is_new"), F.col("doc_a"))
-                    .otherwise(F.col("doc_b")).alias("doc_a"),
-                    F.when(F.col("carry_a.is_new"), F.col("doc_b"))
-                    .otherwise(F.col("doc_a")).alias("doc_b")))
+    a_new = F.col("carry_a.is_new")
+    cross = _new_vs_corpus(cand.filter(a_new != F.col("carry_b.is_new")),
+                           a_new, F.col("carry_a.minhash").alias("carry_a"),
+                           F.col("carry_b.minhash").alias("carry_b"))
+    good = estimate_filter_pairs(cross, num_hashes, jaccard_threshold)
     pairs = verify_pairs_jaccard(good, d.select("doc_id", "text"),
                                  tokens, jaccard_threshold)
     return pairs.select(F.col("doc_a").alias("new_doc_id"),
@@ -566,10 +757,10 @@ def ngram_jaccard_dups(spark: SparkSession, sf_dir: str,
                                  tokens=grams)
     cand = lsh_band_candidates(sigs, num_hashes, bands, carry="minhash")
     good = estimate_filter_pairs(cand, num_hashes, threshold)
+    # verify over per-doc feature sets: candidates blanket the corpus
     return verify_pairs_jaccard(
-        good, d, grams, threshold, featurize="docs",
-        doc_features=lambda docs: docs.select(
-            "doc_id", grams(F.col("ch")).alias("sh")))
+        good, d.select("doc_id", grams(F.col("ch")).alias("sh")), None,
+        threshold)
 
 
 def simhash_near_dups(spark: SparkSession, sf_dir: str,
@@ -672,77 +863,18 @@ def dedup_clusters(spark: SparkSession, sf_dir: str,
 
 
 # ----------------------------------------------------------------------
-# md5-based MinHash: the engine-PORTABLE twin of minhash_lsh_pairs
+# md5 families: the oracled near-dup queries
 # ----------------------------------------------------------------------
-
-_MH_P = 1_000_000_007  # modulus: products stay under int64
-_MH_COEFFS = ((384752429, 284920291), (583158611, 132907219),
-              (748192853, 952760839), (114027587, 844302611),
-              (270028169, 724470217), (906347687, 151834219),
-              (482970317, 641053969), (867043411, 308805101))
-
 
 def minhash_md5_pairs(spark: SparkSession, sf_dir: str,
                       threshold: float = 0.5) -> DataFrame:
-    """MinHash+LSH near-dup pairs with an md5-derived gram hash —
-    the exactly-ORACLED twin of ``minhash_lsh_pairs``. The production
-    variant uses murmur3 (faster, JVM-only) and is necessarily
-    rows-only; this one derives the gram hash from md5 (bit-identical
-    in Spark and DuckDB), so the ENTIRE banding algorithm — signature
-    mins, band bucketing, candidate generation, exact-Jaccard verify —
-    is value-hash-verified against an independent SQL implementation.
-    Same topology as the production path: one signature aggregation
-    pass, band-key self-join on the tiny signature table (never
-    doc x doc), verify join on candidates only.
-
-    8 permutations h_i(g) = (a_i * (H(g) mod p) + b_i) mod p over
-    H(g) = first 15 hex chars of md5(gram) (60 bits, exact in BIGINT),
-    banded 4x2. Candidates depend only on the deterministic hashes, so
-    both engines generate the identical candidate set — the
-    probabilistic recall of banding does not perturb the oracle."""
-    d = (table(spark, sf_dir, "documents")
-         .select("doc_id", T.split_tokens("text").alias("toks"))
-         .select("doc_id",
-                 F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                 .alias("grams")))
-    return md5_minhash_verified_pairs(d, threshold)
-
-
-def md5_band_candidates(d: DataFrame) -> DataFrame:
-    """The md5-portable LSH CANDIDATE set over a prepared
-    ``(doc_id, grams)`` frame — the banding front half of
-    ``md5_minhash_verified_pairs``, factored out so blocking-quality
-    audits can measure the candidate set itself. Returns distinct
-    (doc_a < doc_b) pairs.
-
-    Plan shape: the signature table (one fixed-width row per doc) is
-    materialized ONCE (localCheckpoint) and the band keys explode from
-    an array in one projection — the r9 census found the old
-    4-union + self-join form re-ran the tokenize+signature pipeline
-    8x (once per union arm per join side). The production murmur3
-    path avoids the self-join entirely via collect_list combinations
-    (``lsh_band_candidates``); the md5 twin keeps the join-based
-    banding because the ORACLE mirrors it literally, and the
-    checkpoint makes its cost one signature pass, same as production."""
-    g = d.select("doc_id", F.explode("grams").alias("g"))
-    h_raw = F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("bigint")
-    hp = h_raw % _MH_P
-    sig = (g.groupBy("doc_id").agg(
-        *[F.min((F.lit(a) * hp + F.lit(b)) % _MH_P).alias(f"h{i}")
-          for i, (a, b) in enumerate(_MH_COEFFS)])
-        .localCheckpoint(eager=True))
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.concat_ws(":", F.lit(i // 2),
-                        F.col(f"h{i}"), F.col(f"h{i + 1}"))
-            for i in range(0, 8, 2)])).alias("bk"))
-    a, b = bands.alias("a"), bands.alias("b")
-    return (a.join(b, (F.col("a.bk") == F.col("b.bk"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
+    """``MD5_WORD`` near-dup pairs (``near_dup_pairs``): the oracled
+    counterpart of ``minhash_lsh_pairs``. Candidates depend only on the
+    deterministic hashes, so both engines generate the identical
+    candidate set — the probabilistic recall of banding does not
+    perturb the oracle."""
+    return near_dup_pairs(table(spark, sf_dir, "documents"), MD5_WORD,
+                          threshold)
 
 
 def blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -761,36 +893,20 @@ def blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs); RR/PC in ppm. PC is NULL when the corpus has no exact-dup
     truth (stated; both engines agree on the NULL).
 
-    Scale: fingerprint groupBy + the banded candidate join (never
-    doc x doc) + one candidate-sized fingerprint equality join."""
-    # The grams frame is localCheckpoint-ed BEFORE md5_band_candidates
-    # explodes it (r17): over a live lineage, InferFiltersFromGenerate
-    # derives `size(grams) > 0` from the explode and filter pushdown
-    # INLINES the whole tokenize+shingle construction into that
-    # per-row Filter — the gram pipeline evaluated twice per row, and
-    # the transform-lambda's captured split() re-evaluated per element
-    # (measured 5.7 s vs 2.6 s for the zip_with form, vs 1.9 s with
-    # this barrier at sf0.1). Behind a materialized LogicalRDD the
-    # inferred filter reads the built array — cheap.
-    gd = (table(spark, sf_dir, "documents")
-          .select("doc_id", T.split_tokens("text").alias("toks"))
-          .select("doc_id",
-                  F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                  .alias("grams"))
-          .localCheckpoint(eager=True))
+    The candidates are ``minhash_md5_pairs``'s own (same stages, minus
+    the verify), so the audited and the verified candidate universes
+    cannot drift apart (r8 ADVICE). Scale: fingerprint groupBy + the
+    banded candidate join (never doc x doc) + one candidate-sized
+    fingerprint equality join."""
+    _, sig = _md5_word_signature(table(spark, sf_dir, "documents"), MD5_WORD)
     fp = (table(spark, sf_dir, "documents")
           .select("doc_id", T.fingerprint("text").alias("fp")))
     truth = (fp.groupBy("fp").agg(F.count(F.lit(1)).alias("k"))
              .agg(F.sum(F.expr("k * (k - 1) DIV 2")).cast("bigint")
                   .alias("truth_pairs")))
-    cand = md5_band_candidates(gd)
-    found = (cand
-             .join(fp.withColumnsRenamed({"doc_id": "doc_a", "fp": "fa"}),
-                   "doc_a")
-             .join(fp.withColumnsRenamed({"doc_id": "doc_b", "fp": "fb"}),
-                   "doc_b")
+    found = (_pair_sides(_band_join(sig, MD5_WORD.band_keys()), fp, "fp")
              .agg(F.count(F.lit(1)).alias("candidate_pairs"),
-                  F.sum(F.expr("CASE WHEN fa = fb THEN 1 ELSE 0 END"))
+                  F.sum(F.expr("CASE WHEN fp_a = fp_b THEN 1 ELSE 0 END"))
                   .cast("bigint").alias("truth_found")))
     n = fp.agg(F.count(F.lit(1)).alias("n_docs"))
     # below 2 docs there is no pair universe to audit (and C(N,2) = 0
@@ -809,8 +925,6 @@ def blocking_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("CASE WHEN truth_pairs > 0 THEN " +
                        ppm("truth_found", "truth_pairs") +
                        " END").alias("pair_completeness_ppm")))
-
-
 
 
 def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -841,39 +955,20 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
          .select("doc_id", "lang", "source",
                  F.expr("n_chars DIV 100").alias("len_bucket"),
                  T.fingerprint("text").alias("fp")))
-    grams = (table(spark, sf_dir, "documents")
-             .select("doc_id", T.split_tokens("text").alias("toks"))
-             .select("doc_id",
-                     F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                     .alias("grams")))
-    meta_a = d.select(F.col("doc_id").alias("doc_a"),
-                      F.col("lang").alias("la"),
-                      F.col("source").alias("sa"),
-                      F.col("len_bucket").alias("ka"))
-    meta_b = d.select(F.col("doc_id").alias("doc_b"),
-                      F.col("lang").alias("lb"),
-                      F.col("source").alias("sb"),
-                      F.col("len_bucket").alias("kb"))
-    match_pairs = (md5_minhash_verified_pairs(grams, threshold=0.5)
-                   .select("doc_a", "doc_b")
-                   .join(meta_a, "doc_a").join(meta_b, "doc_b"))
+    fields = ("lang", "source", "len_bucket")
+    match_pairs = _pair_sides(
+        minhash_md5_pairs(spark, sf_dir).select("doc_a", "doc_b"), d, *fields)
     shuffled = global_row_number(
         d, F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":fsu")))
         .asc(), F.col("doc_id").asc(), out="rn")
     left = (shuffled.filter(F.col("rn") % 2 == 1)
-            .select((F.col("rn") + 1).alias("pid"), "lang", "source",
-                    "len_bucket", "fp"))
+            .select((F.col("rn") + 1).alias("pid"), "fp",
+                    *[F.col(f).alias(f"{f}_a") for f in fields]))
     right = (shuffled.filter(F.col("rn") % 2 == 0)
-             .select(F.col("rn").alias("pid"),
-                     F.col("lang").alias("lb"),
-                     F.col("source").alias("sb"),
-                     F.col("len_bucket").alias("kb"),
-                     F.col("fp").alias("fpb")))
+             .select(F.col("rn").alias("pid"), F.col("fp").alias("fpb"),
+                     *[F.col(f).alias(f"{f}_b") for f in fields]))
     unmatch_pairs = (left.join(right, "pid")
-                     .filter(F.col("fp") != F.col("fpb"))
-                     .select(F.col("lang").alias("la"), "lb",
-                             F.col("source").alias("sa"), "sb",
-                             F.col("len_bucket").alias("ka"), "kb"))
+                     .filter(F.col("fp") != F.col("fpb")))
 
     # ONE aggregate per pair set (three per-field sums in one pass),
     # then a 1-row stack fan-out — aggregating per field separately
@@ -882,12 +977,12 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     def field_stats(pairs: DataFrame, tag: str) -> DataFrame:
         one = pairs.agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.expr("CASE WHEN la = lb THEN 1 ELSE 0 END")).alias("al"),
-            F.sum(F.expr("CASE WHEN sa = sb THEN 1 ELSE 0 END")).alias("as_"),
-            F.sum(F.expr("CASE WHEN ka = kb THEN 1 ELSE 0 END")).alias("ak"))
+            *[F.sum(F.expr(f"CASE WHEN {f}_a = {f}_b THEN 1 ELSE 0 END"))
+              .alias(f) for f in fields])
         return one.select(F.expr(
-            "stack(3, 'lang', al, 'source', as_, 'len_bucket', ak) "
-            f"AS (field, agree_{tag})"), F.col("n").alias(f"n_{tag}"))
+            "stack(3, 'lang', lang, 'source', source, 'len_bucket', "
+            f"len_bucket) AS (field, agree_{tag})"),
+            F.col("n").alias(f"n_{tag}"))
 
     # no weights are estimable without BOTH labeled samples — and an
     # empty corpus yields the module's empty-in/empty-out invariant
@@ -934,39 +1029,7 @@ WITH dm AS (
   SELECT doc_id, lang, source, n_chars // 100 AS len_bucket,
          {T.SQL_FINGERPRINT} AS fp
   FROM documents
-), d AS (
-  SELECT doc_id,
-         list_distinct(
-           CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                ELSE list_transform(range(1, len(t) - 1),
-                                    i -> array_to_string(t[i:i+2], ' '))
-           END) AS grams
-  FROM (SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        FROM documents)
-), g AS (
-  SELECT doc_id, unnest(grams) AS g FROM d
-), hp AS (
-  SELECT doc_id, g,
-         ('0x' || substr(md5(g), 1, 15))::BIGINT % {_MH_P} AS hp
-  FROM g
-), sig AS (
-  SELECT doc_id,
-         {_MH_HASHES_SQL}
-  FROM hp GROUP BY doc_id
-), bands AS (
-{_MH_BANDS_SQL}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.bk = b.bk AND a.doc_id < b.doc_id
-), inter AS (
-  SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
-  FROM cand c
-  JOIN g ga ON ga.doc_id = c.doc_a
-  JOIN g gb ON gb.doc_id = c.doc_b AND gb.g = ga.g
-  GROUP BY c.doc_a, c.doc_b
-), sz AS (
+), {_MD5_WORD_CAND_SQL}), sz AS (
   SELECT doc_id, len(grams) AS n FROM d
 ), mpairs AS (
   SELECT i.doc_a, i.doc_b
@@ -1001,103 +1064,6 @@ WHERE n_m > 0 AND n_u > 0
 """
 
 
-
-def md5_minhash_verified_pairs(d: DataFrame, threshold: float,
-                               pre_materialized: bool = False) -> DataFrame:
-    """The md5-portable MinHash+LSH pair pipeline over a prepared
-    ``(doc_id, grams)`` frame — shared by ``minhash_md5_pairs`` (the
-    oracled query) and the executor's declarative ``dedup_near`` with
-    ``hashFamily="md5"`` (so config-driven near-dedup is value-hash
-    provable end-to-end). See ``minhash_md5_pairs`` for the algorithm
-    and ``MINHASH_MD5_SQL`` for its independent SQL twin.
-
-    The candidate set comes from ``md5_band_candidates`` — the SAME
-    banding implementation ``blocking_quality_report`` audits, so the
-    audited candidate universe and the verified-pair universe cannot
-    drift apart (r8 ADVICE: the banding code used to be duplicated
-    here verbatim).
-
-    The prepared grams frame is materialized once (localCheckpoint):
-    banding and both verify-side array lookups consume it, and
-    without the checkpoint each consumer re-tokenizes the corpus (r9
-    scan census). Size class: (doc_id, distinct 3-gram array) — the
-    tokenized corpus, the same thing ``verify_pairs_jaccard``'s
-    survivors-only re-tokenize avoids holding; acceptable for the
-    ORACLE-PROOF twin, while the production murmur3 path keeps the
-    single-pass carried-signature shape. Callers that already
-    materialized the grams frame for their own reuse pass
-    ``pre_materialized=True`` so the corpus-tokenize result isn't
-    checkpointed twice (two eager jobs, two block copies — r9
-    ADVICE); the flag is VERIFIED, not trusted — see the guard below
-    (r10 verdict ask #4).
-
-    CONTRACT (narrow by design): ``pre_materialized=True`` means
-    specifically "``d`` is the result of ``DataFrame.localCheckpoint
-    (eager=True)``" — NOT merely "some materialized frame". A
-    ``persist()``-ed frame, even fully cached, is rejected: pass
-    ``pre_materialized=False`` and let the checkpoint no-op on top of
-    the cache (reading a cached frame once to checkpoint it is cheap;
-    silently re-tokenizing per consumer is not). The guard recognizes
-    the contract by the localCheckpoint plan shape (a single
-    ``LogicalRDD`` leaf); a ``createDataFrame``-rooted frame also
-    analyzes to LogicalRDD and passes, which is harmless — driver-
-    local rows re-parallelize per consumer without re-running any
-    corpus scan. Under Spark Connect the classic ``_jdf`` plan API is
-    absent, so the guard degrades to trusting the caller (documented,
-    not silent — the contract above still binds)."""
-    if not pre_materialized:
-        d = d.localCheckpoint(eager=True)
-    else:
-        # Fail fast instead of trusting the caller: a frame that is
-        # not actually a materialized scan would silently re-run the
-        # corpus tokenize once per consumer below (the exact r9
-        # scan-census bug class this flag exists to prevent). A
-        # localCheckpoint result analyzes to a single LogicalRDD leaf.
-        jdf = getattr(d, "_jdf", None)
-        if jdf is None:
-            # Spark Connect: no classic plan handle; the contract in
-            # the docstring still binds but cannot be checked here.
-            head = None
-        else:
-            head = jdf.queryExecution().analyzed().toString() \
-                      .splitlines()[0]
-        if head is not None and not head.startswith("LogicalRDD"):
-            raise ValueError(
-                "pre_materialized=True requires the grams frame to BE "
-                "a localCheckpoint(eager=True) result (see docstring "
-                "contract; a persist()-ed frame does not qualify — "
-                f"drop the flag); got plan root {head!r}.")
-    cand = md5_band_candidates(d)
-    # ARRAY-INTERSECT verify (r10, same move as ngram_jaccard_md5_
-    # pairs): join each pair side to the doc's distinct gram ARRAY and
-    # intersect in one codegen expression, instead of exploding every
-    # candidate into ~|grams| join rows before the count (20x soak:
-    # x10.2 wall for x4107 output on the explode form). n_inter equals
-    # the explode-join count only over DISTINCT gram sets, so the
-    # distinctness precondition is ENFORCED here (r10 ADVICE: every
-    # current caller does array_distinct upstream, where the no-op
-    # costs nothing on Spark's already-distinct arrays, but a future
-    # caller passing raw shingles would have gotten silently different
-    # jaccard values); na/nb are sized on the same distinct arrays.
-    # Banding above is deliberately on the raw frame: MinHash mins are
-    # duplicate-insensitive, and d is the checkpointed scan.
-    dd = d.select("doc_id", F.array_distinct("grams").alias("grams"))
-    aa = dd.select(F.col("doc_id").alias("doc_a"),
-                   F.col("grams").alias("ga"))
-    bb = dd.select(F.col("doc_id").alias("doc_b"),
-                   F.col("grams").alias("gb"))
-    return (cand.join(aa, "doc_a").join(bb, "doc_b")
-            .select("doc_a", "doc_b",
-                    F.size(F.array_intersect("ga", "gb")).alias("n_inter"),
-                    F.size("ga").alias("na"), F.size("gb").alias("nb"))
-            .select("doc_a", "doc_b",
-                    F.round(F.col("n_inter")
-                            / (F.col("na") + F.col("nb")
-                               - F.col("n_inter")),
-                            6).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
-
-
 _MH_HASHES_SQL = ",\n         ".join(
     f"MIN(({a} * hp + {b}) % {_MH_P}) AS h{i}"
     for i, (a, b) in enumerate(_MH_COEFFS))
@@ -1105,17 +1071,26 @@ _MH_BANDS_SQL = "\n  UNION ALL\n".join(
     f"  SELECT doc_id, concat({i // 2}, ':', h{i}, ':', h{i + 1}) AS bk "
     "FROM sig" for i in range(0, 8, 2))
 
-MINHASH_MD5_SQL = f"""
-WITH d AS (
-  SELECT doc_id,
+
+def _md5_word_grams_sql(cols: str = "") -> str:
+    """Oracle fragment: the body of the md5 word-gram CTE ``d``, one
+    row of distinct word 3-grams per doc (plus ``cols``)."""
+    return rf"""  SELECT doc_id,{cols}
          list_distinct(
            CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
                 ELSE list_transform(range(1, len(t) - 1),
                                     i -> array_to_string(t[i:i+2], ' '))
            END) AS grams
-  FROM (SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents)
+  FROM (SELECT doc_id,{cols}
+               regexp_split_to_array(lower(trim(text)), '\s+') AS t
+        FROM documents)"""
+
+
+def _md5_word_cand_sql(cols: str = "") -> str:
+    """Oracle fragment: the ``MD5_WORD`` CTE chain d -> g -> hp -> sig
+    -> bands -> cand, open after its last CTE for the caller to close."""
+    return f"""d AS (
+{_md5_word_grams_sql(cols)}
 ), g AS (
   SELECT doc_id, unnest(grams) AS g FROM d
 ), hp AS (
@@ -1132,13 +1107,28 @@ WITH d AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM bands a JOIN bands b
     ON a.bk = b.bk AND a.doc_id < b.doc_id
-), inter AS (
+"""
+
+
+#: the chain plus the exact gram-intersection count of each candidate
+_MD5_WORD_CAND_SQL = _md5_word_cand_sql() + """), inter AS (
   SELECT c.doc_a, c.doc_b, COUNT(*) AS n_inter
   FROM cand c
   JOIN g ga ON ga.doc_id = c.doc_a
   JOIN g gb ON gb.doc_id = c.doc_b AND gb.g = ga.g
   GROUP BY c.doc_a, c.doc_b
-), sizes AS (
+"""
+
+
+def _sql_agree(a: str, b: str, n: int) -> str:
+    """Oracle fragment: how many of the ``n`` signature columns
+    ``h<i>`` of rows ``a`` and ``b`` agree."""
+    return " + ".join(
+        f"CASE WHEN {a}.h{i} = {b}.h{i} THEN 1 ELSE 0 END" for i in range(n))
+
+
+MINHASH_MD5_SQL = f"""
+WITH {_MD5_WORD_CAND_SQL}), sizes AS (
   SELECT doc_id, len(grams) AS n FROM d
 )
 SELECT i.doc_a, i.doc_b,
@@ -1150,34 +1140,8 @@ WHERE round(i.n_inter * 1.0 / (sa.n + sb.n - i.n_inter), 6) >= 0.5
 """
 
 
-BLOCKING_QUALITY_SQL = rf"""
-WITH d AS (
-  SELECT doc_id, text,
-         list_distinct(
-           CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                ELSE list_transform(range(1, len(t) - 1),
-                                    i -> array_to_string(t[i:i+2], ' '))
-           END) AS grams
-  FROM (SELECT doc_id, text,
-               regexp_split_to_array(lower(trim(text)), '\s+') AS t
-        FROM documents)
-), g AS (
-  SELECT doc_id, unnest(grams) AS g FROM d
-), hp AS (
-  SELECT doc_id, g,
-         ('0x' || substr(md5(g), 1, 15))::BIGINT % {_MH_P} AS hp
-  FROM g
-), sig AS (
-  SELECT doc_id,
-         {_MH_HASHES_SQL}
-  FROM hp GROUP BY doc_id
-), bands AS (
-{_MH_BANDS_SQL}
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b
-    ON a.bk = b.bk AND a.doc_id < b.doc_id
-), fp AS (
+BLOCKING_QUALITY_SQL = f"""
+WITH {_md5_word_cand_sql(" text,")}), fp AS (
   SELECT doc_id, {T.SQL_FINGERPRINT} AS fp FROM documents
 ), truth AS (
   SELECT CAST(SUM(k * (k - 1) // 2) AS BIGINT) AS truth_pairs
@@ -1207,21 +1171,9 @@ WHERE n_docs >= 2
 FELLEGI_SUNTER_SQL = _fs_sql()
 
 
-import hashlib as _hl
-
-_NG_BANDS, _NG_ROWS = 4, 8
-# 32 md5-derived permutation coefficients — deterministic constants
-# baked identically into the Spark expressions and the SQL oracle
-# (no RNG; a != 0 mod p)
-_NG_COEFFS = tuple(
-    (int(_hl.md5(f"ng-a{i}".encode()).hexdigest()[:12], 16)
-     % (_MH_P - 1) + 1,
-     int(_hl.md5(f"ng-b{i}".encode()).hexdigest()[:12], 16) % _MH_P)
-    for i in range(_NG_BANDS * _NG_ROWS))
-
 def _ng_est_min(threshold: float) -> int:
-    """Signature-agreement pre-filter floor for a given Jaccard
-    threshold — the md5 twin of ``estimate_filter_pairs``'s
+    """Signature-agreement pre-filter floor of ``MD5_CHAR`` for a given
+    Jaccard threshold — the integer form of ``estimate_filter_pairs``'s
     tau = t - 3.5*sigma rule (sigma = sqrt(t(1-t)/k), k=32
     coordinates): ``ceil(k * max(0, t - 3.5*sigma))`` coordinates must
     agree. DERIVED from the threshold argument (r9 ADVICE: a hardcoded
@@ -1242,7 +1194,7 @@ _NG_EST_MIN = _ng_est_min(0.9)
 assert _NG_EST_MIN == 23  # the constant the SQL oracle text embeds
 
 #: bucket count for the exact intersection upper bound (r18): per-doc
-#: gram counts in hpv mod-32 buckets; sum_i min(ca_i, cb_i) >= |A∩B|
+#: gram counts in h mod-32 buckets; sum_i min(ca_i, cb_i) >= |A∩B|
 #: for ANY bucketing, so the prune is output-invisible at every scale.
 #: 32 int columns per side — the same join width class as the 32-long
 #: signature table the agreement filter already shipped.
@@ -1251,38 +1203,22 @@ _NG_BOUND_BUCKETS = 32
 
 def ngram_jaccard_md5_pairs(spark: SparkSession, sf_dir: str,
                             threshold: float = 0.9) -> DataFrame:
-    """Character-n-gram Jaccard near-dup pairs on the md5-portable
-    pipeline — the exactly-ORACLED twin of ``ngram_jaccard_dups``
-    (whose char-MinHash blocking rides murmur3 and is rows-only).
+    """Character-3-gram Jaccard near-dup pairs over ``MD5_CHAR``: the
+    oracled counterpart of ``ngram_jaccard_dups``, with the same 4 x 8
+    geometry (see there): the word family's permissive 4 x 2 banding
+    admits nearly EVERY char-gram pair (measured: 4.3M verified pairs,
+    423 s at sf0.1).
 
-    Geometry matches the production path's hard-won S-curve lesson
-    (see ``ngram_jaccard_dups``): unrelated same-language docs already
-    share ~0.3-0.5 of their char-trigram set, so the word-gram twin's
-    permissive 4x2 banding admits nearly EVERY pair (measured: 4.3M
-    verified pairs, 423 s at sf0.1). 4 bands x 8 rows puts the
-    candidate knee at the 0.9 threshold — P[candidate] = 0.015 at
-    j=0.5 — and the verify join stays linear in true near-dups. With
-    this, every near-dup family (word-MinHash, char-n-gram Jaccard,
-    SimHash, clustering, incremental) has a value-hash-verified
-    algorithm proof.
-
-    r9: the twin now ALSO mirrors the production path's
-    signature-agreement pre-filter (``estimate_filter_pairs``): a
-    candidate must agree on >= ``_ng_est_min(threshold)`` of its 32
-    deterministic signature coordinates before the exact verify (r10:
-    the floor is DERIVED from the threshold argument — at the 0.9
-    default it is 23, the constant the fixed SQL oracle embeds; it
-    decays to 0 — prune becomes a no-op — only below t≈0.28, and at
-    intermediate thresholds the documented binomial-tail recall trade
-    below still applies, just with a floor matched to the threshold
-    instead of the old hardcoded 23). Char-trigram
-    banding admits ~340k candidates at sf0.1 (0.17%-precision regime);
-    verifying them all cost 15s of the op's 18-24s — the pre-filter
-    (two joins against the small checkpointed sig table, pure codegen
-    comparison) collapses that to the genuine near-dup set. A true
-    j >= 0.9 pair fails the filter with P < 3e-4 (binomial tail), the
-    SAME documented recall trade the production path makes, and the
-    oracle applies the IDENTICAL integer filter so parity is exact."""
+    Stages: signature (plus the verify's gram-hash set and the bound's
+    bucket profile in the same pass) -> exact banding -> exact
+    bucket-count bound -> agreement floor ``_ng_est_min(threshold)``
+    (r9; the oracle applies the IDENTICAL integer filter, so parity is
+    exact, and a true j >= 0.9 pair fails it with P < 3e-4, the same
+    documented recall trade as the fast family's estimate filter) ->
+    exact verify. Char-trigram banding admits ~340k candidates at sf0.1
+    (0.17%-precision regime); verifying them all cost 15 s of the op's
+    18-24 s before the floor (r9) and the bound (r18) collapsed them to
+    the genuine near-dup set."""
     par = spark.sparkContext.defaultParallelism
     # TWO-STEP gram build: project the lowered text as a plain column
     # FIRST, then gram it with substring-transform over that attribute
@@ -1304,56 +1240,39 @@ def ngram_jaccard_md5_pairs(spark: SparkSession, sf_dir: str,
              "ELSE transform(sequence(1, length(t) - 2), "
              "i -> substring(t, i, 3)) END")).alias("g"))
          .distinct())
-    h_raw = F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("bigint")
-    # everything downstream (signature mins, verify join, sizes) works
+    # everything downstream (signature mins, verify sets, sizes) works
     # on the 60-bit md5 gram identity, never the gram string — both
     # engines apply the SAME hash, so a (negligible) collision affects
     # both sides identically and the value-hash compare still holds.
-    # Materialized once: the signature build AND the verify's per-doc
-    # array build both consume it, and the lineage holds the full
-    # char-gram + md5 pass (the DuckDB twin needed the same
-    # MATERIALIZED hint — uncached it recomputed the gram pipeline per
-    # reference, >550 s at sf0.1 vs 16 s).
-    hpdf = (g.select("doc_id", (h_raw % _MH_P).alias("hpv"))
+    # Materialized once: the signature build consumes it, and the
+    # lineage holds the full char-gram + md5 pass (the DuckDB twin
+    # needed the same MATERIALIZED hint — uncached it recomputed the
+    # gram pipeline per reference, >550 s at sf0.1 vs 16 s).
+    hpdf = (g.select("doc_id", MD5_CHAR.gram_hash(F.col("g")).alias("h"))
             .localCheckpoint(eager=True))
     # ONE per-doc feature row, materialized once (r18): the 32
-    # signature mins (the 4-union + self-join banding otherwise
-    # re-runs the 32-way min aggregate 8x — the r16 fix), the distinct
-    # gram-hash set (exact verify), and the 32-bucket gram-count
-    # profile (the intersection bound below) all ride a single
-    # aggregate over the checkpointed gram stream. r18 A/B of the
-    # layouts at sf0.1 (6 reps interleaved): two separate
-    # aggregates+checkpoints (r18 first cut) median 6.39s end-to-end,
-    # fully merged 5.66s — one pass over the 712k-row stream and one
-    # 5000-row checkpoint instead of two of each.
-    sig = (hpdf.groupBy("doc_id").agg(
-        F.collect_set("hpv").alias("hs"),
-        *[F.min((F.lit(a) * F.col("hpv") + F.lit(b)) % _MH_P)
-          .alias(f"h{i}")
-          for i, (a, b) in enumerate(_NG_COEFFS)],
-        *[F.sum(F.when(F.col("hpv") % _NG_BOUND_BUCKETS == i, 1)
-                .otherwise(0)).cast("int").alias(f"c{i}")
-          for i in range(_NG_BOUND_BUCKETS)])
-        .withColumn("n", F.size("hs"))
+    # signature mins (banding otherwise re-runs the 32-way min
+    # aggregate 8x — the r16 fix), the distinct gram-hash set (exact
+    # verify), and the 32-bucket gram-count profile (the intersection
+    # bound below) all ride a single aggregate over the checkpointed
+    # gram stream. r18 A/B of the layouts at sf0.1 (6 reps
+    # interleaved): two separate aggregates+checkpoints (r18 first cut)
+    # median 6.39s end-to-end, fully merged 5.66s — one pass over the
+    # 712k-row stream and one 5000-row checkpoint instead of two of
+    # each.
+    sig = (_signature(hpdf, MD5_CHAR, extra={
+        "sh": F.collect_set("h"),
+        **{f"c{i}": F.sum(F.when(F.col("h") % _NG_BOUND_BUCKETS == i, 1)
+                          .otherwise(0)).cast("int")
+           for i in range(_NG_BOUND_BUCKETS)}})
+        .withColumn("n", F.size("sh"))
         .localCheckpoint(eager=True))
-    bands = sig.select(
-        "doc_id",
-        F.explode(F.array(*[
-            F.concat_ws(":", F.lit(j),
-                        *[F.col(f"h{j * _NG_ROWS + r}")
-                          for r in range(_NG_ROWS)])
-            for j in range(_NG_BANDS)])).alias("bk"))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (a.join(b, (F.col("a.bk") == F.col("b.bk"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
+    cand = _band_join(sig, MD5_CHAR.band_keys())
     # r18: EXACT bucket-count upper bound on the pair intersection,
     # applied to the RAW banding candidates BEFORE any heavy pair work.
-    # For any partition of the gram space into buckets (here hpv mod
-    # 32), |A ∩ B| <= sum_i min(ca_i, cb_i): an intersection element
-    # falls in exactly one bucket and is counted on both sides. Capped
+    # For any partition of the gram space into buckets (here h mod 32),
+    # |A ∩ B| <= sum_i min(ca_i, cb_i): an intersection element falls
+    # in exactly one bucket and is counted on both sides. Capped
     # further by min(|A|, |B|) (which also subsumes r17's size-ratio
     # filter: bnd = min(na, nb) reduces to exactly that bound). Keep a
     # pair iff bnd*(1+t) >= (t - 1e-6)*(na+nb): algebraically
@@ -1373,63 +1292,23 @@ def ngram_jaccard_md5_pairs(spark: SparkSession, sf_dir: str,
     # joins and the 2x ~143-element array joins now run on ~300 rows
     # instead of 337k/119k, collapsing the op's former dominant stage
     # (verify 3.7-4.8s -> ~0.1s; see OPTIMIZATION_r18.md).
-    bnd_sum = "+".join(f"least(ca{i}, cb{i})"
+    bnd_sum = "+".join(f"least(c{i}_a, c{i}_b)"
                        for i in range(_NG_BOUND_BUCKETS))
-    pa = sig.select(F.col("doc_id").alias("doc_a"),
-                        F.col("n").alias("na"),
-                        *[F.col(f"c{i}").alias(f"ca{i}")
-                          for i in range(_NG_BOUND_BUCKETS)])
-    pb = sig.select(F.col("doc_id").alias("doc_b"),
-                        F.col("n").alias("nb"),
-                        *[F.col(f"c{i}").alias(f"cb{i}")
-                          for i in range(_NG_BOUND_BUCKETS)])
-    slim = (cand.join(pa, "doc_a").join(pb, "doc_b")
-            .withColumn("bnd", F.least(F.expr(bnd_sum), F.col("na"),
-                                       F.col("nb")))
+    slim = (_pair_sides(cand, sig, "n",
+                        *[f"c{i}" for i in range(_NG_BOUND_BUCKETS)])
+            .withColumn("bnd", F.least(F.expr(bnd_sum), F.col("n_a"),
+                                       F.col("n_b")))
             .filter(F.col("bnd").cast("double") * (1.0 + threshold)
                     >= (F.lit(threshold) - F.lit(1e-6))
-                    * (F.col("na") + F.col("nb")))
-            .select("doc_a", "doc_b", "na", "nb"))
-    # signature-agreement floor (r9, oracle-embedded semantics: the
-    # DuckDB twin applies the IDENTICAL integer filter, so it must stay
-    # part of the pipeline) — now evaluated on the ~300 bound
-    # survivors, where the two 32-column signature joins are free,
-    # instead of on the full 337k candidate set
-    sa = sig.select(F.col("doc_id").alias("doc_a"),
-                    *[F.col(f"h{i}").alias(f"sa{i}")
-                      for i in range(len(_NG_COEFFS))])
-    sb = sig.select(F.col("doc_id").alias("doc_b"),
-                    *[F.col(f"h{i}").alias(f"sb{i}")
-                      for i in range(len(_NG_COEFFS))])
-    agree = "+".join(f"IF(sa{i} = sb{i}, 1, 0)"
-                     for i in range(len(_NG_COEFFS)))
-    good = (slim.join(sa, "doc_a").join(sb, "doc_b")
-            .filter(F.expr(f"({agree}) >= {_ng_est_min(threshold)}"))
-            .select("doc_a", "doc_b", "na", "nb"))
-    # ARRAY-INTERSECT verify (r10): one fixed-width row per doc (its
-    # distinct gram-hash set), joined once per pair side, intersected
-    # in a single codegen expression. The old explode-join verify
-    # fanned every surviving pair out to ~|grams| rows before the
-    # count (20x soak: 167M intermediate rows, x94.5 wall for x3943
-    # output); this form shuffles one array row per pair side instead
-    # — A/B at the 10x soak: 344s -> see PLANS.md. Same answer: the
-    # per-doc gram sets are distinct (array_distinct upstream), and
-    # both array_intersect and DuckDB's list_intersect are
-    # distinct-set intersections — the SQL twin is restated
-    # identically, so parity is exact at any scale.
-    aa = sig.select(F.col("doc_id").alias("doc_a"),
-                        F.col("hs").alias("ha"))
-    bb = sig.select(F.col("doc_id").alias("doc_b"),
-                        F.col("hs").alias("hb"))
-    return (good.join(aa, "doc_a").join(bb, "doc_b")
-            .select("doc_a", "doc_b",
-                    F.size(F.array_intersect("ha", "hb")).alias("n_inter"),
-                    "na", "nb")
-            .select("doc_a", "doc_b",
-                    F.round(F.col("n_inter")
-                            / (F.col("na") + F.col("nb")
-                               - F.col("n_inter")), 6).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold))
+                    * (F.col("n_a") + F.col("n_b")))
+            .select("doc_a", "doc_b"))
+    # the agreement floor on the ~300 bound survivors, where the two
+    # signature joins are free, instead of on the full 337k candidates
+    good = (_pair_sides(slim, sig, "minhash")
+            .filter(F.expr(f"({_agree('minhash_a', 'minhash_b', 32)})"
+                           f" >= {_ng_est_min(threshold)}"))
+            .select("doc_a", "doc_b"))
+    return verify_pairs_jaccard(good, sig, None, threshold)
 
 
 _NG_HASHES_SQL = ",\n         ".join(
@@ -1477,7 +1356,7 @@ WITH hp AS MATERIALIZED (
   FROM cand c
   JOIN sig sa ON sa.doc_id = c.doc_a
   JOIN sig sb ON sb.doc_id = c.doc_b
-  WHERE CASE WHEN sa.h0 = sb.h0 THEN 1 ELSE 0 END + CASE WHEN sa.h1 = sb.h1 THEN 1 ELSE 0 END + CASE WHEN sa.h2 = sb.h2 THEN 1 ELSE 0 END + CASE WHEN sa.h3 = sb.h3 THEN 1 ELSE 0 END + CASE WHEN sa.h4 = sb.h4 THEN 1 ELSE 0 END + CASE WHEN sa.h5 = sb.h5 THEN 1 ELSE 0 END + CASE WHEN sa.h6 = sb.h6 THEN 1 ELSE 0 END + CASE WHEN sa.h7 = sb.h7 THEN 1 ELSE 0 END + CASE WHEN sa.h8 = sb.h8 THEN 1 ELSE 0 END + CASE WHEN sa.h9 = sb.h9 THEN 1 ELSE 0 END + CASE WHEN sa.h10 = sb.h10 THEN 1 ELSE 0 END + CASE WHEN sa.h11 = sb.h11 THEN 1 ELSE 0 END + CASE WHEN sa.h12 = sb.h12 THEN 1 ELSE 0 END + CASE WHEN sa.h13 = sb.h13 THEN 1 ELSE 0 END + CASE WHEN sa.h14 = sb.h14 THEN 1 ELSE 0 END + CASE WHEN sa.h15 = sb.h15 THEN 1 ELSE 0 END + CASE WHEN sa.h16 = sb.h16 THEN 1 ELSE 0 END + CASE WHEN sa.h17 = sb.h17 THEN 1 ELSE 0 END + CASE WHEN sa.h18 = sb.h18 THEN 1 ELSE 0 END + CASE WHEN sa.h19 = sb.h19 THEN 1 ELSE 0 END + CASE WHEN sa.h20 = sb.h20 THEN 1 ELSE 0 END + CASE WHEN sa.h21 = sb.h21 THEN 1 ELSE 0 END + CASE WHEN sa.h22 = sb.h22 THEN 1 ELSE 0 END + CASE WHEN sa.h23 = sb.h23 THEN 1 ELSE 0 END + CASE WHEN sa.h24 = sb.h24 THEN 1 ELSE 0 END + CASE WHEN sa.h25 = sb.h25 THEN 1 ELSE 0 END + CASE WHEN sa.h26 = sb.h26 THEN 1 ELSE 0 END + CASE WHEN sa.h27 = sb.h27 THEN 1 ELSE 0 END + CASE WHEN sa.h28 = sb.h28 THEN 1 ELSE 0 END + CASE WHEN sa.h29 = sb.h29 THEN 1 ELSE 0 END + CASE WHEN sa.h30 = sb.h30 THEN 1 ELSE 0 END + CASE WHEN sa.h31 = sb.h31 THEN 1 ELSE 0 END
+  WHERE {_sql_agree('sa', 'sb', 32)}
         >= {_NG_EST_MIN}
 ), arr AS MATERIALIZED (
   -- the array-intersect verify, restated identically to Spark (r10):
@@ -1503,76 +1382,21 @@ WHERE round(n_inter * 1.0 / (na + nb - n_inter), 6) >= 0.9
 def incremental_dedup_md5(spark: SparkSession, sf_dir: str,
                           new_source: str = "src0",
                           threshold: float = 0.5) -> DataFrame:
-    """Incremental batch-vs-corpus near-dedup on the md5-portable
-    MinHash pipeline — the exactly-ORACLED twin of
-    ``incremental_dedup_minhash`` (which rides murmur3/xxhash and is
-    rows-only by nature). Same steady-state topology as the production
-    path: one signature pass over corpus+batch with an ``is_new`` flag,
-    shared band buckets, candidate pairs filtered to CROSS-side BEFORE
-    the exact-Jaccard verify (the corpus is never re-paired against
-    itself), output oriented (new_doc_id, corpus_doc_id). With this,
-    every member of the near-dup family — pairs, incremental, SimHash,
-    clustering — has a value-hash-verified algorithm proof beside its
-    fast murmur3 production variant."""
-    # grams frame + signature table each materialized once (the r9
-    # scan-census discipline, see md5_minhash_verified_pairs): banding,
-    # both verify sides and the size lookup all reuse them instead of
-    # re-tokenizing per consumer
-    d = (table(spark, sf_dir, "documents")
-         .select("doc_id", "source", T.split_tokens("text").alias("toks"))
-         .select("doc_id",
-                 (F.col("source") == new_source).alias("is_new"),
-                 F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                 .alias("grams"))
-         .localCheckpoint(eager=True))
-    g = d.select("doc_id", F.explode("grams").alias("g"))
-    h_raw = F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("bigint")
-    hp = h_raw % _MH_P
-    sig = (d.select("doc_id", "is_new").join(
-        g.select("doc_id", hp.alias("hp"))
-        .groupBy("doc_id")
-        .agg(*[F.min((F.lit(a) * F.col("hp") + F.lit(b)) % _MH_P)
-               .alias(f"h{i}")
-               for i, (a, b) in enumerate(_MH_COEFFS)]), "doc_id")
-        .localCheckpoint(eager=True))
-    bands = sig.select(
-        "doc_id", "is_new",
-        F.explode(F.array(*[
-            F.concat_ws(":", F.lit(i // 2),
-                        F.col(f"h{i}"), F.col(f"h{i + 1}"))
-            for i in range(0, 8, 2)])).alias("bk"))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (a.join(b, (F.col("a.bk") == F.col("b.bk"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id"))
-                   & (F.col("a.is_new") != F.col("b.is_new")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                    F.col("a.is_new").alias("a_new"))
-            .distinct())
-    ga = d.select(F.col("doc_id").alias("doc_a"),
-                  F.explode("grams").alias("g"))
-    gb = d.select(F.col("doc_id").alias("doc_b"),
-                  F.explode("grams").alias("g"))
-    inter = (cand.join(ga, "doc_a").join(gb, ["doc_b", "g"])
-             .groupBy("doc_a", "doc_b", "a_new")
-             .agg(F.count(F.lit(1)).alias("n_inter")))
-    sizes = d.select("doc_id", F.size("grams").alias("n"))
-    jac = (inter
-           .join(sizes.withColumnsRenamed({"doc_id": "doc_a", "n": "na"}),
-                 "doc_a")
-           .join(sizes.withColumnsRenamed({"doc_id": "doc_b", "n": "nb"}),
-                 "doc_b")
-           .select("doc_a", "doc_b", "a_new",
-                   F.round(F.col("n_inter")
-                           / (F.col("na") + F.col("nb") - F.col("n_inter")),
-                           6).alias("jaccard"))
-           .filter(F.col("jaccard") >= threshold))
-    return jac.select(
-        F.when(F.col("a_new"), F.col("doc_a")).otherwise(F.col("doc_b"))
-        .alias("new_doc_id"),
-        F.when(F.col("a_new"), F.col("doc_b")).otherwise(F.col("doc_a"))
-        .alias("corpus_doc_id"),
-        "jaccard")
+    """Incremental batch-vs-corpus near-dedup over ``MD5_WORD``: the
+    oracled counterpart of ``incremental_dedup_minhash``, with the same
+    topology — one signature pass over corpus+batch with an ``is_new``
+    flag, shared bands, candidates filtered to CROSS-side before the
+    exact verify (the corpus is never re-paired against itself), output
+    oriented (new_doc_id, corpus_doc_id)."""
+    docs = table(spark, sf_dir, "documents").select(
+        "doc_id", "text", (F.col("source") == new_source).alias("is_new"))
+    grams, sig = _md5_word_signature(docs, MD5_WORD, "is_new")
+    cand = _band_join(sig, MD5_WORD.band_keys(), carry=("is_new",))
+    cross = _new_vs_corpus(
+        cand.filter(F.col("is_new_a") != F.col("is_new_b")), F.col("is_new_a"))
+    return verify_pairs_jaccard(cross, grams, None, threshold).select(
+        F.col("doc_a").alias("new_doc_id"),
+        F.col("doc_b").alias("corpus_doc_id"), "jaccard")
 
 
 INCREMENTAL_MD5_SQL = f"""
@@ -1640,7 +1464,7 @@ FROM documents d LEFT JOIN incident i USING (doc_id)
 
 
 # ----------------------------------------------------------------------
-# md5-based SimHash: the engine-portable twin of simhash_near_dups
+# md5 SimHash (exact banding) and md5 connected components
 # ----------------------------------------------------------------------
 
 _SH_BITS = 60          # 15 md5 hex chars -> exact BIGINT in both engines
@@ -1648,14 +1472,12 @@ _SH_BAND = 15          # 4 bands x 15 bits: Hamming<=3 => >=1 band equal
 
 
 def simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs with md5-derived token hashes — the
-    exactly-ORACLED twin of ``simhash_near_dups`` (same pigeonhole
-    design: 4 bands of 15 bits guarantee every Hamming<=3 pair shares
-    a band). A 60-bit fingerprint (15 md5 hex chars) keeps every value
-    exact in BIGINT in both engines; per-bit majority sums, band
-    bucketing, the candidate set and the Hamming verify are then
-    bit-identical in DuckDB, so the whole algorithm is value-hash
-    verified. The production murmur3 variant stays the fast path."""
+    """SimHash near-dup pairs with md5-derived token hashes: the
+    oracled counterpart of ``simhash_near_dups``, with the same
+    pigeonhole design (4 bands of 15 bits guarantee every Hamming<=3
+    pair shares a band) and the md5 families' exact banding. A 60-bit
+    fingerprint (15 md5 hex chars) keeps every value exact in BIGINT in
+    both engines."""
     d = (table(spark, sf_dir, "documents")
          .select("doc_id",
                  F.array_distinct(
@@ -1669,23 +1491,14 @@ def simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp_expr = " + ".join(
         f"(CASE WHEN s{i} >= 0 THEN CAST(1 AS BIGINT) ELSE 0 END << {i})"
         for i in range(_SH_BITS))
-    # one fixed-width row per doc, materialized once: the 4-union +
-    # self-join banding otherwise re-runs the per-bit majority pipeline
-    # 8x (r9 scan census; same fix as md5_band_candidates)
+    # one fixed-width row per doc, materialized once (see _band_join)
     fps = (sums.select("doc_id", F.expr(fp_expr).alias("fp"))
            .localCheckpoint(eager=True))
-    bands = fps.select(
-        "doc_id", "fp",
-        F.explode(F.array(*[
-            F.expr(f"concat({k}, ':', (fp >> {k * _SH_BAND}) & 32767)")
-            for k in range(4)])).alias("bk"))
-    a, b = bands.alias("a"), bands.alias("b")
-    return (a.join(b, (F.col("a.bk") == F.col("b.bk"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                    F.expr("bit_count(a.fp ^ b.fp)").alias("hamming"))
-            .distinct()
+    keys = [F.expr(f"concat({k}, ':', (fp >> {k * _SH_BAND}) & 32767)")
+            for k in range(4)]
+    return (_band_join(fps, keys, carry=("fp",))
+            .select("doc_a", "doc_b",
+                    F.expr("bit_count(fp_a ^ fp_b)").alias("hamming"))
             .filter(F.col("hamming") <= 3))
 
 
@@ -1724,18 +1537,13 @@ WHERE bit_count(xor(a.fp, b.fp)) <= 3
 """
 
 
-# ----------------------------------------------------------------------
-# md5-based connected components: the oracled twin of dedup_clusters
-# ----------------------------------------------------------------------
-
 def dedup_clusters_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the ORACLED md5-MinHash pair graph,
-    iterated to FIXPOINT — the algorithm-proof twin of
-    ``dedup_clusters`` (which rides the faster murmur3 pipeline and a
-    fixed round count). Because the edge set is deterministic and
-    engine-portable, the component structure itself is value-hash
-    verified against a DuckDB recursive-CTE reachability oracle: every
-    member's cluster id is the component's minimum doc id.
+    """Connected components over the ``minhash_md5_pairs`` graph,
+    iterated to FIXPOINT: the oracled counterpart of ``dedup_clusters``
+    (fast family, fixed round count). The component structure is
+    value-hash verified against a DuckDB recursive-CTE reachability
+    oracle: every member's cluster id is the component's minimum doc
+    id.
 
     Min-label propagation (``base.min_label_fixpoint``): one shuffle
     per round on the doc key; convergence is checked with a count of
@@ -1880,59 +1688,31 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup family, quantifying what the signature alone would have
     claimed before the verify join corrected it.
 
-    Everything rides the md5-portable pipeline, so estimate, exact
-    value and their ppm error are bit-identical in DuckDB. Scale: one
-    extra signature build (vocab-linear) joined to the bounded verified
-    pair set; integer ppm outputs.
+    Everything rides ``MD5_WORD``, so estimate, exact value and their
+    ppm error are bit-identical in DuckDB. The signature is built once
+    and feeds both the banding and the estimate; integer ppm outputs.
     """
-    d = (table(spark, sf_dir, "documents")
-         .select("doc_id", T.split_tokens("text").alias("toks"))
-         .select("doc_id",
-                 F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                 .alias("grams"))
-         # tokenize once: the verified-pair pipeline AND the estimate's
-         # own signature build both consume this frame (r9 scan census)
-         .localCheckpoint(eager=True))
-    pairs = md5_minhash_verified_pairs(d, 0.5, pre_materialized=True)
-    g = d.select("doc_id", F.explode("grams").alias("g"))
-    hp = (F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("bigint")
-          % _MH_P)
-    # one fixed-width row per doc, joined as BOTH pair sides
-    sig = (g.groupBy("doc_id").agg(
-        *[F.min((F.lit(a) * hp + F.lit(b)) % _MH_P).alias(f"h{i}")
-          for i, (a, b) in enumerate(_MH_COEFFS)])
-        .localCheckpoint(eager=True))
-    a = sig.select(F.col("doc_id").alias("doc_a"),
-                   *[F.col(f"h{i}").alias(f"a{i}") for i in range(8)])
-    b = sig.select(F.col("doc_id").alias("doc_b"),
-                   *[F.col(f"h{i}").alias(f"b{i}") for i in range(8)])
-    matches = sum((F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
-                  for i in range(8))
+    grams, sig = _md5_word_signature(table(spark, sf_dir, "documents"),
+                                     MD5_WORD)
+    pairs = verify_pairs_jaccard(_band_join(sig, MD5_WORD.band_keys()),
+                                 grams, None, 0.5)
     est_ppm = (F.col("n_sig_matches") * 125000).cast("bigint")
     jac_ppm = F.floor(F.col("jaccard") * 1000000.0 + 0.5).cast("bigint")
-    return (pairs.join(a, "doc_a").join(b, "doc_b")
-            .withColumn("n_sig_matches", matches)
+    return (_pair_sides(pairs, sig, "minhash")
+            .withColumn("n_sig_matches",
+                        F.expr(_agree("minhash_a", "minhash_b", 8)))
             .select("doc_a", "doc_b", "n_sig_matches",
                     est_ppm.alias("est_ppm"), jac_ppm.alias("jac_ppm"),
                     F.abs(est_ppm - jac_ppm).alias("abs_err_ppm")))
 
 
-_SIG_MATCH_SQL = " + ".join(
-    f"CASE WHEN a.h{i} = b.h{i} THEN 1 ELSE 0 END" for i in range(8))
+_SIG_MATCH_SQL = _sql_agree("a", "b", 8)
 
 MINHASH_ESTIMATE_SQL = f"""
 WITH pairs AS (
   SELECT doc_a, doc_b, jaccard FROM ({MINHASH_MD5_SQL})
 ), d AS (
-  SELECT doc_id,
-         list_distinct(
-           CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                ELSE list_transform(range(1, len(t) - 1),
-                                    i -> array_to_string(t[i:i+2], ' '))
-           END) AS grams
-  FROM (SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents)
+{_md5_word_grams_sql()}
 ), hp AS (
   SELECT doc_id,
          ('0x' || substr(md5(g), 1, 15))::BIGINT % {_MH_P} AS hp

@@ -501,60 +501,30 @@ def test_ngram_jaccard_low_threshold_superset(spark, sf_dir):
     assert len(lo) >= len(hi)
 
 
-def test_pre_materialized_contract_is_enforced(spark, doc_dir):
-    """``md5_minhash_verified_pairs(pre_materialized=True)`` must fail
-    fast on a frame that was NOT actually localCheckpoint-ed (r10
-    verdict ask #4: the contract used to be enforced only by comment —
-    a future caller passing True over a lazy pipeline would silently
-    re-run the corpus tokenize once per consumer, the exact r9
-    scan-census bug class), and must accept + return identical pairs
-    for a genuinely checkpointed frame."""
-    from spark_kafka_airflow_pipeline_spark.functions import text as T
-
-    lazy = (spark.read.parquet(f"{doc_dir}/documents.parquet")
-            .select("doc_id",
-                    F.array_distinct(T.raw_shingles("text", 3))
-                    .alias("grams")))
-    with pytest.raises(ValueError, match="pre_materialized"):
-        dedup.md5_minhash_verified_pairs(lazy, 0.5, pre_materialized=True)
-
-    want = sorted(tuple(r) for r in
-                  dedup.md5_minhash_verified_pairs(lazy, 0.5).collect())
-    cp = lazy.localCheckpoint(eager=True)
-    got = sorted(tuple(r) for r in dedup.md5_minhash_verified_pairs(
-        cp, 0.5, pre_materialized=True).collect())
-    assert got == want and got
-
-    # the contract is NARROW by design (r11 ADVICE): persist()-ed is
-    # materialized but is NOT a localCheckpoint result — rejected; the
-    # caller drops the flag and lets the checkpoint read the cache
-    cached = lazy.persist()
-    try:
-        cached.count()
-        with pytest.raises(ValueError, match="persist"):
-            dedup.md5_minhash_verified_pairs(
-                cached, 0.5, pre_materialized=True)
-    finally:
-        cached.unpersist()
-
-
 def test_md5_verify_enforces_distinct_grams(spark, doc_dir):
-    """The array-intersect verify equals the old explode-join count
-    only over DISTINCT gram sets; the function now applies
-    array_distinct itself (r10 ADVICE: a caller passing raw shingles
-    used to get silently different jaccard values). Raw multiset
-    shingles and pre-distincted shingles must yield identical pairs
-    AND identical jaccard values."""
+    """The shared exact verify scores feature MULTISETS like their
+    distinct sets (r10 ADVICE: a caller passing raw shingles used to
+    get silently different jaccard values): raw multiset shingles and
+    pre-distincted shingles must yield identical pairs AND identical
+    jaccard values. Each text is doubled so the raw arrays really
+    repeat grams; every doc pair is a candidate."""
     from spark_kafka_airflow_pipeline_spark.functions import text as T
 
     raw = (spark.read.parquet(f"{doc_dir}/documents.parquet")
-           .select("doc_id", T.raw_shingles("text", 3).alias("grams")))
-    pre = raw.select("doc_id", F.array_distinct("grams").alias("grams"))
-    got_raw = sorted(tuple(r) for r in
-                     dedup.md5_minhash_verified_pairs(raw, 0.5).collect())
-    got_pre = sorted(tuple(r) for r in
-                     dedup.md5_minhash_verified_pairs(pre, 0.5).collect())
-    assert got_raw == got_pre and got_raw
+           .select("doc_id", T.raw_shingles(
+               F.concat_ws(" ", "text", "text"), 3).alias("sh")))
+    assert raw.filter(F.size("sh") > F.size(F.array_distinct("sh"))).count()
+    pre = raw.select("doc_id", F.array_distinct("sh").alias("sh"))
+    ids = raw.select("doc_id")
+    cand = (ids.withColumnRenamed("doc_id", "doc_a")
+            .crossJoin(ids.withColumnRenamed("doc_id", "doc_b"))
+            .filter(F.col("doc_a") < F.col("doc_b")))
+    got_raw = sorted(tuple(r) for r in dedup.verify_pairs_jaccard(
+        cand, raw, None, 0.0).collect())
+    got_pre = sorted(tuple(r) for r in dedup.verify_pairs_jaccard(
+        cand, pre, None, 0.0).collect())
+    assert got_raw == got_pre and len(got_raw) == 15
+    assert (0, 1, 1.0) in got_raw
 
 
 def test_simhash_gram_build_parity(spark):

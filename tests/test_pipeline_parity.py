@@ -467,6 +467,36 @@ def test_declarative_dedup_near(spark, sf_dir):
         spark.read.parquet(f"{sf_dir}/documents.parquet").columns)
 
 
+def test_declarative_dedup_near_md5(spark, sf_dir):
+    """`dedup_near` with ``hashFamily: "md5"``: keep-first survivorship
+    over the oracled ``minhash_md5_pairs`` pairs — the kept ids are all
+    ids minus every pair's larger end."""
+    from spark_kafka_airflow_pipeline_spark.operators.dedup import (
+        minhash_md5_pairs,
+    )
+
+    meta = parse_metadata({"dataflows": [{
+        "name": "near-dedup-md5",
+        "sources": [{"name": "docs",
+                     "path": f"{sf_dir}/documents.parquet"}],
+        "transformations": [
+            {"name": "kept", "type": "dedup_near", "params": {
+                "input": "docs", "idColumn": "doc_id",
+                "textColumn": "text", "threshold": 0.5,
+                "hashFamily": "md5"}},
+        ],
+        "sinks": [],
+    }]})
+    nodes = PipelineExecutor(spark).build_nodes(meta.dataflows[0])
+    got = {r.doc_id for r in nodes["kept"].select("doc_id").collect()}
+
+    pairs = minhash_md5_pairs(spark, sf_dir)
+    dropped = {r.doc_b for r in pairs.select("doc_b").collect()}
+    all_ids = {r.doc_id for r in spark.read.parquet(
+        f"{sf_dir}/documents.parquet").select("doc_id").collect()}
+    assert dropped and got == all_ids - dropped
+
+
 def test_dedup_near_requires_id_column(sf_dir):
     with pytest.raises(ValueError, match="idColumn"):
         parse_metadata({"dataflows": [{

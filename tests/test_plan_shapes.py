@@ -31,6 +31,12 @@ def test_signature_agg_stays_codegen_hashagg(spark, sf_dir):
     (dedup.minhash_lsh_pairs, 2),   # signature pass + verify join scan
     (dedup.ngram_jaccard_dups, 2),
     (dedup.simhash_near_dups, 1),   # carried signature: no join-back
+    # md5 families: every corpus read sits behind the materialized
+    # grams (r9: each consumer used to re-run the corpus tokenize)
+    (dedup.minhash_md5_pairs, 0),
+    (dedup.ngram_jaccard_md5_pairs, 0),
+    (dedup.incremental_dedup_md5, 0),
+    (dedup.minhash_estimate_error, 0),
 ])
 def test_dedup_operators_scan_budget(spark, sf_dir, fn, max_scans):
     """Each near-dup operator reads the corpus a bounded number of
