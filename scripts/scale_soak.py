@@ -292,9 +292,9 @@ FIXPOINT_FAMILY = ("dedup_clusters", "dedup_clusters_md5",
 #: Ops whose r17 localCheckpoint barriers hold corpus-scaling frames in
 #: executor storage (r17 verdict ask #7): the soak records, for their
 #: Nx draw, the cumulative task spill DELTA across the run and the
-#: block-manager storage still held right after it (before the
-#: inter-op clearCache), so "the gram-stream checkpoint fits without
-#: spilling at 20x" is a recorded number instead of byte-math.
+#: block-manager storage still held right after it, so "the gram-stream
+#: checkpoint fits without spilling at 20x" is a recorded number
+#: instead of byte-math.
 SPILL_GRADE = ("longest_shared_spans", "blocking_quality_report")
 
 
@@ -445,17 +445,13 @@ def main() -> None:
                     note += " UNCONVERGED"
         print(f"# {name}: 1x {t_1x:.2f}s -> {n}x {t_nx:.2f}s "
               f"(x{t_nx / t_1x:.1f}){note}", file=sys.stderr)
-        # Drop every cached block between OPS (r16): a handful of
-        # operators pin frames by documented design (the
-        # _global_two_phase exchange materialization is data-sized;
-        # the unigram-LM memo is doc-sized) and a sequenced Nx map
-        # accumulates them until the shared 8g JVM OOMs — observed at
-        # 20x after 108 ops, on an op whose own isolated draw is a
-        # quiet x2.8. Clearing only BETWEEN ops keeps each op's
-        # warm->1x->Nx internal memoization (and so the r13-r15 band
-        # comparability) intact while making op N's timing independent
-        # of op N-1's leftovers.
-        spark.catalog.clearCache()
+        # No op may leave a CacheManager entry behind: a sequenced Nx
+        # map would accumulate them until the shared JVM runs out of
+        # memory (observed at 20x after 108 ops, when three operators
+        # still persisted frames).
+        if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+            spark.stop()
+            sys.exit(f"# {name}: left a CacheManager entry behind")
     print(json.dumps({"n": n, "ops": result}))
     spark.stop()
 

@@ -5,7 +5,11 @@ dataflow, exits.
 
 Usage:
     python -m spark_kafka_airflow_pipeline_spark <metadata.json> [kafka_server]
-    spark-submit ... -m ...   (same module on a cluster)
+    spark-submit [--master M] spark_kafka_airflow_pipeline_spark/__main__.py
+        <metadata.json> [kafka_server]
+
+spark-submit takes a Python file, not ``-m``, so this module also runs as
+a file: it then puts the package's parent directory on ``sys.path``.
 
 The reference passes ``kafkaServer`` as args(1) and hard-wires it into
 its Kafka sinks; here any sink with ``format: "kafka"`` and an empty
@@ -18,10 +22,14 @@ from __future__ import annotations
 import logging
 import sys
 from dataclasses import replace
+from pathlib import Path
 
-from spark_kafka_airflow_pipeline_spark.executor import PipelineExecutor
-from spark_kafka_airflow_pipeline_spark.metadata import load_metadata
-from spark_kafka_airflow_pipeline_spark.session import get_spark
+if not __package__:  # run as a file (spark-submit)
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from spark_kafka_airflow_pipeline_spark.executor import PipelineExecutor  # noqa: E402
+from spark_kafka_airflow_pipeline_spark.metadata import load_metadata  # noqa: E402
+from spark_kafka_airflow_pipeline_spark.session import get_spark  # noqa: E402
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.metadata import Sink
+from spark_kafka_airflow_pipeline_spark.operators.base import barrier
 
 
 def serialize_for_kafka(df: DataFrame, key_column: str | None = None) -> DataFrame:
@@ -75,7 +76,7 @@ def upsert_sink(df: DataFrame, sink: Sink) -> None:
     same state — the property a CDC sink needs for exactly-once
     SEMANTICS on at-least-once delivery.
 
-    Read-modify-write: the merged frame localCheckpoints before
+    Read-modify-write: the merged frame goes through ``barrier`` before
     overwriting its own input dir. On a cluster with a MERGE-capable
     table format (Iceberg/Delta) this body becomes ``MERGE INTO``;
     the config contract is unchanged."""
@@ -94,9 +95,8 @@ def upsert_sink(df: DataFrame, sink: Sink) -> None:
             merged = df
         w = Window.partitionBy(*keys).orderBy(
             *[F.col(c).desc() for c in order])
-        latest = (merged.withColumn("_rn", F.row_number().over(w))
-                  .filter(F.col("_rn") == 1).drop("_rn")
-                  .localCheckpoint(eager=True))
+        latest = barrier(merged.withColumn("_rn", F.row_number().over(w))
+                         .filter(F.col("_rn") == 1).drop("_rn"))
         latest.write.mode("overwrite").parquet(state)
 
 

@@ -13,24 +13,8 @@ matches the oracle):
 - top-k queries break ties on a unique key so the selected row SET is
   unique even when the measure ties.
 
-localCheckpoint policy (the executor-loss trade, stated ONCE here —
-r9 ADVICE asked for a central statement instead of per-site notes):
-``localCheckpoint(eager=True)`` is used ONLY on frames that are (a)
-consumed 2+ times where AQE exchange reuse was MEASURED not to fire
-(each keep/revert decision is A/B-recorded in commits and PLANS.md —
-e.g. sparse_cosine_pairs and kmv were REVERTED because reuse already
-deduped), and (b) bounded — a tokenized corpus slice, a signature
-table, a (month x bin) grid — never an SF-scaling fact table. Cost
-consciously accepted: plan-build becomes eager (building the
-DataFrame runs a job even if never executed), and lineage truncation
-means an executor loss during the consuming stage fails the job
-instead of recomputing — acceptable for bounded frames whose
-recompute is itself the expensive thing being deduplicated, and the
-job-level retry (driver rerun) is the recovery path. On a real
-multi-executor cluster, swap for ``persist(StorageLevel
-.MEMORY_AND_DISK)`` + an action when replicated fault tolerance
-matters more than the lineage-drop speedup; the call sites are the
-grep-able inventory (``grep -rn localCheckpoint``).
+Materialization goes through ``barrier`` only; its docstring states the
+policy.
 """
 
 from __future__ import annotations
@@ -44,6 +28,39 @@ from spark_kafka_airflow_pipeline_spark.session import pin_table_confs
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
+
+
+def barrier(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and cut its lineage: the package's one
+    materialization call, ``localCheckpoint(eager=True)``. The only
+    other cache is the executor's ok/ko split
+    (``transforms.validate_fields.validate_fields_split``), which the
+    executor unpersists once its sinks are written.
+
+    Policy (the executor-loss trade). A barrier goes only on a frame
+    that is (a) read 2+ times where AQE exchange reuse was MEASURED not
+    to fire (each keep/revert decision is A/B-recorded in commits and
+    PLANS.md; e.g. sparse_cosine_pairs and kmv were REVERTED because
+    reuse already deduped), or that must be read from ONE execution
+    (range-bound sampling, scoped confs), or that is a fixpoint round
+    whose lineage would otherwise grow every iteration; and (b)
+    bounded: a tokenized corpus slice, a signature table, a (month x
+    bin) grid, never an SF-scaling fact table. Costs consciously
+    accepted: building the DataFrame runs a job even if it is never
+    consumed, and an executor lost during the consuming stage fails
+    the job instead of recomputing; the job-level retry (driver rerun)
+    is the recovery path. Local-checkpoint blocks are registered in no
+    CacheManager entry: they are released when the returned frame is
+    garbage-collected, so no query leaves a cache entry behind.
+
+    There is deliberately no lineage-keeping ``persist`` mode: the
+    upsert sinks (``io.sinks.upsert_sink`` and
+    ``streaming.pipelines.streaming_foreachbatch_upsert``) overwrite or
+    delete the directory they just read, which is only safe once the
+    lineage is cut.
+    """
+    return df.localCheckpoint(eager=True)
+
 
 #: Convergence telemetry for the iterative cluster family: each
 #: min-label fixpoint records how many propagation rounds its LAST run
@@ -73,8 +90,7 @@ def min_label_fixpoint(sym: DataFrame, id_col: str, telemetry_key: str,
     convergence is checked with a count of changed labels (near-dup
     components are dense cliques/stars, so 2-3 rounds suffice; the
     loop is bounded defensively by ``max_rounds``). Per-round labels
-    are localCheckpoint-ed — iterative lineage growth is what
-    checkpointing exists for (policy note in the module docstring).
+    go through ``barrier``.
 
     The number of propagation rounds actually executed (including the
     final round that observed zero changes) is recorded in
@@ -88,9 +104,8 @@ def min_label_fixpoint(sym: DataFrame, id_col: str, telemetry_key: str,
     deterministic edge set (pinned on a fixed path graph in
     ``tests/test_dedup_similarity.py``).
     """
-    labels = (sym.select(F.col("src").alias(id_col)).distinct()
-              .withColumn("label", F.col(id_col))
-              .localCheckpoint(eager=True))
+    labels = barrier(sym.select(F.col("src").alias(id_col)).distinct()
+                     .withColumn("label", F.col(id_col)))
     iters = 0
     changed = 0
     for _ in range(max_rounds):
@@ -105,12 +120,12 @@ def min_label_fixpoint(sym: DataFrame, id_col: str, telemetry_key: str,
         # N-row join every iteration, identical count (chg is true
         # exactly where the old join's label-inequality filter matched;
         # least() never returns NULL here since `label` is non-null)
-        new_labels = (labels.join(nb, labels[id_col] == nb.src, "left")
-                      .select(labels[id_col],
-                              F.least("label", "nb_label").alias("label"),
-                              (F.least("label", "nb_label")
-                               != F.col("label")).alias("chg"))
-                      .localCheckpoint(eager=True))
+        new_labels = barrier(
+            labels.join(nb, labels[id_col] == nb.src, "left")
+            .select(labels[id_col],
+                    F.least("label", "nb_label").alias("label"),
+                    (F.least("label", "nb_label")
+                     != F.col("label")).alias("chg")))
         changed = new_labels.filter("chg").count()
         labels = new_labels.drop("chg")
         if changed == 0:

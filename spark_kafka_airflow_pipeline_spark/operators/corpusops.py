@@ -1106,7 +1106,7 @@ def kmv_source_overlap(spark: SparkSession, sf_dir: str,
                      .alias("g"))
              .groupBy("source", F.md5("g").alias("h"))
              .agg(F.count(F.lit(1)).alias("_c")).drop("_c"))
-    # NOTE (r9 scan census): a localCheckpoint on `grams` was A/B
+    # NOTE (r9 scan census): a barrier on `grams` was A/B
     # tested and REVERTED — AQE exchange reuse already covers the
     # repeated consumers; materialization measured ~15% slower.
     sk = bottom_k_per_group(grams, ["source"], "h", k)

@@ -68,6 +68,7 @@ from spark_kafka_airflow_pipeline_spark.functions import text as T
 from spark_kafka_airflow_pipeline_spark.operators.base import (
     FIXPOINT_ITERS,
     QueryFn,
+    barrier,
     min_label_fixpoint,
     ppm,
     table,
@@ -407,11 +408,11 @@ def _band_join(sig: DataFrame, keys: list[Column],
     each ``carry`` column as ``<c>_a`` / ``<c>_b``. The oracles mirror
     this self-join literally.
 
-    Callers pass a materialized ``sig`` (localCheckpoint), one
-    fixed-width row per doc, and the keys explode from ONE array
-    projection: the r9 census found the old 4-union + self-join form
-    re-ran the tokenize+signature pipeline 8x (once per union arm per
-    join side)."""
+    Callers pass ``sig`` through ``barrier``, one fixed-width row per
+    doc, and the keys explode from ONE array projection: the r9 census
+    found the old 4-union + self-join form re-ran the
+    tokenize+signature pipeline 8x (once per union arm per join
+    side)."""
     bands = sig.select("doc_id", *carry,
                        F.explode(F.array(*keys)).alias("bk"))
     a, b = bands.alias("a"), bands.alias("b")
@@ -542,8 +543,8 @@ def _md5_word_signature(d: DataFrame, family: HashFamily,
                         *keep: str) -> tuple[DataFrame, DataFrame]:
     """md5 word-gram prep plus stage 1: ``(doc_id, *keep, sh)`` distinct
     word 3-gram strings of a ``(doc_id, text, *keep)`` frame, and their
-    ``family`` signature ``(doc_id, *keep, minhash)``, each materialized
-    once (localCheckpoint).
+    ``family`` signature ``(doc_id, *keep, minhash)``, each behind one
+    ``barrier``.
 
     The grams feed the signature, the exact verify and any caller's own
     reuse; without the barrier each consumer re-tokenized the corpus
@@ -556,13 +557,13 @@ def _md5_word_signature(d: DataFrame, family: HashFamily,
     for the zip_with form, vs 1.9 s with this barrier at sf0.1). The
     signature is one fixed-width row per doc, read twice by the band
     self-join."""
-    grams = (d.select("doc_id", *keep, T.split_tokens("text").alias("toks"))
-             .select("doc_id", *keep,
-                     F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
-                     .alias("sh"))
-             .localCheckpoint(eager=True))
-    sig = _text_signature(grams, family, lambda sh: sh, text_col="sh",
-                          keep=keep).localCheckpoint(eager=True)
+    grams = barrier(
+        d.select("doc_id", *keep, T.split_tokens("text").alias("toks"))
+        .select("doc_id", *keep,
+                F.array_distinct(T.raw_shingles_of(F.col("toks"), 3))
+                .alias("sh")))
+    sig = barrier(_text_signature(grams, family, lambda sh: sh,
+                                  text_col="sh", keep=keep))
     return grams, sig
 
 
@@ -817,21 +818,15 @@ def dedup_clusters(spark: SparkSession, sf_dir: str,
     diameter iterates to fixpoint with periodic reliable checkpoints
     instead of a fixed round count.
 
-    The verified pair list is materialized ONCE with an eager
-    ``localCheckpoint`` before the loop: every round consumes the edge
-    list twice (both join directions), so leaving it lazy re-ran the
-    whole MinHash pipeline ~3x (measured 24.7s -> 8.5s at sf0.1).
-    localCheckpoint truncates lineage WITHOUT pinning a CacheManager
-    entry — the blocks die with the RDD reference, so a lazily-returned
-    frame doesn't leak cache state into a long-lived session (the r2
-    ADVICE leak class). Iterative graph algorithms also NEED the
-    truncation: per-round lineage growth is what checkpointing exists
-    for. Rows-only check (murmur3 not in DuckDB); chain-transitivity
-    pinned by ``tests/test_dedup_similarity.py::test_dedup_clusters_chain``.
+    The verified pair list goes through ``barrier`` ONCE before the
+    loop: every round consumes the edge list twice (both join
+    directions), so leaving it lazy re-ran the whole MinHash pipeline
+    ~3x (measured 24.7s -> 8.5s at sf0.1). Rows-only check (murmur3
+    not in DuckDB); chain-transitivity pinned by
+    ``tests/test_dedup_similarity.py::test_dedup_clusters_chain``.
     """
     d = table(spark, sf_dir, "documents").select("doc_id")
-    pairs = (minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-             .localCheckpoint(eager=True))
+    pairs = barrier(minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b"))
     sym = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")) \
         .union(pairs.select(F.col("doc_b").alias("src"),
                             F.col("doc_a").alias("dst")))
@@ -1248,8 +1243,8 @@ def ngram_jaccard_md5_pairs(spark: SparkSession, sf_dir: str,
     # lineage holds the full char-gram + md5 pass (the DuckDB twin
     # needed the same MATERIALIZED hint — uncached it recomputed the
     # gram pipeline per reference, >550 s at sf0.1 vs 16 s).
-    hpdf = (g.select("doc_id", MD5_CHAR.gram_hash(F.col("g")).alias("h"))
-            .localCheckpoint(eager=True))
+    hpdf = barrier(g.select("doc_id",
+                            MD5_CHAR.gram_hash(F.col("g")).alias("h")))
     # ONE per-doc feature row, materialized once (r18): the 32
     # signature mins (banding otherwise re-runs the 32-way min
     # aggregate 8x — the r16 fix), the distinct gram-hash set (exact
@@ -1260,13 +1255,12 @@ def ngram_jaccard_md5_pairs(spark: SparkSession, sf_dir: str,
     # median 6.39s end-to-end, fully merged 5.66s — one pass over the
     # 712k-row stream and one 5000-row checkpoint instead of two of
     # each.
-    sig = (_signature(hpdf, MD5_CHAR, extra={
+    sig = barrier(_signature(hpdf, MD5_CHAR, extra={
         "sh": F.collect_set("h"),
         **{f"c{i}": F.sum(F.when(F.col("h") % _NG_BOUND_BUCKETS == i, 1)
                           .otherwise(0)).cast("int")
            for i in range(_NG_BOUND_BUCKETS)}})
-        .withColumn("n", F.size("sh"))
-        .localCheckpoint(eager=True))
+        .withColumn("n", F.size("sh")))
     cand = _band_join(sig, MD5_CHAR.band_keys())
     # r18: EXACT bucket-count upper bound on the pair intersection,
     # applied to the RAW banding candidates BEFORE any heavy pair work.
@@ -1492,8 +1486,7 @@ def simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"(CASE WHEN s{i} >= 0 THEN CAST(1 AS BIGINT) ELSE 0 END << {i})"
         for i in range(_SH_BITS))
     # one fixed-width row per doc, materialized once (see _band_join)
-    fps = (sums.select("doc_id", F.expr(fp_expr).alias("fp"))
-           .localCheckpoint(eager=True))
+    fps = barrier(sums.select("doc_id", F.expr(fp_expr).alias("fp")))
     keys = [F.expr(f"concat({k}, ':', (fp >> {k * _SH_BAND}) & 32767)")
             for k in range(4)]
     return (_band_join(fps, keys, carry=("fp",))
@@ -1548,12 +1541,11 @@ def dedup_clusters_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     Min-label propagation (``base.min_label_fixpoint``): one shuffle
     per round on the doc key; convergence is checked with a count of
     changed labels (near-dup components are dense cliques/stars, so
-    2-3 rounds suffice; the loop is bounded defensively). Edges are
-    localCheckpoint-ed once — each round consumes both join
+    2-3 rounds suffice; the loop is bounded defensively). Edges go
+    through ``barrier`` once — each round consumes both join
     directions. Rounds executed per run land in
     ``base.FIXPOINT_ITERS["dedup_clusters_md5"]`` (soak telemetry)."""
-    pairs = (minhash_md5_pairs(spark, sf_dir).select("doc_a", "doc_b")
-             .localCheckpoint(eager=True))
+    pairs = barrier(minhash_md5_pairs(spark, sf_dir).select("doc_a", "doc_b"))
     sym = (pairs.select(F.col("doc_a").alias("src"),
                         F.col("doc_b").alias("dst"))
            .union(pairs.select(F.col("doc_b").alias("src"),
@@ -1631,9 +1623,8 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame, and its lineage contains the whole MinHash pipeline —
     # leaving it lazy re-ran signature+banding twice (measured 15.6s ->
     # ~8s at sf0.1)
-    cross = (pairs.join(a, "doc_a").join(b, "doc_b")
-             .filter(F.col("split_a") != F.col("split_b"))
-             .localCheckpoint(eager=True))
+    cross = barrier(pairs.join(a, "doc_a").join(b, "doc_b")
+                    .filter(F.col("split_a") != F.col("split_b")))
     leaked = (cross.select(F.col("doc_a").alias("doc_id"))
               .unionByName(cross.select(F.col("doc_b").alias("doc_id")))
               .distinct()
@@ -1865,13 +1856,12 @@ def containment_md5_pairs(spark: SparkSession, sf_dir: str,
              f"ELSE transform(sequence(0, size(t) - {n}), "
              f"i -> array_join(slice(t, i + 1, {n}), ' ')) END"))
              .alias("gram")))
-    grams = (g.select(
+    # (doc, gram-id) relation consumed 5x (sizes, df filter, both join
+    # sides): materialize once (r9 scan census)
+    grams = barrier(g.select(
         "doc_id",
         F.conv(F.substring(F.md5("gram"), 1, 15), 16, 10).cast("bigint")
-        .alias("gid")).dropDuplicates()
-        # (doc, gram-id) relation consumed 5x (sizes, df filter, both
-        # join sides): materialize once (r9 scan-census discipline)
-        .localCheckpoint(eager=True))
+        .alias("gid")).dropDuplicates())
     sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     keep = (grams.groupBy("gid").agg(F.count(F.lit(1)).alias("df"))
             .filter((F.col("df") >= 2) & (F.col("df") <= df_cap))

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.operators.base import (
     QueryFn,
+    barrier,
     ppm,
     table,
 )
@@ -215,9 +216,10 @@ def gini_lorenz_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint").alias("cents")))
     ranked = global_row_number(per, F.col("cents").asc(),
                                F.col("c_custkey").asc(), out="rn")
-    # totals from the PERSISTED ranked frame — aggregating `per` again
-    # would recompute the whole customer-revenue join+groupBy (the 10x
-    # soak showed the doubled scan)
+    # totals from the MATERIALIZED ranked frame (global_row_number's
+    # barrier) — aggregating `per` again would recompute the whole
+    # customer-revenue join+groupBy (the 10x soak showed the doubled
+    # scan)
     tot = ranked.agg(F.count(F.lit(1)).alias("n"),
                      F.sum("cents").cast("decimal(19,0)")
                      .alias("tot_cents"))
@@ -392,15 +394,13 @@ def _reorder_risk_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .alias("t_days"),
                    F.expr("CASE WHEN second_dt IS NULL THEN 0 ELSE 1 END")
                    .alias("is_event")))
-    lev = (obs.groupBy("t_days")
-           .agg(F.sum("is_event").alias("d"),
-                F.sum(F.expr("1 - is_event")).alias("cens"))
-           # CALENDAR-BOUNDED (~thousands of gap-day levels at any SF):
-           # materialize ONCE — n_tot and the estimator both consume it,
-           # and without this the per-customer rank pipeline is planned
-           # 4x (8 orders scans measured; the minhash localCheckpoint
-           # lineage discipline)
-           .localCheckpoint(eager=True))
+    # CALENDAR-BOUNDED (~thousands of gap-day levels at any SF):
+    # materialize ONCE — n_tot and the estimator both consume it, and
+    # without this the per-customer rank pipeline is planned 4x (8
+    # orders scans measured)
+    lev = barrier(obs.groupBy("t_days")
+                  .agg(F.sum("is_event").alias("d"),
+                       F.sum(F.expr("1 - is_event")).alias("cens")))
     n_tot = lev.agg(F.sum(F.expr("d + cens")).alias("n_tot"))
     return (lev.crossJoin(F.broadcast(n_tot))
             .withColumn("n_risk",
@@ -583,7 +583,7 @@ def score_lift_gain_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
                    .alias("is_pos")))
     ranked = global_row_number(lab, F.col("score").desc(),
                                F.col("c_custkey").asc(), out="rn")
-    # totals from the persisted ranked frame (not `lab` — see the
+    # totals from the materialized ranked frame (not `lab` — see the
     # gini_lorenz_customers scan-doubling note)
     tot = ranked.agg(F.count(F.lit(1)).alias("n"),
                      F.sum("is_pos").cast("bigint").alias("p"))
@@ -1087,16 +1087,14 @@ def segment_priority_mutual_info(spark: SparkSession,
     marginals and totals are bounded broadcasts."""
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    cell = (o.join(c, o.o_custkey == c.c_custkey)
-            .groupBy("c_mktsegment", "o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            # 25-row contingency table consumed by both marginals, the
-            # total and the MI sum: a 25-row materialization GUARANTEES
-            # the orders x customer join runs once (A/B at sf0.1:
-            # steady-state parity — AQE stage reuse already dedupes —
-            # but the cold first run improves 2.2s -> 1.7s and the
-            # guarantee is free at this frame size)
-            .localCheckpoint(eager=True))
+    # 25-row contingency table consumed by both marginals, the total and
+    # the MI sum: a 25-row materialization GUARANTEES the orders x
+    # customer join runs once (A/B at sf0.1: steady-state parity — AQE
+    # stage reuse already dedupes — but the cold first run improves
+    # 2.2s -> 1.7s and the guarantee is free at this frame size)
+    cell = barrier(o.join(c, o.o_custkey == c.c_custkey)
+                   .groupBy("c_mktsegment", "o_orderpriority")
+                   .agg(F.count(F.lit(1)).alias("cnt")))
     row_m = cell.groupBy("c_mktsegment").agg(F.sum("cnt").alias("r"))
     col_m = cell.groupBy("o_orderpriority").agg(F.sum("cnt").alias("s"))
     tot = cell.agg(F.sum("cnt").alias("n"))
@@ -2136,13 +2134,12 @@ def price_emd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     wtot = Window.partitionBy("mdt")
     wcum = (Window.partitionBy("mdt").orderBy("bin")
             .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    cum = (counts.withColumn("tot", F.sum("n").over(wtot))
-           .withColumn("cum_n", F.sum("n").over(wcum))
-           .withColumn("cum_ppm", F.expr(ppm("cum_n", "tot")))
-           .drop("cum_n")
-           # calendar-bounded (month x 20 bin) frame joined to itself:
-           # materialize once so the orders aggregate runs once
-           .localCheckpoint(eager=True))
+    # calendar-bounded (month x 20 bin) frame joined to itself:
+    # materialize once so the orders aggregate runs once
+    cum = barrier(counts.withColumn("tot", F.sum("n").over(wtot))
+                  .withColumn("cum_n", F.sum("n").over(wcum))
+                  .withColumn("cum_ppm", F.expr(ppm("cum_n", "tot")))
+                  .drop("cum_n"))
     prev = cum.select(F.col("mdt").alias("pm"), "bin",
                       F.col("cum_ppm").alias("prev_cum_ppm"),
                       F.col("tot").alias("prev_n"))
@@ -2218,12 +2215,11 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame (~80 rows at any SF); the pairwise sign join and the tie
     grouping run on that bounded frame only."""
     o = table(spark, sf_dir, "orders")
-    monthly = (o.groupBy(F.date_format("o_orderdate", "yyyy-MM")
-                         .alias("mo"))
-               .agg(F.sum(F.expr(_CENTS)).cast("bigint").alias("c"))
-               # ~80-row calendar frame consumed 3x (pair join sides +
-               # tie groups): materialize once, not 4 orders scans
-               .localCheckpoint(eager=True))
+    # ~80-row calendar frame consumed 3x (pair join sides + tie
+    # groups): materialize once, not 4 orders scans
+    monthly = barrier(o.groupBy(F.date_format("o_orderdate", "yyyy-MM")
+                                .alias("mo"))
+                      .agg(F.sum(F.expr(_CENTS)).cast("bigint").alias("c")))
     a = monthly.select(F.col("mo").alias("ma"), F.col("c").alias("ca"))
     b = monthly.select(F.col("mo").alias("mb"), F.col("c").alias("cb"))
     s = (a.join(b, F.col("ma") < F.col("mb"))

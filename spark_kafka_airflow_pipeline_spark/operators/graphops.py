@@ -30,7 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from spark_kafka_airflow_pipeline_spark.operators.base import QueryFn, table
+from spark_kafka_airflow_pipeline_spark.operators.base import (
+    QueryFn,
+    barrier,
+    table,
+)
 
 TOPK_NEIGHBORS = 8
 
@@ -111,13 +115,10 @@ def pagerank_supplier_rank(spark: SparkSession, sf_dir: str,
     relation to the current rank vector on ``src`` + one aggregation on
     ``dst`` — both hash-partitioned on supplier key, so a
     pre-partitioned edge table makes each iteration a single co-located
-    shuffle. The edge relation is materialized ONCE before the loop
-    with an eager ``localCheckpoint`` (the ``dedup_clusters``
-    discipline): lazy lineage would re-run the lineitem self-join per
-    iteration, and lineage truncation is what keeps iterative plans
-    from growing per round; localCheckpoint pins no CacheManager entry,
-    so nothing leaks into a long-lived session."""
-    edges = _supplier_topk_edges(spark, sf_dir).localCheckpoint(eager=True)
+    shuffle. The edge relation goes through ``barrier`` ONCE before
+    the loop: lazy lineage would re-run the lineitem self-join per
+    iteration."""
+    edges = barrier(_supplier_topk_edges(spark, sf_dir))
     ranks = pagerank_over_edges(edges, iters=iters, damping=damping)
     return ranks.select(F.col("sk").alias("s_suppkey"),
                         F.round("rank", 8).alias("pagerank"))
@@ -199,13 +200,13 @@ def triangle_count_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the global clustering coefficient 3*tri/wedges rounded to 8."""
     topk = _supplier_topk_edges(spark, sf_dir).select("src", "dst")
     # symmetrize (union of directions), then distinct undirected pairs
-    # materialized once (localCheckpoint, see pagerank): the undirected
-    # edge list is consumed by the degree agg AND the orientation join,
-    # and `oriented` is referenced three times in the wedge closure —
-    # lazy lineage would re-run the co-count shuffle for each use
-    und = (topk.unionByName(topk.select(F.col("dst").alias("src"),
-                                        F.col("src").alias("dst")))
-           .distinct().localCheckpoint(eager=True))
+    # behind a barrier: the undirected edge list is consumed by the
+    # degree agg AND the orientation join, and `oriented` is referenced
+    # three times in the wedge closure — lazy lineage would re-run the
+    # co-count shuffle for each use
+    und = barrier(topk.unionByName(topk.select(F.col("dst").alias("src"),
+                                               F.col("src").alias("dst")))
+                  .distinct())
     return triangle_count_over_undirected(und)
 
 
@@ -299,17 +300,15 @@ def supplier_bfs_hops(spark: SparkSession, sf_dir: str,
     The DuckDB recursive-CTE oracle, by contrast, enumerates every
     path of length ≤ max_hops (up to k^max_hops rows): correct as a
     small-scale oracle, exponentially wrong as a plan — the point of
-    the frontier formulation. Each frontier is localCheckpoint-ed
-    (the ``pagerank_supplier_rank`` discipline) so lineage stays flat
-    across iterations and the co-count self-join behind ``edges`` runs
-    once, not once per hop.
+    the frontier formulation. Each frontier and ``edges`` go through
+    ``barrier`` so lineage stays flat across iterations and the
+    co-count self-join behind ``edges`` runs once, not once per hop.
 
     Determinism: hop counts are integers; the visited set is a set —
     no floats, no ordering sensitivity. Output (s_suppkey, hop) is
     value-hash oracled.
     """
-    edges = (_supplier_topk_edges(spark, sf_dir).select("src", "dst")
-             .localCheckpoint(eager=True))
+    edges = barrier(_supplier_topk_edges(spark, sf_dir).select("src", "dst"))
     return (bfs_hops_over_edges(edges, max_hops=max_hops)
             .select(F.col("sk").alias("s_suppkey"), "hop"))
 
@@ -319,20 +318,19 @@ def bfs_hops_over_edges(edges: DataFrame,
     """The frontier-BFS loop over an arbitrary (src, dst) edge frame,
     seeded at the minimum ``src`` — factored out so property tests can
     drive it with random graphs against an independent Python BFS.
-    Returns (sk, hop). The caller is responsible for materializing
-    ``edges`` (localCheckpoint) — the loop references it every hop."""
+    Returns (sk, hop). The caller passes ``edges`` through ``barrier``
+    — the loop references it every hop."""
     # hop-0 seed: the lowest node key that has any out-edge (a 1-row
     # aggregate, broadcast by construction)
     frontier = (edges.agg(F.min("src").alias("sk"))
                 .withColumn("hop", F.lit(0).cast("bigint")))
     dist = frontier
     for h in range(1, max_hops + 1):
-        nxt = (frontier.join(edges, frontier.sk == edges.src)
-               .select(F.col("dst").alias("sk"))
-               .distinct()
-               .join(dist, "sk", "left_anti")
-               .withColumn("hop", F.lit(h).cast("bigint"))
-               .localCheckpoint(eager=True))
+        nxt = barrier(frontier.join(edges, frontier.sk == edges.src)
+                      .select(F.col("dst").alias("sk"))
+                      .distinct()
+                      .join(dist, "sk", "left_anti")
+                      .withColumn("hop", F.lit(h).cast("bigint")))
         if nxt.isEmpty():
             break
         dist = dist.unionByName(nxt)
@@ -380,17 +378,15 @@ def link_prediction_jaccard(spark: SparkSession, sf_dir: str,
     O(edges * cap); the final global top-``topn`` is a
     ``row_number <= k`` shape Spark bounds with WindowGroupLimit."""
     e = _supplier_topk_edges(spark, sf_dir)
-    und = (e.select(F.col("src").alias("node"), F.col("dst").alias("nbr"))
-           .union(e.select(F.col("dst").alias("node"),
-                           F.col("src").alias("nbr")))
-           .distinct()
-           # node-bounded edge list consumed 4x (degrees, wedge role,
-           # both wedge sides via wn, the non-edge anti-join):
-           # materialize once instead of re-deriving the top-k
-           # co-occurrence graph per consumer (56-scan static plan;
-           # measured 4.5s -> 3.6s at sf0.1 — the dedup_clusters
-           # localCheckpoint lineage discipline)
-           .localCheckpoint(eager=True))
+    # node-bounded edge list consumed 4x (degrees, wedge role, both
+    # wedge sides via wn, the non-edge anti-join): materialize once
+    # instead of re-deriving the top-k co-occurrence graph per consumer
+    # (56-scan static plan; measured 4.5s -> 3.6s at sf0.1)
+    und = barrier(e.select(F.col("src").alias("node"),
+                           F.col("dst").alias("nbr"))
+                  .union(e.select(F.col("dst").alias("node"),
+                                  F.col("src").alias("nbr")))
+                  .distinct())
     deg = und.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
     # deg >= 2 guard: a degree-1 center can never form a wedge, and
     # its aa_term would divide by ln(1)=0 (Spark Infinity vs DuckDB
@@ -493,9 +489,8 @@ def recursive_cte_reach_curve(spark: SparkSession,
     # materialize BEFORE the view: the recursive execution references
     # the anchor relation once per level, and lazy lineage would re-run
     # the co-count self-join each time (10x soak: 3.8x before, ~2x
-    # after — the supplier_bfs_hops localCheckpoint discipline)
-    edges = (_supplier_topk_edges(spark, sf_dir).select("src", "dst")
-             .localCheckpoint(eager=True))
+    # after)
+    edges = barrier(_supplier_topk_edges(spark, sf_dir).select("src", "dst"))
     edges.createOrReplaceTempView("rcte_edges")
     return spark.sql(f"""
         WITH RECURSIVE walk(sk, d) AS (
@@ -557,23 +552,21 @@ def label_propagation_over_undirected(und, rounds: int = LPA_ROUNDS):
 
     Scale: each round is one edge-keyed join + one (node, lbl) hash
     aggregate + one per-node rank window PARTITIONED BY node —
-    data-sized but fully parallel. Frames are localCheckpoint-ed per
-    round (the pagerank/BFS lineage discipline): without it, round T
-    re-executes all T-1 prior shuffles per reference."""
-    labels = (und.select(F.col("src").alias("node"))
-              .distinct()
-              .select("node", F.col("node").alias("lbl"))
-              .localCheckpoint(eager=True))
+    data-sized but fully parallel. Each round's labels go through
+    ``barrier``: without it, round T re-executes all T-1 prior shuffles
+    per reference."""
+    labels = barrier(und.select(F.col("src").alias("node"))
+                     .distinct()
+                     .select("node", F.col("node").alias("lbl")))
     for _ in range(rounds):
         msgs = (und.join(labels, und.dst == labels.node)
                 .select(und.src.alias("n"), "lbl"))
         counts = msgs.groupBy("n", "lbl").agg(F.count(F.lit(1)).alias("c"))
         w = Window.partitionBy("n").orderBy(F.col("c").desc(),
                                             F.col("lbl").asc())
-        labels = (counts.withColumn("rn", F.row_number().over(w))
-                  .filter(F.col("rn") == 1)
-                  .select(F.col("n").alias("node"), "lbl")
-                  .localCheckpoint(eager=True))
+        labels = barrier(counts.withColumn("rn", F.row_number().over(w))
+                         .filter(F.col("rn") == 1)
+                         .select(F.col("n").alias("node"), "lbl"))
     return labels
 
 
@@ -594,9 +587,9 @@ def label_propagation_communities(spark: SparkSession,
     list is degree-capped at k per source (``_supplier_topk_edges``),
     so rounds cost O(edges), never O(n^2)."""
     topk = _supplier_topk_edges(spark, sf_dir).select("src", "dst")
-    und = (topk.unionByName(topk.select(F.col("dst").alias("src"),
-                                        F.col("src").alias("dst")))
-           .distinct().localCheckpoint(eager=True))
+    und = barrier(topk.unionByName(topk.select(F.col("dst").alias("src"),
+                                               F.col("src").alias("dst")))
+                  .distinct())
     labels = label_propagation_over_undirected(und)
     return (labels.groupBy(F.col("lbl").alias("community_label"))
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_members")))

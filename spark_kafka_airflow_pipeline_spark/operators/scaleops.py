@@ -24,7 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.io.bucketing import write_bucketed
-from spark_kafka_airflow_pipeline_spark.operators.base import QueryFn, ppm, table
+from spark_kafka_airflow_pipeline_spark.operators.base import (
+    QueryFn,
+    barrier,
+    ppm,
+    table,
+)
 from spark_kafka_airflow_pipeline_spark.operators.relational import SQL_DSUM, dsum
 from spark_kafka_airflow_pipeline_spark.session import scoped_conf
 
@@ -121,8 +126,7 @@ def _evict_other_apps(memo: set, app_id: str) -> None:
     """Drop memo keys from OTHER applications (r12 ADVICE): their
     sessions are gone (classic PySpark runs one SparkContext per
     process), so the keys would otherwise accumulate for the process
-    lifetime — the same hygiene textops._LM_SCORED_CACHE applies.
-    Caller holds _PROBE_LOCK."""
+    lifetime. Caller holds _PROBE_LOCK."""
     for k in [k for k in memo if k[0] != app_id]:
         memo.discard(k)
 
@@ -527,14 +531,12 @@ def bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                .agg(F.count(F.lit(1)).alias("n_lines"),
                     dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")),
                          "revenue")))
-        # materialize (and PIN) the result under the scoped confs: a
-        # bare collect() here would leave the returned frame to re-plan
-        # hint-free after the scope restores the confs, paying
-        # the join twice and losing the bloom filter on the re-run
-        # (VERDICT r5 #4). The cached result is one aggregate row.
-        out.persist()
-        out.count()
-        return out
+        # materialize the result under the scoped confs: a bare
+        # collect() here would leave the returned frame to re-plan
+        # hint-free after the scope restores the confs, paying the join
+        # twice and losing the bloom filter on the re-run (VERDICT r5
+        # #4). The barrier holds one aggregate row.
+        return barrier(out)
 
 
 BLOOM_JOIN_SQL = f"""
@@ -637,27 +639,23 @@ def _global_two_phase(df: DataFrame, sort_cols, val, out: str,
     prefix-aggregate ``val`` over the total order given by
     ``sort_cols`` (which must include a unique tiebreaker).
 
-    The locally-scanned frame is persisted and the offsets are derived
-    FROM it (per-partition totals): range-bound sampling seeds by RDD
-    id, so computing offsets and local ranks from two separate
-    executions of the exchange can range-partition the two branches
-    DIFFERENTLY and misalign every offset (caught at sf0.1 —
-    sf0.001/sf0.01 samples covered all rows, masking it). One
-    materialization is the same correctness-required persist as the
-    bloom-join build; partition loss recomputes from the SAME shuffle
-    output, so a recovered partition re-ranks identically."""
+    The locally-scanned frame goes through ``barrier`` and the offsets
+    are derived FROM it (per-partition totals): range-bound sampling
+    seeds by RDD id, so computing offsets and local ranks from two
+    separate executions of the exchange can range-partition the two
+    branches DIFFERENTLY and misalign every offset (caught at sf0.1 —
+    sf0.001/sf0.01 samples covered all rows, masking it). Offsets and
+    local ranks must read ONE materialization."""
     from pyspark.sql import Window as Wn
-    from pyspark.storagelevel import StorageLevel
 
-    local = (df.repartitionByRange(num_partitions, *sort_cols)
-             .withColumn("_pid", F.spark_partition_id())
-             .withColumn("_val", val.cast("bigint"))
-             .withColumn(
-                 "_lrs",
-                 F.sum("_val").over(
-                     Wn.partitionBy("_pid").orderBy(*sort_cols)
-                     .rowsBetween(Wn.unboundedPreceding, 0)))
-             .persist(StorageLevel.MEMORY_AND_DISK))
+    local = barrier(df.repartitionByRange(num_partitions, *sort_cols)
+                    .withColumn("_pid", F.spark_partition_id())
+                    .withColumn("_val", val.cast("bigint"))
+                    .withColumn(
+                        "_lrs",
+                        F.sum("_val").over(
+                            Wn.partitionBy("_pid").orderBy(*sort_cols)
+                            .rowsBetween(Wn.unboundedPreceding, 0))))
     # running-sum window over the <= num_partitions-row pid aggregate:
     # bounded, NOT a data-sized global window
     offsets = (local.groupBy("_pid").agg(F.sum("_val").alias("_tot"))
@@ -1412,8 +1410,7 @@ def skew_salt_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         # than the table) feeds BOTH the roll-up and the over-target
         # count; materialize it once instead of re-aggregating the
         # fact table per consumer (12 scans -> 2 measured)
-        per_key = (df.groupBy(key).agg(F.count(F.lit(1)).alias("m"))
-                   .localCheckpoint(eager=True))
+        per_key = barrier(df.groupBy(key).agg(F.count(F.lit(1)).alias("m")))
         tot = (per_key.agg(
             F.sum("m").cast("bigint").alias("total_rows"),
             F.count(F.lit(1)).alias("n_keys"),

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from spark_kafka_airflow_pipeline_spark.functions import vectors as V
 from spark_kafka_airflow_pipeline_spark.operators.base import (
     QueryFn,
+    barrier,
     min_label_fixpoint,
     table,
 )
@@ -795,10 +796,10 @@ def embedding_dup_clusters(spark: SparkSession, sf_dir: str,
     SemDeDup-style grouping that keeps one representative per semantic
     duplicate cluster). Same min-label-propagation fixpoint as
     ``dedup.dedup_clusters_md5`` (shared ``base.min_label_fixpoint``) —
-    one co-partitioned join + agg per round, edge list
-    localCheckpoint-ed once (each round consumes both join
-    directions), convergence by changed-label count; near-dup
-    components are dense, so a handful of rounds suffice (measured: 2
+    one co-partitioned join + agg per round, edge list behind one
+    ``barrier`` (each round consumes both join directions),
+    convergence by changed-label count; near-dup components are dense,
+    so a handful of rounds suffice (measured: 2
     at sf0.001, 5 at sf0.1 — and FLAT from 1x to 20x replication,
     since replicas densify components rather than lengthen chains).
     Rounds executed per run land in
@@ -812,9 +813,8 @@ def embedding_dup_clusters(spark: SparkSession, sf_dir: str,
     oracled, the component structure is verified against a DuckDB
     recursive-CTE reachability oracle: every member's cluster id is
     the component's minimum vec_id."""
-    pairs = (embedding_near_dups(spark, sf_dir, threshold=threshold)
-             .select("id_a", "id_b")
-             .localCheckpoint(eager=True))
+    pairs = barrier(embedding_near_dups(spark, sf_dir, threshold=threshold)
+                    .select("id_a", "id_b"))
     sym = (pairs.select(F.col("id_a").alias("src"),
                         F.col("id_b").alias("dst"))
            .union(pairs.select(F.col("id_b").alias("src"),
@@ -1318,17 +1318,15 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str,
           .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    weights = (tf.join(dfreq, "term").crossJoin(F.broadcast(n))
-               .select("doc_id", "term", "df",
-                       F.expr("tf * CAST(floor(round(ln((n_docs + 1)"
-                              " / (df + 1)) + 1, 6) * 1000 + 0.5)"
-                              " AS BIGINT)").alias("w"))
-               # the tf-idf posting list (this IS the search index):
-               # norms, the df-kept slice, the query slice and the dot
-               # join all consume it — materialize once instead of
-               # re-running trigram explode + two aggs per consumer
-               # (r9 scan census; measured 5.9s -> below at sf0.1)
-               .localCheckpoint(eager=True))
+    # the tf-idf posting list (this IS the search index): norms, the
+    # df-kept slice, the query slice and the dot join all consume it —
+    # materialize once instead of re-running trigram explode + two aggs
+    # per consumer (r9 scan census; measured 5.9s -> below at sf0.1)
+    weights = barrier(tf.join(dfreq, "term").crossJoin(F.broadcast(n))
+                      .select("doc_id", "term", "df",
+                              F.expr("tf * CAST(floor(round(ln((n_docs + 1)"
+                                     " / (df + 1)) + 1, 6) * 1000 + 0.5)"
+                                     " AS BIGINT)").alias("w")))
     norms = weights.groupBy("doc_id").agg(
         F.sum(F.col("w") * F.col("w")).alias("norm2"))
     kept = weights.filter((F.col("df") >= 2) & (F.col("df") <= 64))

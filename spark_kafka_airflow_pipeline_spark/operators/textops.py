@@ -9,13 +9,16 @@ DuckDB oracle that mirrors the arithmetic exactly.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.functions import text as T
-from spark_kafka_airflow_pipeline_spark.operators.base import QueryFn, ppm, table
+from spark_kafka_airflow_pipeline_spark.operators.base import (
+    QueryFn,
+    barrier,
+    ppm,
+    table,
+)
 from spark_kafka_airflow_pipeline_spark.operators.relational import davg, SQL_DAVG
 
 
@@ -1745,7 +1748,7 @@ def winnow_overlap(spark: SparkSession, sf_dir: str,
     d = table(spark, sf_dir, "documents")
     # four consumers below (doc sizes, df filter, two join sides):
     # materialize once, lineage contains the whole winnowing pass
-    sel = _winnow_selected(d).localCheckpoint(eager=True)
+    sel = barrier(_winnow_selected(d))
     nf = sel.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_fps"))
     rare = sel.join(
         sel.groupBy("fp").agg(F.count(F.lit(1)).alias("nd"))
@@ -1819,7 +1822,7 @@ def longest_shared_spans(spark: SparkSession, sf_dir: str,
     Span arithmetic is pure integers: run of g grams = g + n - 1
     tokens.
 
-    r17: the (doc_id, pos, gh) stream is localCheckpoint-ed ONCE and
+    r17: the (doc_id, pos, gh) stream goes through ``barrier`` ONCE and
     both consumers (the df aggregate and the join probe side) read the
     materialized longs. The previous shape checkpointed the df-capped
     SURVIVORS, which re-ran the posexplode + 8-gram concat + md5 pass
@@ -1837,7 +1840,7 @@ def longest_shared_spans(spark: SparkSession, sf_dir: str,
     fits; the 2.5 GB the same draw spills is execution-side (the
     gaps-and-islands sorts), present with or without the barrier. At
     a corpus where ~24 B/gram outgrows storage memory, the blocks
-    overflow to local disk (localCheckpoint uses MEMORY_AND_DISK) —
+    overflow to local disk (local checkpoints use MEMORY_AND_DISK) —
     degradation, not failure; the survivor-side checkpoint remains
     the documented fallback shape."""
     d = table(spark, sf_dir, "documents")
@@ -1846,8 +1849,7 @@ def longest_shared_spans(spark: SparkSession, sf_dir: str,
                      F.posexplode(T.raw_shingles_of(F.col("toks"), n))
                      .alias("pos", "g")))
     gh40 = F.conv(F.substring(F.md5("g"), 1, 10), 16, 10).cast("bigint")
-    grams = (grams.select("doc_id", "pos", gh40.alias("gh"))
-             .localCheckpoint(eager=True))
+    grams = barrier(grams.select("doc_id", "pos", gh40.alias("gh")))
     rare = grams.join(
         grams.groupBy("gh").agg(F.countDistinct("doc_id").alias("nd"))
              .filter((F.col("nd") >= 2) & (F.col("nd") <= max_df))
@@ -2222,7 +2224,7 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str,
                        F.expr("tf * CAST(floor(round(ln((n_docs + 1)"
                               " / (df + 1)) + 1, 6) * 1000 + 0.5)"
                               " AS BIGINT)").alias("w")))
-    # NOTE (r9 scan census): a localCheckpoint on `weights` was A/B
+    # NOTE (r9 scan census): a barrier on `weights` was A/B
     # tested and REVERTED — AQE's runtime exchange reuse already
     # dedupes the posting-list pipeline here, and materialization
     # measured ~20% SLOWER (2.5-2.8s -> 3.2-3.3s at sf0.1).
@@ -2476,21 +2478,6 @@ GROUP BY b.risk_band, t.n_total
 """
 
 
-#: applicationId -> the LAST unigram_lm_quality scored frame persisted
-#: in that application; the next invocation unpersists it (r11 ADVICE:
-#: without this, every invocation across a long driver session leaked a
-#: cached corpus-sized frame until LRU eviction).
-_LM_SCORED_CACHE: dict[str, DataFrame] = {}
-
-#: Serializes the pop-unpersist-repersist sequence on the cache above
-#: (r12 ADVICE): two driver threads re-entering unigram_lm_quality
-#: concurrently could both pop None and both persist, leaving one
-#: frame unregistered (leaked until session teardown). Plan building
-#: under the lock is driver-only metadata work, so serialization costs
-#: nothing; the actual jobs run lazily after release.
-_LM_CACHE_LOCK = threading.Lock()
-
-
 def unigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unigram language-model QUALITY score [EXT] — the KenLM-style
     perplexity filter every web-scale corpus pipeline runs (CCNet,
@@ -2514,28 +2501,15 @@ def unigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: vocab-sized model table (31 words here; <<10M for real
     corpora) built by one groupBy and joined back on the word key —
     partial aggregation everywhere, no window, no driver loop. The
-    per-doc ``scored`` frame is persisted (MEMORY_AND_DISK, the
-    ``global_row_number`` precedent: corpus-sized-in-rows but one
-    short row per doc, lineage kept for executor-loss recovery):
-    it is consumed twice — corpus-mean then rollup — and AQE exchange
-    reuse was MEASURED not to fire (r11 probe: 8 parquet scans, 0
-    ReusedExchange — the corpus text was exploded 4x, once per branch
-    per vocab/score pass). Post-persist both consumers read one
-    InMemoryTableScan, leaving the 2 inherent train+score explodes;
-    20x soak wall ~14 s -> 8.5 s (x10.9 -> x5.9), closing the r10
-    soak-watchlist item (the only non-pair op above x10).
-
-    Cache hygiene (r11 ADVICE): the returned frame is lazy, so the
-    persist cannot be released inside this call — instead the PREVIOUS
-    invocation's scored frame is unpersisted on re-entry via a
-    per-application registry, bounding a long multi-query driver
-    session to ONE live cached frame for this op instead of one per
-    invocation. The final frame of a session is released by LRU
-    eviction / session teardown (the ``global_row_number``
-    precedent)."""
-    from pyspark.storagelevel import StorageLevel
-
-    app_id = spark.sparkContext.applicationId
+    per-doc ``scored`` frame (corpus-sized in rows but one short row
+    per doc) goes through ``barrier``: it is consumed twice —
+    corpus-mean then rollup — and AQE exchange reuse was MEASURED not
+    to fire (r11 probe: 8 parquet scans, 0 ReusedExchange — the corpus
+    text was exploded 4x, once per branch per vocab/score pass).
+    Materialized, both consumers read one scan, leaving the 2 inherent
+    train+score explodes; 20x soak wall ~14 s -> 8.5 s (x10.9 -> x5.9),
+    closing the r10 soak-watchlist item (the only non-pair op above
+    x10)."""
     d = table(spark, sf_dir, "documents")
     words = (d.select(
         "doc_id",
@@ -2552,27 +2526,11 @@ def unigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
                .groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("n_tokens"),
                     F.sum("nll_micros").alias("sum_nll")))
-    scored = (per_doc
-              .select("doc_id", "n_tokens",
-                      F.expr("sum_nll DIV n_tokens").alias("avg_nll_micros"))
-              .join(d.select("doc_id", "lang", "source"), "doc_id")
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    # Atomic swap under the lock (r12 ADVICE): release the PREVIOUS
-    # invocation's frame and register this one in one step, so
-    # concurrent re-entries can never both register (the loser's frame
-    # is unpersisted by the winner's swap — still computable via
-    # lineage, just uncached). Entries under OTHER application ids
-    # belong to stopped sessions (classic PySpark runs one SparkContext
-    # per process): their cached blocks died with the app, so just drop
-    # the dict entries — keeping them would pin dead plan graphs for
-    # the life of the process.
-    with _LM_CACHE_LOCK:
-        prev = _LM_SCORED_CACHE.pop(app_id, None)
-        if prev is not None:
-            prev.unpersist(blocking=False)
-        for stale in [k for k in _LM_SCORED_CACHE if k != app_id]:
-            _LM_SCORED_CACHE.pop(stale, None)
-        _LM_SCORED_CACHE[app_id] = scored
+    scored = barrier(per_doc
+                     .select("doc_id", "n_tokens",
+                             F.expr("sum_nll DIV n_tokens")
+                             .alias("avg_nll_micros"))
+                     .join(d.select("doc_id", "lang", "source"), "doc_id"))
     corpus_mean = scored.agg(
         F.expr("CAST(sum(avg_nll_micros) AS BIGINT) DIV count(*)")
         .alias("corpus_mean"))

@@ -38,7 +38,11 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark import metadata
-from spark_kafka_airflow_pipeline_spark.operators.base import QueryFn, table
+from spark_kafka_airflow_pipeline_spark.operators.base import (
+    QueryFn,
+    barrier,
+    table,
+)
 from spark_kafka_airflow_pipeline_spark.operators.relational import dsum, SQL_DSUM
 from spark_kafka_airflow_pipeline_spark.session import pin_table_confs, scoped_conf
 
@@ -1058,8 +1062,8 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str,
     and streamed with ``maxFilesPerTrigger=1`` (4 real micro-batches,
     asserted in tests) — and because the merge rule is an argmax over
     keys, the final state is batch-split-INDEPENDENT, which is exactly
-    what makes it oracle-able as one batch window. Each merge
-    localCheckpoints before overwriting its own input dir (classic
+    what makes it oracle-able as one batch window. Each merge goes
+    through ``barrier`` before overwriting its own input dir (classic
     read-modify-write swap).
 
     Scale posture: per batch the merge is a union + per-key top-1
@@ -1093,9 +1097,8 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str,
             new = batch_df
         w = Window.partitionBy("user_id").orderBy(
             F.col("ts").desc(), F.col("event_id").desc())
-        latest = (new.withColumn("_rn", F.row_number().over(w))
-                  .filter(F.col("_rn") == 1).drop("_rn")
-                  .localCheckpoint(eager=True))
+        latest = barrier(new.withColumn("_rn", F.row_number().over(w))
+                         .filter(F.col("_rn") == 1).drop("_rn"))
         latest.write.mode("overwrite").parquet(state_dir)
 
     try:
@@ -1114,14 +1117,13 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str,
             return spark.createDataFrame([], (
                 "user_id long, last_event_id long, last_ts_us long,"
                 " last_type string, last_cents long"))
-        return (spark.read.parquet(state_dir)
-                .select("user_id",
-                        F.col("event_id").alias("last_event_id"),
-                        F.unix_micros("ts").alias("last_ts_us"),
-                        F.col("event_type").alias("last_type"),
-                        F.floor(F.col("value") * 100 + 0.5).cast("bigint")
-                        .alias("last_cents"))
-                .localCheckpoint(eager=True))
+        return barrier(spark.read.parquet(state_dir)
+                       .select("user_id",
+                               F.col("event_id").alias("last_event_id"),
+                               F.unix_micros("ts").alias("last_ts_us"),
+                               F.col("event_type").alias("last_type"),
+                               F.floor(F.col("value") * 100 + 0.5)
+                               .cast("bigint").alias("last_cents")))
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

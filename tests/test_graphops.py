@@ -9,6 +9,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from spark_kafka_airflow_pipeline_spark.operators import graphops
+from spark_kafka_airflow_pipeline_spark.operators.base import barrier
 
 
 def test_pagerank_is_a_distribution(spark, sf_dir):
@@ -151,8 +152,7 @@ def test_bfs_kernel_matches_python_reference(spark):
                 if v not in want:
                     want[v] = want[u] + 1
                     q.append(v)
-        df = spark.createDataFrame(edges, "src long, dst long") \
-            .localCheckpoint(eager=True)
+        df = barrier(spark.createDataFrame(edges, "src long, dst long"))
         got = {r.sk: r.hop for r in
                graphops.bfs_hops_over_edges(df).collect()}
         assert got == want, (seed, got, want)

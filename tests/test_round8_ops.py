@@ -239,27 +239,6 @@ def test_unigram_lm_recompute_one_group(spark, sf_dir):
     assert got[(lang, source)] == want
 
 
-def test_unigram_lm_releases_previous_cache(spark, sf_dir):
-    """Re-invoking unigram_lm_quality unpersists the PREVIOUS
-    invocation's scored frame (r11 ADVICE: a long multi-query driver
-    session used to accumulate one cached corpus-sized frame per
-    invocation until LRU eviction); the live-cache footprint of this
-    op is bounded at one frame per application."""
-    from spark_kafka_airflow_pipeline_spark.operators import textops
-
-    app_id = spark.sparkContext.applicationId
-    textops.unigram_lm_quality(spark, sf_dir).collect()
-    first = textops._LM_SCORED_CACHE[app_id]
-    assert first.is_cached
-
-    textops.unigram_lm_quality(spark, sf_dir).collect()
-    second = textops._LM_SCORED_CACHE[app_id]
-    assert second is not first
-    assert not first.is_cached, "previous invocation's persist leaked"
-    assert second.is_cached
-    second.unpersist(blocking=False)  # leave the suite session clean
-
-
 def test_regression_matches_numpy(spark, sf_dir):
     """Slope/intercept/r2 micros match an independent numpy fit on the
     largest brand (within 1 micro of the floor-rounding)."""

@@ -129,7 +129,6 @@ def test_queries_leave_session_confs_unchanged(spark, sf_dir):
     before = settings()
     bloom = scaleops.bloom_filter_join(spark, sf_dir)
     assert bloom.collect()[0]["n_lines"] > 0
-    bloom.unpersist()
     # the script runs under its own scope even where scripting is off
     with scoped_conf(spark, {"spark.sql.scripting.enabled": "false"}):
         assert relational_extra.sql_api_scripting(spark, sf_dir).collect()
