@@ -46,45 +46,38 @@ _MODULES = (evalops, lakeops, corpusops, graphops, streaming, dedup,
             relational)
 
 # The 50 queries pinned to the FRONT of the driver's correctness window
-# (the driver records only the first 50 queries() entries). Round-18
-# is a pure rotation round (standing r10 verdict ask #1): the window is
-# EXACTLY `_R18_EARMARK[:50]` from the r17-generated queue — the
-# complete r11-age cohort (31 names, the oldest rows on the board) plus
-# the first 19 of the r12 cohort. Zero hand curation; the queue is
-# GENERATED by scripts/gen_earmark.py from the CORRECTNESS union (the
-# r9 audit found a hand-written queue had silently skipped 102 names).
+# (the driver records only the first 50 queries() entries). The window
+# is not hand-curated: it is the first 50 names of the rotation queue
+# that `python scripts/rotate_window.py` printed at rotation time, and
+# `--apply` writes exactly that slice here. The queue is computed, never
+# stored: every queries() name that is neither in this window nor
+# exempt, oldest latest driver row (union of CORRECTNESS_r*.json) first,
+# never-driver-seen names ahead of all, name as the tiebreak.
 #
-# REFRESH SLA — SEVEN rounds, by arithmetic (r10 verdict ask #2): the
-# rotating pool is len(queries()) - 3 pinned-once exemptions = 331
-# names over 50 slots/round = a 6.62-round full cycle, so the honest
-# guarantee is ceil(331/50) = 7 rounds: every oracled query's latest
-# driver row is at most 7 rounds old. The previous "6-round" wording
-# was breached BY CONSTRUCTION every cycle (334/50 > 6); seven is the
-# number the pool actually supports, and
-# tests/test_round5_late_ops.py::test_refresh_sla_matches_pool_arithmetic
-# pins ceil(pool/50) == _REFRESH_SLA_ROUNDS so pool growth past 350
-# forces an explicit SLA restatement instead of a silent breach.
-# PINNED-ONCE exemptions (slots never re-burned on known `no_oracle`):
-#   - embedding_principal_component (r7 rows-only row, spark_rows=64):
-#     float-accumulation micro-digits have no DuckDB twin; correctness
-#     is property-tested against numpy.linalg.eigh
-#     (tests/test_corpusops.py).
-#   - parquet_footer_stats (r8 rows-only row, per the r8 verdict's
-#     ask #3): its oracle cannot be the fixed-SQL kind — the query
-#     reads file-level footer metadata, and file paths can't
-#     parameterize the driver's fixed oracle string; its semantics are
-#     pinned against DuckDB parquet_metadata() in pytest
-#     (tests/test_formats_and_approx.py), which is the real evidence.
-#   - approx_distinct_customers (r5 rows-only row): HLL++ estimates
-#     have no exact-SQL twin BY DESIGN; the 2x-rsd accuracy envelope
-#     is asserted against the exact count at all three SFs in
+# REFRESH SLA, by arithmetic: the rotating pool is len(queries()) minus
+# the pinned-once exemptions (331 names) over 50 slots per round, so
+# every oracled query's latest driver row is at most ceil(331/50) = 7
+# rounds old. tests/test_round5_late_ops.py::
+# test_refresh_sla_matches_pool_arithmetic pins ceil(pool/50) ==
+# _REFRESH_SLA_ROUNDS, so pool growth past 350 forces an explicit SLA
+# restatement instead of a silent breach.
+# PINNED-ONCE exemptions (`rotate_window.EXEMPT`; slots never re-burned
+# on known `no_oracle` rows):
+#   - embedding_principal_component (rows-only): float-accumulation
+#     micro-digits have no DuckDB twin; correctness is property-tested
+#     against numpy.linalg.eigh (tests/test_corpusops.py).
+#   - parquet_footer_stats (rows-only): its oracle cannot be the
+#     fixed-SQL kind — the query reads file-level footer metadata, and
+#     file paths can't parameterize the driver's fixed oracle string;
+#     its semantics are pinned against DuckDB parquet_metadata() in
+#     pytest (tests/test_formats_and_approx.py), which is the real
+#     evidence.
+#   - approx_distinct_customers (rows-only): HLL++ estimates have no
+#     exact-SQL twin BY DESIGN; the 2x-rsd accuracy envelope is asserted
+#     against the exact count at all three SFs in
 #     tests/test_formats_and_approx.py::test_approx_distinct_within_rsd.
-#     (It sat in the r8 _R9_EARMARK's stale-refresh tail; exempting it
-#     frees the slot for an oracled name, per the same slot-waste
-#     rationale as the two rows above.)
 # Module order above ranks everything not listed.
 _WINDOW_PRIORITY = (
-    # -- 1. the complete r11-age cohort (31; oldest rows on board) ---
     "doc_token_stats",
     "doc_word_runs_udtf",
     "dpp_partitioned_join",
@@ -116,7 +109,6 @@ _WINDOW_PRIORITY = (
     "streaming_stream_stream_join",
     "streaming_tumbling_window",
     "word_freq_topk",
-    # -- 2. the first 19 of the r12-age cohort -----------------------
     "ann_recall_report",
     "asof_cogroup_pandas",
     "bm25_topk",
@@ -142,310 +134,6 @@ _WINDOW_PRIORITY = (
 #: oracled query), pinned to the pool arithmetic by
 #: tests/test_round5_late_ops.py — see the window note above.
 _REFRESH_SLA_ROUNDS = 7
-
-# ROUND-19 WINDOW PLAN — the COMPLETE age-ordered rotation queue,
-# GENERATED by scripts/gen_earmark.py (build_queue) from the union of
-# all CORRECTNESS_r*.json files (each name's LATEST driver round), not
-# hand-curated: every non-window, non-exempt query ascending by its
-# latest driver row (rest of the r12 cohort first, then r13..r16, then
-# the 50 names of the r17 window). Reds and round-19 reworks, as
-# always, jump the queue. (embedding_principal_component,
-# parquet_footer_stats and approx_distinct_customers are EXEMPT —
-# pinned-once rows-only rows, see _WINDOW_PRIORITY note.)
-_R19_EARMARK = (
-    # latest driver row round 12
-    "gopher_quality_rules",
-    "grouped_sample_topk",
-    "hard_negative_mining",
-    "incremental_dedup_md5",
-    "lateral_topk_per_nation",
-    "length_bucket_packing",
-    "minhash_md5_pairs",
-    "multimodal_arrow_features",
-    "orders_status_transpose",
-    "pagerank_supplier_rank",
-    "partial_agg_rollup",
-    "python_datasource_scan",
-    "quality_percentile_filter",
-    "scd2_user_tier_history",
-    "simhash_md5_pairs",
-    "split_leakage_audit",
-    "sql_api_parameterized",
-    "sql_api_revenue_rollup",
-    "streaming_dedup_within_watermark",
-    "streaming_python_source",
-    "streaming_session_window",
-    "streaming_stream_stream_left_join",
-    "streaming_topk_per_window",
-    "table_profile",
-    "token_lift_pairs",
-    "tokenizer_vocab_coverage",
-    "triangle_count_suppliers",
-    "upsert_latest_events",
-    "value_trend_by_type",
-    "weighted_mixture_sample",
-    "zorder_layout",
-    # latest driver row round 13
-    "ansi_safe_arithmetic",
-    "approx_price_quantiles",
-    "attribution_last_touch",
-    "benford_price_audit",
-    "bootstrap_mean_ci",
-    "bot_rate_flags",
-    "cluster_balanced_sample",
-    "cms_heavy_hitters",
-    "corpus_datacard",
-    "cross_lang_fingerprint_spread",
-    "customer_global_rank",
-    "customer_pareto_abc",
-    "customer_rfm_segments",
-    "dau_wau_stickiness",
-    "events_anomaly_mad",
-    "events_gap_fill",
-    "events_hourly_range_sum",
-    "events_rolling_median",
-    "kafka_wire_roundtrip",
-    "longest_shared_spans",
-    "metadata_compiled_q3",
-    "metadata_corpus_refinery",
-    "minhash_estimate_error",
-    "mixture_temperature_weights",
-    "pandas_api_status_profile",
-    "pandas_udaf_cents",
-    "prefix_edit_near_dups",
-    "python_datasource_pushdown",
-    "q11_top_balance_nations",
-    "q16_part_supplier_variety",
-    "q20_heavy_promo_suppliers",
-    "q21_sole_late_suppliers",
-    "q2_min_cost_supplier",
-    "q8_nation_market_share",
-    "q9_promo_profit",
-    "region_nation_listagg",
-    "snapshot_diff_cdc",
-    "source_overlap_matrix",
-    "span_dedup_removal",
-    "sql_api_pipe_syntax",
-    "sql_api_scripting",
-    "sql_registered_pandas_udf",
-    "streaming_session_window_dynamic",
-    "streaming_stream_stream_full_join",
-    "streaming_window_median",
-    "unigram_entropy_scores",
-    "vocab_coverage_curve",
-    "winnow_fingerprints",
-    "winnow_overlap",
-    "zipf_fit_by_source",
-    # latest driver row round 14
-    "ab_test_welch",
-    "benchmark_decontamination",
-    "boilerplate_line_share",
-    "brand_price_size_regression",
-    "cohort_ltv_curve",
-    "containment_md5_pairs",
-    "customers_without_urgent_orders",
-    "cv_fold_balance",
-    "decayed_type_popularity",
-    "embedding_dim_variance",
-    "event_cooccurrence_pmi",
-    "event_path_topk",
-    "events_cumulative_reach",
-    "events_cusum_changepoint",
-    "events_drift_psi",
-    "flesch_reading_ease",
-    "frequent_part_pairs",
-    "freshness_sla_audit",
-    "funnel_time_to_convert",
-    "golden_record_merge",
-    "holt_forecast_monthly",
-    "incremental_ivf_assign",
-    "integrity_audit",
-    "inverted_index_postings",
-    "join_key_skew_histogram",
-    "k_anonymity_audit",
-    "kmv_distinct_rollup",
-    "kmv_source_overlap",
-    "knn_classifier_eval",
-    "link_prediction_jaccard",
-    "lsh_parameter_planner",
-    "matryoshka_truncation_audit",
-    "metadata_streaming_tumbling",
-    "mv_join_delta_maintenance",
-    "null_safe_join_counts",
-    "order_fulfillment_backlog",
-    "order_status_mode",
-    "orders_equidepth_bins",
-    "orders_seasonality_index",
-    "orders_yoy_growth",
-    "rendezvous_shard_plan",
-    "revenue_percent_of_parent",
-    "scd2_point_in_time_join",
-    "sketch_family_pr_eval",
-    "stratified_sample_neyman",
-    "supplier_bfs_hops",
-    "theil_sen_trend",
-    "user_value_ewma",
-    "value_drift_continuous",
-    "weighted_sample_aes",
-    # latest driver row round 15
-    "acf_daily_revenue",
-    "asof_last_click_before_purchase",
-    "attribution_position_based",
-    "blocking_quality_report",
-    "bloom_filter_fpr_planner",
-    "classifier_agreement_kappa",
-    "compaction_bin_plan",
-    "cube_order_status_priority",
-    "customer_running_total",
-    "customers_with_urgent_orders",
-    "daily_burstiness_fano",
-    "feature_hashing_collision_audit",
-    "fellegi_sunter_weights",
-    "forecast_pinball_eval",
-    "gini_lorenz_customers",
-    "interarrival_dispersion",
-    "isotonic_calibration_bins",
-    "kaplan_meier_reorder",
-    "l_diversity_audit",
-    "metadata_streaming_session",
-    "metadata_streaming_sliding",
-    "metadata_streaming_upsert",
-    "minmax_skipping_audit",
-    "misra_gries_topk",
-    "multimodal_phash",
-    "nations_with_both_roles",
-    "ngram_novelty_score",
-    "observed_scan_metrics",
-    "orders_peak_concurrency",
-    "pareto_frontier_parts",
-    "part_scalar_functions",
-    "pipeline_add_fields",
-    "q12_late_priority_counts",
-    "q1_pricing_summary",
-    "retention_triangle",
-    "rrf_hybrid_retrieval",
-    "seasonal_adjusted_anomalies",
-    "segment_distinct_stats",
-    "selfjoin_cardinality_planner",
-    "sequence_gap_audit",
-    "session_dwell_bounce",
-    "sorted_neighborhood_pairs",
-    "sparse_cosine_pairs",
-    "sql_udf_order_tiers",
-    "streaming_foreachbatch_upsert",
-    "systematic_sample_every_k",
-    "target_encode_loo",
-    "unigram_lm_quality",
-    "watermark_delay_planner",
-    "weighted_median_price",
-    # latest driver row round 16
-    "ab_power_planner",
-    "association_rules_lift",
-    "bucketed_orders_lineitem_join",
-    "customer_first_last_orders",
-    "customer_only_nations",
-    "customer_status_profile",
-    "doc_fingerprints",
-    "doc_quality_scores",
-    "events_json_extract",
-    "events_range_join",
-    "events_running_value",
-    "events_sessionize",
-    "events_sliding_window",
-    "events_tumbling_window",
-    "except_all_nation_bags",
-    "full_outer_nation_roles",
-    "functional_dependency_audit",
-    "grouping_sets_revenue",
-    "incremental_dedup_exact",
-    "label_propagation_communities",
-    "laplace_noise_planner",
-    "latest3_orders_per_customer",
-    "metadata_privacy_report",
-    "multimodal_shard_plan",
-    "nation_revenue_hhi",
-    "ndcg_retrieval_eval",
-    "ngram_jaccard_md5_pairs",
-    "order_price_qq_drift",
-    "partition_retention_plan",
-    "path_conditional_entropy",
-    "price_volume_mix_decomposition",
-    "purchase_view_ccf",
-    "q3_shipping_priority",
-    "q5_revenue_by_nation",
-    "q6_forecast_revenue",
-    "recursive_cte_reach_curve",
-    "replication_checksum_audit",
-    "rollup_lineitem_flags",
-    "score_auc_acctbal",
-    "score_calibration_bins",
-    "score_lift_gain_deciles",
-    "segment_priority_mutual_info",
-    "source_js_divergence",
-    "streaming_drift_monitor",
-    "threshold_sweep_pr_f1",
-    "top10_customers_by_revenue",
-    "walk_forward_cv_splits",
-    "winsorized_price_stats",
-    "woe_iv_segment_priority",
-    "zorder_clustering_audit",
-    # latest driver row round 17
-    "ann_lsh_topk",
-    "ann_srp_topk",
-    "asof_cogroup_arrow",
-    "bigram_logprob_scores",
-    "bitmap_distinct_rollup",
-    "bloom_filter_join",
-    "context_packing_manifest",
-    "context_packing_stats",
-    "cosine_topk",
-    "decontamination_ngram_overlap",
-    "dedup_clusters",
-    "dedup_exact",
-    "dedup_fingerprint",
-    "dedup_keep_best",
-    "doc_bpe_token_stats",
-    "doc_chunks",
-    "doc_repetition_scores",
-    "doc_scrub",
-    "doc_tfidf_topterms",
-    "intersect_all_order_counts",
-    "lang_id_heuristic",
-    "lineitem_moment_stats",
-    "mann_kendall_trend",
-    "nations_supplier_outer",
-    "nelson_aalen_hazard",
-    "order_price_histogram",
-    "order_price_quantiles",
-    "orders_column_profile",
-    "orders_date_functions",
-    "orders_window_analytics",
-    "part_type_taxonomy",
-    "pivot_status_by_priority",
-    "price_emd_drift",
-    "q10_returned_revenue_topk",
-    "q13_order_count_distribution",
-    "q14_promo_revenue_pct",
-    "q15_top_suppliers",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_orders",
-    "q19_disjunctive_predicate",
-    "q22_idle_rich_customers",
-    "q4_late_shipment_orders",
-    "q7_nation_trade_volume",
-    "salted_group_agg",
-    "skew_salt_planner",
-    "source_mixture_plan",
-    "training_shuffle_order",
-    "unpivot_part_measures",
-    "validate_split_ko",
-    "validate_split_ok",
-)
-
-# Stable alias for the NEXT round's earmark, whatever its round number —
-# the bookkeeping tests reference this name so the rotation never breaks
-# them again (r9 lesson: the r8 test hard-coded _R9_EARMARK).
-_NEXT_EARMARK = _R19_EARMARK
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -1,169 +1,69 @@
 #!/usr/bin/env python
-"""Mechanize the per-round rotation of the driver correctness window.
+"""Compute the rotation queue of the driver's correctness window.
 
-Each round the 50-slot window (`_WINDOW_PRIORITY`) advances to the
-front of the generated age-ordered queue (`_NEXT_EARMARK[:50]`) and a
-fresh queue is regenerated from the CORRECTNESS union. Rounds 9-12 did
-this with ad-hoc one-off edit scripts; this script is the single
-maintained implementation so a rotation round needs zero hand-curated
-name lists AND zero hand-patched comment blocks (the r9 audit's
-hand-written queue silently skipped 102 names — the failure mode this
-file exists to prevent, extended to the prose).
+The driver records only the first 50 queries() entries; the window
+(`_WINDOW_PRIORITY` in __spark_entry__.py) pins which 50. Each round
+the window advances to the front of the rotation queue: every
+queries() name that is neither in the current window nor pinned-once
+exempt, oldest latest driver row first. The queue is derived data: it
+is computed here when asked for and never stored in source.
 
-Modes:
-  python scripts/rotate_window.py            # --check (default):
-      verify the CURRENT file's three generated segments byte-match
-      what the renderer produces for the current state — pins that the
-      file stays mechanically generated and that this script's
-      templates never drift from the file format.
-  python scripts/rotate_window.py --apply    # perform the NEXT
-      rotation in place: window <- _NEXT_EARMARK[:50], regenerate the
-      queue, bump all round-specific prose. Run ONCE at the start of a
-      rotation round, then re-run the bookkeeping tests.
+Usage:
+  python scripts/rotate_window.py           # print the queue, one name a line
+  python scripts/rotate_window.py --apply   # rewrite the window to queue[:50]
 
-The three generated segments (everything else in __spark_entry__.py is
-static prose or code and is never touched):
-  A. the round-specific sentences of the window header comment;
-  B. the `_WINDOW_PRIORITY = (...)` tuple with cohort comment lines;
-  C. the window-plan header + `_R{M}_EARMARK = (...)` tuple +
-     `_NEXT_EARMARK` assignment.
+`--apply` refuses while any window name lacks a row in the newest
+CORRECTNESS file: the driver has not yet recorded the outgoing window,
+and rotating then would sort those 50 names straight back to the front
+of the queue. Run it once at the start of a rotation round, then re-run
+tests/test_round5_late_ops.py.
 """
 
 from __future__ import annotations
 
+import importlib.util
+import json
 import re
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
-
-from scripts.gen_earmark import EXEMPT, build_queue, latest_rounds  # noqa: E402
-
 ENTRY = REPO / "__spark_entry__.py"
-WIDTH = 70  # cohort comment lines are dash-padded to this width
+
+# Pinned-once rows-only exemptions (reasons in the _WINDOW_PRIORITY note
+# in __spark_entry__.py): slots are never re-burned on these.
+EXEMPT = {
+    "embedding_principal_component",
+    "parquet_footer_stats",
+    "approx_distinct_customers",
+}
+
+_WINDOW = re.compile(r"_WINDOW_PRIORITY = \(\n.*?\n\)", re.S)
 
 
-def _cohorts(names: tuple[str, ...], latest: dict[str, int]) -> list[tuple[int, list[str]]]:
-    """Group consecutive names by their latest driver round (the queue
-    is age-ordered, so each round forms one contiguous run)."""
-    out: list[tuple[int, list[str]]] = []
-    for n in names:
-        rnd = latest.get(n, 0)
-        if not out or out[-1][0] != rnd:
-            out.append((rnd, []))
-        out[-1][1].append(n)
-    return out
+def latest_rounds() -> dict[str, int]:
+    """Latest driver round per query name over all CORRECTNESS files."""
+    latest: dict[str, int] = {}
+    for p in REPO.glob("CORRECTNESS_r*.json"):
+        rnd = int(p.stem.split("_r")[1])
+        for name in json.loads(p.read_text()):
+            latest[name] = max(latest.get(name, 0), rnd)
+    return latest
 
 
-def render_window_header(round_n: int, window: tuple[str, ...],
-                         latest: dict[str, int]) -> str:
-    """Segment A: the round-specific sentences of the window note."""
-    cs = _cohorts(window, latest)
-    first_rnd, first_names = cs[0]
-    total_first = sum(1 for r in latest.values() if r == first_rnd)
-    if len(first_names) == len(window) or len(first_names) < total_first:
-        shape = (f"the first {len(first_names)} of the r{first_rnd}-age "
-                 f"cohort")
-    else:
-        shape = (f"the\n# complete r{first_rnd}-age cohort "
-                 f"({len(first_names)} names, the oldest rows on the "
-                 f"board)")
-    if len(cs) > 1:
-        rest = sum(len(ns) for _, ns in cs[1:])
-        lo, hi = cs[1][0], cs[-1][0]
-        tail_rounds = f"r{lo}" if lo == hi else f"r{lo}..r{hi}"
-        shape += f" plus\n# the first {rest} of the {tail_rounds} cohort"
-    return (
-        f"# (the driver records only the first 50 queries() entries). "
-        f"Round-{round_n}\n"
-        f"# is a pure rotation round (standing r10 verdict ask #1): "
-        f"the window is\n"
-        f"# EXACTLY `_R{round_n}_EARMARK[:50]` from the "
-        f"r{round_n - 1}-generated queue — {shape}."
-        f" Zero hand curation; the queue is\n"
-        f"# GENERATED by scripts/gen_earmark.py from the CORRECTNESS "
-        f"union (the\n"
-        f"# r9 audit found a hand-written queue had silently skipped "
-        f"102 names)."
-    )
-
-
-def _dash_pad(text: str) -> str:
-    pad = WIDTH - len(text) - 1
-    return f"{text} {'-' * pad}" if pad > 0 else text
-
-
-def render_window_block(window: tuple[str, ...],
-                        latest: dict[str, int]) -> str:
-    """Segment B: the _WINDOW_PRIORITY tuple with cohort comments."""
-    lines = ["_WINDOW_PRIORITY = ("]
-    for i, (rnd, names) in enumerate(_cohorts(window, latest), start=1):
-        total = sum(1 for r in latest.values() if r == rnd)
-        if i == 1 and len(names) == total:
-            label = (f"    # -- {i}. the complete r{rnd}-age cohort "
-                     f"({len(names)}; oldest rows on board)")
-        else:
-            label = (f"    # -- {i}. the first {len(names)} of the "
-                     f"r{rnd}-age cohort")
-        lines.append(_dash_pad(label))
-        lines.extend(f'    "{n}",' for n in names)
-    lines.append(")")
-    return "\n".join(lines)
-
-
-def render_earmark_section(next_round: int, queue: tuple[str, ...],
-                           latest: dict[str, int]) -> str:
-    """Segment C: window-plan comment + earmark tuple + NEXT alias."""
-    cs = _cohorts(queue, latest)
-    a = cs[0][0]
-    mids = [r for r, _ in cs[1:-1]]
-    d = cs[-1][0]
-    mid = (f"then r{mids[0]}..r{mids[-1]}, then" if len(mids) > 1
-           else f"then r{mids[0]}, then" if mids else "then")
-    body = [f"_R{next_round}_EARMARK = ("]
-    for rnd, names in cs:
-        label = f"round {rnd}" if rnd else "never driver-seen"
-        body.append(f"    # latest driver row {label}")
-        body.extend(f'    "{n}",' for n in names)
-    body.append(")")
-    # historical prose order (not sorted): keep byte-stability with
-    # the r11/r12 hand-rotated files
-    exempt = ["embedding_principal_component", "parquet_footer_stats",
-              "approx_distinct_customers"]
-    assert set(exempt) == EXEMPT
-    return (
-        f"# ROUND-{next_round} WINDOW PLAN — the COMPLETE age-ordered "
-        f"rotation queue,\n"
-        f"# GENERATED by scripts/gen_earmark.py (build_queue) from the "
-        f"union of\n"
-        f"# all CORRECTNESS_r*.json files (each name's LATEST driver "
-        f"round), not\n"
-        f"# hand-curated: every non-window, non-exempt query ascending "
-        f"by its\n"
-        f"# latest driver row (rest of the r{a} cohort first, {mid}\n"
-        f"# the 50 names of the r{d} window). Reds and "
-        f"round-{next_round} reworks, as\n"
-        f"# always, jump the queue. ({exempt[0]},\n"
-        f"# {exempt[1]} and {exempt[2]} are EXEMPT —\n"
-        f"# pinned-once rows-only rows, see _WINDOW_PRIORITY note.)\n"
-        + "\n".join(body)
-    )
-
-
-_SEG_A = re.compile(
-    r"# \(the driver records only the first 50 queries\(\) entries\)\."
-    r".*?silently skipped\s+102 names\)\.", re.S)
-_SEG_B = re.compile(r"_WINDOW_PRIORITY = \(\n.*?\n\)", re.S)
-_SEG_C = re.compile(
-    r"# ROUND-\d+ WINDOW PLAN.*?\n_R(\d+)_EARMARK = \(\n.*?\n\)", re.S)
-_NEXT = re.compile(r"_NEXT_EARMARK = _R\d+_EARMARK")
+def build_queue(names, window, latest) -> tuple[str, ...]:
+    """The one queue rule: every non-window, non-exempt name,
+    never-driver-seen first, then ascending latest driver round, name
+    as the tiebreak."""
+    return tuple(sorted(
+        (n for n in names if n not in window and n not in EXEMPT),
+        key=lambda n: (latest.get(n, 0), n),
+    ))
 
 
 def _load_entry(path: Path):
-    """Exec the entry file at `path` as a fresh module — so check/apply
-    read the SAME file they edit (tests point ENTRY at a tmp copy)."""
-    import importlib.util
+    """Exec the entry file at `path` as a fresh module, so the queue is
+    computed from the same file `apply` edits."""
     name = f"_rotate_entry_{abs(hash(str(path)))}"
     spec = importlib.util.spec_from_file_location(name, path)
     mod = importlib.util.module_from_spec(spec)
@@ -172,111 +72,33 @@ def _load_entry(path: Path):
     return mod
 
 
-def current_state():
+def queue(latest: dict[str, int]) -> tuple[str, ...]:
     entry_mod = _load_entry(ENTRY)
-    src = ENTRY.read_text()
-    m = _SEG_C.search(src)
-    if not m:
-        raise SystemExit("earmark section not found")
-    next_round = int(m.group(1))
-    # Reconstruct the state the LAST rotation rendered from: when the
-    # file was rotated for round N (= next_round - 1), the newest
-    # CORRECTNESS file was r(N-1) = next_round - 2. Without the clamp,
-    # the moment the driver lands CORRECTNESS_r{N}.json (re-proving the
-    # 50 window names at round N) the live union would relabel the
-    # window's cohorts to "r{N}-age" and check() would falsely report
-    # DRIFT on an untouched file.
-    latest = latest_rounds(max_round=next_round - 2)
-    return entry_mod, latest, src, next_round
-
-
-def _seg(src: str, pattern: re.Pattern, label: str) -> str:
-    m = pattern.search(src)
-    if not m:
-        raise SystemExit(f"DRIFT: {label} anchor text not found — the "
-                         f"generated segment was hand-edited past "
-                         f"recognition")
-    return m.group(0)
-
-
-def check() -> None:
-    entry_mod, latest, src, next_round = current_state()
-    window = entry_mod._WINDOW_PRIORITY
-    queue = entry_mod._NEXT_EARMARK
-    problems = []
-    if _seg(src, _SEG_A, "segment A") != render_window_header(
-            next_round - 1, window, latest):
-        problems.append("segment A (window header) drifted")
-    if _seg(src, _SEG_B, "segment B") != render_window_block(window,
-                                                             latest):
-        problems.append("segment B (_WINDOW_PRIORITY block) drifted")
-    if _seg(src, _SEG_C, "segment C") != render_earmark_section(
-            next_round, queue, latest):
-        problems.append("segment C (earmark section) drifted")
-    if queue != build_queue(set(entry_mod.queries()), set(window), latest):
-        problems.append("queue != build_queue (run gen_earmark)")
-    if problems:
-        raise SystemExit("DRIFT: " + "; ".join(problems))
-    print(f"check ok: window r{next_round - 1}, queue _R{next_round}"
-          f"_EARMARK ({len(queue)} names), all segments byte-match")
+    return build_queue(set(entry_mod.queries()),
+                       set(entry_mod._WINDOW_PRIORITY), latest)
 
 
 def apply() -> None:
-    entry_mod, _, src, next_round = current_state()
-    # The rotation for round `next_round` must see the OUTGOING
-    # window's driver rows (CORRECTNESS_r{next_round-1}.json), or
-    # build_queue would sort the just-rotated-out 50 names straight
-    # back to the queue FRONT (their latest rows still read 5-6) and
-    # round next_round+1 would re-drive them while genuinely stale
-    # cohorts age past the refresh SLA.
-    # Freshness guard on the UNCLAMPED union (r12 ADVICE): clamping
-    # before the check would hide any CORRECTNESS file NEWER than the
-    # outgoing round (a skipped rotation or mis-numbered file) and
-    # silently generate the queue from a stale horizon. Refuse BOTH
-    # ways: too old means the outgoing window's results haven't landed;
-    # too new means a rotation was skipped and this one would mislabel.
     latest = latest_rounds()
     newest = max(latest.values(), default=0)
-    if newest != next_round - 1:
-        hint = (f"run --apply only after CORRECTNESS_r{next_round - 1}"
-                f".json lands (or this rotation would re-queue the "
-                f"outgoing window at the front)"
-                if newest < next_round - 1 else
-                f"a CORRECTNESS file newer than the outgoing round "
-                f"exists — a rotation was skipped or a file is "
-                f"mis-numbered; reconcile the entry file's round "
-                f"numbering before rotating")
+    window = _load_entry(ENTRY)._WINDOW_PRIORITY
+    unrecorded = [n for n in window if latest.get(n) != newest]
+    if unrecorded:
         raise SystemExit(
-            f"refusing to rotate: newest CORRECTNESS round is r{newest} "
-            f"but the outgoing window's round is r{next_round - 1} — "
-            f"{hint}")
-    # The guard above proved newest == next_round - 1, so the unclamped
-    # union IS the outgoing-round horizon the rotation is for — no
-    # second (clamped) scan needed.
-    new_window = entry_mod._NEXT_EARMARK[:50]
-    new_queue = build_queue(set(entry_mod.queries()), set(new_window),
-                            latest)
-    src = _SEG_A.sub(
-        lambda _: render_window_header(next_round, new_window, latest),
-        src, count=1)
-    src = _SEG_B.sub(
-        lambda _: render_window_block(new_window, latest), src, count=1)
-    src = _SEG_C.sub(
-        lambda _: render_earmark_section(next_round + 1, new_queue,
-                                         latest),
-        src, count=1)
-    src = _NEXT.sub(f"_NEXT_EARMARK = _R{next_round + 1}_EARMARK", src,
-                    count=1)
-    ENTRY.write_text(src)
-    print(f"rotated: window <- _R{next_round}_EARMARK[:50] "
-          f"({len(new_window)} names), queue -> _R{next_round + 1}"
-          f"_EARMARK ({len(new_queue)} names)")
-    print("now run: python scripts/rotate_window.py  (check) and "
-          "pytest tests/test_round5_late_ops.py")
+            f"refusing to rotate: {len(unrecorded)} window names lack a "
+            f"row in the newest CORRECTNESS file (r{newest}), e.g. "
+            f"{unrecorded[0]}; run --apply once the driver has recorded "
+            f"the outgoing window")
+    new_window = queue(latest)[:50]
+    block = "\n".join(["_WINDOW_PRIORITY = ("]
+                      + [f'    "{n}",' for n in new_window] + [")"])
+    ENTRY.write_text(_WINDOW.sub(lambda _: block, ENTRY.read_text(),
+                                 count=1))
+    print(f"rotated: window <- queue[:50] ({len(new_window)} names)")
 
 
 if __name__ == "__main__":
     if "--apply" in sys.argv[1:]:
         apply()
     else:
-        check()
+        print("\n".join(queue(latest_rounds())))

@@ -96,7 +96,6 @@ class _Run(NamedTuple):
     spark: SparkSession
     nodes: dict[str, DataFrame]  # every node built so far
     cached: list[DataFrame]      # unpersisted once the sinks are written
-    debug_show: bool
 
 
 def _sort_keys(columns: list[str]) -> list[Column]:
@@ -113,9 +112,6 @@ def _validate_fields(run: _Run, p, df: DataFrame):
         df, p.validations, cache=not df.isStreaming)
     if cached_parent is not None:
         run.cached.append(cached_parent)
-    if run.debug_show and not ok.isStreaming:
-        ok.show(truncate=False)
-        ko.show(truncate=False)
     return ok, ok, ko  # in node_names order: <name>, <name>_ok, <name>_ko
 
 
@@ -283,12 +279,8 @@ def _check_streamable(spark: SparkSession, df: DataFrame) -> None:
 class PipelineExecutor:
     """Executes dataflows; one DataFrame lineage per dataflow."""
 
-    def __init__(self, spark: SparkSession, debug_show: bool = False,
-                 observe_metrics: bool = False):
+    def __init__(self, spark: SparkSession, observe_metrics: bool = False):
         self.spark = spark
-        # the reference force-computes both splits with show(false)
-        # (PipelineProcessor.scala:70, :84); gate that behind a flag
-        self.debug_show = debug_show
         # per-sink row accounting via df.observe(): the count rides the
         # WRITE job itself (an accumulator over rows as they stream to
         # the sink) — no second scan, no cache, exact even at 100 TB.
@@ -358,7 +350,7 @@ class PipelineExecutor:
         source name plus ``__sources__``, their union): the batch run,
         the streaming node registry and each fanned-out micro-batch all
         build their nodes here."""
-        run = _Run(self.spark, dict(frames), [], self.debug_show)
+        run = _Run(self.spark, dict(frames), [])
         sources = {s.name for s in flow.sources}
         for t in flow.transformations:
             out = STEPS[t.type].build(

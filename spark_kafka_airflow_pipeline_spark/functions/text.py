@@ -44,7 +44,7 @@ def punctuation_ratio(text: Column | str) -> Column:
 def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Column:
     """Fraction of tokens that are (lowercase) stopwords."""
     stopwords = stopwords or STOPWORDS_EN
-    toks = F.split(F.lower(F.trim(_c(text))), _WS)
+    toks = split_tokens(text)
     hits = F.size(F.filter(toks, lambda x: x.isin(*stopwords)))
     return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
 
@@ -117,7 +117,7 @@ def raw_shingles(text: Column | str, k: int = 3) -> Column:
     5x slower on the sf0.1 corpus. ``zip_with`` takes its arrays as
     arguments (evaluated once) and its lambda touches only bound
     variables."""
-    toks = F.split(F.lower(F.trim(_c(text))), _WS)
+    toks = split_tokens(text)
     n = F.size(toks)
     acc = toks
     for s in range(2, k + 1):
@@ -168,7 +168,7 @@ def token_hashes(text: Column | str, seed: int = 42) -> Column:
     result to a real column (``withColumn``) before feeding it to
     ``shingle_hashes_of`` — as a nested expression it would be
     re-evaluated once per zip_with argument instance."""
-    toks = F.split(F.lower(F.trim(_c(text))), _WS)
+    toks = split_tokens(text)
     return F.transform(toks, lambda t: F.xxhash64(F.lit(seed), t))
 
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as Wn
 from pyspark.sql import functions as F
 
+from spark_kafka_airflow_pipeline_spark.functions import text as T
 from spark_kafka_airflow_pipeline_spark.operators.base import QueryFn, ppm, table
 
 SPAN_W = 10  # tokens per dedup span
@@ -30,8 +31,7 @@ def _tokens(d: DataFrame) -> DataFrame:
     the shared tokenization of textops (lower, trim, split on \\s+)."""
     return d.select(
         "doc_id", "lang", "source",
-        F.filter(F.split(F.lower(F.trim("text")), r"\s+"),
-                 lambda x: x != "").alias("toks"))
+        F.filter(T.split_tokens("text"), lambda x: x != "").alias("toks"))
 
 
 def span_dedup_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -563,8 +563,6 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``cross_doc_span_dups`` speed path); the oracle uses gram strings —
     counts are identity-invariant, and the hash-exact gate would
     surface a collision."""
-    from spark_kafka_airflow_pipeline_spark.functions import text as T
-
     d = table(spark, sf_dir, "documents")
     grams = (d.withColumn("th", T.token_hashes("text"))
              .select("source",
@@ -1088,7 +1086,6 @@ def kmv_source_overlap(spark: SparkSession, sf_dir: str,
     drop out of the plan when not selected."""
     from pyspark.sql import Window as Wn
 
-    from spark_kafka_airflow_pipeline_spark.functions import text as T
     from spark_kafka_airflow_pipeline_spark.operators.scaleops import (
         bottom_k_per_group,
     )
@@ -1438,9 +1435,7 @@ def _word_trigrams(d: DataFrame) -> DataFrame:
     distinct at every SF; trigrams give 27k distinct at sf0.1).  Docs
     of <= 3 words contribute their whole text as the single term, so
     every doc has >= 1 term and shares are always well-defined."""
-    return (d.select(
-        "doc_id",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t"))
+    return (d.select("doc_id", T.split_tokens("text").alias("t"))
         .select("doc_id", F.explode(F.expr(
             "CASE WHEN size(t) <= 3 THEN array(array_join(t, ' ')) "
             "ELSE transform(sequence(0, size(t) - 3), "

@@ -1474,8 +1474,7 @@ def simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines."""
     d = (table(spark, sf_dir, "documents")
          .select("doc_id",
-                 F.array_distinct(
-                     F.split(F.lower(F.trim("text")), r"\s+")).alias("toks")))
+                 F.array_distinct(T.split_tokens("text")).alias("toks")))
     t = d.select("doc_id", F.explode("toks").alias("tok"))
     t = t.withColumn(
         "h", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("bigint"))
@@ -1604,8 +1603,6 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output per split: doc count, token budget and leaked-doc count —
     what a split manifest records."""
-    from spark_kafka_airflow_pipeline_spark.functions import text as T
-
     d = table(spark, sf_dir, "documents")
     u = F.substring(F.md5(F.concat(F.col("doc_id").cast("string"),
                                    F.lit(":split"))), 1, 4)
@@ -1848,9 +1845,7 @@ def containment_md5_pairs(spark: SparkSession, sf_dir: str,
     and classifies them: near_dup (Jaccard >= 0.9), a_in_b / b_in_a
     (one-sided containment >= 0.9), else partial."""
     d = table(spark, sf_dir, "documents")
-    g = (d.select(
-            "doc_id",
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t"))
+    g = (d.select("doc_id", T.split_tokens("text").alias("t"))
          .select("doc_id", F.explode(F.expr(
              f"CASE WHEN size(t) <= {n} THEN array(array_join(t, ' ')) "
              f"ELSE transform(sequence(0, size(t) - {n}), "
@@ -2042,9 +2037,7 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str,
             .select("doc_a", "doc_b",
                     F.col("k").cast("int").alias("rank_gap")))
 
-    toks = (d.select(
-        "doc_id",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t"))
+    toks = (d.select("doc_id", T.split_tokens("text").alias("t"))
         .select("doc_id", F.explode(F.expr(
             "CASE WHEN size(t) <= 3 THEN array(array_join(t, ' ')) "
             "ELSE transform(sequence(0, size(t) - 3), "

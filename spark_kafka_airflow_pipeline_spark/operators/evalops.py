@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from spark_kafka_airflow_pipeline_spark.functions import text as T
 from spark_kafka_airflow_pipeline_spark.operators.base import (
     QueryFn,
     barrier,
@@ -1479,8 +1480,7 @@ def ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sys10 = bm25_topk(spark, sf_dir).select("doc_id", "rank")
     toks = (table(spark, sf_dir, "documents")
             .select("doc_id",
-                    F.explode(F.split(F.lower(F.trim("text")), r"\s+"))
-                    .alias("term"))
+                    F.explode(T.split_tokens("text")).alias("term"))
             .filter(F.col("term").isin(*NDCG_TERMS)))
     grades = (toks.groupBy("doc_id")
               .agg(F.countDistinct("term").alias("g"))

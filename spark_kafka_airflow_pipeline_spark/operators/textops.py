@@ -178,7 +178,7 @@ def word_freq_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     with a word tie-break so the selected SET is unique."""
     d = table(spark, sf_dir, "documents")
     words = d.select(
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("word"))
+        F.explode(T.split_tokens("text")).alias("word"))
     return (
         words.filter(F.col("word") != "")
         .groupBy("word")
@@ -245,7 +245,7 @@ def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode per doc (no shuffle until a consumer aggregates); chunk
     fingerprints let a downstream exact-dedup run at chunk granularity."""
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim("text")), r"\s+")
+    toks = T.split_tokens("text")
     n = F.size(toks)
     starts = F.sequence(
         F.lit(0), F.floor((n - 1) / CHUNK_STRIDE).cast("int") * CHUNK_STRIDE,
@@ -376,7 +376,7 @@ def doc_tfidf_topterms(spark: SparkSession, sf_dir: str, k: int = 3) -> DataFram
     d = table(spark, sf_dir, "documents")
     toks = (d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("term"))
+        F.explode(T.split_tokens("text")).alias("term"))
         .filter(F.col("term") != ""))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -442,8 +442,7 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     toks = (d.select(
         "doc_id",
-        F.posexplode(F.split(F.lower(F.trim("text")), r"\s+"))
-        .alias("pos", "w"))
+        F.posexplode(T.split_tokens("text")).alias("pos", "w"))
         .filter(F.col("w") != ""))
     w_ord = Window.partitionBy("doc_id").orderBy("pos")
     bigrams = (toks.withColumn("prev", F.lag("w").over(w_ord))
@@ -1104,9 +1103,7 @@ def tokenizer_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = table(spark, sf_dir, "documents")
-    toks = (d.select("source",
-                     F.explode(F.split(F.lower(F.trim("text")), r"\s+"))
-                     .alias("w"))
+    toks = (d.select("source", F.explode(T.split_tokens("text")).alias("w"))
             .filter(F.col("w") != ""))
     rk = Window.orderBy(F.desc("cnt"), F.asc("w"))
     vocab = (toks.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
@@ -1220,9 +1217,7 @@ def token_lift_pairs(spark: SparkSession, sf_dir: str,
     (co-partitioned, bounded fan-out), one count aggregation; token
     document frequencies broadcast back onto the pair counts."""
     d = table(spark, sf_dir, "documents")
-    toks = (d.select("doc_id",
-                     F.explode(F.split(F.lower(F.trim("text")), r"\s+"))
-                     .alias("w"))
+    toks = (d.select("doc_id", F.explode(T.split_tokens("text")).alias("w"))
             .distinct())
     from pyspark.sql import Window
     df_counts = toks.groupBy("w").agg(F.count(F.lit(1)).alias("n_w"))
@@ -1518,7 +1513,7 @@ def gopher_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind a CASE (no div-by-zero path).
     """
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = T.split_tokens("text")
     n_words = F.when(F.trim(F.col("text")) == "", F.lit(0)) \
         .otherwise(F.size(toks))
     sum_len = F.aggregate(toks, F.lit(0), lambda a, x: a + F.length(x))
@@ -1943,7 +1938,7 @@ def bm25_topk(spark: SparkSession, sf_dir: str,
     d = table(spark, sf_dir, "documents")
     toks = (d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("term"))
+        F.explode(T.split_tokens("text")).alias("term"))
         .filter(F.col("term") != ""))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     hits = toks.filter(F.col("term").isin(*terms))
@@ -2209,9 +2204,7 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str,
     from pyspark.sql import Window
 
     d = table(spark, sf_dir, "documents")
-    toks = (d.select(
-        "doc_id",
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("t"))
+    toks = (d.select("doc_id", T.split_tokens("text").alias("t"))
         .select("doc_id", F.explode(F.expr(
             "CASE WHEN size(t) <= 3 THEN array(array_join(t, ' ')) "
             "ELSE transform(sequence(0, size(t) - 3), "
@@ -2513,8 +2506,7 @@ def unigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents")
     words = (d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-        .alias("word"))
+        F.explode(T.split_tokens("text")).alias("word"))
         .filter(F.col("word") != ""))
     vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c").alias("total"))

@@ -1074,32 +1074,22 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str,
     import shutil
     import tempfile
 
+    from spark_kafka_airflow_pipeline_spark.io.sinks import upsert_sink
+
     src = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value")
     root = tempfile.mkdtemp(prefix="spark_graft_upsert_")
     src.repartition(4, "event_id").write.mode("overwrite") \
         .parquet(f"{root}/in")
     state_dir = f"{root}/state"
+    state = metadata.Sink(input="batch", name="state", paths=[root],
+                          format="upsert", options={"keys": "user_id",
+                                                    "orderBy": "ts,event_id"})
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         if _batch_log is not None:
             _batch_log.append(batch_id)
-        from spark_kafka_airflow_pipeline_spark.io.sinks import (
-            state_table_exists,
-        )
-
-        b = batch_df.sparkSession
-        # Existence-gated, not exception-gated (see state_table_exists):
-        # a real read failure must propagate, not silently drop state.
-        if state_table_exists(b, state_dir):
-            new = b.read.parquet(state_dir).unionByName(batch_df)
-        else:  # first batch: no state yet
-            new = batch_df
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc())
-        latest = barrier(new.withColumn("_rn", F.row_number().over(w))
-                         .filter(F.col("_rn") == 1).drop("_rn"))
-        latest.write.mode("overwrite").parquet(state_dir)
+        upsert_sink(batch_df, state)
 
     try:
         with _drain_scope(spark):
