@@ -33,14 +33,52 @@ it so; the only exception is the Python-datasource pushdown flag that
   (``streaming.pipelines``), the runtime bloom-filter thresholds of
   ``scaleops.bloom_filter_join`` and SQL scripting in
   ``relational_extra.sql_api_scripting``.
+
+JVM launch: this module is also the one place that sets the driver
+JVM's launch options. When ``get_spark`` itself launches the JVM (no
+``PYSPARK_GATEWAY_PORT`` from spark-submit, no live gateway), the JVM
+starts from a dynamic class-data-sharing archive (JEP 350) of the
+classes Spark loads. That about halves the time to the first job:
+perfbench's ``setup_s`` medians went 9.4 → 5.7 s on ``etl_stream`` and
+8.9 → 4.5 s on ``catalog_noop`` (4-core host).
+
+- **Where.** ``${XDG_CACHE_HOME:-~/.cache}/spark_kafka_airflow_pipeline_spark/cds/<key>.jsa``,
+  134-213 MB by what the building run loaded. The key hashes stat data
+  only: the ``java`` binary the launcher runs, its ``lib/modules`` and
+  every jar in ``$SPARK_HOME/jars``. Deleting the directory resets the
+  cache.
+- **First launch.** The launch for a new key builds the archive. It is
+  about 4 s slower, and at interpreter exit it waits about 10 s while
+  the JVM writes the archive. The dump is published (renamed into
+  place) only if the JVM exited 0 and the file is a dynamic archive, so
+  no partial file is ever mapped.
+- **When it applies.** The JDK will neither write nor map an archive
+  with a non-empty directory on the class path. So it applies only
+  when ``spark.driver.extraClassPath``, ``HADOOP_CONF_DIR``,
+  ``YARN_CONF_DIR``, ``SPARK_DIST_CLASSPATH`` and
+  ``PYSPARK_SUBMIT_ARGS`` are unset and the conf dir
+  (``$SPARK_CONF_DIR``, else ``$SPARK_HOME/conf``) holds only
+  ``*.template`` files, which Spark never reads. The launch then points
+  ``SPARK_CONF_DIR`` at an empty directory beside the archive.
+  Otherwise, or when the cache cannot be written, the JVM launches as
+  it would without this module.
+- **Options.** The archive flags go after the caller's own
+  ``spark.driver.extraJavaOptions``. The JVM runs under the default
+  ``-Xshare:auto``, so an archive that does not match is ignored.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import sys
 from collections.abc import Iterator, Mapping
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 #: The table-read confs. The events table stores TIMESTAMP(NANOS),
@@ -61,17 +99,107 @@ def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def _archive_key() -> str:
+    """Hash of the stat data an archive is tied to: the ``java`` binary
+    the launcher runs (``spark-class``'s rule) and its ``lib/modules``,
+    and every jar of the Spark install. No subprocess runs."""
+    bin_dir = os.path.join(os.environ["JAVA_HOME"], "bin") if os.environ.get("JAVA_HOME") else None
+    java = os.path.realpath(shutil.which("java", path=bin_dir) or "java")  # None: $PATH
+    jars = os.path.join(_find_spark_home(), "jars")
+    paths = [java, os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "modules"),
+             *sorted(os.path.join(jars, n) for n in os.listdir(jars) if n.endswith(".jar"))]
+    stats = [(p, s.st_size, s.st_mtime_ns) for p in paths for s in [os.stat(p)]]
+    return hashlib.sha256(repr(stats).encode()).hexdigest()[:24]
+
+
+def _archive_path(conf: Mapping[str, str]) -> str | None:
+    """The archive for a JVM that this call launches, or None when the
+    launch must not use one (see "JVM launch" above)."""
+    cache = os.path.join(os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+                         "spark_kafka_airflow_pipeline_spark", "cds")
+    try:  # a missing conf dir or an unwritable cache raises OSError
+        if ("PYSPARK_GATEWAY_PORT" in os.environ or SparkContext._gateway
+                or "spark.driver.extraClassPath" in conf
+                # besides the conf dir, what the launcher puts on the class path
+                or any(os.environ.get(v) for v in ("HADOOP_CONF_DIR", "YARN_CONF_DIR",
+                                                   "SPARK_DIST_CLASSPATH", "PYSPARK_SUBMIT_ARGS"))
+                or not all(n.endswith(".template") for n in os.listdir(
+                    os.environ.get("SPARK_CONF_DIR") or f"{_find_spark_home()}/conf"))):
+            return None
+        os.makedirs(os.path.join(cache, "conf"), exist_ok=True)
+        writable = os.access(cache, os.W_OK)
+        return os.path.join(cache, _archive_key() + ".jsa") if writable else None
+    except OSError:
+        return None
+
+
+@contextmanager
+def _class_archive(conf: dict[str, str]) -> Iterator[None]:
+    """Launch the driver JVM of the body from the class-data archive:
+    add its flags to ``conf`` and point ``SPARK_CONF_DIR`` at the empty
+    ``conf`` beside it for the body. On a miss the JVM dumps the archive
+    at exit, and ``_publish_archive`` runs at interpreter exit."""
+    jsa = _archive_path(conf)
+    if jsa is None:
+        yield
+        return
+    tmp = None if os.path.isfile(jsa) else f"{jsa}.{os.getpid()}.tmp"
+    flag = f"-XX:ArchiveClassesAtExit={tmp}" if tmp else f"-XX:SharedArchiveFile={jsa}"
+    key = "spark.driver.extraJavaOptions"
+    # the JVM's class-data-sharing log lines would land on the driver's stdout
+    conf[key] = f"{conf.get(key, '')} {flag} -Xlog:cds=off -Xlog:cds+dynamic=off".strip()
+    saved = {k: v for k, v in os.environ.items() if k == "SPARK_CONF_DIR"}
+    os.environ["SPARK_CONF_DIR"] = os.path.join(os.path.dirname(jsa), "conf")
+    try:
+        yield
+    finally:
+        del os.environ["SPARK_CONF_DIR"]
+        os.environ.update(saved)
+    if tmp:
+        atexit.register(_publish_archive, SparkContext._gateway.proc, tmp, jsa)
+
+
+def _publish_archive(proc, tmp: str, jsa: str) -> None:  # noqa: ANN001
+    """Stop Spark, let the JVM ``proc`` exit and write its dump to
+    ``tmp``, then move the dump onto ``jsa`` if the JVM exited 0 and the
+    file is a dynamic archive; else delete it. A published archive
+    replaces every other one, and the dumps of processes that are gone
+    are deleted (their pid is the second-last dot field; the check reads
+    ``/proc``, so elsewhere every other dump counts as gone, which only
+    costs a concurrent first launch its archive)."""
+    if SparkContext._active_spark_context is not None:
+        SparkContext._active_spark_context.stop()
+    proc.stdin.close()
+    code = proc.wait()
+    try:  # a whole dump starts with the JDK's CDS_DYNAMIC_ARCHIVE_MAGIC
+        with open(tmp, "rb") as f:
+            whole = code == 0 and f.read(4) == (0xF00BABA8).to_bytes(4, sys.byteorder)
+    except OSError:  # the JVM wrote no dump
+        return
+    if not whole:
+        os.remove(tmp)
+        return
+    os.replace(tmp, jsa)
+    for name in os.listdir(os.path.dirname(jsa)):
+        if (name.endswith(".jsa") and name != os.path.basename(jsa)
+                or name.endswith(".tmp") and not os.path.exists(f"/proc/{name.split('.')[-2]}")):
+            with suppress(OSError):
+                os.remove(os.path.join(os.path.dirname(jsa), name))
+
+
 def get_spark(app_name: str = "spark-kafka-airflow-pipeline-spark",
               master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
-    """Build (or fetch) the tuned SparkSession."""
+    """Build (or fetch) the tuned SparkSession. The master is
+    ``master``, else ``$SPARK_GRAFT_MASTER``, else spark-submit's when
+    spark-submit started the driver, else ``local[<cpus>]``."""
     cpus = _default_parallelism()
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or (
+        None if "PYSPARK_GATEWAY_PORT" in os.environ else f"local[{cpus}]")
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
 
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
         # --- adaptive execution: runtime stats beat static planning ---
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -95,10 +223,13 @@ def get_spark(app_name: str = "spark-kafka-airflow-pipeline-spark",
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    # --- the table-read confs (matches DuckDB oracle), then the caller's ---
-    for k, v in {**TABLE_CONFS, **(extra_conf or {})}.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    # --- the master, the table-read confs (matches DuckDB oracle), then
+    #     the caller's ---
+    conf = {**({"spark.master": master} if master else {}), **TABLE_CONFS, **(extra_conf or {})}
+    with _class_archive(conf):
+        for k, v in conf.items():
+            builder = builder.config(k, v)
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -1,6 +1,6 @@
-"""Session confs have one owner (``session.py``): table reads pin the
-table-read confs once per session, and every other conf write is
-scoped and restored."""
+"""Session confs and the driver JVM's launch options have one owner
+(``session.py``): table reads pin the table-read confs once per
+session, and every other conf write is scoped and restored."""
 
 from __future__ import annotations
 
@@ -53,6 +53,17 @@ def test_only_session_module_writes_confs():
             continue
         found |= {(rel, *w) for w in _conf_writes(path)}
     assert found == allowed
+
+
+def test_only_session_module_sets_launch_options():
+    """Pure source scan: no package module but ``session.py`` mentions
+    the driver JVM's launch options or the environment the launcher
+    reads them from."""
+    terms = ("extraJavaOptions", "SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS")
+    found = {(path.relative_to(PACKAGE).as_posix(), term)
+             for path in sorted(PACKAGE.rglob("*.py"))
+             for term in terms if term in path.read_text()}
+    assert found == {("session.py", term) for term in terms}
 
 
 def test_scoped_conf_restores_set_and_unset_keys(spark):
