@@ -270,10 +270,10 @@ def _check_streamable(spark: SparkSession, df: DataFrame) -> None:
     run (a non-time window function in an ``add_fields`` expression,
     say) must raise here, with Spark's own error, rather than be
     computed per micro-batch."""
-    jvm = spark._jvm
-    jvm.org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker \
+    jvm = spark._jvm  # a full name is one class lookup, not one per package
+    getattr(jvm, "org.apache.spark.sql.catalyst.analysis.UnsupportedOperationChecker") \
         .checkForStreaming(df._jdf.queryExecution().analyzed(),
-                           jvm.org.apache.spark.sql.streaming.OutputMode.Append())
+                           getattr(jvm, "org.apache.spark.sql.streaming.OutputMode").Append())
 
 
 class PipelineExecutor:

@@ -34,9 +34,8 @@ def compact_parquet(spark: SparkSession, src: str, dst: str,
     if src.rstrip("/") == dst.rstrip("/"):
         raise ValueError("compact_parquet needs dst != src "
                          "(cannot overwrite the directory being read)")
-    jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc
-    path = jvm.org.apache.hadoop.fs.Path(src)
+    path = getattr(spark.sparkContext._jvm, "org.apache.hadoop.fs.Path")(src)
     fs = path.getFileSystem(jsc.hadoopConfiguration())
     total_bytes = fs.getContentSummary(path).getLength()
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))

@@ -58,9 +58,8 @@ def state_table_exists(spark, path: str) -> bool:
     with a state-free merge; every other failure must propagate, or the
     sink would silently discard all accumulated CDC state — the exact
     data-loss mode a MERGE sink exists to prevent."""
-    jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    p = getattr(spark._jvm, "org.apache.hadoop.fs.Path")(path)
     return p.getFileSystem(hconf).exists(p)
 
 
@@ -171,7 +170,7 @@ class SinkLedger:
     at most one batch's markers stay on disk."""
 
     def __init__(self, spark, root: str):
-        self._path = spark._jvm.org.apache.hadoop.fs.Path
+        self._path = getattr(spark._jvm, "org.apache.hadoop.fs.Path")
         self._root = root
         self._fs = self._path(root).getFileSystem(
             spark._jsc.hadoopConfiguration())

@@ -65,6 +65,35 @@ perfbench's ``setup_s`` medians went 9.4 → 5.7 s on ``etl_stream`` and
 - **Options.** The archive flags go after the caller's own
   ``spark.driver.extraJavaOptions``. The JVM runs under the default
   ``-Xshare:auto``, so an archive that does not match is ignored.
+
+Local files: without ``libhadoop``, which the pyspark wheel does not
+ship, Hadoop's local file system forks a process for two calls.
+``RawLocalFileSystem.setPermission`` runs ``chmod`` for every file and
+directory it creates, and ``getFileLinkStatus``, which every
+``FileContext`` rename calls, runs ``readlink``. A warm ``etl_stream``
+pass forked 184 of them, for sink files, ``_SUCCESS`` markers, sink
+ledger markers and the streaming checkpoint's logs.
+
+- **What.** ``jvm/ForkFreeLocalFileSystem.java`` subclasses the stock
+  classes, for both the ``FileSystem`` and the ``FileContext`` API
+  (``LOCAL_FS_CONFS``). It sets a mode within ``0777`` through
+  ``java.nio`` and answers for a path that is no symbolic link without
+  ``readlink``; the sticky bit, symbolic links, ``.crc`` files and
+  every other call are the stock classes'.
+- **When it applies.** The master is ``local`` or ``local[...]``, also
+  when spark-submit set it, and no conf names a class for either key.
+  Executors of other masters run in JVMs that lack the classes.
+- **How.** ``get_spark`` brings the JVM up (its own launch, or
+  spark-submit's) before the context. Janino, which Spark ships,
+  compiles the source in that JVM, and the class files are published by
+  renaming into
+  ``${XDG_CACHE_HOME:-~/.cache}/spark_kafka_airflow_pipeline_spark/classes/<key>/``.
+  The key hashes the source and the archive key. The directory is then
+  added to the JVM thread's context class loader, so the launch class
+  path, and with it the archive, does not change. Deleting the
+  directory resets the cache; old keys are left, as a running JVM may
+  still load from them. If the source does not compile, the session
+  gets the stock classes.
 """
 
 from __future__ import annotations
@@ -77,7 +106,8 @@ import sys
 from collections.abc import Iterator, Mapping
 from contextlib import contextmanager, suppress
 
-from pyspark import SparkContext
+from py4j.protocol import Py4JError
+from pyspark import SparkConf, SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
@@ -94,9 +124,23 @@ TABLE_CONFS = {
     "spark.sql.session.timeZone": "UTC",
 }
 
+#: The Hadoop confs that map ``file:`` to the fork-free local file system
+#: (``jvm/ForkFreeLocalFileSystem.java``, "Local files" above).
+LOCAL_FS_CONFS = {
+    "spark.hadoop.fs.file.impl": "spark_kafka_airflow_pipeline_spark.jvm.ForkFreeLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl":
+        "spark_kafka_airflow_pipeline_spark.jvm.ForkFreeLocalFileSystem$Fs",
+}
+_LOCAL_FS_SOURCE = os.path.join(os.path.dirname(__file__), "jvm", "ForkFreeLocalFileSystem.java")
+
 
 def _default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+def _cache_dir(name: str) -> str:
+    return os.path.join(os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
+                        "spark_kafka_airflow_pipeline_spark", name)
 
 
 def _archive_key() -> str:
@@ -115,8 +159,7 @@ def _archive_key() -> str:
 def _archive_path(conf: Mapping[str, str]) -> str | None:
     """The archive for a JVM that this call launches, or None when the
     launch must not use one (see "JVM launch" above)."""
-    cache = os.path.join(os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache"),
-                         "spark_kafka_airflow_pipeline_spark", "cds")
+    cache = _cache_dir("cds")
     try:  # a missing conf dir or an unwritable cache raises OSError
         if ("PYSPARK_GATEWAY_PORT" in os.environ or SparkContext._gateway
                 or "spark.driver.extraClassPath" in conf
@@ -187,6 +230,52 @@ def _publish_archive(proc, tmp: str, jsa: str) -> None:  # noqa: ANN001
                 os.remove(os.path.join(os.path.dirname(jsa), name))
 
 
+def _local_fs_classes() -> str | None:
+    """The directory of the compiled local file system classes. On a
+    miss, Janino compiles the source in the running JVM into a temporary
+    directory, which is then renamed into place. None if the source does
+    not compile or the cache cannot be written."""
+    try:
+        with open(_LOCAL_FS_SOURCE, "rb") as f:
+            key = hashlib.sha256(f.read() + _archive_key().encode()).hexdigest()[:24]
+    except OSError:
+        return None
+    out = _cache_dir(os.path.join("classes", key))
+    tmp = f"{out}.{os.getpid()}.tmp"
+    file = getattr(SparkContext._jvm, "java.io.File")
+    try:
+        if not os.path.isdir(out):
+            compiler = getattr(SparkContext._jvm, "org.codehaus.janino.CompilerFactory")().newCompiler()
+            compiler.setDestinationDirectory(file(tmp), True)
+            sources = SparkContext._gateway.new_array(file, 1)
+            sources[0] = file(_LOCAL_FS_SOURCE)
+            compiler.compile(sources)
+            os.rename(tmp, out)
+    except (OSError, Py4JError):  # also when a concurrent launch published first
+        shutil.rmtree(tmp, ignore_errors=True)
+    return out if os.path.isdir(out) else None
+
+
+def _local_fs_confs(conf: Mapping[str, str]) -> dict[str, str]:
+    """``LOCAL_FS_CONFS`` with their classes loaded into the JVM thread's
+    context class loader, or nothing where they do not apply (see
+    "Local files" above). Called with the gateway up."""
+    jvm = SparkContext._jvm
+    prop = getattr(jvm, "java.lang.System").getProperty  # spark-submit's confs
+    master, *named = (conf.get(k) or prop(k) for k in ("spark.master", *LOCAL_FS_CONFS))
+    if SparkContext._active_spark_context or any(named) or (master or "").split("[")[0] != "local":
+        return {}
+    classes = _local_fs_classes()
+    try:
+        if classes:
+            getattr(jvm, "java.lang.Thread").currentThread().getContextClassLoader().addURL(
+                getattr(jvm, "java.io.File")(classes).toURI().toURL())
+            return dict(LOCAL_FS_CONFS)
+    except Py4JError:  # a context class loader without addURL
+        pass
+    return {}
+
+
 def get_spark(app_name: str = "spark-kafka-airflow-pipeline-spark",
               master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
@@ -198,38 +287,46 @@ def get_spark(app_name: str = "spark-kafka-airflow-pipeline-spark",
         None if "PYSPARK_GATEWAY_PORT" in os.environ else f"local[{cpus}]")
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 8)))
 
-    builder = (
-        SparkSession.builder.appName(app_name)
+    conf = {
+        "spark.app.name": app_name,
         # --- adaptive execution: runtime stats beat static planning ---
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # --- shuffle sizing (pre-AQE bound) ---
-        .config("spark.sql.shuffle.partitions", shuffle_parts)
-        .config("spark.default.parallelism", str(cpus))
+        "spark.sql.shuffle.partitions": shuffle_parts,
+        "spark.default.parallelism": str(cpus),
         # --- star-schema joins: broadcast every dimension that fits ---
-        .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+        "spark.sql.autoBroadcastJoinThreshold": "64m",
         # --- Arrow for all Python<->JVM batch interchange ---
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # --- scan sizing: 128m splits keep 100TB scans at ~800k tasks ---
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
+        "spark.sql.files.maxPartitionBytes": "134217728",
+        # --- codegen cache: keyed by class loader and code, in 4 LRU
+        #     segments. At the default 100 entries (25 a segment) the 66
+        #     of the 3 catalog_noop queries can overflow one segment, by
+        #     the loaders' identity hashes, and then every warm pass
+        #     recompiles 3-8 classes ---
+        "spark.sql.codegen.cache.maxEntries": "400",
         # --- straggler mitigation: re-launch tasks stuck on a slow /
         #     descheduled core (matters on contended hosts AND at
         #     1000-executor scale) ---
-        .config("spark.speculation", "true")
-        .config("spark.speculation.multiplier", "3")
-        .config("spark.speculation.quantile", "0.9")
+        "spark.speculation": "true",
+        "spark.speculation.multiplier": "3",
+        "spark.speculation.quantile": "0.9",
         # --- quieter local runs ---
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    )
-    # --- the master, the table-read confs (matches DuckDB oracle), then
-    #     the caller's ---
-    conf = {**({"spark.master": master} if master else {}), **TABLE_CONFS, **(extra_conf or {})}
+        "spark.ui.enabled": os.environ.get("SPARK_GRAFT_UI", "false"),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        # --- the master, the table-read confs (matches DuckDB oracle),
+        #     then the caller's ---
+        **({"spark.master": master} if master else {}), **TABLE_CONFS, **(extra_conf or {}),
+    }
     with _class_archive(conf):
-        for k, v in conf.items():
-            builder = builder.config(k, v)
-        spark = builder.getOrCreate()
+        # the JVM runs (launched here, or spark-submit's) before the
+        # context exists, so the local file system classes can be loaded
+        SparkContext._ensure_initialized(conf=SparkConf().setAll(conf.items()))
+        conf.update(_local_fs_confs(conf))
+        spark = SparkSession.builder.config(map=conf).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

@@ -23,6 +23,7 @@ from spark_kafka_airflow_pipeline_spark import session
 
 REPO = Path(__file__).resolve().parent.parent
 MAGIC = 0xF00BABA8  # the JDK's CDS_DYNAMIC_ARCHIVE_MAGIC
+RAW_FS = "spark_kafka_airflow_pipeline_spark.jvm.ForkFreeLocalFileSystem$Raw"
 
 PROBE = """
 import json, os, sys
@@ -38,6 +39,10 @@ print(json.dumps({
     "jvm_conf_dir": jvm.java.lang.System.getenv("SPARK_CONF_DIR"),
     "py_conf_dir": os.environ.get("SPARK_CONF_DIR"),
     "setting": spark.sparkContext.getConf().get("spark.graft.setting", None),
+    "raw_fs": jvm.org.apache.hadoop.fs.FileSystem.getLocal(spark._jsc.hadoopConfiguration())
+                 .getRawFileSystem().getClass().getName(),
+    "mapped": sorted({line.split()[-1] for line in open(
+        f"/proc/{jvm.java.lang.ProcessHandle.current().pid()}/maps") if line.endswith(".jsa\\n")}),
 }))
 """
 
@@ -98,6 +103,8 @@ def test_second_run_maps_the_archive(built):
     second = _probe(cache, conf_dir)
     args = second["args"]
     assert f"-XX:SharedArchiveFile={jsa}" in args
+    assert str(jsa) in second["mapped"]  # beside the JDK's base archive
+    assert second["raw_fs"] == RAW_FS
     # the caller's option is kept, ahead of the archive's
     assert args.index("-Dgraft.probe=1") < args.index(f"-XX:SharedArchiveFile={jsa}")
     assert not any(a.startswith("-Xshare") for a in args)
@@ -205,7 +212,8 @@ def test_publish_replaces_stale_files(tmp_path, monkeypatch):
 
 def test_spark_submit_keeps_its_master_and_gets_no_archive(tmp_path):
     """A driver that spark-submit started: ``get_spark`` keeps
-    ``--master`` and adds no launch option (its JVM already runs)."""
+    ``--master`` and adds no launch option (its JVM already runs), but
+    loads the fork-free local file system into it."""
     script = tmp_path / "s.py"
     script.write_text(PROBE)
     env = {**os.environ, "XDG_CACHE_HOME": str(tmp_path / "cache"),
@@ -218,4 +226,5 @@ def test_spark_submit_keeps_its_master_and_gets_no_archive(tmp_path):
     out = json.loads(run.stdout.strip().splitlines()[-1])
     assert out["master"] == "local[2]"
     assert not any("Archive" in a for a in out["args"])
-    assert not (tmp_path / "cache").exists()
+    assert out["raw_fs"] == RAW_FS
+    assert not (tmp_path / "cache" / "spark_kafka_airflow_pipeline_spark" / "cds").exists()

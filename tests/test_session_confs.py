@@ -57,9 +57,10 @@ def test_only_session_module_writes_confs():
 
 def test_only_session_module_sets_launch_options():
     """Pure source scan: no package module but ``session.py`` mentions
-    the driver JVM's launch options or the environment the launcher
-    reads them from."""
-    terms = ("extraJavaOptions", "SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS")
+    the driver JVM's launch options, the environment the launcher
+    reads them from, the local file system class or the class loader
+    that loads it."""
+    terms = ("extraJavaOptions", "SPARK_CONF_DIR", "PYSPARK_SUBMIT_ARGS", "fs.file.impl", "addURL")
     found = {(path.relative_to(PACKAGE).as_posix(), term)
              for path in sorted(PACKAGE.rglob("*.py"))
              for term in terms if term in path.read_text()}
