@@ -125,17 +125,6 @@ def write_sink(df: DataFrame, sink: Sink) -> None:
         writer.save(f"{path}/{sink.name}")
 
 
-def write_stream_to_kafka(df: DataFrame, bootstrap_servers: str, topic: str,
-                          checkpoint: str, key_column: str | None = None):
-    """Streaming Kafka sink [EXT] — same wire format as the batch path."""
-    return (serialize_for_kafka(df, key_column)
-            .writeStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap_servers)
-            .option("topic", topic)
-            .option("checkpointLocation", checkpoint)
-            .start())
-
-
 def check_append_only(sink: Sink) -> None:
     """Reject a sink that is unsafe to write once per micro-batch.
 

@@ -123,13 +123,3 @@ def read_kafka_batch(spark: SparkSession, bootstrap_servers: str, topic: str,
         .load()
     )
     return parse_kafka_records(raw, value_schema)
-
-
-def read_rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Deterministic-ish local stream source for tests (no Kafka broker
-    in the test environment)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", str(rows_per_second))
-        .load()
-    )

@@ -142,16 +142,20 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pushdown happen automatically once the caller selects/filters.
 
     The table-read confs are pinned first (``session.pin_table_confs``:
-    it must work under the caller's SparkSession, not only ours). The
-    events table's nanos column arrives as a long under them and is
-    converted back to a timestamp (truncated to micros, matching how
-    DuckDB reads the same file).
+    it must work under the caller's SparkSession, not only ours); the
+    events table's ``ts`` is then converted by ``events_ts``.
     """
     pin_table_confs(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        from pyspark.sql import functions as F
+    return events_ts(df) if name == "events" else normalize_ntz(df)
 
+
+def events_ts(df: DataFrame) -> DataFrame:
+    """The events table, batch or stream, with ``ts`` as a TIMESTAMP.
+    Under the table-read confs its nanos column arrives as a long and
+    is converted back, truncated to micros, matching how DuckDB reads
+    the same file; NTZ timestamps are cast (``normalize_ntz``)."""
+    if dict(df.dtypes).get("ts") == "bigint":
         # integer division, NOT F.col/1000: epoch-nanos (~1.7e18) exceed
         # double's 2^53 exact range, so a double round-trip can be off
         # by 1 us vs DuckDB's integer truncation of TIMESTAMP_NS

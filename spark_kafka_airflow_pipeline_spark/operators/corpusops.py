@@ -1454,6 +1454,41 @@ _TRIGRAM_SQL = """
 """
 
 
+def _trigram_tfidf(d: DataFrame) -> DataFrame:
+    """``(doc_id, term, df, w)``: the word-trigram tf-idf posting list
+    of the sparse retrievers (``textops.sparse_cosine_pairs``,
+    ``similarity.rrf_hybrid_retrieval``). Weights are integer MILLI
+    units: ``tf * floor(1000 * round(ln((n + 1) / (df + 1)) + 1, 6)
+    + 0.5)``, so every dot and norm built on them is an exact BIGINT in
+    both engines."""
+    tf = (_word_trigrams(d)
+          .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")))
+    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    n = d.agg(F.count(F.lit(1)).alias("n_docs"))
+    return (tf.join(dfreq, "term").crossJoin(F.broadcast(n))
+            .select("doc_id", "term", "df",
+                    F.expr("tf * CAST(floor(round(ln((n_docs + 1)"
+                           " / (df + 1)) + 1, 6) * 1000 + 0.5)"
+                           " AS BIGINT)").alias("w")))
+
+
+# the oracle's ``_trigram_tfidf``, plus the per-doc squared norms
+_TFIDF_SQL = f"""toks AS ({_TRIGRAM_SQL}), tf AS (
+  SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2
+), dfreq AS (
+  SELECT term, COUNT(*) AS df FROM tf GROUP BY 1
+), n AS (SELECT COUNT(*) AS n_docs FROM documents),
+weights AS (
+  SELECT doc_id, tf.term, df,
+         tf * CAST(floor(round(ln((n_docs + 1) / (df + 1)) + 1, 6)
+                         * 1000 + 0.5) AS BIGINT) AS w
+  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n
+), norms AS (
+  SELECT doc_id, CAST(SUM(w * w) AS BIGINT) AS norm2
+  FROM weights GROUP BY doc_id
+)"""
+
+
 def benchmark_decontamination(spark: SparkSession, sf_dir: str,
                               modulus: int = 97,
                               threshold_ppm: int = 500_000) -> DataFrame:

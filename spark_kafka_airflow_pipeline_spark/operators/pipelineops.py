@@ -28,7 +28,7 @@ RULES = [Validation("c_mktsegment", ["notEmpty"]),
 
 
 def validate_split_ok(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ok, _ = validate_fields(table(spark, sf_dir, "customer"), RULES, cache=False)
+    ok, _ = validate_fields(table(spark, sf_dir, "customer"), RULES)
     return ok.select("c_custkey", "c_name", "c_acctbal")
 
 
@@ -42,7 +42,7 @@ WHERE coalesce(c_mktsegment != '', false) AND coalesce(c_acctbal > 0, false)
 def validate_split_ko(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Invalid rows with their error codes (error array rendered as a
     comma-joined string so the oracle hash is array-free)."""
-    _, ko = validate_fields(table(spark, sf_dir, "customer"), RULES, cache=False)
+    _, ko = validate_fields(table(spark, sf_dir, "customer"), RULES)
     return ko.select("c_custkey", "c_acctbal",
                      F.array_join(ERROR_COLUMN, ",").alias("errors"))
 

@@ -14,11 +14,39 @@
 Dot products fold left-to-right via ``F.aggregate`` so the float math is
 order-deterministic; the DuckDB oracle uses ``list_reduce`` with the
 same fold order, giving bit-identical doubles before the final round.
+
+Each search stage has one implementation, and the queries differ only
+in the parameters they pass it:
+
+- ``_side`` + ``_cosine``: a pair's rounded cosine over norms computed
+  once per vector (``cosine_topk``, ``embedding_near_dups``,
+  ``ann_lsh_topk``, ``ivf_ann_topk``, ``hard_negative_mining``,
+  ``ann_srp_topk``, ``rrf_hybrid_retrieval``'s dense leg).
+- ``_top_k``: the first k rows per key by a window ``row_number``,
+  filtered on the raw rank so Spark plans a ``WindowGroupLimit``
+  (every ranked query; ``_rank_neighbors`` is its per-query
+  neighbor form for ``cosine_topk``, ``ann_lsh_topk``,
+  ``ivf_ann_topk`` and ``ann_srp_topk``).
+- ``_nearest``: each point's nearest centroid by a struct-min argmin,
+  ties to the lower centroid id.
+- ``_centroids``: the per-dimension decimal(30,15) mean vector of each
+  group (``label_centroid_similarity``, ``ivf_ann_topk``'s cells).
+- ``_lloyd``: Lloyd rounds composed of the two above, keyed on the
+  group keys (``kmeans_assignments`` and so ``kmeans_clusters`` and
+  ``cluster_balanced_sample``; ``pq_ann_topk`` per subspace;
+  ``incremental_ivf_assign``).
+- ``corpusops._trigram_tfidf``: the sparse leg's tf-idf posting list
+  (``rrf_hybrid_retrieval``, ``textops.sparse_cosine_pairs``).
+
+The oracle SQL mirrors the same stages with text fragments of its own
+(``_sql_emb``, ``_sql_cosine``, ``_sql_top_k``, ``_sql_nearest``,
+``_sql_centroids``, ``_sql_lloyd``, ``corpusops._TFIDF_SQL``); it shares
+no text with the Spark code, so it stays an independent restatement.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.functions import vectors as V
@@ -27,6 +55,10 @@ from spark_kafka_airflow_pipeline_spark.operators.base import (
     barrier,
     min_label_fixpoint,
     table,
+)
+from spark_kafka_airflow_pipeline_spark.operators.corpusops import (
+    _TFIDF_SQL,
+    _trigram_tfidf,
 )
 
 N_QUERIES = 10  # vec_id < 10 form the query set
@@ -41,166 +73,194 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("embedding").cast("array<double>").alias("emb"))
 
 
-def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """For each query vector (vec_id < N_QUERIES), the TOP_K most
-    cosine-similar other vectors. Exact, deterministic tie-break on
-    neighbor id.
+def _side(s: str, nrm: str | None = None) -> list[Column]:
+    """The columns one side of a cosine pair carries through the join:
+    the vector as ``<s>_emb`` and its L2 norm as ``n_<s>``. The norm is
+    computed here, once per vector, or read from column ``nrm`` when a
+    self-joined frame computed it before the split."""
+    norm = V.l2_norm("emb") if nrm is None else F.col(nrm)
+    return [F.col("emb").alias(f"{s}_emb"), norm.alias(f"n_{s}")]
 
-    Norms are computed ONCE per vector and carried through the join —
-    higher-order array folds are interpreted (not codegen), so folding
-    |q| and |c| per PAIR would redo the dominant work n_queries x
-    n_corpus times. dot/(n_q*n_c) produces the exact same double as the
-    fused per-pair form, so the oracle is unchanged."""
-    emb = _embeddings(spark, sf_dir)
-    queries = (emb.filter(F.col("vec_id") < N_QUERIES)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("emb").alias("q_emb"),
-                       V.l2_norm("emb").alias("n_q")))
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("emb").alias("c_emb"),
-                        V.l2_norm("emb").alias("n_c"))
-    sim = F.round(V.dot(F.col("q_emb"), F.col("c_emb"))
-                  / (F.col("n_q") * F.col("n_c")), 6)
-    pairs = (
-        corpus.join(F.broadcast(queries),
-                    F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
+
+def _cosine(a: str, b: str) -> Column:
+    """6dp cosine of sides ``a`` and ``b`` (built by ``_side``).
+
+    Higher-order array folds are interpreted (not codegen), so folding
+    |a| and |b| per PAIR would redo the dominant work once per pair;
+    with the norms carried, a pair costs one dot product, and
+    dot/(n_a*n_b) is the exact same double as the fused per-pair form
+    the oracle writes."""
+    return F.round(V.dot(F.col(f"{a}_emb"), F.col(f"{b}_emb"))
+                   / (F.col(f"n_{a}") * F.col(f"n_{b}")), 6)
+
+
+def _top_k(df: DataFrame, keys: str | list[str], order: list,
+           k: int, rank: str = "rank") -> DataFrame:
+    """The first ``k`` rows of each ``keys`` group by ``order``,
+    numbered from 1 in column ``rank`` (an int). The filter reads the
+    raw ``row_number``, so Spark plans a ``WindowGroupLimit`` below the
+    window (a cast in between would block it). For k = 1 the filter is
+    ``rank = 1``, the equality form the top-1 queries' plans carry."""
+    w = Window.partitionBy(keys).orderBy(*order)
+    n = F.col(rank)
+    return (df.withColumn(rank, F.row_number().over(w))
+            .filter(n == 1 if k == 1 else n <= k))
+
+
+def _rank_neighbors(pairs: DataFrame) -> DataFrame:
+    """Each query's ``TOP_K`` most cosine-similar neighbors, ties to
+    the lower neighbor id."""
+    return (_top_k(pairs, "query_id",
+                   [F.col("cosine_sim").desc(), F.col("neighbor_id")], TOP_K)
             .select("query_id", "neighbor_id", "cosine_sim", "rank"))
 
 
+def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """For each query vector (vec_id < N_QUERIES), the TOP_K most
+    cosine-similar other vectors. Exact, deterministic tie-break on
+    neighbor id."""
+    emb = _embeddings(spark, sf_dir)
+    queries = (emb.filter(F.col("vec_id") < N_QUERIES)
+               .select(F.col("vec_id").alias("query_id"), *_side("q")))
+    corpus = emb.select(F.col("vec_id").alias("neighbor_id"), *_side("c"))
+    return _rank_neighbors(
+        corpus.join(F.broadcast(queries),
+                    F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id",
+                _cosine("q", "c").alias("cosine_sim")))
+
+
+# -- oracle fragments: DuckDB restatements of the stages above ---------
+
+def _sql_emb(*cols: str) -> str:
+    """The ``emb`` CTE: ``vec_id``, ``cols`` and the embedding widened
+    to DOUBLE[]."""
+    return (f"emb AS (\n  SELECT {', '.join(('vec_id',) + cols)}, "
+            "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb\n"
+            "  FROM embeddings\n)")
+
+
+def _sql_dot(a: str, b: str) -> str:
+    return (f"list_reduce(list_transform(list_zip({a}, {b}), "
+            "p -> p[1] * p[2]), (acc, x) -> acc + x)")
+
+
+def _sql_sumsq(a: str) -> str:
+    return f"list_reduce(list_transform({a}, x -> x * x), (acc, x) -> acc + x)"
+
+
+def _sql_cosine(a: str, b: str) -> str:
+    return (f"round({_sql_dot(a, b)}\n"
+            f"           / (sqrt({_sql_sumsq(a)}) * sqrt({_sql_sumsq(b)})), 6)")
+
+
+def _sql_top_k(src: str, part: str, order: str, k: int,
+               rank: str = "rank") -> str:
+    """Rows of ``src`` ranked 1..k per ``part`` by ``order``, plus the
+    INT column ``rank``."""
+    return (f"SELECT * FROM (SELECT *, CAST(row_number() OVER ("
+            f"PARTITION BY {part} ORDER BY {order}) AS INT) AS {rank} "
+            f"FROM {src}) WHERE {rank} <= {k}")
+
+
+_SQL_RANK_NEIGHBORS = f"""
+SELECT query_id, neighbor_id, cosine_sim, rank
+FROM ({_sql_top_k("pairs", "query_id", "cosine_sim DESC, neighbor_id", TOP_K)})
+"""
+
 COSINE_TOPK_SQL = f"""
-WITH emb AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-  FROM embeddings
-),
+WITH {_sql_emb()},
 pairs AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round(
-           list_reduce(list_transform(list_zip(q.emb, c.emb),
-                                      p -> p[1] * p[2]), (acc, x) -> acc + x)
-           / (sqrt(list_reduce(list_transform(q.emb, x -> x * x), (acc, x) -> acc + x))
-            * sqrt(list_reduce(list_transform(c.emb, x -> x * x), (acc, x) -> acc + x))),
-           6) AS cosine_sim
+         {_sql_cosine("q.emb", "c.emb")} AS cosine_sim
   FROM emb q, emb c
   WHERE q.vec_id < {N_QUERIES} AND q.vec_id != c.vec_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine_sim,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine_sim DESC, neighbor_id) AS INT) AS rank
-  FROM pairs
-)
-SELECT query_id, neighbor_id, cosine_sim, rank FROM ranked WHERE rank <= {TOP_K}
-"""
+)""" + _SQL_RANK_NEIGHBORS
 
 
 def embedding_near_dups(spark: SparkSession, sf_dir: str,
                         threshold: float = 0.95) -> DataFrame:
     """Embedding-cosine near-duplicate pairs within each label group
-    (label is the blocking key -> never a full cross join).
-
-    Norms are computed ONCE per vector (carried as a column through the
-    join), so each pair costs one dot product instead of dot + two
-    norms. sim = dot/(n_a*n_b) evaluates to the exact same double as
-    the per-pair form, so the oracle is unchanged."""
+    (label is the blocking key -> never a full cross join). The norm
+    is computed once per vector before the self-join splits it."""
     par = spark.sparkContext.defaultParallelism
     emb = (_embeddings(spark, sf_dir)
            .repartition(par, "vec_id")
            .select("vec_id", "label", "emb", V.l2_norm("emb").alias("nrm")))
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("label"),
-                   F.col("emb").alias("emb_a"), F.col("nrm").alias("n_a"))
+    a = emb.select(F.col("vec_id").alias("id_a"), "label", *_side("a", "nrm"))
     b = emb.select(F.col("vec_id").alias("id_b"),
-                   F.col("label").alias("label_b"),
-                   F.col("emb").alias("emb_b"), F.col("nrm").alias("n_b"))
-    sim = F.round(V.dot(F.col("emb_a"), F.col("emb_b"))
-                  / (F.col("n_a") * F.col("n_b")), 6)
+                   F.col("label").alias("label_b"), *_side("b", "nrm"))
     return (
         a.join(b, (F.col("label") == F.col("label_b"))
                & (F.col("id_a") < F.col("id_b")))
-        .select("label", "id_a", "id_b", sim.alias("cosine_sim"))
+        .select("label", "id_a", "id_b", _cosine("a", "b").alias("cosine_sim"))
         .filter(F.col("cosine_sim") >= threshold)
     )
 
 
-_EMBEDDING_NEAR_DUPS_SQL_T = """
-WITH emb AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-  FROM embeddings
-)
+def _sql_near_dups(thr: float) -> str:
+    return f"""
+WITH {_sql_emb("label")}
 SELECT * FROM (
   SELECT a.label AS label, a.vec_id AS id_a, b.vec_id AS id_b,
-         round(
-           list_reduce(list_transform(list_zip(a.emb, b.emb), p -> p[1] * p[2]),
-                       (acc, x) -> acc + x)
-           / (sqrt(list_reduce(list_transform(a.emb, x -> x * x), (acc, x) -> acc + x))
-            * sqrt(list_reduce(list_transform(b.emb, x -> x * x), (acc, x) -> acc + x))),
-           6) AS cosine_sim
+         {_sql_cosine("a.emb", "b.emb")} AS cosine_sim
   FROM emb a, emb b
   WHERE a.label = b.label AND a.vec_id < b.vec_id
 ) WHERE cosine_sim >= {thr}
 """
 
-EMBEDDING_NEAR_DUPS_SQL = _EMBEDDING_NEAR_DUPS_SQL_T.replace("{thr}", "0.95")
+
+EMBEDDING_NEAR_DUPS_SQL = _sql_near_dups(0.95)
 
 
-def label_centroids(emb: DataFrame) -> DataFrame:
-    """Mean embedding per label as ``(label, centroid array<double>)``.
-    Aggregates per dimension via posexplode + groupBy (scales: shuffle
-    keyed on (label, dim), dims x n_labels cells); exact decimal sums
-    make the centroid doubles accumulation-order-independent."""
-    by_dim = emb.select("label", F.posexplode("emb").alias("dim", "v"))
+def _centroids(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Mean ``emb`` per ``keys`` group as ``(*keys, cent
+    array<double>)``. Aggregates per dimension via posexplode + groupBy
+    (scales: shuffle keyed on (keys, dim), dims x groups cells); exact
+    decimal sums make the centroid doubles
+    accumulation-order-independent."""
     return (
-        by_dim.groupBy("label", "dim")
+        df.select(*keys, F.posexplode("emb").alias("dim", "v"))
+        .groupBy(*keys, "dim")
         .agg((F.sum(F.col("v").cast("decimal(30,15)")).cast("double")
               / F.count("v")).alias("c"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("pairs"))
-        .select("label", F.transform("pairs", lambda p: p["c"]).alias("centroid"))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("p"))
+        .select(*keys, F.transform("p", lambda q: q["c"]).alias("cent"))
     )
+
+
+def _sql_centroids(key: str, src: str) -> str:
+    """``(key, cent)``: the decimal per-dimension mean of ``emb`` per
+    ``key`` group of ``src``; exact decimal sums make the doubles
+    bit-identical to Spark's regardless of accumulation order."""
+    return f"""
+  SELECT {key}, list(c ORDER BY dim) AS cent FROM (
+    SELECT {key}, dim,
+           CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) / COUNT(v) AS c
+    FROM (SELECT {key}, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v
+          FROM {src})
+    GROUP BY {key}, dim)
+  GROUP BY {key}
+"""
 
 
 def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each vector's cosine to its own label centroid — the classic
     cluster-coherence metric."""
     emb = _embeddings(spark, sf_dir)
-    sim = F.round(V.cosine_similarity(F.col("emb"), F.col("centroid")), 6)
+    sim = F.round(V.cosine_similarity(F.col("emb"), F.col("cent")), 6)
     return (
-        emb.join(F.broadcast(label_centroids(emb)), "label")
+        emb.join(F.broadcast(_centroids(emb, ["label"])), "label")
         .select("vec_id", "label", sim.alias("centroid_sim"))
     )
 
 
-LABEL_CENTROID_SQL = """
-WITH emb AS (
-  SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-  FROM embeddings
-),
-by_dim AS (
-  SELECT label, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v
-  FROM emb
-),
-cent AS (
-  -- exact decimal per-dim sums mirror the Spark side, so the centroid
-  -- doubles are bit-identical regardless of accumulation order
-  SELECT label, dim,
-         CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) / COUNT(v) AS c
-  FROM by_dim GROUP BY label, dim
-),
-centroids AS (
-  SELECT label, list(c ORDER BY dim) AS centroid FROM cent GROUP BY label
-)
+LABEL_CENTROID_SQL = f"""
+WITH {_sql_emb("label")},
+centroids AS ({_sql_centroids("label", "emb")})
 SELECT e.vec_id, e.label,
-       round(
-         list_reduce(list_transform(list_zip(e.emb, c.centroid),
-                                    p -> p[1] * p[2]), (acc, x) -> acc + x)
-         / (sqrt(list_reduce(list_transform(e.emb, x -> x * x), (acc, x) -> acc + x))
-          * sqrt(list_reduce(list_transform(c.centroid, x -> x * x), (acc, x) -> acc + x))),
-         6) AS centroid_sim
+       {_sql_cosine("e.emb", "c.cent")} AS centroid_sim
 FROM emb e JOIN centroids c USING (label)
 """
 
@@ -255,28 +315,17 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str,
     # are accumulation-order-exact, so both lineages agree per vector)
     q_emb = emb.filter(F.col("vec_id") < N_QUERIES)
     queries = (q_emb.join(hyperplane_buckets_agg(q_emb, n_planes), "vec_id")
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("emb").alias("q_emb"),
-                       V.l2_norm("emb").alias("n_q"),
+               .select(F.col("vec_id").alias("query_id"), *_side("q"),
                        F.explode(probes).alias("bucket")))
     corpus = (emb.join(hyperplane_buckets_agg(emb, n_planes), "vec_id")
-              .select(F.col("vec_id").alias("neighbor_id"),
-                      F.col("emb").alias("c_emb"),
-                      V.l2_norm("emb").alias("n_c"), "bucket"))
-    # norms precomputed per side — per-pair cost is one dot product
-    sim = F.round(V.dot(F.col("q_emb"), F.col("c_emb"))
-                  / (F.col("n_q") * F.col("n_c")), 6)
-    pairs = (
+              .select(F.col("vec_id").alias("neighbor_id"), *_side("c"),
+                      "bucket"))
+    return _rank_neighbors(
         corpus.join(F.broadcast(queries), "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-        .dropDuplicates(["query_id", "neighbor_id"])  # multiprobe overlap
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "neighbor_id", "cosine_sim", "rank"))
+        .select("query_id", "neighbor_id",
+                _cosine("q", "c").alias("cosine_sim"))
+        .dropDuplicates(["query_id", "neighbor_id"]))  # multiprobe overlap
 
 
 def ivf_ann_topk(spark: SparkSession, sf_dir: str,
@@ -292,37 +341,21 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str,
     identical.) Approximate -> rows-only; recall vs cosine_topk is
     asserted in tests."""
     emb = _embeddings(spark, sf_dir)
-    cents = label_centroids(emb)
     queries = (emb.filter(F.col("vec_id") < N_QUERIES)
-               .select(F.col("vec_id").alias("query_id"),
-                       F.col("emb").alias("q_emb"),
-                       V.l2_norm("emb").alias("n_q")))
-    cent_sim = V.cosine_similarity(F.col("q_emb"), F.col("centroid"))
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("cent_sim").desc(), F.col("label"))
-    probes = (
-        queries.crossJoin(F.broadcast(cents))
-        .select("query_id", "q_emb", "n_q", "label", cent_sim.alias("cent_sim"))
-        .withColumn("cell_rank", F.row_number().over(wc))
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", "q_emb", "n_q", "label")
-    )
-    corpus = emb.select(F.col("vec_id").alias("neighbor_id"),
-                        F.col("emb").alias("c_emb"),
-                        V.l2_norm("emb").alias("n_c"), "label")
-    # norms precomputed per side — per-pair cost is one dot product
-    sim = F.round(V.dot(F.col("q_emb"), F.col("c_emb"))
-                  / (F.col("n_q") * F.col("n_c")), 6)
-    pairs = (
+               .select(F.col("vec_id").alias("query_id"), *_side("q")))
+    cent_sim = V.cosine_similarity(F.col("q_emb"), F.col("cent"))
+    probes = _top_k(
+        queries.crossJoin(F.broadcast(_centroids(emb, ["label"])))
+        .select("query_id", "q_emb", "n_q", "label", cent_sim.alias("cent_sim")),
+        "query_id", [F.col("cent_sim").desc(), F.col("label")], nprobe,
+        "cell_rank").select("query_id", "q_emb", "n_q", "label")
+    corpus = emb.select(F.col("vec_id").alias("neighbor_id"), *_side("c"),
+                        "label")
+    return _rank_neighbors(
         corpus.join(F.broadcast(probes), "label")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", sim.alias("cosine_sim"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "neighbor_id", "cosine_sim", "rank"))
+        .select("query_id", "neighbor_id",
+                _cosine("q", "c").alias("cosine_sim")))
 
 
 def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,21 +376,17 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EMBEDDING_NORM_STATS_SQL = """
-WITH norms AS (
-  SELECT label,
-         round(sqrt(list_reduce(
-           list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
-           (acc, x) -> acc + x)), 6) AS nrm
-  FROM embeddings
+EMBEDDING_NORM_STATS_SQL = f"""
+WITH {_sql_emb("label")},
+norms AS (
+  SELECT label, round(sqrt({_sql_sumsq("emb")}), 6) AS nrm
+  FROM emb
 )
 SELECT label, COUNT(*) AS n_vectors,
        MIN(nrm) AS min_norm, MAX(nrm) AS max_norm,
        CAST(SUM(CAST(nrm AS DECIMAL(20,6))) AS DOUBLE) / COUNT(nrm) AS avg_norm
 FROM norms GROUP BY label
 """
-
-
 
 
 def embedding_int8_quant_error(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -404,15 +433,11 @@ def embedding_int8_quant_error(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.round(F.max("abs_err"), 9).alias("max_abs_err")))
 
 
-EMBEDDING_INT8_SQL = """
-WITH v AS (
-  SELECT vec_id, label,
-         list_transform(embedding, a -> CAST(a AS DOUBLE)) AS v
-  FROM embeddings
-), b AS (
-  SELECT vec_id, label, v,
-         list_min(v) AS mn, list_max(v) AS mx
-  FROM v
+EMBEDDING_INT8_SQL = f"""
+WITH {_sql_emb("label")}, b AS (
+  SELECT vec_id, label, emb AS v,
+         list_min(emb) AS mn, list_max(emb) AS mx
+  FROM emb
 ), x AS (
   SELECT vec_id, label, mn, mx, unnest(v) AS x FROM b
 ), e AS (
@@ -430,6 +455,47 @@ FROM e GROUP BY label
 """
 
 
+def _sqdist() -> Column:
+    """Squared L2 distance of ``emb`` to ``cent``, folded left to
+    right (the oracle's ``_SQL_SQDIST``)."""
+    return F.aggregate(
+        F.zip_with("emb", "cent", lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0), lambda a, x: a + x)
+
+
+def _nearest(points: DataFrame, cents: DataFrame, keys: list[str],
+             carry: str = "emb") -> DataFrame:
+    """``(vec_id, *keys, carry, cid, dist)``: each point's nearest
+    centroid among the ``cents`` rows (``*keys, cid, cent``) that share
+    its ``keys``, by squared distance, ties to the lower ``cid``
+    (struct-min). The centroid table is k rows per key, so it
+    broadcasts: a join on the keys, or with no keys a k-constant nested
+    loop, NOT a data-sized cartesian."""
+    pairs = (points.join(F.broadcast(cents), keys) if keys
+             else points.crossJoin(F.broadcast(cents)))
+    return (pairs.withColumn("dist", _sqdist())
+            .groupBy("vec_id", *keys)
+            .agg(F.min(F.struct("dist", "cid")).alias("m"),
+                 F.first(carry).alias(carry))
+            .select("vec_id", *keys, carry, F.col("m.cid").alias("cid"),
+                    F.col("m.dist").alias("dist")))
+
+
+def _lloyd(points: DataFrame, init: DataFrame, keys: list[str],
+           iters: int) -> tuple[DataFrame, DataFrame]:
+    """``iters`` Lloyd rounds over ``points`` (``vec_id, *keys, emb``)
+    from the centroid table ``init`` (``*keys, cid, cent``): assign
+    each point to its nearest centroid (``_nearest``), then move each
+    centroid to its members' decimal mean (``_centroids``). Returns the
+    last assignment and the centroids moved onto it; one (keys, cid,
+    dim) shuffle per round."""
+    assigned, cents = None, init
+    for _ in range(iters):
+        assigned = _nearest(points, cents, keys)
+        cents = _centroids(assigned, [*keys, "cid"])
+    return assigned, cents
+
+
 def kmeans_assignments(spark: SparkSession, sf_dir: str,
                        k: int = 8, iters: int = 2) -> DataFrame:
     """Lloyd k-means over the embedding table with DETERMINISTIC
@@ -439,42 +505,13 @@ def kmeans_assignments(spark: SparkSession, sf_dir: str,
     distances accumulate left-to-right as identical IEEE expressions in
     both engines, ties argmin to the lower cluster id, and centroid /
     mean-distance aggregations run exact decimal(30,15) sums so the
-    results are accumulation-order-independent (the
-    ``label_centroids`` discipline).
-
-    Plan per iteration: broadcast the k-row centroid table against the
-    vectors (a k-constant nested loop, NOT a data-sized cartesian),
-    argmin via struct-min, then per-(cluster, dim) decimal means over a
-    posexplode — shuffle keyed on (cluster, dim), k x dims cells.
-    Returns per-cluster sizes and mean squared distance."""
+    results are accumulation-order-independent (``_lloyd``).
+    Returns each vector's ``(vec_id, emb, cid, dist)``."""
     emb = _embeddings(spark, sf_dir)
-    cents = (emb.filter(F.col("vec_id") < k)
-             .select(F.col("vec_id").cast("int").alias("cid"),
-                     F.col("emb").alias("cent")))
-    assigned = None
-    for _ in range(iters):
-        dist = F.aggregate(
-            F.zip_with("emb", "cent", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda a, x: a + x)
-        assigned = (
-            emb.crossJoin(F.broadcast(cents))
-            .withColumn("dist", dist)
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cid")).alias("m"),
-                 F.first("emb").alias("emb"))
-            .select("vec_id", "emb",
-                    F.col("m.cid").alias("cid"),
-                    F.col("m.dist").alias("dist")))
-        cents = (
-            assigned.select("cid", F.posexplode("emb").alias("dim", "v"))
-            .groupBy("cid", "dim")
-            .agg((F.sum(F.col("v").cast("decimal(30,15)")).cast("double")
-                  / F.count("v")).alias("c"))
-            .groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "c")))
-                 .alias("p"))
-            .select("cid", F.transform("p", lambda q: q["c"]).alias("cent")))
-    return assigned
+    init = (emb.filter(F.col("vec_id") < k)
+            .select(F.col("vec_id").cast("int").alias("cid"),
+                    F.col("emb").alias("cent")))
+    return _lloyd(emb, init, [], iters)[0]
 
 
 def kmeans_clusters(spark: SparkSession, sf_dir: str,
@@ -491,47 +528,39 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str,
                     "mean_sqdist"))
 
 
-_KM_DIST = ("list_reduce(list_transform(list_zip(e.emb, c.cent), "
-            "p -> (p[1]-p[2])*(p[1]-p[2])), (acc, x) -> acc + x)")
+_SQL_SQDIST = ("list_reduce(list_transform(list_zip(e.emb, c.cent), "
+               "p -> (p[1]-p[2])*(p[1]-p[2])), (acc, x) -> acc + x)")
+
+
+def _sql_nearest(i: int, points: str, cents: str, carry: str = "emb") -> str:
+    """CTEs ``d<i>``, ``a<i>``: each ``points`` row's nearest centroid
+    in ``cents`` as ``(vec_id, carry, cid, dist)``, ties to the lower
+    cid."""
+    return f"""d{i} AS (
+  SELECT e.vec_id, e.{carry}, c.cid, {_SQL_SQDIST} AS dist
+  FROM {points} e CROSS JOIN {cents} c
+),
+a{i} AS (
+  SELECT vec_id, {carry}, cid, dist
+  FROM ({_sql_top_k(f"d{i}", "vec_id", "dist, cid", 1, "rn")})
+)"""
+
+
+def _sql_lloyd(points: str, iters: int) -> str:
+    """CTEs of ``iters`` Lloyd rounds from the centroid table ``c0``:
+    round i assigns in ``a<i>`` and moves the centroids in ``c<i>``."""
+    return ",\n".join(
+        f"{_sql_nearest(i, points, f'c{i - 1}')},\n"
+        f"c{i} AS ({_sql_centroids('cid', f'a{i}')})"
+        for i in range(1, iters + 1))
+
 
 KMEANS_CTES = f"""
-WITH emb AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-  FROM embeddings
-),
+WITH {_sql_emb()},
 c0 AS (
   SELECT CAST(vec_id AS INT) AS cid, emb AS cent FROM emb WHERE vec_id < 8
 ),
-d1 AS (
-  SELECT e.vec_id, e.emb, c.cid, {_KM_DIST} AS dist
-  FROM emb e CROSS JOIN c0 c
-),
-a1 AS (
-  SELECT vec_id, emb, cid, dist FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist, cid) AS rn FROM d1)
-  WHERE rn = 1
-),
-m1 AS (
-  SELECT cid, dim,
-         CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) / COUNT(v) AS c
-  FROM (SELECT cid, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v
-        FROM a1)
-  GROUP BY cid, dim
-),
-c1 AS (
-  SELECT cid, list(c ORDER BY dim) AS cent FROM m1 GROUP BY cid
-),
-d2 AS (
-  SELECT e.vec_id, e.emb, c.cid, {_KM_DIST} AS dist
-  FROM emb e CROSS JOIN c1 c
-),
-a2 AS (
-  SELECT vec_id, cid, dist FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist, cid) AS rn FROM d2)
-  WHERE rn = 1
-)
+{_sql_lloyd("emb", 2)}
 """
 
 KMEANS_SQL = KMEANS_CTES + """
@@ -557,9 +586,10 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str,
     ``kmeans_clusters`` discipline: first-``ksub`` init, argmin ties to
     the lower code id, decimal centroid means):
 
-      1. subvector table: (vec_id, sub, sv[8]) via one slice-explode;
-      2. per-subspace Lloyd iterations — ONE broadcast join per
-         iteration trains all ``m`` codebooks at once (keyed on sub);
+      1. subvector table: (vec_id, sub, emb[8]) via one slice-explode;
+      2. per-subspace Lloyd iterations (``_lloyd`` keyed on sub) — ONE
+         broadcast join per iteration trains all ``m`` codebooks at
+         once;
       3. encode: per (vec, sub) argmin code -> 8 codes/vector;
       4. asymmetric distance: per query, a (sub, code) -> partial-L2
          lookup table (m x ksub = 128 rows/query, broadcast); corpus
@@ -576,54 +606,28 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str,
         "vec_id",
         F.explode(F.array(*[
             F.struct(F.lit(s).alias("sub"),
-                     F.slice("emb", s * d + 1, d).alias("sv"))
+                     F.slice("emb", s * d + 1, d).alias("emb"))
             for s in range(m)
-        ])).alias("p")).select("vec_id", "p.sub", "p.sv")
-
-    sqdist = F.aggregate(
-        F.zip_with("sv", "cent", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, x: a + x)
-    cents = (sv.filter(F.col("vec_id") < ksub)
-             .select("sub", F.col("vec_id").cast("int").alias("code"),
-                     F.col("sv").alias("cent")))
-    assigned = None
-    for _ in range(iters):
-        assigned = (
-            sv.join(F.broadcast(cents), "sub")
-            .withColumn("sq", sqdist)
-            .groupBy("vec_id", "sub")
-            .agg(F.min(F.struct("sq", "code")).alias("best"),
-                 F.first("sv").alias("sv"))
-            .select("vec_id", "sub", "sv", F.col("best.code").alias("code")))
-        cents = (
-            assigned.select("sub", "code",
-                            F.posexplode("sv").alias("dimi", "v"))
-            .groupBy("sub", "code", "dimi")
-            .agg((F.sum(F.col("v").cast("decimal(30,15)")).cast("double")
-                  / F.count("v")).alias("c"))
-            .groupBy("sub", "code")
-            .agg(F.array_sort(F.collect_list(F.struct("dimi", "c")))
-                 .alias("p"))
-            .select("sub", "code",
-                    F.transform("p", lambda q: q["c"]).alias("cent")))
-    codes = assigned.select("vec_id", "sub", "code")
+        ])).alias("p")).select("vec_id", "p.sub", "p.emb")
+    init = (sv.filter(F.col("vec_id") < ksub)
+            .select("sub", F.col("vec_id").cast("int").alias("cid"),
+                    F.col("emb").alias("cent")))
+    codes, cents = _lloyd(sv, init, ["sub"], iters)
 
     # per-query LUT: partial L2 from each (sub, code) cell
     q_sv = (sv.filter(F.col("vec_id") < N_QUERIES)
-            .select(F.col("vec_id").alias("query_id"), "sub", "sv"))
+            .select(F.col("vec_id").alias("query_id"), "sub", "emb"))
     lut = (q_sv.join(F.broadcast(cents), "sub")
-           .select("query_id", "sub", "code",
-                   sqdist.cast("decimal(30,15)").alias("part")))
+           .select("query_id", "sub", "cid",
+                   _sqdist().cast("decimal(30,15)").alias("part")))
     pairs = (
-        codes.select(F.col("vec_id").alias("neighbor_id"), "sub", "code")
-        .join(F.broadcast(lut), ["sub", "code"])
+        codes.select(F.col("vec_id").alias("neighbor_id"), "sub", "cid")
+        .join(F.broadcast(lut), ["sub", "cid"])
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .groupBy("query_id", "neighbor_id")
         .agg(F.round(F.sum("part").cast("double"), 6).alias("approx_sqdist")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sqdist").asc(), F.col("neighbor_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
+    return (_top_k(pairs, "query_id",
+                   [F.col("approx_sqdist").asc(), F.col("neighbor_id")], TOP_K)
             .select("query_id", "neighbor_id", "approx_sqdist", "rank"))
 
 
@@ -639,49 +643,28 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _embeddings(spark, sf_dir)
     anchors = (emb.filter(F.col("vec_id") < N_QUERIES)
                .select(F.col("vec_id").alias("anchor_id"),
-                       F.col("label").alias("a_label"),
-                       F.col("emb").alias("a_emb"),
-                       V.l2_norm("emb").alias("n_a")))
+                       F.col("label").alias("a_label"), *_side("a")))
     corpus = emb.select(F.col("vec_id").alias("negative_id"),
-                        F.col("label").alias("c_label"),
-                        F.col("emb").alias("c_emb"),
-                        V.l2_norm("emb").alias("n_c"))
-    sim = F.round(V.dot(F.col("a_emb"), F.col("c_emb"))
-                  / (F.col("n_a") * F.col("n_c")), 6)
+                        F.col("label").alias("c_label"), *_side("c"))
     pairs = (corpus.join(F.broadcast(anchors),
                          F.col("a_label") != F.col("c_label"))
-             .select("anchor_id", "negative_id", sim.alias("cosine_sim")))
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cosine_sim"), F.asc("negative_id"))
-    return (pairs.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") == 1)
+             .select("anchor_id", "negative_id",
+                     _cosine("a", "c").alias("cosine_sim")))
+    return (_top_k(pairs, "anchor_id",
+                   [F.desc("cosine_sim"), F.asc("negative_id")], 1)
             .select("anchor_id", "negative_id", "cosine_sim"))
 
 
 HARD_NEGATIVE_SQL = f"""
-WITH emb AS (
-  SELECT vec_id, label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-  FROM embeddings
-),
+WITH {_sql_emb("label")},
 pairs AS (
   SELECT a.vec_id AS anchor_id, c.vec_id AS negative_id,
-         round(
-           list_reduce(list_transform(list_zip(a.emb, c.emb),
-                                      p -> p[1] * p[2]), (acc, x) -> acc + x)
-           / (sqrt(list_reduce(list_transform(a.emb, x -> x * x), (acc, x) -> acc + x))
-            * sqrt(list_reduce(list_transform(c.emb, x -> x * x), (acc, x) -> acc + x))),
-           6) AS cosine_sim
+         {_sql_cosine("a.emb", "c.emb")} AS cosine_sim
   FROM emb a, emb c
   WHERE a.vec_id < {N_QUERIES} AND a.label != c.label
-),
-ranked AS (
-  SELECT anchor_id, negative_id, cosine_sim,
-         row_number() OVER (PARTITION BY anchor_id
-                            ORDER BY cosine_sim DESC, negative_id) AS rn
-  FROM pairs
 )
-SELECT anchor_id, negative_id, cosine_sim FROM ranked WHERE rn = 1
+SELECT anchor_id, negative_id, cosine_sim
+FROM ({_sql_top_k("pairs", "anchor_id", "cosine_sim DESC, negative_id", 1)})
 """
 
 
@@ -725,68 +708,39 @@ def ann_srp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nrm", V.l2_norm("emb"))
     queries = (b.filter(F.col("vec_id") < N_QUERIES)
                .select(F.col("vec_id").alias("query_id"),
-                       F.col("emb").alias("q_emb"),
-                       F.col("nrm").alias("n_q"),
-                       "bucket"))
+                       *_side("q", "nrm"), "bucket"))
     corpus = b.select(F.col("vec_id").alias("neighbor_id"),
-                      F.col("emb").alias("c_emb"),
-                      F.col("nrm").alias("n_c"), "bucket")
-    sim = F.round(V.dot(F.col("q_emb"), F.col("c_emb"))
-                  / (F.col("n_q") * F.col("n_c")), 6)
-    pairs = (corpus.join(F.broadcast(queries), "bucket")
-             .filter(F.col("query_id") != F.col("neighbor_id"))
-             .select("query_id", "neighbor_id", sim.alias("cosine_sim")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine_sim"), F.asc("neighbor_id"))
-    return (pairs.withColumn("rank",
-                             F.row_number().over(w).cast("int"))
-            .filter(F.col("rank") <= TOP_K))
+                      *_side("c", "nrm"), "bucket")
+    return _rank_neighbors(
+        corpus.join(F.broadcast(queries), "bucket")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id",
+                _cosine("q", "c").alias("cosine_sim")))
 
 
-def _srp_row_sql(row: list[float]) -> str:
-    # ::DOUBLE[] — bare 1.0 literals are DECIMAL in DuckDB, and the
-    # products must be double×double to match Spark bit-for-bit
-    lits = ", ".join(str(v) for v in row)
-    return (f"list_reduce(list_transform(list_zip(emb, [{lits}]::DOUBLE[]),"
-            " p -> p[1] * p[2]), (acc, x) -> acc + x)")
-
-
+# ::DOUBLE[] — bare 1.0 literals are DECIMAL in DuckDB, and the
+# products must be double×double to match Spark bit-for-bit
 _SRP_SIGNS_SQL = ",\n         ".join(
-    f"CASE WHEN {_srp_row_sql(row)} >= 0 THEN {1 << h} ELSE 0 END AS b{h}"
+    f"CASE WHEN {_sql_dot('emb', '[' + ', '.join(map(str, row)) + ']::DOUBLE[]')}"
+    f" >= 0 THEN {1 << h} ELSE 0 END AS b{h}"
     for h, row in enumerate(_SRP))
 _SRP_BUCKET_SQL = " + ".join(f"b{h}" for h in range(len(_SRP)))
 
 ANN_SRP_SQL = f"""
-WITH emb AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-  FROM embeddings
-), s AS (
+WITH {_sql_emb()}, s AS (
   SELECT vec_id, emb,
          {_SRP_SIGNS_SQL}
   FROM emb
 ), b AS (
   SELECT vec_id, emb, {_SRP_BUCKET_SQL} AS bucket,
-         sqrt(list_reduce(list_transform(emb, x -> x * x),
-                          (acc, x) -> acc + x)) AS nrm
+         sqrt({_sql_sumsq("emb")}) AS nrm
   FROM s
 ), pairs AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         round(
-           list_reduce(list_transform(list_zip(q.emb, c.emb),
-                                      p -> p[1] * p[2]), (acc, x) -> acc + x)
-           / (q.nrm * c.nrm), 6) AS cosine_sim
+         round({_sql_dot("q.emb", "c.emb")} / (q.nrm * c.nrm), 6) AS cosine_sim
   FROM b q JOIN b c ON q.bucket = c.bucket AND q.vec_id != c.vec_id
   WHERE q.vec_id < {N_QUERIES}
-), ranked AS (
-  SELECT query_id, neighbor_id, cosine_sim,
-         CAST(row_number() OVER (PARTITION BY query_id
-                                 ORDER BY cosine_sim DESC, neighbor_id)
-              AS INT) AS rank
-  FROM pairs
-)
-SELECT query_id, neighbor_id, cosine_sim, rank
-FROM ranked WHERE rank <= {TOP_K}
-"""
+)""" + _SQL_RANK_NEIGHBORS
 
 
 def embedding_dup_clusters(spark: SparkSession, sf_dir: str,
@@ -828,7 +782,7 @@ def embedding_dup_clusters(spark: SparkSession, sf_dir: str,
 
 EMBEDDING_DUP_CLUSTERS_SQL = f"""
 WITH pairs AS (
-  SELECT id_a, id_b FROM ({_EMBEDDING_NEAR_DUPS_SQL_T.replace("{thr}", "0.35")})
+  SELECT id_a, id_b FROM ({_sql_near_dups(0.35)})
 ), edges AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
   UNION ALL
@@ -924,19 +878,11 @@ def matryoshka_truncation_audit(spark: SparkSession, sf_dir: str,
 
 
 MATRYOSHKA_SQL = f"""
-WITH e AS (
+WITH {_sql_emb("label")}, per AS (
   SELECT label,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-  FROM embeddings
-), per AS (
-  SELECT label,
-         CAST(floor(
-           list_reduce(list_transform(emb[1:{16}], x -> x * x),
-                       (acc, x) -> acc + x)
-           / list_reduce(list_transform(emb, x -> x * x),
-                         (acc, x) -> acc + x)
-           * 1000000.0 + 0.5) AS BIGINT) AS energy_ppm
-  FROM e
+         CAST(floor({_sql_sumsq("emb[1:16]")} / {_sql_sumsq("emb")}
+                    * 1000000.0 + 0.5) AS BIGINT) AS energy_ppm
+  FROM emb
 )
 SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
        CAST(SUM(energy_ppm) // COUNT(*) AS BIGINT) AS avg_energy_ppm,
@@ -961,9 +907,7 @@ def knn_classifier_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     votes = (nb.join(lab, nb.neighbor_id == lab.vec_id)
              .groupBy("query_id", "label")
              .agg(F.count(F.lit(1)).alias("v")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("v"), "label")
-    pred = (votes.withColumn("r", F.row_number().over(w))
-            .filter(F.col("r") == 1)
+    pred = (_top_k(votes, "query_id", [F.desc("v"), "label"], 1, "r")
             .select("query_id", F.col("label").alias("predicted_label"),
                     F.col("v").alias("votes")))
     truth = lab.select(F.col("vec_id").alias("query_id"),
@@ -983,11 +927,7 @@ WITH nb AS (
   GROUP BY 1, 2
 ), pred AS (
   SELECT query_id, label AS predicted_label, v AS votes
-  FROM (SELECT query_id, label, v,
-               ROW_NUMBER() OVER (PARTITION BY query_id
-                                  ORDER BY v DESC, label) AS r
-        FROM votes)
-  WHERE r = 1
+  FROM ({_sql_top_k("votes", "query_id", "v DESC, label", 1)})
 )
 SELECT p.query_id, e.label AS true_label, p.predicted_label, p.votes,
        CAST(p.predicted_label = e.label AS INT) AS correct
@@ -1009,25 +949,16 @@ def cluster_balanced_sample(spark: SparkSession, sf_dir: str,
     verbatim) and the pick is the ``grouped_sample_topk`` md5 rule.
     Scale: clustering cost is the audit's; the pick is one window over
     cluster-partitioned data."""
-    assigned = kmeans_assignments(spark, sf_dir)
-    w = Window.partitionBy("cid").orderBy(
-        F.md5(F.col("vec_id").cast("string")), "vec_id")
-    return (assigned
-            .withColumn("pick_rank", F.row_number().over(w).cast("int"))
-            .filter(F.col("pick_rank") <= per_cluster)
-            .select(F.col("cid").alias("cluster_id"), "vec_id",
-                    "pick_rank"))
+    return (_top_k(kmeans_assignments(spark, sf_dir), "cid",
+                   [F.md5(F.col("vec_id").cast("string")), "vec_id"],
+                   per_cluster, "pick_rank")
+            .select(F.col("cid").alias("cluster_id"), "vec_id", "pick_rank"))
 
 
-CLUSTER_SAMPLE_SQL = KMEANS_CTES + """
+CLUSTER_SAMPLE_SQL = KMEANS_CTES + f"""
 SELECT cid AS cluster_id, vec_id, pick_rank
-FROM (SELECT cid, vec_id,
-             CAST(ROW_NUMBER() OVER (
-               PARTITION BY cid
-               ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS INT)
-               AS pick_rank
-      FROM a2)
-WHERE pick_rank <= 2
+FROM ({_sql_top_k("a2", "cid", "md5(CAST(vec_id AS VARCHAR)), vec_id", 2,
+                  "pick_rank")})
 """
 
 
@@ -1042,7 +973,7 @@ def embedding_dim_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``embedding_int8_quant_error``).
 
     Scale: one posexplode into a (dim) aggregate — dims x 1 cells, the
-    same shuffle shape as ``label_centroids``."""
+    same shuffle shape as ``_centroids``."""
     emb = _embeddings(spark, sf_dir)
     by_dim = emb.select(F.posexplode("emb").alias("dim", "v"))
     agg = (by_dim.groupBy("dim")
@@ -1059,11 +990,10 @@ def embedding_dim_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
                        (var < 1e-6).cast("int").alias("is_dead")))
 
 
-DIM_VARIANCE_SQL = """
-WITH by_dim AS (
+DIM_VARIANCE_SQL = f"""
+WITH {_sql_emb()}, by_dim AS (
   SELECT generate_subscripts(emb, 1) - 1 AS dim, unnest(emb) AS v
-  FROM (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-        FROM embeddings)
+  FROM emb
 ), agg AS (
   SELECT dim, COUNT(*) AS n,
          SUM(CAST(v AS DECIMAL(30,15))) AS s,
@@ -1093,12 +1023,11 @@ def incremental_ivf_assign(spark: SparkSession, sf_dir: str,
     (new vectors landing far from their cells = the index is stale).
 
     Split rule (stated, oracle identical): vec_id % 10 == 0 plays the
-    new batch. Centroid fitting follows ``kmeans_assignments``'s
-    determinism discipline verbatim (first-k-of-base init by vec_id
-    order, identical IEEE distance accumulation, argmin ties to the
-    lower cid, decimal(30,15) means); both populations are then
-    assigned to the POST-fit centroids in one broadcast pass, so base
-    and new distances are comparable (same frozen index).
+    new batch. Centroid fitting is ``_lloyd``, as in
+    ``kmeans_assignments`` (first-k-of-base init by vec_id order);
+    both populations are then assigned to the POST-fit centroids in
+    one broadcast pass, so base and new distances are comparable (same
+    frozen index).
 
     Scale: k-row centroid broadcasts, one (cluster, dim) shuffle per
     fit iteration, one tagged assignment pass; output is k rows."""
@@ -1108,38 +1037,14 @@ def incremental_ivf_assign(spark: SparkSession, sf_dir: str,
     # init = the first k BASE vectors; ids are dense so the base split
     # (vec_id % 10 != 0) makes these exactly vec_id 1..k — a literal
     # slice, same boundedness idiom as kmeans_assignments' vec_id < k
-    cents = (base.filter(F.col("vec_id").between(1, k))
-             .select((F.col("vec_id") - 1).cast("int").alias("cid"),
-                     F.col("emb").alias("cent")))
-    dist = F.aggregate(
-        F.zip_with("emb", "cent", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda a, x: a + x)
-    for _ in range(iters):
-        assigned = (base.crossJoin(F.broadcast(cents))
-                    .withColumn("dist", dist)
-                    .groupBy("vec_id")
-                    .agg(F.min(F.struct("dist", "cid")).alias("m"),
-                         F.first("emb").alias("emb"))
-                    .select("vec_id", "emb", F.col("m.cid").alias("cid")))
-        cents = (
-            assigned.select("cid", F.posexplode("emb").alias("dim", "v"))
-            .groupBy("cid", "dim")
-            .agg((F.sum(F.col("v").cast("decimal(30,15)")).cast("double")
-                  / F.count("v")).alias("c"))
-            .groupBy("cid")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "c")))
-                 .alias("p"))
-            .select("cid", F.transform("p", lambda q: q["c"])
-                    .alias("cent")))
+    init = (base.filter(F.col("vec_id").between(1, k))
+            .select((F.col("vec_id") - 1).cast("int").alias("cid"),
+                    F.col("emb").alias("cent")))
+    cents = _lloyd(base, init, [], iters)[1]
     tagged = (base.withColumn("is_new", F.lit(0))
               .unionByName(new.withColumn("is_new", F.lit(1))))
-    routed = (tagged.crossJoin(F.broadcast(cents))
-              .withColumn("dist", dist)
-              .groupBy("vec_id")
-              .agg(F.min(F.struct("dist", "cid")).alias("m"),
-                   F.first("is_new").alias("is_new"))
-              .select(F.col("m.cid").alias("cid"), "is_new",
-                      F.col("m.dist").alias("dist")))
+    routed = _nearest(tagged, cents, [], "is_new").select("cid", "is_new",
+                                                          "dist")
     per = (routed.groupBy("cid")
            .agg(F.sum(F.when(F.col("is_new") == 0, 1).otherwise(0))
                 .alias("base_n"),
@@ -1167,75 +1072,21 @@ def incremental_ivf_assign(spark: SparkSession, sf_dir: str,
                     F.coalesce("new_msd", F.lit(0.0)).alias("new_msd")))
 
 
-_IVF_DIST = ("list_reduce(list_transform(list_zip(e.emb, c.cent), "
-             "p -> (p[1]-p[2])*(p[1]-p[2])), (acc, x) -> acc + x)")
-
 INCREMENTAL_IVF_SQL = f"""
-WITH emb AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-  FROM embeddings
-),
+WITH {_sql_emb()},
 base AS (SELECT * FROM emb WHERE vec_id % 10 != 0),
 newb AS (SELECT * FROM emb WHERE vec_id % 10 = 0),
 c0 AS (
   SELECT CAST(vec_id - 1 AS INT) AS cid, emb AS cent
   FROM base WHERE vec_id BETWEEN 1 AND 8
 ),
-d1 AS (
-  SELECT e.vec_id, e.emb, c.cid, {_IVF_DIST} AS dist
-  FROM base e CROSS JOIN c0 c
-),
-a1 AS (
-  SELECT vec_id, emb, cid FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist, cid) AS rn FROM d1)
-  WHERE rn = 1
-),
-m1 AS (
-  SELECT cid, dim,
-         CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) / COUNT(v) AS c
-  FROM (SELECT cid, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v
-        FROM a1)
-  GROUP BY cid, dim
-),
-c1 AS (
-  SELECT cid, list(c ORDER BY dim) AS cent FROM m1 GROUP BY cid
-),
-d2 AS (
-  SELECT e.vec_id, e.emb, c.cid, {_IVF_DIST} AS dist
-  FROM base e CROSS JOIN c1 c
-),
-a2 AS (
-  SELECT vec_id, emb, cid FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist, cid) AS rn FROM d2)
-  WHERE rn = 1
-),
-m2 AS (
-  SELECT cid, dim,
-         CAST(SUM(CAST(v AS DECIMAL(30,15))) AS DOUBLE) / COUNT(v) AS c
-  FROM (SELECT cid, generate_subscripts(emb, 1) AS dim, unnest(emb) AS v
-        FROM a2)
-  GROUP BY cid, dim
-),
-c2 AS (
-  SELECT cid, list(c ORDER BY dim) AS cent FROM m2 GROUP BY cid
-),
+{_sql_lloyd("base", 2)},
 tagged AS (
   SELECT vec_id, emb, 0 AS is_new FROM base
   UNION ALL
   SELECT vec_id, emb, 1 AS is_new FROM newb
 ),
-d3 AS (
-  SELECT e.vec_id, e.is_new, c.cid, {_IVF_DIST} AS dist
-  FROM tagged e CROSS JOIN c2 c
-),
-a3 AS (
-  SELECT vec_id, is_new, cid, dist FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                 ORDER BY dist, cid) AS rn FROM d3)
-  WHERE rn = 1
-),
+{_sql_nearest(3, "tagged", "c2", "is_new")},
 per AS (
   SELECT cid,
          CAST(SUM(CASE WHEN is_new = 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1288,45 +1139,23 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str,
     broadcast by construction; leg ranks are WindowGroupLimit top-k
     partitioned by query; the fusion join is (query x ≤2·leg_k) rows.
     No un-bounded window, no doc x doc."""
-    from spark_kafka_airflow_pipeline_spark.operators.corpusops import (
-        _word_trigrams,
-    )
-
     # -- dense leg: exact cosine of the query slice vs all vectors ---
     emb = _embeddings(spark, sf_dir)
     q = (emb.filter(F.col("vec_id") < n_queries)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("emb").alias("q_emb"),
-                 V.l2_norm("emb").alias("n_q")))
-    c = emb.select(F.col("vec_id").alias("doc_id"),
-                   F.col("emb").alias("c_emb"),
-                   V.l2_norm("emb").alias("n_c"))
-    dsim = F.round(V.dot(F.col("q_emb"), F.col("c_emb"))
-                   / (F.col("n_q") * F.col("n_c")), 6)
-    dw = Window.partitionBy("query_id").orderBy(
-        F.col("dcos").desc(), F.col("doc_id"))
-    dense = (c.join(F.broadcast(q), F.col("query_id") != F.col("doc_id"))
-             .select("query_id", "doc_id", dsim.alias("dcos"))
-             .withColumn("r", F.row_number().over(dw))
-             .filter(F.col("r") <= leg_k)
-             .select("query_id", "doc_id",
-                     F.col("r").cast("int").alias("dense_rank")))
+         .select(F.col("vec_id").alias("query_id"), *_side("q")))
+    c = emb.select(F.col("vec_id").alias("doc_id"), *_side("c"))
+    dense = (_top_k(c.join(F.broadcast(q), F.col("query_id") != F.col("doc_id"))
+                    .select("query_id", "doc_id", _cosine("q", "c").alias("dcos")),
+                    "query_id", [F.col("dcos").desc(), F.col("doc_id")], leg_k,
+                    "r")
+             .select("query_id", "doc_id", F.col("r").alias("dense_rank")))
 
     # -- sparse leg: trigram tf-idf cosine, query slice vs corpus ----
-    d = table(spark, sf_dir, "documents")
-    tf = (_word_trigrams(d)
-          .groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf")))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n = d.agg(F.count(F.lit(1)).alias("n_docs"))
     # the tf-idf posting list (this IS the search index): norms, the
     # df-kept slice, the query slice and the dot join all consume it —
     # materialize once instead of re-running trigram explode + two aggs
     # per consumer (r9 scan census; measured 5.9s -> below at sf0.1)
-    weights = barrier(tf.join(dfreq, "term").crossJoin(F.broadcast(n))
-                      .select("doc_id", "term", "df",
-                              F.expr("tf * CAST(floor(round(ln((n_docs + 1)"
-                                     " / (df + 1)) + 1, 6) * 1000 + 0.5)"
-                                     " AS BIGINT)").alias("w")))
+    weights = barrier(_trigram_tfidf(table(spark, sf_dir, "documents")))
     norms = weights.groupBy("doc_id").agg(
         F.sum(F.col("w") * F.col("w")).alias("norm2"))
     kept = weights.filter((F.col("df") >= 2) & (F.col("df") <= 64))
@@ -1346,12 +1175,9 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str,
                                             * F.sqrt(F.col("nd")
                                                      .cast("double"))), 6)
                     .alias("scos")))
-    sw = Window.partitionBy("query_id").orderBy(
-        F.col("scos").desc(), F.col("doc_id"))
-    sparse = (scos.withColumn("r", F.row_number().over(sw))
-              .filter(F.col("r") <= leg_k)
-              .select("query_id", "doc_id",
-                      F.col("r").cast("int").alias("sparse_rank")))
+    sparse = (_top_k(scos, "query_id", [F.col("scos").desc(), F.col("doc_id")],
+                     leg_k, "r")
+              .select("query_id", "doc_id", F.col("r").alias("sparse_rank")))
 
     # -- fuse: integer-micro reciprocal ranks ------------------------
     fused = (dense.join(sparse, ["query_id", "doc_id"], "full_outer")
@@ -1361,60 +1187,23 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str,
                       + F.coalesce(F.expr(f"1000000 DIV ({rrf_k}"
                                           " + sparse_rank)"), F.lit(0)))
                      .cast("bigint").alias("rrf_micros")))
-    fw = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_micros").desc(), F.col("doc_id"))
-    return (fused.withColumn("r", F.row_number().over(fw))
-            .filter(F.col("r") <= topk)
+    return (_top_k(fused, "query_id",
+                   [F.col("rrf_micros").desc(), F.col("doc_id")], topk, "r")
             .select("query_id", "doc_id", "dense_rank", "sparse_rank",
-                    "rrf_micros", F.col("r").cast("int").alias("rank"))
+                    "rrf_micros", F.col("r").alias("rank"))
             .orderBy("query_id", "rank"))
 
 
-RRF_HYBRID_SQL = """
-WITH emb AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
-  FROM embeddings
-), dense_pairs AS (
+RRF_HYBRID_SQL = f"""
+WITH {_sql_emb()}, dense_pairs AS (
   SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
-         round(
-           list_reduce(list_transform(list_zip(q.emb, c.emb),
-                                      p -> p[1] * p[2]),
-                       (acc, x) -> acc + x)
-           / (sqrt(list_reduce(list_transform(q.emb, x -> x * x),
-                               (acc, x) -> acc + x))
-            * sqrt(list_reduce(list_transform(c.emb, x -> x * x),
-                               (acc, x) -> acc + x))), 6) AS dcos
+         {_sql_cosine("q.emb", "c.emb")} AS dcos
   FROM emb q, emb c
   WHERE q.vec_id < 5 AND q.vec_id != c.vec_id
 ), dense AS (
-  SELECT query_id, doc_id, CAST(r AS INT) AS dense_rank
-  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY dcos DESC, doc_id) AS r
-        FROM dense_pairs)
-  WHERE r <= 20
-), toks AS (
-  SELECT doc_id,
-         unnest(CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                ELSE list_transform(range(1, len(t) - 1),
-                                    i -> array_to_string(t[i:i+2], ' '))
-                END) AS term
-  FROM (SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents)
-), tf AS (
-  SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2
-), dfreq AS (
-  SELECT term, COUNT(*) AS df FROM tf GROUP BY 1
-), n AS (SELECT COUNT(*) AS n_docs FROM documents),
-weights AS (
-  SELECT doc_id, tf.term, df,
-         tf * CAST(floor(round(ln((n_docs + 1) / (df + 1)) + 1, 6)
-                         * 1000 + 0.5) AS BIGINT) AS w
-  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n
-), norms AS (
-  SELECT doc_id, CAST(SUM(w * w) AS BIGINT) AS norm2
-  FROM weights GROUP BY doc_id
-), kept AS (
+  SELECT query_id, doc_id, r AS dense_rank
+  FROM ({_sql_top_k("dense_pairs", "query_id", "dcos DESC, doc_id", 20, "r")})
+), {_TFIDF_SQL}, kept AS (
   SELECT doc_id, term, w FROM weights WHERE df BETWEEN 2 AND 64
 ), dots AS (
   SELECT q.doc_id AS query_id, d.doc_id,
@@ -1430,11 +1219,8 @@ weights AS (
   JOIN norms nq ON dots.query_id = nq.doc_id
   JOIN norms nd ON dots.doc_id = nd.doc_id
 ), sparse AS (
-  SELECT query_id, doc_id, CAST(r AS INT) AS sparse_rank
-  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY scos DESC, doc_id) AS r
-        FROM scosed)
-  WHERE r <= 20
+  SELECT query_id, doc_id, r AS sparse_rank
+  FROM ({_sql_top_k("scosed", "query_id", "scos DESC, doc_id", 20, "r")})
 ), fused AS (
   SELECT COALESCE(d.query_id, s.query_id) AS query_id,
          COALESCE(d.doc_id, s.doc_id) AS doc_id,
@@ -1446,12 +1232,8 @@ weights AS (
   FULL OUTER JOIN sparse s
     ON d.query_id = s.query_id AND d.doc_id = s.doc_id
 )
-SELECT query_id, doc_id, dense_rank, sparse_rank, rrf_micros,
-       CAST(r AS INT) AS rank
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-             ORDER BY rrf_micros DESC, doc_id) AS r
-      FROM fused)
-WHERE r <= 10
+SELECT query_id, doc_id, dense_rank, sparse_rank, rrf_micros, r AS rank
+FROM ({_sql_top_k("fused", "query_id", "rrf_micros DESC, doc_id", 10, "r")})
 ORDER BY query_id, rank
 """
 

@@ -19,6 +19,10 @@ from spark_kafka_airflow_pipeline_spark.operators.base import (
     ppm,
     table,
 )
+from spark_kafka_airflow_pipeline_spark.operators.corpusops import (
+    _TFIDF_SQL,
+    _trigram_tfidf,
+)
 from spark_kafka_airflow_pipeline_spark.operators.relational import davg, SQL_DAVG
 
 
@@ -2203,20 +2207,7 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str,
     family here works on n-grams."""
     from pyspark.sql import Window
 
-    d = table(spark, sf_dir, "documents")
-    toks = (d.select("doc_id", T.split_tokens("text").alias("t"))
-        .select("doc_id", F.explode(F.expr(
-            "CASE WHEN size(t) <= 3 THEN array(array_join(t, ' ')) "
-            "ELSE transform(sequence(0, size(t) - 3), "
-            "i -> array_join(slice(t, i + 1, 3), ' ')) END")).alias("term")))
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    weights = (tf.join(dfreq, "term").crossJoin(F.broadcast(n))
-               .select("doc_id", "term", "df",
-                       F.expr("tf * CAST(floor(round(ln((n_docs + 1)"
-                              " / (df + 1)) + 1, 6) * 1000 + 0.5)"
-                              " AS BIGINT)").alias("w")))
+    weights = _trigram_tfidf(table(spark, sf_dir, "documents"))
     # NOTE (r9 scan census): a barrier on `weights` was A/B
     # tested and REVERTED — AQE's runtime exchange reuse already
     # dedupes the posting-list pipeline here, and materialization
@@ -2251,30 +2242,8 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str,
                     "cosine", F.col("rk").cast("bigint").alias("rank")))
 
 
-SPARSE_COSINE_SQL = """
-WITH toks AS (
-  SELECT doc_id,
-         unnest(CASE WHEN len(t) <= 3 THEN [array_to_string(t, ' ')]
-                ELSE list_transform(range(1, len(t) - 1),
-                                    i -> array_to_string(t[i:i+2], ' '))
-                END) AS term
-  FROM (SELECT doc_id,
-               regexp_split_to_array(lower(trim(text)), '\\s+') AS t
-        FROM documents)
-), tf AS (
-  SELECT doc_id, term, COUNT(*) AS tf FROM toks GROUP BY 1, 2
-), dfreq AS (
-  SELECT term, COUNT(*) AS df FROM tf GROUP BY 1
-), n AS (SELECT COUNT(*) AS n_docs FROM documents),
-weights AS (
-  SELECT doc_id, tf.term, df,
-         tf * CAST(floor(round(ln((n_docs + 1) / (df + 1)) + 1, 6)
-                         * 1000 + 0.5) AS BIGINT) AS w
-  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN n
-), norms AS (
-  SELECT doc_id, CAST(SUM(w * w) AS BIGINT) AS norm2
-  FROM weights GROUP BY doc_id
-), kept AS (
+SPARSE_COSINE_SQL = f"""
+WITH {_TFIDF_SQL}, kept AS (
   SELECT doc_id, term, w FROM weights WHERE df BETWEEN 2 AND 64
 ), pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,

@@ -139,10 +139,11 @@ def validate_fields_split(
     return ok, ko, annotated if cache else None
 
 
-def validate_fields(df: DataFrame,
-                    validations: Iterable[Validation],
-                    cache: bool = True) -> tuple[DataFrame, DataFrame]:
+def validate_fields(
+        df: DataFrame, validations: Iterable[Validation],
+) -> tuple[DataFrame, DataFrame]:
     """Two-value form of :func:`validate_fields_split` (``ok, ko``) for
-    callers that manage no cache lifecycle."""
-    ok, ko, _ = validate_fields_split(df, validations, cache=cache)
+    callers that manage no cache lifecycle, so it caches nothing: a
+    cached parent it returned no handle to could never be released."""
+    ok, ko, _ = validate_fields_split(df, validations, cache=False)
     return ok, ko

@@ -38,6 +38,20 @@ def fixture_df(spark, tmp_path_factory):
     return spark.read.json(str(path))
 
 
+def test_validate_fields_caches_nothing(spark, fixture_df):
+    """The two-value form returns no handle to a cached parent, so it
+    must not cache one: after both splits are collected, no new RDD is
+    persisted."""
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    ok, ko = validate_fields(fixture_df, RULES)
+    ok.collect()
+    ko.collect()
+    assert persisted() - before == set()
+
+
 def test_reference_fixture_split(fixture_df):
     """Expected per FIXTURES.md §1: ok={Fran}, ko={Xabier:[office-notEmpty],
     Miguel:[age-notNull]}."""

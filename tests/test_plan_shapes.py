@@ -48,6 +48,44 @@ def test_dedup_operators_scan_budget(spark, sf_dir, fn, max_scans):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+# Ceilings on each retriever's corpus reads: the counts when
+# similarity.py's search stages became shared functions (its module
+# docstring). The dedup budget test above cannot take these:
+# cosine_topk's query side and the k-means centroid tables broadcast
+# against the corpus as k-constant BroadcastNestedLoopJoins by design.
+_RETRIEVER_SCANS = [
+    ("rrf_hybrid_retrieval", 2),   # tf-idf posting list behind a barrier
+    ("incremental_ivf_assign", 8),
+    ("embedding_dim_variance", 1),
+    ("cluster_balanced_sample", 3),
+    ("knn_classifier_eval", 4),
+    ("matryoshka_truncation_audit", 1),
+    ("ann_recall_report", 4),
+    ("embedding_dup_clusters", 0),  # pair graph behind a barrier
+    ("embedding_int8_quant_error", 1),
+    ("hard_negative_mining", 2),
+    ("ann_srp_topk", 2),
+    ("cosine_topk", 2),
+    ("embedding_near_dups", 2),
+    ("label_centroid_similarity", 2),
+    ("embedding_norm_stats", 1),
+    ("ann_lsh_topk", 4),
+    ("ivf_ann_topk", 3),
+    ("pq_ann_topk", 7),
+    ("kmeans_clusters", 3),
+    ("sparse_cosine_pairs", 12),
+]
+
+
+@pytest.mark.parametrize("name,max_scans", _RETRIEVER_SCANS)
+def test_retriever_scan_budget(spark, sf_dir, name, max_scans):
+    import __spark_entry__ as entry_mod
+
+    plan = _plan(entry_mod.queries()[name](spark, sf_dir))
+    assert plan.count("Scan parquet") <= max_scans, plan.count("Scan parquet")
+    assert "CartesianProduct" not in plan
+
+
 def test_incremental_minhash_single_signature_pass(spark, sf_dir):
     """Batch + corpus share ONE signature pipeline (the is_new flag
     rides the groupBy); cross-side screening must not add a second

@@ -44,7 +44,7 @@ def test_validate_split_partitions_any_input(spark, rows):
     valid fields — including the reference's dropped-from-both-splits
     NULL trap (SURVEY.md §2.3.3)."""
     df = spark.createDataFrame(rows, "id long, office string, age long")
-    ok, ko = validate_fields(df, RULES, cache=False)
+    ok, ko = validate_fields(df, RULES)
     ok_ids = [r["id"] for r in ok.select("id").collect()]
     ko_rows = {r["id"]: list(r[ERROR_COLUMN]) for r in ko.collect()}
     # exact partition: every input id in exactly one split
