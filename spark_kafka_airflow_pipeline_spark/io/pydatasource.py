@@ -37,9 +37,12 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-#: bucket of a hex char = its value; shared contract with the oracle's
-#: strpos('0123456789abcdef', c) - 1
-_HEX = "0123456789abcdef"
+
+def _seq_row(i: int) -> tuple[int, str, int]:
+    """Row ``i`` of ``seqgen``: (id, first 8 md5 hex chars, value of
+    the first hex char as the bucket)."""
+    h = hashlib.md5(str(i).encode()).hexdigest()
+    return i, h[:8], int(h[0], 16)
 
 
 class _SeqPartition(InputPartition):
@@ -98,8 +101,7 @@ class _SeqReader(DataSourceReader):
 
     def read(self, partition):  # noqa: ANN001, ANN201 - Spark API
         for i in range(partition.start, partition.end):
-            h = hashlib.md5(str(i).encode()).hexdigest()
-            yield (i, h[:8], _HEX.index(h[0]))
+            yield _seq_row(i)
 
 
 class _SeqStreamReader(SimpleDataSourceStreamReader):
@@ -120,16 +122,10 @@ class _SeqStreamReader(SimpleDataSourceStreamReader):
     def read(self, start):  # noqa: ANN001, ANN201 - Spark API
         s = start["i"]
         e = min(s + self.batch, self.n)
-        rows = [(i, hashlib.md5(str(i).encode()).hexdigest()[:8],
-                 _HEX.index(hashlib.md5(str(i).encode()).hexdigest()[0]))
-                for i in range(s, e)]
-        return iter(rows), {"i": e}
+        return iter([_seq_row(i) for i in range(s, e)]), {"i": e}
 
     def readBetweenOffsets(self, start, end):  # noqa: ANN001, ANN201
-        return iter([
-            (i, hashlib.md5(str(i).encode()).hexdigest()[:8],
-             _HEX.index(hashlib.md5(str(i).encode()).hexdigest()[0]))
-            for i in range(start["i"], end["i"])])
+        return iter([_seq_row(i) for i in range(start["i"], end["i"])])
 
 
 class SeqDataSource(DataSource):

@@ -11,7 +11,10 @@ matches the oracle):
 - floating-point aggregates are ``round()``-ed to a fixed scale in BOTH
   engines, computed in double precision;
 - top-k queries break ties on a unique key so the selected row SET is
-  unique even when the measure ties.
+  unique even when the measure ties;
+- a natural log that feeds an exact sum is the fixed-point
+  ``ln_micros``: ln rounded to 6 decimals, in integer micros, so the
+  reduction runs over BIGINTs.
 
 Materialization goes through ``barrier`` only; its docstring states the
 policy.
@@ -173,6 +176,14 @@ def ppm(numer: str, denom: str, mult: int = 1_000_000) -> str:
     overflow, so DuckDB oracles keep the simple `// ` expression."""
     return (f"CAST(CAST({numer} AS DECIMAL(38,0)) * {mult} "
             f"DIV ({denom}) AS BIGINT)")
+
+
+def ln_micros(arg: str) -> str:
+    """Fixed-point natural log: ``ln(arg)`` rounded to 6 decimals, in
+    integer micros (round half up). Spark SQL and DuckDB parse this
+    text identically, so ONE string serves the engine (``F.expr``) and
+    the oracle. ``arg`` is SQL text; callers keep ln's argument > 0."""
+    return f"CAST(floor(round(ln({arg}), 6) * 1000000.0 + 0.5) AS BIGINT)"
 
 
 def normalize_ntz(df: DataFrame) -> DataFrame:

@@ -21,7 +21,12 @@ from pyspark.sql import DataFrame, SparkSession, Window as Wn
 from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.functions import text as T
-from spark_kafka_airflow_pipeline_spark.operators.base import QueryFn, ppm, table
+from spark_kafka_airflow_pipeline_spark.operators.base import (
+    QueryFn,
+    ln_micros,
+    ppm,
+    table,
+)
 
 SPAN_W = 10  # tokens per dedup span
 
@@ -255,9 +260,8 @@ def unigram_entropy_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_doc = Wn.partitionBy("doc_id")
     contrib = tf.withColumn("n", F.sum("cnt").over(w_doc)).select(
         "doc_id", "n",
-        (F.col("cnt") * F.floor(
-            F.round(F.log(F.col("n").cast("double") / F.col("cnt")), 6)
-            * 1000000.0 + 0.5).cast("bigint")).alias("micros"))
+        F.expr("cnt * " + ln_micros("CAST(n AS DOUBLE) / cnt"))
+        .alias("micros"))
     per_doc = (contrib.groupBy("doc_id")
                .agg(F.max("n").alias("n_tokens"),
                     F.count(F.lit(1)).cast("int").alias("distinct_tokens"),
@@ -273,7 +277,7 @@ def unigram_entropy_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("entropy_micronats")))
 
 
-UNIGRAM_ENTROPY_SQL = r"""
+UNIGRAM_ENTROPY_SQL = rf"""
 WITH tf AS (
   SELECT doc_id, w, COUNT(*) AS cnt
   FROM (SELECT doc_id,
@@ -283,9 +287,8 @@ WITH tf AS (
   GROUP BY doc_id, w
 ), contrib AS (
   SELECT doc_id, SUM(cnt) OVER (PARTITION BY doc_id) AS n,
-         cnt * CAST(floor(
-           round(ln((SUM(cnt) OVER (PARTITION BY doc_id)) * 1.0 / cnt), 6)
-           * 1000000.0 + 0.5) AS BIGINT) AS micros
+         cnt * {ln_micros("(SUM(cnt) OVER (PARTITION BY doc_id)) * 1.0"
+                          " / cnt")} AS micros
   FROM tf
 ), per_doc AS (
   SELECT doc_id, CAST(MAX(n) AS BIGINT) AS n_tokens,
@@ -616,12 +619,10 @@ def zipf_fit_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
               .groupBy("source", "w")
               .agg(F.count(F.lit(1)).alias("c")))
     w_rank = Wn.partitionBy("source").orderBy(F.desc("c"), "w")
-    def ln_micros(col):  # noqa: ANN001, ANN202
-        return F.floor(F.round(F.log(col.cast("double")), 6)
-                       * 1000000.0 + 0.5).cast("bigint")
     m = (counts.withColumn("rnk", F.row_number().over(w_rank))
-         .select("source", ln_micros(F.col("rnk")).alias("x"),
-                 ln_micros(F.col("c")).alias("y")))
+         .select("source",
+                 F.expr(ln_micros("CAST(rnk AS DOUBLE)")).alias("x"),
+                 F.expr(ln_micros("CAST(c AS DOUBLE)")).alias("y")))
     agg = (m.groupBy("source")
            .agg(F.count(F.lit(1)).alias("vocab_n"),
                 F.sum(F.col("x").cast("decimal(38,0)")).alias("sx"),
@@ -643,7 +644,7 @@ def zipf_fit_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("ln_c0"))
 
 
-ZIPF_FIT_SQL = r"""
+ZIPF_FIT_SQL = rf"""
 WITH counts AS (
   SELECT source, w, COUNT(*) AS c
   FROM (SELECT source,
@@ -653,11 +654,9 @@ WITH counts AS (
   GROUP BY source, w
 ), m AS (
   SELECT source,
-         CAST(floor(round(ln(CAST(ROW_NUMBER() OVER (
-             PARTITION BY source ORDER BY c DESC, w) AS DOUBLE)), 6)
-           * 1000000.0 + 0.5) AS BIGINT) AS x,
-         CAST(floor(round(ln(CAST(c AS DOUBLE)), 6)
-           * 1000000.0 + 0.5) AS BIGINT) AS y
+         {ln_micros("CAST(ROW_NUMBER() OVER (PARTITION BY source"
+                    " ORDER BY c DESC, w) AS DOUBLE)")} AS x,
+         {ln_micros("CAST(c AS DOUBLE)")} AS y
   FROM counts
 ), agg AS (
   SELECT source, COUNT(*) AS vocab_n,
@@ -869,11 +868,8 @@ def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang_ent = (lang_counts
                 .withColumn("tot", F.sum("c").over(w_src))
                 .select("source",
-                        (F.col("c") * F.floor(
-                            F.round(F.log(F.col("tot").cast("double")
-                                          / F.col("c")), 6)
-                            * 1000000.0 + 0.5).cast("bigint"))
-                        .alias("micros"),
+                        F.expr("c * " + ln_micros(
+                            "CAST(tot AS DOUBLE) / c")).alias("micros"),
                         "tot")
                 .groupBy("source")
                 .agg(F.count(F.lit(1)).cast("int").alias("n_langs"),
@@ -888,7 +884,7 @@ def corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "vocab_size"))
 
 
-CORPUS_DATACARD_SQL = r"""
+CORPUS_DATACARD_SQL = rf"""
 WITH per_doc AS (
   SELECT source, lang,
          len(list_filter(regexp_split_to_array(lower(trim(text)), '\s+'),
@@ -908,9 +904,8 @@ WITH per_doc AS (
   FROM lc
 ), lang_ent AS (
   SELECT source, CAST(COUNT(*) AS INT) AS n_langs,
-         CAST(SUM(c * CAST(floor(
-             round(ln(tot * 1.0 / c), 6) * 1000000.0 + 0.5) AS BIGINT))
-           // MAX(tot) AS BIGINT) AS lang_entropy_micronats
+         CAST(SUM(c * {ln_micros("tot * 1.0 / c")}) // MAX(tot)
+              AS BIGINT) AS lang_entropy_micronats
   FROM lct
   GROUP BY source
 ), vocab AS (
@@ -1160,12 +1155,7 @@ def kmv_source_overlap(spark: SparkSession, sf_dir: str,
                 .alias("union_exact")))
 
 
-def _kmv_overlap_sql() -> str:
-    from spark_kafka_airflow_pipeline_spark.operators.scaleops import (
-        _hex6_to_int_sql,
-    )
-
-    return r"""
+KMV_OVERLAP_SQL = r"""
 WITH grams AS (
   SELECT DISTINCT source, md5(g) AS h FROM (
     SELECT source,
@@ -1215,7 +1205,8 @@ SELECT e.sa AS source_a, e.sb AS source_b,
        CAST(common * 1000000 // m_u AS BIGINT) AS jaccard_est_ppm,
        CAST(CASE WHEN m_u < 128 THEN m_u
             ELSE CAST(127 AS BIGINT) * 16777216 //
-                 GREATEST({hex6}, 1) END AS BIGINT) AS union_est,
+                 GREATEST(('0x' || substr(tau, 1, 6))::BIGINT, 1) END
+            AS BIGINT) AS union_est,
        CAST(COALESCE(n_inter, 0) * 1000000 //
             (na + nb - COALESCE(n_inter, 0)) AS BIGINT)
          AS jaccard_exact_ppm,
@@ -1223,7 +1214,7 @@ SELECT e.sa AS source_a, e.sb AS source_b,
 FROM est e
 JOIN pairs p ON e.sa = p.sa AND e.sb = p.sb
 LEFT JOIN inter i ON e.sa = i.sa AND e.sb = i.sb
-""".format(hex6=_hex6_to_int_sql("tau"))
+"""
 
 
 def rendezvous_shard_plan(spark: SparkSession, sf_dir: str,
@@ -1684,7 +1675,7 @@ ORACLES: dict[str, str] = {
     "benchmark_decontamination": BENCHMARK_DECONTAMINATION_SQL,
     "ngram_novelty_score": NGRAM_NOVELTY_SQL,
     "misra_gries_topk": MISRA_GRIES_SQL,
-    "kmv_source_overlap": _kmv_overlap_sql(),
+    "kmv_source_overlap": KMV_OVERLAP_SQL,
     "cms_heavy_hitters": _cms_sql(),
     "rendezvous_shard_plan": RENDEZVOUS_SHARD_SQL,
     "cross_lang_fingerprint_spread": CROSS_LANG_SPREAD_SQL,

@@ -69,6 +69,7 @@ from spark_kafka_airflow_pipeline_spark.operators.base import (
     FIXPOINT_ITERS,
     QueryFn,
     barrier,
+    ln_micros,
     min_label_fixpoint,
     ppm,
     table,
@@ -987,17 +988,16 @@ def fellegi_sunter_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamp = "GREATEST(LEAST({x}, 999999), 1)"
     m_ppm = clamp.format(x="agree_m * 1000000 DIV n_m")
     u_ppm = clamp.format(x="agree_u * 1000000 DIV n_u")
-    w = ("CAST(floor(round(ln(CAST({m} AS DOUBLE) / {u}), 6) "
-         "* 1000000.0 + 0.5) AS BIGINT)")
     return rows.select(
         "field",
         F.col("n_m").cast("bigint").alias("n_match_pairs"),
         F.col("n_u").cast("bigint").alias("n_unmatch_pairs"),
         F.expr(f"CAST({m_ppm} AS BIGINT)").alias("m_ppm"),
         F.expr(f"CAST({u_ppm} AS BIGINT)").alias("u_ppm"),
-        F.expr(w.format(m=m_ppm, u=u_ppm)).alias("agree_weight_micro"),
-        F.expr(w.format(m=f"(1000000 - {m_ppm})",
-                        u=f"(1000000 - {u_ppm})"))
+        F.expr(ln_micros(f"CAST({m_ppm} AS DOUBLE) / {u_ppm}"))
+        .alias("agree_weight_micro"),
+        F.expr(ln_micros(f"CAST((1000000 - {m_ppm}) AS DOUBLE)"
+                         f" / (1000000 - {u_ppm})"))
         .alias("disagree_weight_micro"))
 
 
@@ -1005,8 +1005,6 @@ def _fs_sql() -> str:
     clamp = "GREATEST(LEAST({x}, 999999), 1)"
     m_ppm = clamp.format(x="agree_m * 1000000 // n_m")
     u_ppm = clamp.format(x="agree_u * 1000000 // n_u")
-    w = ("CAST(floor(round(ln(CAST({m} AS DOUBLE) / {u}), 6) "
-         "* 1000000.0 + 0.5) AS BIGINT)")
     fields = (("lang", "lang"), ("source", "source"),
               ("len_bucket", "len_bucket"))
     m_sel = "\n  UNION ALL\n".join(
@@ -1051,8 +1049,10 @@ SELECT field, CAST(n_m AS BIGINT) AS n_match_pairs,
        CAST(n_u AS BIGINT) AS n_unmatch_pairs,
        CAST({m_ppm} AS BIGINT) AS m_ppm,
        CAST({u_ppm} AS BIGINT) AS u_ppm,
-       {w.format(m=m_ppm, u=u_ppm)} AS agree_weight_micro,
-       {w.format(m=f"(1000000 - {m_ppm})", u=f"(1000000 - {u_ppm})")}
+       {ln_micros(f"CAST({m_ppm} AS DOUBLE) / {u_ppm}")}
+         AS agree_weight_micro,
+       {ln_micros(f"CAST((1000000 - {m_ppm}) AS DOUBLE)"
+                  f" / (1000000 - {u_ppm})")}
          AS disagree_weight_micro
 FROM ms JOIN us USING (field)
 WHERE n_m > 0 AND n_u > 0

@@ -32,6 +32,7 @@ from spark_kafka_airflow_pipeline_spark.functions import text as T
 from spark_kafka_airflow_pipeline_spark.operators.base import (
     QueryFn,
     barrier,
+    ln_micros,
     ppm,
     table,
 )
@@ -763,12 +764,14 @@ def source_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("sa", "sb", "ca", "cb", "ta", "tb",
                       F.expr("CAST(ca AS DECIMAL(38,0)) * tb").alias("xa"),
                       F.expr("CAST(cb AS DECIMAL(38,0)) * ta").alias("xb")))
-    mic = ("CAST(floor(round(ln(2.0 * CAST({x} AS DOUBLE) / "
-           "CAST(xa + xb AS DOUBLE)), 6) * 1000000.0 + 0.5) AS BIGINT)")
     per_pair = (shared
                 .select("sa", "sb", "ca", "cb",
-                        F.expr(f"ca * {mic.format(x='xa')}").alias("ma"),
-                        F.expr(f"cb * {mic.format(x='xb')}").alias("mb"))
+                        F.expr("ca * " + ln_micros(
+                            "2.0 * CAST(xa AS DOUBLE)"
+                            " / CAST(xa + xb AS DOUBLE)")).alias("ma"),
+                        F.expr("cb * " + ln_micros(
+                            "2.0 * CAST(xb AS DOUBLE)"
+                            " / CAST(xa + xb AS DOUBLE)")).alias("mb"))
                 .groupBy("sa", "sb")
                 .agg(F.count(F.lit(1)).alias("shared_terms"),
                      F.sum("ma").alias("s_a"), F.sum("mb").alias("s_b"),
@@ -816,12 +819,10 @@ WITH tf AS (
   JOIN tots tb ON tb.source = b.source
 ), per_pair AS (
   SELECT sa, sb, COUNT(*) AS shared_terms,
-         SUM(ca * CAST(floor(round(ln(2.0 * CAST(xa AS DOUBLE)
-               / CAST(xa + xb AS DOUBLE)), 6) * 1000000.0 + 0.5)
-             AS BIGINT)) AS s_a,
-         SUM(cb * CAST(floor(round(ln(2.0 * CAST(xb AS DOUBLE)
-               / CAST(xa + xb AS DOUBLE)), 6) * 1000000.0 + 0.5)
-             AS BIGINT)) AS s_b,
+         SUM(ca * {ln_micros("2.0 * CAST(xa AS DOUBLE)"
+                            " / CAST(xa + xb AS DOUBLE)")}) AS s_a,
+         SUM(cb * {ln_micros("2.0 * CAST(xb AS DOUBLE)"
+                            " / CAST(xa + xb AS DOUBLE)")}) AS s_b,
          SUM(ca) AS shc_a, SUM(cb) AS shc_b
   FROM shared GROUP BY sa, sb
 ), spine AS (
@@ -1099,20 +1100,20 @@ def segment_priority_mutual_info(spark: SparkSession,
     row_m = cell.groupBy("c_mktsegment").agg(F.sum("cnt").alias("r"))
     col_m = cell.groupBy("o_orderpriority").agg(F.sum("cnt").alias("s"))
     tot = cell.agg(F.sum("cnt").alias("n"))
-    mic = ("CAST(floor(round(ln(CAST(CAST(cnt AS DECIMAL(38,0)) * n "
-           "AS DOUBLE) / CAST(CAST(r AS DECIMAL(38,0)) * s AS DOUBLE)), 6)"
-           " * 1000000.0 + 0.5) AS BIGINT)")
     mi = (cell.join(F.broadcast(row_m), "c_mktsegment")
           .join(F.broadcast(col_m), "o_orderpriority")
           .crossJoin(F.broadcast(tot))
-          .agg(F.sum(F.expr(f"cnt * {mic}")).alias("s_mi"),
+          .agg(F.sum(F.expr("cnt * " + ln_micros(
+                   "CAST(CAST(cnt AS DECIMAL(38,0)) * n AS DOUBLE)"
+                   " / CAST(CAST(r AS DECIMAL(38,0)) * s AS DOUBLE)")))
+               .alias("s_mi"),
                F.first("n").alias("n")))
-    ent = ("CAST(SUM({m} * CAST(floor(round(ln(CAST(n AS DOUBLE) / {m}), 6)"
-           " * 1000000.0 + 0.5) AS BIGINT)) DIV MAX(n) AS BIGINT)")
     ent_x = (row_m.crossJoin(F.broadcast(tot))
-             .agg(F.expr(ent.format(m="r")).alias("h_seg")))
+             .agg(F.expr("CAST(SUM(r * " + ln_micros("CAST(n AS DOUBLE) / r")
+                         + ") DIV MAX(n) AS BIGINT)").alias("h_seg")))
     ent_y = (col_m.crossJoin(F.broadcast(tot))
-             .agg(F.expr(ent.format(m="s")).alias("h_pri")))
+             .agg(F.expr("CAST(SUM(s * " + ln_micros("CAST(n AS DOUBLE) / s")
+                         + ") DIV MAX(n) AS BIGINT)").alias("h_pri")))
     return (mi.select(F.expr("CAST(s_mi DIV n AS BIGINT)")
                       .alias("mi_micronats"), "n")
             .crossJoin(F.broadcast(ent_x)).crossJoin(F.broadcast(ent_y))
@@ -1122,7 +1123,7 @@ def segment_priority_mutual_info(spark: SparkSession,
                                "least(h_seg, h_pri)")).alias("nmi_ppm")))
 
 
-MI_SQL = """
+MI_SQL = f"""
 WITH cell AS (
   SELECT c_mktsegment, o_orderpriority, COUNT(*) AS cnt
   FROM orders JOIN customer ON o_custkey = c_custkey
@@ -1131,21 +1132,20 @@ WITH cell AS (
 col_m AS (SELECT o_orderpriority, SUM(cnt) AS s FROM cell GROUP BY 1),
 tot AS (SELECT SUM(cnt) AS n FROM cell),
 mi AS (
-  SELECT SUM(cnt * CAST(floor(round(ln(
-           CAST(CAST(cnt AS HUGEINT) * n AS DOUBLE)
-           / CAST(CAST(r AS HUGEINT) * s AS DOUBLE)), 6)
-         * 1000000.0 + 0.5) AS BIGINT)) AS s_mi, MAX(n) AS n
+  SELECT SUM(cnt * {ln_micros("CAST(CAST(cnt AS HUGEINT) * n AS DOUBLE)"
+                              " / CAST(CAST(r AS HUGEINT) * s AS DOUBLE)")})
+           AS s_mi, MAX(n) AS n
   FROM cell
   JOIN row_m USING (c_mktsegment)
   JOIN col_m USING (o_orderpriority)
   CROSS JOIN tot
 ), ex AS (
-  SELECT CAST(SUM(r * CAST(floor(round(ln(CAST(n AS DOUBLE) / r), 6)
-              * 1000000.0 + 0.5) AS BIGINT)) // MAX(n) AS BIGINT) AS h_seg
+  SELECT CAST(SUM(r * {ln_micros("CAST(n AS DOUBLE) / r")}) // MAX(n)
+              AS BIGINT) AS h_seg
   FROM row_m CROSS JOIN tot
 ), ey AS (
-  SELECT CAST(SUM(s * CAST(floor(round(ln(CAST(n AS DOUBLE) / s), 6)
-              * 1000000.0 + 0.5) AS BIGINT)) // MAX(n) AS BIGINT) AS h_pri
+  SELECT CAST(SUM(s * {ln_micros("CAST(n AS DOUBLE) / s")}) // MAX(n)
+              AS BIGINT) AS h_pri
   FROM col_m CROSS JOIN tot
 )
 SELECT CAST(n AS BIGINT) AS n_orders,
@@ -1830,8 +1830,7 @@ def path_conditional_entropy(spark: SparkSession,
     wrow = Window.partitionBy("from_type")
     terms = (cells.withColumn("row_n", F.sum("cnt").over(wrow))
              .withColumn("micros", F.expr(
-                 "cnt * CAST(floor(round(ln(CAST(row_n AS DOUBLE) / cnt),"
-                 " 6) * 1000000.0 + 0.5) AS BIGINT)")))
+                 "cnt * " + ln_micros("CAST(row_n AS DOUBLE) / cnt"))))
     per_from = (terms.groupBy("from_type")
                 .agg(F.max("row_n").cast("bigint").alias("n_transitions"),
                      F.count(F.lit(1)).cast("bigint").alias("n_next_types"),
@@ -1848,7 +1847,7 @@ def path_conditional_entropy(spark: SparkSession,
     return per_from.unionByName(overall)
 
 
-PATH_ENTROPY_SQL = """
+PATH_ENTROPY_SQL = f"""
 WITH trans AS (
   SELECT event_type AS from_type,
          lead(event_type) OVER (PARTITION BY user_id
@@ -1861,9 +1860,8 @@ WITH trans AS (
 ), terms AS (
   SELECT from_type, next_type, cnt,
          SUM(cnt) OVER (PARTITION BY from_type) AS row_n,
-         cnt * CAST(floor(round(ln(
-           CAST(SUM(cnt) OVER (PARTITION BY from_type) AS DOUBLE) / cnt),
-           6) * 1000000.0 + 0.5) AS BIGINT) AS micros
+         cnt * {ln_micros("CAST(SUM(cnt) OVER (PARTITION BY from_type)"
+                          " AS DOUBLE) / cnt")} AS micros
   FROM cells
 )
 SELECT from_type, CAST(MAX(row_n) AS BIGINT) AS n_transitions,

@@ -3,6 +3,10 @@ sliding windows, gaps-and-islands sessionization. The streaming module
 runs the same shapes through Structured Streaming; these batch variants
 are the DuckDB-oracle-able twins (SURVEY.md §5, FIXTURES.md §3).
 
+Drift: ``_psi`` is the one integer-pico PSI stage (``_sql_psi`` its
+oracle twin), used by ``events_drift_psi``, ``value_drift_continuous``
+and the streaming module's ``streaming_drift_monitor``.
+
 Scale notes: time-window aggregation shuffles once on (window, keys);
 sessionization shuffles once on user_id, then the lag/cumsum windows run
 within partitions. Both survive 100x data: the shuffle key is the
@@ -17,6 +21,7 @@ from pyspark.sql import functions as F
 from spark_kafka_airflow_pipeline_spark.operators.base import (
     QueryFn,
     barrier,
+    ln_micros,
     ppm,
     table,
 )
@@ -1291,14 +1296,13 @@ def event_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "CAST(CAST(n_both AS DECIMAL(38,0)) * n_sessions"
                     " * 1000000 DIV (CAST(n_sess_a AS DECIMAL(38,0))"
                     " * n_sess_b) AS BIGINT)").alias("lift_ppm"),
-                F.expr(
-                    "CAST(floor(round(ln((CAST(n_both AS DOUBLE)"
-                    " * n_sessions) / (CAST(n_sess_a AS DOUBLE)"
-                    " * n_sess_b)), 6) * 1000000.0 + 0.5)"
-                    " AS BIGINT)").alias("pmi_micro")))
+                F.expr(ln_micros(
+                    "(CAST(n_both AS DOUBLE) * n_sessions)"
+                    " / (CAST(n_sess_a AS DOUBLE) * n_sess_b)"))
+                .alias("pmi_micro")))
 
 
-EVENT_PMI_SQL = """
+EVENT_PMI_SQL = f"""
 WITH flagged AS (
   SELECT user_id, event_id, event_type, ts,
          CASE WHEN lag(ts) OVER w IS NULL
@@ -1332,9 +1336,8 @@ SELECT p.type_a, p.type_b, CAST(p.n_both AS BIGINT) AS n_both,
        CAST(t.n_sessions AS BIGINT) AS n_sessions,
        CAST(p.n_both * t.n_sessions * 1000000
             // (pa.n_a * pb.n_a) AS BIGINT) AS lift_ppm,
-       CAST(floor(round(ln((CAST(p.n_both AS DOUBLE) * t.n_sessions)
-                           / (CAST(pa.n_a AS DOUBLE) * pb.n_a)), 6)
-                  * 1000000.0 + 0.5) AS BIGINT) AS pmi_micro
+       {ln_micros("(CAST(p.n_both AS DOUBLE) * t.n_sessions)"
+                  " / (CAST(pa.n_a AS DOUBLE) * pb.n_a)")} AS pmi_micro
 FROM pairs p
 JOIN per pa ON p.type_a = pa.event_type
 JOIN per pb ON p.type_b = pb.event_type
@@ -1875,22 +1878,70 @@ FROM per_min GROUP BY user_id
 """
 
 
+#: One bin's PSI term over the integer-ppm shares ``p_ppm``/``q_ppm``,
+#: clamped to >= 1 inside the ln. The same text runs in Spark and DuckDB.
+_PSI_TERM = "(p_ppm - q_ppm) * " + ln_micros(
+    "CAST(GREATEST(p_ppm, 1) AS DOUBLE) / GREATEST(q_ppm, 1)")
+
+
+def _psi(counts: DataFrame, keys: list[str]) -> DataFrame:
+    """The integer-pico PSI stage of ``events_drift_psi``,
+    ``value_drift_continuous`` and ``streaming_drift_monitor``: per
+    ``keys`` group of ``(keys..., bin, a, b)`` raw counts,
+    ``PSI = sum((p-q) * ln(p/q))`` in pico-units, returned as
+    ``keys..., psi_pico, n_bins, n_a, n_b``. Shares are integer ppm,
+    each bin's ln is ``ln_micros``, and the product ppm x micros sums
+    exactly in BIGINT — no float reduction. Empty bins get the standard
+    +1 smoothing, and the ppm shares inside the ln are clamped to
+    >= 1: smoothing alone guarantees a count of >= 1, but once a side
+    exceeds 1M rows a rare bin's integer-ppm share still truncates to
+    0, and ln(0)/division-by-zero would drop the term (Spark NULL) or
+    diverge between engines (DuckDB -inf) — the clamp caps a sub-ppm
+    share's ln at ln(1/ppm) on both sides. ``_sql_psi`` is the
+    oracle's twin."""
+    w = Window.partitionBy(*keys)
+    return (counts
+            .select(*keys, "a", "b",
+                    F.sum(F.col("a") + 1).over(w).alias("ta"),
+                    F.sum(F.col("b") + 1).over(w).alias("tb"))
+            .select(*keys, "a", "b",
+                    F.expr("(a + 1) * 1000000 DIV ta").alias("p_ppm"),
+                    F.expr("(b + 1) * 1000000 DIV tb").alias("q_ppm"))
+            .groupBy(*keys)
+            .agg(F.sum(F.expr(_PSI_TERM)).cast("bigint").alias("psi_pico"),
+                 F.count(F.lit(1)).cast("int").alias("n_bins"),
+                 F.sum("a").cast("bigint").alias("n_a"),
+                 F.sum("b").cast("bigint").alias("n_b")))
+
+
+def _sql_psi(keys: list[str]) -> str:
+    """``_psi`` for the oracles: CTEs ending in ``psi``, read from a
+    ``counts`` relation of ``(keys..., bin, a, b)``."""
+    k = ", ".join(keys)
+    sel = f"{k}, " if keys else ""
+    by = f"PARTITION BY {k}" if keys else ""
+    grp = f" GROUP BY {k}" if keys else ""
+    return f"""sm AS (
+  SELECT {sel}a, b,
+         (a + 1) * 1000000 // SUM(a + 1) OVER ({by}) AS p_ppm,
+         (b + 1) * 1000000 // SUM(b + 1) OVER ({by}) AS q_ppm
+  FROM counts
+), psi AS (
+  SELECT {sel}CAST(SUM({_PSI_TERM}) AS BIGINT) AS psi_pico,
+         CAST(COUNT(*) AS INT) AS n_bins,
+         CAST(SUM(a) AS BIGINT) AS n_a, CAST(SUM(b) AS BIGINT) AS n_b
+  FROM sm{grp}
+)"""
+
+
 def events_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index per event type — the industry-named
-    drift metric beside ``events_drift_chi2``: first-half vs
-    second-half value distributions over the same fixed bins,
-    ``PSI = sum((p-q) * ln(p/q))`` emitted in integer pico-units
-    (shares are integer ppm; each bin's ln is 6dp-rounded micros; the
-    product ppm x micros sums exactly in BIGINT — no float reduction).
-    Empty bins get the standard +1 smoothing, and the ppm shares inside
-    the ln are clamped to >= 1: smoothing alone guarantees a count of
-    >= 1, but once a half exceeds 1M rows a rare bin's integer-ppm
-    share still truncates to 0, and ln(0)/division-by-zero would drop
-    the term (Spark NULL) or diverge between engines (DuckDB -inf) —
-    the clamp caps a sub-ppm share's ln at ln(1/ppm) on both sides.
+    drift metric beside ``events_drift_chi2``: the value distributions
+    of odd (reference ``a``) vs even (``b``) ``event_id`` compared over
+    the same fixed bins by ``_psi``, in integer pico-units.
 
-    Scale: one scan into a (type, half, bin) aggregate, then
-    arithmetic over the bins-x-types frame."""
+    Scale: one scan into a (type, bin) aggregate, then arithmetic over
+    the bins-x-types frame."""
     e = table(spark, sf_dir, "events")
     half = (F.col("event_id") % 2 == 0).cast("int").alias("half")
     bin_ = F.least(F.floor(F.col("value") / 100), F.lit(9)).cast("int")
@@ -1899,48 +1950,19 @@ def events_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
               .agg(F.sum(F.when(F.col("half") == 0, 1).otherwise(0))
                    .alias("a"),
                    F.sum("half").alias("b")))
-    w = Window.partitionBy("event_type")
-    sm = (counts
-          .withColumn("a1", F.col("a") + 1)
-          .withColumn("b1", F.col("b") + 1)
-          .withColumn("ta", F.sum("a1").over(w))
-          .withColumn("tb", F.sum("b1").over(w)))
-    p_ppm = F.expr("a1 * 1000000 DIV ta")
-    q_ppm = F.expr("b1 * 1000000 DIV tb")
-    p_ln = F.greatest(p_ppm, F.lit(1)).cast("double")
-    q_ln = F.greatest(q_ppm, F.lit(1)).cast("double")
-    term = ((p_ppm - q_ppm)
-            * F.floor(F.round(F.log(p_ln / q_ln), 6)
-                      * 1000000.0 + 0.5).cast("bigint"))
-    return (sm.select("event_type", term.alias("t"))
-            .groupBy("event_type")
-            .agg(F.sum("t").cast("bigint").alias("psi_pico"),
-                 F.count(F.lit(1)).cast("int").alias("n_bins")))
+    return _psi(counts, ["event_type"]).select("event_type", "psi_pico",
+                                               "n_bins")
 
 
-EVENTS_PSI_SQL = """
+EVENTS_PSI_SQL = f"""
 WITH counts AS (
   SELECT event_type,
          CAST(LEAST(floor(value / 100), 9) AS INT) AS bin,
          SUM(CASE WHEN event_id % 2 != 0 THEN 1 ELSE 0 END) AS a,
          SUM(CASE WHEN event_id % 2 = 0 THEN 1 ELSE 0 END) AS b
   FROM events GROUP BY 1, 2
-), sm AS (
-  SELECT event_type, a + 1 AS a1, b + 1 AS b1,
-         SUM(a + 1) OVER (PARTITION BY event_type) AS ta,
-         SUM(b + 1) OVER (PARTITION BY event_type) AS tb
-  FROM counts
-), terms AS (
-  SELECT event_type,
-         (a1 * 1000000 // ta - b1 * 1000000 // tb)
-         * CAST(floor(round(ln(GREATEST(a1 * 1000000 // ta, 1) * 1.0
-                               / GREATEST(b1 * 1000000 // tb, 1)), 6)
-                      * 1000000.0 + 0.5) AS BIGINT) AS t
-  FROM sm
-)
-SELECT event_type, CAST(SUM(t) AS BIGINT) AS psi_pico,
-       CAST(COUNT(*) AS INT) AS n_bins
-FROM terms GROUP BY event_type
+), {_sql_psi(["event_type"])}
+SELECT event_type, psi_pico, n_bins FROM psi
 """
 
 
@@ -1951,19 +1973,18 @@ def value_drift_continuous(spark: SparkSession, sf_dir: str,
                            n_bins: int = DRIFT_NBINS) -> DataFrame:
     """PSI drift on a CONTINUOUS feature [EXT] — the ML-monitoring
     companion to ``events_drift_psi`` (categorical): the ``value``
-    column's first-half vs second-half distributions compared over
-    EQUI-DEPTH bins fitted on the REFERENCE half only — the standard
-    monitoring protocol (bins from the training/reference window,
-    candidate traffic scored against them), so a pure location shift
-    that leaves category counts alone still shows up.
+    column's odd-``event_id`` (reference) vs even-``event_id``
+    (current) distributions compared over EQUI-DEPTH bins fitted on the
+    REFERENCE side only — the standard monitoring protocol (bins from
+    the training/reference window, candidate traffic scored against
+    them), so a pure location shift that leaves category counts alone
+    still shows up.
 
     Composition of two pinned disciplines: the reference bin cuts are
     the ``orders_equidepth_bins`` mergeable-percentile + broadcast
     join-back idiom (9 scalar cuts; swap percentile_approx in at
-    extreme cardinality); the PSI arithmetic is ``events_drift_psi``'s
-    integer-pico pipeline verbatim (+1 smoothing, ppm shares clamped
-    >= 1 inside the ln, 6dp ln micros, exact BIGINT sum). Output is
-    one global row (psi_pico, n_bins, n_ref, n_cur).
+    extreme cardinality); the PSI arithmetic is the ``_psi`` stage.
+    Output is one global row (psi_pico, n_bins, n_ref, n_cur).
     """
     e = table(spark, sf_dir, "events")
     w = e.select(
@@ -1986,25 +2007,9 @@ def value_drift_continuous(spark: SparkSession, sf_dir: str,
               .agg(F.sum(F.when(F.col("half") == 0, 1).otherwise(0))
                    .alias("a"),
                    F.sum("half").alias("b")))
-    gw = Window.partitionBy()
-    sm = (counts
-          .withColumn("a1", F.col("a") + 1)
-          .withColumn("b1", F.col("b") + 1)
-          .withColumn("ta", F.sum("a1").over(gw))
-          .withColumn("tb", F.sum("b1").over(gw)))
-    p_ppm = F.expr("a1 * 1000000 DIV ta")
-    q_ppm = F.expr("b1 * 1000000 DIV tb")
-    term = ((p_ppm - q_ppm)
-            * F.floor(F.round(F.log(F.greatest(p_ppm, F.lit(1))
-                                    .cast("double")
-                                    / F.greatest(q_ppm, F.lit(1))
-                                    .cast("double")), 6)
-                      * 1000000.0 + 0.5).cast("bigint"))
-    return (sm.select(term.alias("t"), "a", "b")
-            .agg(F.sum("t").cast("bigint").alias("psi_pico"),
-                 F.count(F.lit(1)).cast("int").alias("n_bins"),
-                 F.sum("a").cast("bigint").alias("n_ref"),
-                 F.sum("b").cast("bigint").alias("n_cur")))
+    return _psi(counts, []).select("psi_pico", "n_bins",
+                                   F.col("n_a").alias("n_ref"),
+                                   F.col("n_b").alias("n_cur"))
 
 
 VALUE_DRIFT_SQL = """
@@ -2019,25 +2024,14 @@ WITH w AS (
          SUM(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS a,
          SUM(half) AS b
   FROM w, cuts GROUP BY 1
-), sm AS (
-  SELECT a, b, a + 1 AS a1, b + 1 AS b1,
-         SUM(a + 1) OVER () AS ta, SUM(b + 1) OVER () AS tb
-  FROM counts
-)
-SELECT CAST(SUM((a1 * 1000000 // ta - b1 * 1000000 // tb)
-               * CAST(floor(round(ln(GREATEST(a1 * 1000000 // ta, 1) * 1.0
-                                     / GREATEST(b1 * 1000000 // tb, 1)), 6)
-                            * 1000000.0 + 0.5) AS BIGINT)) AS BIGINT)
-         AS psi_pico,
-       CAST(COUNT(*) AS INT) AS n_bins,
-       CAST(SUM(a) AS BIGINT) AS n_ref,
-       CAST(SUM(b) AS BIGINT) AS n_cur
-FROM sm
+), {psi}
+SELECT psi_pico, n_bins, n_a AS n_ref, n_b AS n_cur FROM psi
 """.format(
     cut_list=", ".join(f"quantile_cont(cents, {i / DRIFT_NBINS}) AS c{i}"
                        for i in range(1, DRIFT_NBINS)),
     bin_expr=" + ".join(f"CAST(cents > c{i} AS INT)"
-                        for i in range(1, DRIFT_NBINS)))
+                        for i in range(1, DRIFT_NBINS)),
+    psi=_sql_psi([]))
 
 
 def dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -341,11 +341,7 @@ def feature_hashing_collision_audit(spark: SparkSession,
                     .alias("collided_mass_ppm")))
 
 
-def _hashing_sql() -> str:
-    u = ("(" + " + ".join(
-        f"(strpos('0123456789abcdef', substr(md5(w), {i + 1}, 1)) - 1)"
-        f" * {16 ** (5 - i)}" for i in range(6)) + ")")
-    return rf"""
+HASHING_SQL = rf"""
 WITH vocab AS (
   SELECT w, COUNT(*) AS cnt
   FROM (SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS w
@@ -353,7 +349,8 @@ WITH vocab AS (
   WHERE w <> ''
   GROUP BY w
 ), hashed AS (
-  SELECT n_buckets, {u} % n_buckets AS bucket, cnt
+  SELECT n_buckets, ('0x' || substr(md5(w), 1, 6))::BIGINT % n_buckets
+           AS bucket, cnt
   FROM vocab
   CROSS JOIN (SELECT UNNEST(ARRAY{list(HASH_BUCKET_SIZES)}) AS n_buckets)
 ), per_bucket AS (
@@ -370,9 +367,6 @@ SELECT CAST(n_buckets AS INT) AS n_buckets,
             // SUM(mass_b) AS BIGINT) AS collided_mass_ppm
 FROM per_bucket GROUP BY n_buckets
 """
-
-
-HASHING_SQL = _hashing_sql()
 
 
 RETENTION_TIERS = ((3, "1_hot"), (12, "2_warm"), (24, "3_cold"))

@@ -156,19 +156,20 @@ def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.max("tag").alias("max_tag")))
 
 
-PY_DATASOURCE_SQL = """
+#: The ``seqgen`` source's rows as an oracle CTE.
+_SEQGEN_SQL = """
 WITH g AS (
   SELECT i AS id, substr(md5(CAST(i AS VARCHAR)), 1, 8) AS tag,
-         CAST(strpos('0123456789abcdef',
-                     substr(md5(CAST(i AS VARCHAR)), 1, 1)) - 1 AS INT)
-           AS bucket
+         CAST(('0x' || substr(md5(CAST(i AS VARCHAR)), 1, 1))::BIGINT
+              AS INT) AS bucket
   FROM (SELECT unnest(range(0, 20000)) AS i)
 )
 SELECT bucket, COUNT(*) AS n_rows,
        CAST(SUM(id) AS BIGINT) AS id_checksum,
        MIN(tag) AS min_tag, MAX(tag) AS max_tag
-FROM g GROUP BY bucket
-"""
+FROM g"""
+
+PY_DATASOURCE_SQL = _SEQGEN_SQL + " GROUP BY bucket\n"
 
 
 def python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,18 +196,7 @@ def python_datasource_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.max("tag").alias("max_tag")))
 
 
-PY_DATASOURCE_PUSHDOWN_SQL = """
-WITH g AS (
-  SELECT i AS id, substr(md5(CAST(i AS VARCHAR)), 1, 8) AS tag,
-         CAST(strpos('0123456789abcdef',
-                     substr(md5(CAST(i AS VARCHAR)), 1, 1)) - 1 AS INT)
-           AS bucket
-  FROM (SELECT unnest(range(0, 20000)) AS i)
-)
-SELECT bucket, COUNT(*) AS n_rows,
-       CAST(SUM(id) AS BIGINT) AS id_checksum,
-       MIN(tag) AS min_tag, MAX(tag) AS max_tag
-FROM g
+PY_DATASOURCE_PUSHDOWN_SQL = _SEQGEN_SQL + """
 WHERE id >= 12000 AND id < 18000 AND bucket >= 4
 GROUP BY bucket
 """

@@ -1498,10 +1498,8 @@ def bootstrap_mean_ci(spark: SparkSession, sf_dir: str,
 
 
 def _bootstrap_sql() -> str:
-    u = ("(" + " + ".join(
-        f"(strpos('0123456789abcdef', substr(md5(CAST(o_orderkey AS "
-        f"VARCHAR) || ':bs:' || CAST(r AS VARCHAR)), {i + 1}, 1)) - 1)"
-        f" * {16 ** (5 - i)}" for i in range(6)) + ")")
+    u = ("('0x' || substr(md5(CAST(o_orderkey AS VARCHAR) || ':bs:' "
+         "|| CAST(r AS VARCHAR)), 1, 6))::BIGINT")
     w = "CASE " + " ".join(
         f"WHEN {u} < {t} THEN {k}"
         for k, t in enumerate(_POISSON1_CDF_16_6)) + " ELSE 6 END"

@@ -895,16 +895,6 @@ def kmv_distinct_rollup(spark: SparkSession, sf_dir: str,
             .select("event_type", "m", "kmv_estimate", "exact_distinct"))
 
 
-def _hex6_to_int_sql(col: str) -> str:
-    """DuckDB has no base-16 conv(); parse 6 hex chars by digit."""
-    terms = [
-        f"(strpos('0123456789abcdef', substr({col}, {i + 1}, 1)) - 1) "
-        f"* {16 ** (5 - i)}"
-        for i in range(6)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 KMV_SQL = f"""
 WITH hashes AS (
   SELECT DISTINCT event_type, md5(CAST(user_id AS VARCHAR)) AS h
@@ -935,7 +925,7 @@ WITH hashes AS (
 SELECT est.event_type, m,
        CAST(CASE WHEN m < 256 THEN m
             ELSE CAST(255 AS BIGINT) * {16 ** 6} //
-                 GREATEST({_hex6_to_int_sql('kth')}, 1)
+                 GREATEST(('0x' || substr(kth, 1, 6))::BIGINT, 1)
             END AS BIGINT) AS kmv_estimate,
        exact_distinct
 FROM est JOIN exact ON est.event_type = exact.event_type

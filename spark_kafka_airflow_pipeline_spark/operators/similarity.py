@@ -668,7 +668,7 @@ FROM ({_sql_top_k("pairs", "anchor_id", "cosine_sim DESC, negative_id", 1)})
 """
 
 
-def _srp_matrix(n_planes: int = 16, dim: int = 64) -> list[list[float]]:
+def _srp_matrix(n_planes: int = 6, dim: int = 64) -> list[list[float]]:
     """Deterministic ±1 sign-random-projection matrix derived from md5
     (public, engine-independent): hyperplane h's entries are the bits
     of md5('srp:<h>'). A CONSTANT of the query text, so Spark and
@@ -689,9 +689,10 @@ _SRP = _srp_matrix()
 def ann_srp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLED approximate nearest neighbors via sign random
     projections [EXT] — the algorithm-proof twin of ``ann_lsh_topk``
-    (whose Spark-RNG hyperplanes make it rows-only). 16 deterministic
+    (whose Spark-RNG hyperplanes make it rows-only). 6 deterministic
     ±1 hyperplanes (md5-derived constants shared verbatim with the
-    oracle) give every vector a 16-bit sign bucket; candidates are
+    oracle) give every vector a 6-bit sign bucket (with 16 bits no
+    query shared a bucket with any other vector); candidates are
     same-bucket pairs, verified by exact cosine and ranked top-5 per
     query. Both engines fold the projection left-to-right over the
     same array, so signs, buckets, the candidate set and ranks are

@@ -16,6 +16,7 @@ from spark_kafka_airflow_pipeline_spark.functions import text as T
 from spark_kafka_airflow_pipeline_spark.operators.base import (
     QueryFn,
     barrier,
+    ln_micros,
     ppm,
     table,
 )
@@ -1331,13 +1332,11 @@ def weighted_sample_aes(spark: SparkSession, sf_dir: str,
     w_tok = T.token_count("text")
     # u from the first 6 hex digits of md5 (uniform on (0, 1], the
     # +1 keeps ln off zero); ln in integer micros, key = micros / w
-    val6 = F.expr("CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), "
-                  "':aes')), 1, 6), 16, 10) AS BIGINT) + 1")
-    ln_micros = F.floor(
-        F.round(F.log(val6.cast("double") / F.lit(16 ** 6)), 6)
-        * 1000000.0 + 0.5).cast("bigint")
+    val6 = ("CAST(conv(substring(md5(concat(CAST(doc_id AS STRING), "
+            "':aes')), 1, 6), 16, 10) AS BIGINT) + 1")
     base = (d.select("source", "doc_id", w_tok.alias("n_tokens"),
-                     ln_micros.alias("lnm"))
+                     F.expr(ln_micros(f"CAST({val6} AS DOUBLE) / {16 ** 6}"))
+                     .alias("lnm"))
             .filter(F.col("n_tokens") > 0)
             .withColumn("key", F.col("lnm").cast("double")
                         / F.col("n_tokens")))
@@ -1349,15 +1348,15 @@ def weighted_sample_aes(spark: SparkSession, sf_dir: str,
             .select("source", "doc_id", "n_tokens", "draw_rank"))
 
 
-WEIGHTED_AES_SQL = r"""
+WEIGHTED_AES_SQL = rf"""
 WITH base AS (
   SELECT source, doc_id,
          CASE WHEN trim(text) = '' THEN 0
               ELSE len(regexp_split_to_array(trim(text), '\s+')) END
            AS n_tokens,
-         CAST(floor(round(ln(
-           ({hex6} + 1) * 1.0 / 16777216), 6) * 1000000.0 + 0.5)
-           AS BIGINT) AS lnm
+         {ln_micros("(('0x' || substr(md5(CAST(doc_id AS VARCHAR)"
+                    " || ':aes'), 1, 6))::BIGINT + 1) * 1.0 / 16777216")}
+           AS lnm
   FROM documents
 ), keyed AS (
   SELECT source, doc_id, n_tokens, lnm * 1.0 / n_tokens AS key
@@ -1370,10 +1369,7 @@ SELECT source, doc_id, n_tokens, draw_rank FROM (
            AS draw_rank
   FROM keyed)
 WHERE draw_rank <= 5
-""".format(hex6="(" + " + ".join(
-    f"(strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) "
-    f"|| ':aes'), {i + 1}, 1)) - 1) * {16 ** (5 - i)}"
-    for i in range(6)) + ")")
+"""
 
 
 GROUPED_SAMPLE_SQL = """
@@ -2480,9 +2476,8 @@ def unigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
     total = vocab.agg(F.sum("c").alias("total"))
     model = (vocab.crossJoin(F.broadcast(total))
-             .select("word", F.expr(
-                 "CAST(floor(round(ln(CAST(total AS DOUBLE) / c), 6)"
-                 " * 1000000 + 0.5) AS BIGINT)").alias("nll_micros")))
+             .select("word", F.expr(ln_micros("CAST(total AS DOUBLE) / c"))
+                     .alias("nll_micros")))
     per_doc = (words.join(model, "word")
                .groupBy("doc_id")
                .agg(F.count(F.lit(1)).alias("n_tokens"),
@@ -2506,7 +2501,7 @@ def unigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang", "source"))
 
 
-UNIGRAM_LM_SQL = """
+UNIGRAM_LM_SQL = f"""
 WITH words AS (
   SELECT doc_id, word
   FROM (SELECT doc_id,
@@ -2519,8 +2514,7 @@ WITH words AS (
 ), total AS (SELECT CAST(SUM(c) AS BIGINT) AS total FROM vocab),
 model AS (
   SELECT word,
-         CAST(floor(round(ln(CAST(total AS DOUBLE) / c), 6)
-                    * 1000000 + 0.5) AS BIGINT) AS nll_micros
+         {ln_micros("CAST(total AS DOUBLE) / c")} AS nll_micros
   FROM vocab CROSS JOIN total
 ), per_doc AS (
   SELECT doc_id, COUNT(*) AS n_tokens,

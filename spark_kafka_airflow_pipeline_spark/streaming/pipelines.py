@@ -47,6 +47,8 @@ from spark_kafka_airflow_pipeline_spark.operators.base import (
 from spark_kafka_airflow_pipeline_spark.operators.events import (
     EVENTS_SESSIONIZE_SQL,
     EVENTS_TUMBLING_SQL,
+    _psi,
+    _sql_psi,
 )
 from spark_kafka_airflow_pipeline_spark.operators.relational import dsum, SQL_DSUM
 from spark_kafka_airflow_pipeline_spark.session import pin_table_confs, scoped_conf
@@ -1111,9 +1113,9 @@ def streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     map a foreachBatch sink would apply, run here on the drained
     histogram so the whole monitor is one comparable DataFrame.
 
-    Exactness: the ``events_drift_psi`` integer-pico idiom — +1
-    smoothing over the fixed 10-bin spine, integer-ppm shares with the
-    >= 1 ln clamp, 6dp-rounded ln in integer micros, BIGINT sum.
+    Exactness: ``events._psi``, the batch operators' integer-pico PSI
+    stage, over the fixed 10-bin spine of every window (window counts
+    as ``a``, the baseline as ``b``).
 
     Restart recovery: the (window x bin) state lives in the checkpoint
     state store, so a mid-stream kill-and-restart resumes counting
@@ -1152,39 +1154,24 @@ def drift_psi_from_hist(spark: SparkSession, sf_dir: str,
     base = (e.crossJoin(F.broadcast(t0))
             .filter(F.expr("ts < t0 + INTERVAL 24 HOURS"))
             .groupBy(F.expr(f"CAST(LEAST(floor(value / 100), "
-                            f"{DRIFT_BINS - 1}) AS INT)").alias("bin"))
-            .agg(F.count(F.lit(1)).alias("bn")))
+                            f"{DRIFT_BINS - 1}) AS INT)").alias("sbin"))
+            .agg(F.count(F.lit(1)).alias("b")))
     bins_lit = F.array(*[F.lit(i) for i in range(DRIFT_BINS)])
-    bspine = (spark.range(1).select(F.explode(bins_lit).alias("bin"))
-              .join(base, "bin", "left")
-              .select("bin", F.coalesce("bn", F.lit(0)).alias("bn")))
-    btot = bspine.agg(F.sum(F.expr(f"bn + 1")).alias("tb"))
-    baseline = (bspine.crossJoin(F.broadcast(btot))
-                .select("bin", F.expr("(bn + 1) * 1000000 DIV tb")
-                        .alias("q_ppm")))
-    wspine = (hist.select(F.col("window_start").alias("ws")).distinct()
-              .select("ws", F.explode(bins_lit).alias("sbin")))
-    wcounts = (wspine.join(hist, (wspine.ws == hist.window_start)
-                           & (wspine.sbin == hist.bin), "left")
-               .select(F.col("ws").alias("window_start"),
-                       F.col("sbin").alias("bin"),
-                       F.coalesce("n", F.lit(0)).alias("n")))
-    # per-window totals: a window PARTITIONED BY the calendar-bounded
-    # window key over the fixed 10-bin frame
-    wk = Window.partitionBy("window_start")
-    terms = (wcounts
-             .withColumn("tw", F.sum(F.expr("n + 1")).over(wk))
-             .withColumn("p_ppm", F.expr("(n + 1) * 1000000 DIV tw"))
-             .join(F.broadcast(baseline), "bin")
-             .withColumn("t", F.expr(
-                 "(p_ppm - q_ppm) * CAST(floor(round(ln("
-                 "GREATEST(p_ppm, 1) * 1.0 / GREATEST(q_ppm, 1)), 6)"
-                 " * 1000000.0 + 0.5) AS BIGINT)")))
-    return (terms.groupBy("window_start")
-            .agg(F.sum("n").cast("bigint").alias("n_events"),
-                 F.sum("t").cast("bigint").alias("psi_pico"))
-            .withColumn("drift_alert", F.expr(
-                f"CAST(psi_pico > {DRIFT_PSI_ALERT_PICO} AS INT)")))
+    # the spine's columns are renamed: a self-join of a drained memory
+    # sink cannot deduplicate its attributes
+    spine = (hist.select(F.col("window_start").alias("ws")).distinct()
+             .select("ws", F.explode(bins_lit).alias("sbin")))
+    counts = (spine.join(hist, (spine.ws == hist.window_start)
+                         & (spine.sbin == hist.bin), "left")
+              .join(F.broadcast(base), "sbin", "left")
+              .select(F.col("ws").alias("window_start"),
+                      F.col("sbin").alias("bin"),
+                      F.coalesce("n", F.lit(0)).alias("a"),
+                      F.coalesce("b", F.lit(0)).alias("b")))
+    return _psi(counts, ["window_start"]).select(
+        "window_start", F.col("n_a").alias("n_events"), "psi_pico",
+        F.expr(f"CAST(psi_pico > {DRIFT_PSI_ALERT_PICO} AS INT)")
+        .alias("drift_alert"))
 
 
 STREAMING_DRIFT_SQL = f"""
@@ -1195,11 +1182,6 @@ base AS (
   SELECT CAST(LEAST(floor(value / 100), {DRIFT_BINS - 1}) AS INT) AS bin,
          COUNT(*) AS bn
   FROM events, wm WHERE ts < t0 + INTERVAL 24 HOURS GROUP BY 1
-), bq AS (
-  SELECT spine.bin, COALESCE(bn, 0) + 1 AS b1
-  FROM spine LEFT JOIN base ON spine.bin = base.bin
-), baseline AS (
-  SELECT bin, b1 * 1000000 // (SELECT SUM(b1) FROM bq) AS q_ppm FROM bq
 ), sealed AS (
   SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')
            AS window_start,
@@ -1208,27 +1190,17 @@ base AS (
   FROM events, wm
   WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= wm.cutoff
   GROUP BY 1, 2
-), wc AS (
-  SELECT w.window_start, s.bin, COALESCE(n, 0) AS n
+), counts AS (
+  SELECT w.window_start, s.bin, COALESCE(n, 0) AS a, COALESCE(bn, 0) AS b
   FROM (SELECT DISTINCT window_start FROM sealed) w
   CROSS JOIN spine s
   LEFT JOIN sealed ON sealed.window_start = w.window_start
                   AND sealed.bin = s.bin
-), terms AS (
-  SELECT window_start, n,
-         (p_ppm - q_ppm) * CAST(floor(round(ln(
-            GREATEST(p_ppm, 1) * 1.0 / GREATEST(q_ppm, 1)), 6)
-            * 1000000.0 + 0.5) AS BIGINT) AS t
-  FROM (SELECT window_start, bin, n,
-               (n + 1) * 1000000
-                 // SUM(n + 1) OVER (PARTITION BY window_start) AS p_ppm
-        FROM wc)
-  JOIN baseline USING (bin)
-)
-SELECT window_start, CAST(SUM(n) AS BIGINT) AS n_events,
-       CAST(SUM(t) AS BIGINT) AS psi_pico,
-       CAST(SUM(t) > {DRIFT_PSI_ALERT_PICO} AS INT) AS drift_alert
-FROM terms GROUP BY window_start
+  LEFT JOIN base ON base.bin = s.bin
+), {_sql_psi(["window_start"])}
+SELECT window_start, n_a AS n_events, psi_pico,
+       CAST(psi_pico > {DRIFT_PSI_ALERT_PICO} AS INT) AS drift_alert
+FROM psi
 """
 
 

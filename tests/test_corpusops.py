@@ -382,7 +382,8 @@ def test_ann_recall_report_bounds(spark, sf_dir):
     """Recall is exact-k-normalized, in [0,100], and the report's hit
     counts reproduce the set intersection of the two top-k frames it
     composes (recall MAGNITUDE is pinned by the ANN recall tests at
-    sf0.01+; at sf0.001's 500 vectors the 16-bit buckets are sparse)."""
+    sf0.01+; at sf0.001's 500 vectors a 6-bit bucket holds few of a
+    query's exact neighbors)."""
     from spark_kafka_airflow_pipeline_spark.operators import similarity
     rows = similarity.ann_recall_report(spark, sf_dir).collect()
     assert len(rows) == similarity.N_QUERIES
@@ -396,6 +397,16 @@ def test_ann_recall_report_bounds(spark, sf_dir):
         assert r["ann_hits"] == sum(
             1 for q, _n in inter if q == r["query_id"])
         assert r["recall_pct"] == r["ann_hits"] * 100 // r["exact_k"]
+
+
+def test_ann_srp_topk_every_query_has_a_neighbor(spark, sf_dir):
+    """The SRP buckets are coarse enough that every query shares one
+    with at least one other vector (with 16 sign bits no query did, so
+    the query and its oracle both returned nothing)."""
+    from spark_kafka_airflow_pipeline_spark.operators import similarity
+    rows = similarity.ann_srp_topk(spark, sf_dir).collect()
+    assert ({r["query_id"] for r in rows}
+            == set(range(similarity.N_QUERIES)))
 
 
 def test_join_key_skew_histogram_shares(spark, sf_dir):
