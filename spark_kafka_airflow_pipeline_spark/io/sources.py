@@ -46,6 +46,18 @@ def read_source(spark: SparkSession, source: Source) -> DataFrame:
     return reader.load(source.path)
 
 
+def union_by_name(frames: Iterable[DataFrame]) -> DataFrame:
+    """Fold ``frames`` into one by column name; a column missing from a
+    frame reads as NULL there (the reference unions positionally,
+    ``:113``)."""
+    frames = list(frames)
+    if not frames:
+        raise ValueError("dataflow has no sources")
+    return reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
+    )
+
+
 def read_sources_union(spark: SparkSession, sources: Iterable[Source],
                        tag: str | None = None) -> DataFrame:
     """Read every source and fold into one frame (``:106-113``),
@@ -53,15 +65,11 @@ def read_sources_union(spark: SparkSession, sources: Iterable[Source],
 
     With ``tag``, each row also carries its source's name in a column
     of that name, so per-source frames can be sliced back out of the
-    union (the executor's one-query streaming drain)."""
-    frames = [read_source(spark, s) if tag is None else
-              read_source(spark, s).withColumn(tag, F.lit(s.name))
-              for s in sources]
-    if not frames:
-        raise ValueError("dataflow has no sources")
-    return reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True), frames
-    )
+    union."""
+    return union_by_name(
+        read_source(spark, s) if tag is None else
+        read_source(spark, s).withColumn(tag, F.lit(s.name))
+        for s in sources)
 
 
 def parse_kafka_records(records: DataFrame, value_schema: str) -> DataFrame:

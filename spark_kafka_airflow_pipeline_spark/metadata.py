@@ -16,8 +16,9 @@ to the frozen dataclass of its params. The reference has two
 
 Parsing is plain-Python driver-side work (the reference uses lift-json,
 ``PipelineProcessor.scala:158-166``); no Spark involvement. It is
-strict: unknown keys, missing, mistyped or out-of-range values and node
-references to no earlier node all fail, together, in one
+strict: unknown keys, missing, mistyped or out-of-range values, node
+references to no earlier node and validation rules that are unknown or
+have a bad argument (``RULE_ARGS``) all fail, together, in one
 :class:`SpecError`. Keys starting with ``_`` are comments.
 
 Documented deviation from the reference: ``params.input`` and
@@ -31,7 +32,7 @@ from __future__ import annotations
 import json
 from dataclasses import MISSING, dataclass, field, fields, is_dataclass
 from types import UnionType
-from typing import Any, get_args, get_origin, get_type_hints
+from typing import Any, Callable, get_args, get_origin, get_type_hints
 
 #: field metadata: the value names nodes, which must be built earlier
 _NODE = {"node": True}
@@ -75,16 +76,68 @@ class Source:
     streaming: bool = False
 
 
+def _range(arg: str) -> tuple[float, float]:
+    lo, _, hi = arg.partition(":")
+    return float(lo), float(hi)
+
+
+#: The validation rules: name -> None for a rule that takes no argument,
+#: or the parse of the text after ``name:`` into the rule's arguments
+#: (it raises ValueError on a bad one). ``parse_metadata`` checks every
+#: rule against this table; ``transforms.validate_fields`` compiles the
+#: arguments it returns.
+RULE_ARGS: dict[str, Callable[[str], tuple] | None] = {
+    # the reference's (PipelineProcessor.scala:58-59)
+    "notEmpty": None,
+    "notNull": None,
+    # engine extensions
+    "notBlank": None,
+    "positive": None,
+    "nonNegative": None,
+    "unique": None,                               # dataset-level
+    "matches": lambda arg: (arg,),                # matches:<regex>
+    "oneOf": lambda arg: tuple(arg.split("|")),   # oneOf:a|b|c
+    "inRange": _range,                            # inRange:<lo>:<hi>, inclusive
+    "minLength": lambda arg: (int(arg),),         # minLength:<n>
+    "maxLength": lambda arg: (int(arg),),         # maxLength:<n>
+}
+
+
+def rule_args(field: str, rule: str) -> tuple:
+    """The arguments of validation ``rule`` (syntax ``name`` or
+    ``name:arg``, see ``RULE_ARGS``) on ``field``; ValueError names a
+    rule that is unknown or has a bad argument."""
+    name, colon, arg = rule.partition(":")
+    parse = RULE_ARGS.get(name)
+    # a rule takes an argument exactly when it has a parse
+    if name not in RULE_ARGS or bool(colon) != (parse is not None):
+        known = [n if RULE_ARGS[n] is None else f"{n}:..." for n in RULE_ARGS]
+        raise ValueError(f"unknown validation rule {rule!r} for field "
+                         f"{field!r}; known: {known}")
+    try:
+        return parse(arg) if parse else ()
+    except ValueError:
+        raise ValueError(f"validation rule {rule!r} for field {field!r} "
+                         "has a bad argument") from None
+
+
 @dataclass(frozen=True)
 class Validation:
     """``{field, validations:[rule...]}`` (``Dataflow.scala:22-23``).
 
     Rules: ``notEmpty`` | ``notNull`` (``PipelineProcessor.scala:58-59``)
-    plus engine extensions registered in ``transforms.validate_fields``.
+    plus the engine extensions of ``RULE_ARGS``.
     """
 
     field: str
     validations: list[str]
+
+    def _problems(self):
+        for rule in self.validations:
+            try:
+                rule_args(self.field, rule)
+            except ValueError as err:
+                yield str(err)
 
 
 @dataclass(frozen=True)

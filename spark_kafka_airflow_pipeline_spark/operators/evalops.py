@@ -40,6 +40,34 @@ from spark_kafka_airflow_pipeline_spark.operators.base import (
 _CENTS = "CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT)"
 
 
+def _labelled_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The frame the classifier evaluations score: per customer
+    ``(c_custkey, score, is_pos)``, the account balance in floored
+    cents, and 1 when the customer ever placed a 1-URGENT order.
+    ``_SQL_LABELLED`` is its oracle CTE ``lab``."""
+    c = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
+    urgent = (table(spark, sf_dir, "orders")
+              .filter(F.col("o_orderpriority") == "1-URGENT")
+              .select("o_custkey").distinct())
+    return (c.join(urgent, c.c_custkey == urgent.o_custkey, "left")
+            .select("c_custkey",
+                    F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
+                    .alias("score"),
+                    F.expr("CASE WHEN o_custkey IS NULL THEN 0 ELSE 1 END")
+                    .alias("is_pos")))
+
+
+_SQL_LABELLED = """lab AS (
+  SELECT c_custkey,
+         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS score,
+         CASE WHEN u.o_custkey IS NULL THEN 0 ELSE 1 END AS is_pos
+  FROM customer
+  LEFT JOIN (SELECT DISTINCT o_custkey FROM orders
+             WHERE o_orderpriority = '1-URGENT') u
+    ON c_custkey = u.o_custkey
+)"""
+
+
 # ---------------------------------------------------------------------------
 # 1. Weight of Evidence / Information Value
 # ---------------------------------------------------------------------------
@@ -131,15 +159,7 @@ def score_auc_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_running_sum,
     )
 
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    urgent = (table(spark, sf_dir, "orders")
-              .filter(F.col("o_orderpriority") == "1-URGENT")
-              .select("o_custkey").distinct())
-    lab = (c.join(urgent, c.c_custkey == urgent.o_custkey, "left")
-           .select(F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-                   .alias("score"),
-                   F.expr("CASE WHEN o_custkey IS NULL THEN 0 ELSE 1 END")
-                   .alias("is_pos")))
+    lab = _labelled_scores(spark, sf_dir)
     lev = (lab.groupBy("score")
            .agg(F.sum("is_pos").alias("pos"),
                 F.sum(F.expr("1 - is_pos")).alias("neg")))
@@ -160,15 +180,8 @@ def score_auc_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.expr("2 * auc_ppm - 1000000").cast("bigint")))
 
 
-AUC_SQL = """
-WITH lab AS (
-  SELECT CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS score,
-         CASE WHEN u.o_custkey IS NULL THEN 0 ELSE 1 END AS is_pos
-  FROM customer
-  LEFT JOIN (SELECT DISTINCT o_custkey FROM orders
-             WHERE o_orderpriority = '1-URGENT') u
-    ON c_custkey = u.o_custkey
-), lev AS (
+AUC_SQL = f"""
+WITH {_SQL_LABELLED}, lev AS (
   SELECT score, SUM(is_pos) AS pos, SUM(1 - is_pos) AS neg
   FROM lab GROUP BY score
 ), run AS (
@@ -573,16 +586,7 @@ def score_lift_gain_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         global_row_number,
     )
 
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    urgent = (table(spark, sf_dir, "orders")
-              .filter(F.col("o_orderpriority") == "1-URGENT")
-              .select("o_custkey").distinct())
-    lab = (c.join(urgent, c.c_custkey == urgent.o_custkey, "left")
-           .select("c_custkey",
-                   F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-                   .alias("score"),
-                   F.expr("CASE WHEN o_custkey IS NULL THEN 0 ELSE 1 END")
-                   .alias("is_pos")))
+    lab = _labelled_scores(spark, sf_dir)
     ranked = global_row_number(lab, F.col("score").desc(),
                                F.col("c_custkey").asc(), out="rn")
     # totals from the materialized ranked frame (not `lab` — see the
@@ -610,16 +614,8 @@ def score_lift_gain_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("lift_ppm")))
 
 
-LIFT_SQL = """
-WITH lab AS (
-  SELECT c_custkey,
-         CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS score,
-         CASE WHEN u.o_custkey IS NULL THEN 0 ELSE 1 END AS is_pos
-  FROM customer
-  LEFT JOIN (SELECT DISTINCT o_custkey FROM orders
-             WHERE o_orderpriority = '1-URGENT') u
-    ON c_custkey = u.o_custkey
-), ranked AS (
+LIFT_SQL = f"""
+WITH {_SQL_LABELLED}, ranked AS (
   SELECT is_pos,
          NTILE(10) OVER (ORDER BY score DESC, c_custkey) AS decile
   FROM lab
@@ -660,15 +656,7 @@ def score_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one customer-sized aggregate after a broadcast of the 1-row
     (min, max, base-rate) frame; no windows, no data-sized joins beyond
     the one distinct-semijoin the label needs."""
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    urgent = (table(spark, sf_dir, "orders")
-              .filter(F.col("o_orderpriority") == "1-URGENT")
-              .select("o_custkey").distinct())
-    lab = (c.join(urgent, c.c_custkey == urgent.o_custkey, "left")
-           .select(F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-                   .alias("score"),
-                   F.expr("CASE WHEN o_custkey IS NULL THEN 0 ELSE 1 END")
-                   .alias("is_pos")))
+    lab = _labelled_scores(spark, sf_dir)
     rng = lab.agg(F.min("score").alias("mn"), F.max("score").alias("mx"),
                   F.count(F.lit(1)).alias("n_all"),
                   F.sum("is_pos").alias("p_all"))
@@ -687,14 +675,7 @@ def score_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CALIB_SQL = f"""
-WITH lab AS (
-  SELECT CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS score,
-         CASE WHEN u.o_custkey IS NULL THEN 0 ELSE 1 END AS is_pos
-  FROM customer
-  LEFT JOIN (SELECT DISTINCT o_custkey FROM orders
-             WHERE o_orderpriority = '1-URGENT') u
-    ON c_custkey = u.o_custkey
-), rng AS (
+WITH {_SQL_LABELLED}, rng AS (
   SELECT MIN(score) AS mn, MAX(score) AS mx,
          COUNT(*) AS n_all, SUM(is_pos) AS p_all
   FROM lab
@@ -998,15 +979,7 @@ def threshold_sweep_pr_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one customer-sized aggregate to the 10-bin frame (the
     calibration op's binning); every window runs on <= 10 rows."""
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    urgent = (table(spark, sf_dir, "orders")
-              .filter(F.col("o_orderpriority") == "1-URGENT")
-              .select("o_custkey").distinct())
-    lab = (c.join(urgent, c.c_custkey == urgent.o_custkey, "left")
-           .select(F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-                   .alias("score"),
-                   F.expr("CASE WHEN o_custkey IS NULL THEN 0 ELSE 1 END")
-                   .alias("is_pos")))
+    lab = _labelled_scores(spark, sf_dir)
     rng = lab.agg(F.min("score").alias("mn"), F.max("score").alias("mx"),
                   F.sum("is_pos").cast("bigint").alias("p_all"))
     per_bin = (lab.crossJoin(F.broadcast(rng))
@@ -1034,14 +1007,7 @@ def threshold_sweep_pr_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 PRF1_SQL = f"""
-WITH lab AS (
-  SELECT CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS score,
-         CASE WHEN u.o_custkey IS NULL THEN 0 ELSE 1 END AS is_pos
-  FROM customer
-  LEFT JOIN (SELECT DISTINCT o_custkey FROM orders
-             WHERE o_orderpriority = '1-URGENT') u
-    ON c_custkey = u.o_custkey
-), rng AS (
+WITH {_SQL_LABELLED}, rng AS (
   SELECT MIN(score) AS mn, MAX(score) AS mx, SUM(is_pos) AS p_all FROM lab
 ), per_bin AS (
   SELECT CAST((score - mn) * {CALIB_BINS} // (mx - mn + 1) AS INT) AS bin,
@@ -1265,15 +1231,7 @@ def isotonic_calibration_bins(spark: SparkSession,
     Scale: everything after the one customer-sized binning aggregate
     happens on the 10-row bin frame — the j x k x i enumeration is
     <= 10^3 rows of literals. The at-scale cost is the binning scan."""
-    c = table(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    urgent = (table(spark, sf_dir, "orders")
-              .filter(F.col("o_orderpriority") == "1-URGENT")
-              .select("o_custkey").distinct())
-    lab = (c.join(urgent, c.c_custkey == urgent.o_custkey, "left")
-           .select(F.expr("CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT)")
-                   .alias("score"),
-                   F.expr("CASE WHEN o_custkey IS NULL THEN 0 ELSE 1 END")
-                   .alias("is_pos")))
+    lab = _labelled_scores(spark, sf_dir)
     rng = lab.agg(F.min("score").alias("mn"), F.max("score").alias("mx"))
     bins = (lab.crossJoin(F.broadcast(rng))
             .withColumn("bin", F.expr(
@@ -1310,14 +1268,7 @@ def isotonic_calibration_bins(spark: SparkSession,
 
 
 ISO_SQL = f"""
-WITH lab AS (
-  SELECT CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) AS score,
-         CASE WHEN u.o_custkey IS NULL THEN 0 ELSE 1 END AS is_pos
-  FROM customer
-  LEFT JOIN (SELECT DISTINCT o_custkey FROM orders
-             WHERE o_orderpriority = '1-URGENT') u
-    ON c_custkey = u.o_custkey
-), rng AS (SELECT MIN(score) AS mn, MAX(score) AS mx FROM lab),
+WITH {_SQL_LABELLED}, rng AS (SELECT MIN(score) AS mn, MAX(score) AS mx FROM lab),
 bins AS (
   SELECT CAST((score - mn) * {CALIB_BINS} // (mx - mn + 1) AS INT) AS bin,
          COUNT(*) AS n_rows, SUM(is_pos) AS n_pos

@@ -3,6 +3,15 @@ sliding windows, gaps-and-islands sessionization. The streaming module
 runs the same shapes through Structured Streaming; these batch variants
 are the DuckDB-oracle-able twins (SURVEY.md §5, FIXTURES.md §3).
 
+Windows: ``_window_agg`` is the one windowed aggregate (group by a
+``window``/``session_window`` column and keys, render the window start
+as text). ``_tumbling_counts`` and ``_sliding_counts`` are functions of
+their input frame, so ``events_tumbling_window`` and
+``events_sliding_window`` run them on the events table and the
+streaming module's twins run the same functions on the watermarked
+event stream. ``_SQL_SESSION_ID`` is the one running-sum session id of
+the gaps-and-islands oracles.
+
 Drift: ``_psi`` is the one integer-pico PSI stage (``_sql_psi`` its
 oracle twin), used by ``events_drift_psi``, ``value_drift_continuous``
 and the streaming module's ``streaming_drift_monitor``.
@@ -15,7 +24,7 @@ natural partition key and there is no driver-side loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from spark_kafka_airflow_pipeline_spark.operators.base import (
@@ -88,17 +97,29 @@ GROUP BY 1, 2
 """
 
 
+def _window_agg(df: DataFrame, window: Column, keys: list[str | Column],
+                aggs: list[Column], start: str = "window_start") -> DataFrame:
+    """``aggs`` per (``window``, ``keys``) of ``df``: the window start
+    rendered as ``yyyy-MM-dd HH:mm:ss`` text in column ``start``, then
+    the keys and the aggregates, in that order. ``window`` is a
+    ``window`` or ``session_window`` column; on a stream the frame's
+    watermark bounds the aggregate's state."""
+    agg = df.groupBy(window.alias("w"), *keys).agg(*aggs)
+    return agg.select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
+                      .alias(start), *agg.columns[1:])
+
+
+def _tumbling_counts(e: DataFrame) -> DataFrame:
+    """Events and decimal value sums per 1-hour window and event type."""
+    return _window_agg(e, F.window("ts", "1 hour"), ["event_type"],
+                       [F.count(F.lit(1)).alias("n_events"),
+                        dsum(F.col("value"), "sum_value")])
+
+
 def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling window counts per event type (batch twin of the
     streaming window aggregation)."""
-    e = table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             dsum(F.col("value"), "sum_value"))
-        .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-                "event_type", "n_events", "sum_value")
-    )
+    return _tumbling_counts(table(spark, sf_dir, "events"))
 
 
 EVENTS_TUMBLING_SQL = f"""
@@ -110,17 +131,17 @@ GROUP BY 1, 2
 """
 
 
+def _sliding_counts(e: DataFrame) -> DataFrame:
+    """Events per 1-hour window sliding every 30 minutes."""
+    return _window_agg(e, F.window("ts", "1 hour", "30 minutes"), [],
+                       [F.count(F.lit(1)).alias("n_events")])
+
+
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 30 minutes — each event lands in two
     windows. Spark's window() generates them directly; the oracle unions
     the two aligned bucketings."""
-    e = table(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-                "n_events")
-    )
+    return _sliding_counts(table(spark, sf_dir, "events"))
 
 
 EVENTS_SLIDING_SQL = """
@@ -179,6 +200,12 @@ SELECT user_id, CAST(SUM(is_new) AS BIGINT) AS n_sessions, COUNT(*) AS n_events
 FROM flagged
 GROUP BY user_id
 """
+
+
+#: The session id of the gaps-and-islands oracles: the running sum of
+#: the ``is_new`` flags in each user's (ts, event_id) order.
+_SQL_SESSION_ID = """SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                           ROWS UNBOUNDED PRECEDING) AS sid"""
 
 
 def events_running_value(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -970,7 +997,7 @@ def session_dwell_bounce(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("mean_dwell_us")))
 
 
-SESSION_DWELL_SQL = """
+SESSION_DWELL_SQL = f"""
 WITH flagged AS (
   SELECT user_id, event_id, event_type, ts,
          CASE WHEN lag(ts) OVER w IS NULL
@@ -980,8 +1007,7 @@ WITH flagged AS (
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ), sess_rows AS (
   SELECT user_id, event_id, event_type, ts,
-         SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS sid
+         {_SQL_SESSION_ID}
   FROM flagged
 ), with_entry AS (
   SELECT *, FIRST_VALUE(event_type) OVER (
@@ -1312,8 +1338,7 @@ WITH flagged AS (
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ), sess AS (
   SELECT user_id, event_type,
-         SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS sid
+         {_SQL_SESSION_ID}
   FROM flagged
 ), st AS (
   SELECT DISTINCT user_id, sid, event_type FROM sess

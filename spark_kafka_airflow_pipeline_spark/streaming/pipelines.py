@@ -14,16 +14,29 @@ Scale: state is keyed on (window x event_type) / dedup keys, so state
 size is bounded by key cardinality, not stream length; watermarks bound
 state for sessionization.
 
+A streaming query is its batch twin run on the stream:
+``streaming_tumbling_window`` and ``streaming_sliding_window`` call
+``events._tumbling_counts`` and ``events._sliding_counts`` on the
+watermarked event stream, and every windowed aggregate here (the
+session windows, top-k, median and drift histogram too) goes through
+``events._window_agg``.
+
 Queries that differ only in a parameter share one builder:
 
 - ``_events_stream``: the event-table stream every query reads, under
-  the table-read confs (``session.pin_table_confs``).
+  the table-read confs (``session.pin_table_confs``); ``_watermarked``
+  adds the 1-hour watermark of the windowed queries.
 - ``_drain_scope``: the state-partition pin every drain runs under
   (``_drain_to_memory``, ``_exec_metadata_stream``,
   ``streaming_foreachbatch_upsert``), scoped with ``session.scoped_conf``.
 - ``_purchase_click_join``: the inner, left-outer and full-outer
   stream-stream joins, which differ only in the join type.
-- ``_session_counts``: the fixed-gap and dynamic-gap session windows.
+- ``_sql_purchase_click``: their oracles, the matched branch plus one
+  branch per side whose unmatched rows the join emits.
+- ``_session_counts``: the fixed-gap and dynamic-gap session windows;
+  ``_sql_sessions`` is the gaps-and-islands oracle of both and of
+  ``metadata_streaming_session``, given the query's ``flagged`` rule
+  (a fixed or a per-event gap).
 - ``_window_spec``: the metadata spec of the tumbling, sliding and
   session legs of ``metadata_streaming_*``, which differ only in the
   window expression and the output columns.
@@ -46,9 +59,14 @@ from spark_kafka_airflow_pipeline_spark.operators.base import (
 )
 from spark_kafka_airflow_pipeline_spark.operators.events import (
     EVENTS_SESSIONIZE_SQL,
+    EVENTS_SLIDING_SQL,
     EVENTS_TUMBLING_SQL,
+    _SQL_SESSION_ID,
     _psi,
+    _sliding_counts,
     _sql_psi,
+    _tumbling_counts,
+    _window_agg,
 )
 from spark_kafka_airflow_pipeline_spark.operators.relational import dsum, SQL_DSUM
 from spark_kafka_airflow_pipeline_spark.session import pin_table_confs, scoped_conf
@@ -98,51 +116,27 @@ def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     return spark.table(name)
 
 
+def _watermarked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The event stream with the 1-hour watermark that bounds the
+    windowed queries' state."""
+    return _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
+
+
 def streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling windows with a 1-hour watermark over the event
-    stream; matches the batch tumbling-window oracle because complete
+    stream: ``events.events_tumbling_window``'s aggregate run on the
+    stream. Matches the batch tumbling-window oracle because complete
     mode emits all windows once the source drains."""
-    stream = _events_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             dsum(F.col("value"), "sum_value"))
-        .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-                "event_type", "n_events", "sum_value")
-    )
-    return _drain_to_memory(agg, "complete")
+    return _drain_to_memory(_tumbling_counts(_watermarked(spark, sf_dir)),
+                            "complete")
 
 
 def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 30 minutes over the event stream
-    (each event lands in two windows) — the overlapping-window twin of
-    ``streaming_tumbling_window``; the oracle is the batch
-    two-bucketings union (``events.EVENTS_SLIDING_SQL`` shape)."""
-    stream = _events_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
-                .alias("window_start"), "n_events")
-    )
-    return _drain_to_memory(agg, "complete")
-
-
-STREAMING_SLIDING_SQL = """
-WITH starts AS (
-  SELECT make_timestamp(CAST(floor(epoch(ts) / 1800) * 1800 AS BIGINT) * 1000000)
-         AS window_start FROM events
-  UNION ALL
-  SELECT make_timestamp((CAST(floor(epoch(ts) / 1800) * 1800 AS BIGINT) - 1800) * 1000000)
-  FROM events
-)
-SELECT strftime(window_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-       COUNT(*) AS n_events
-FROM starts
-GROUP BY 1
-"""
+    (each event lands in two windows): ``events.events_sliding_window``'s
+    aggregate run on the stream, with the batch query's oracle."""
+    return _drain_to_memory(_sliding_counts(_watermarked(spark, sf_dir)),
+                            "complete")
 
 
 def streaming_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -216,38 +210,45 @@ def _session_counts(spark: SparkSession, sf_dir: str,
     ``gap`` (a duration string, or a Column for a per-event gap):
     ``(user_id, session_start, n_events)`` per session, drained in
     complete mode."""
-    agg = (
-        _events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id",
-                F.date_format("sw.start", "yyyy-MM-dd HH:mm:ss")
-                .alias("session_start"),
-                "n_events")
-    )
-    return _drain_to_memory(agg, "complete")
+    agg = _window_agg(_watermarked(spark, sf_dir),
+                      F.session_window("ts", gap), ["user_id"],
+                      [F.count(F.lit(1)).alias("n_events")], "session_start")
+    return _drain_to_memory(agg.select("user_id", "session_start", "n_events"),
+                            "complete")
 
 
-STREAMING_SESSION_WINDOW_SQL = """
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), islands AS (
+def _sql_sessions(flagged: str, having: str = "") -> str:
+    """The gaps-and-islands oracle of a session-window query:
+    ``(user_id, session_start, n_events)`` per session. ``flagged`` is
+    the CTE text up to a ``flagged`` CTE of ``(user_id, ts, event_id,
+    is_new)``, where ``is_new`` flags the event that opens a session;
+    ``having`` filters the sessions."""
+    having = having and f"\nHAVING {having}"
+    return f"""
+WITH {flagged}, islands AS (
   SELECT user_id, ts,
-         SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS sid
+         {_SQL_SESSION_ID}
   FROM flagged
 )
 SELECT user_id,
        strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
        COUNT(*) AS n_events
 FROM islands
-GROUP BY user_id, sid
+GROUP BY user_id, sid{having}
 """
+
+
+#: A 30-minute gap opens a session, in integer microseconds.
+_FIXED_GAP_FLAGGED = """flagged AS (
+  SELECT user_id, ts, event_id,
+         CASE WHEN lag(ts) OVER w IS NULL
+                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
+              THEN 1 ELSE 0 END AS is_new
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+)"""
+
+STREAMING_SESSION_WINDOW_SQL = _sql_sessions(_FIXED_GAP_FLAGGED)
 
 
 def streaming_session_window_dynamic(spark: SparkSession,
@@ -274,8 +275,7 @@ def streaming_session_window_dynamic(spark: SparkSession,
         "THEN '10 minutes' ELSE '30 minutes' END"))
 
 
-STREAMING_SESSION_DYNAMIC_SQL = """
-WITH ends AS (
+STREAMING_SESSION_DYNAMIC_SQL = _sql_sessions("""ends AS (
   SELECT user_id, ts, event_id,
          epoch_us(ts) + CASE WHEN event_type = 'purchase'
                              THEN 600000000 ELSE 1800000000 END AS end_us
@@ -291,18 +291,7 @@ WITH ends AS (
                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
               THEN 1 ELSE 0 END AS is_new
   FROM ends
-), islands AS (
-  SELECT user_id, ts,
-         SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS sid
-  FROM flagged
-)
-SELECT user_id,
-       strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       COUNT(*) AS n_events
-FROM islands
-GROUP BY user_id, sid
-"""
+)""")
 
 
 def streaming_topk_per_window(spark: SparkSession, sf_dir: str,
@@ -318,18 +307,10 @@ def streaming_topk_per_window(spark: SparkSession, sf_dir: str,
 
     Deterministic tie-break on event_type; oracled against the batch
     hourly-count rank."""
-    stream = _events_stream(spark, sf_dir)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
-                .alias("window_start"), "event_type", "n_events")
-    )
+    agg = _window_agg(_watermarked(spark, sf_dir), F.window("ts", "1 hour"),
+                      ["event_type"], [F.count(F.lit(1)).alias("n_events")])
     drained = _drain_to_memory(agg, "complete")
-    from pyspark.sql import Window as W
-
-    rk = W.partitionBy("window_start").orderBy(
+    rk = Window.partitionBy("window_start").orderBy(
         F.desc("n_events"), F.asc("event_type"))
     return (drained.withColumn("rank", F.row_number().over(rk))
             .filter(F.col("rank") <= k))
@@ -410,13 +391,43 @@ def _purchase_click_join(spark: SparkSession, sf_dir: str,
     return _drain_to_memory(joined, "append")
 
 
-STREAMING_STREAM_STREAM_JOIN_SQL = """
+#: A click in the hour before a purchase of the same user.
+_SQL_CLICK_BEFORE = ("c.user_id = p.user_id"
+                     " AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts")
+#: The rows a drained outer join emits for a side without a match: the
+#: NULL-extended row flushes once the final watermark ``w.wm`` proves
+#: no match can still arrive (see each outer join's docstring).
+_SQL_NO_CLICK = f"""
+SELECT p.event_id AS purchase_id, CAST(NULL AS BIGINT) AS click_id
+FROM p, w
+WHERE p.ts < w.wm
+  AND NOT EXISTS (SELECT 1 FROM c WHERE {_SQL_CLICK_BEFORE})"""
+_SQL_NO_PURCHASE = f"""
+SELECT CAST(NULL AS BIGINT) AS purchase_id, c.event_id AS click_id
+FROM c, w
+WHERE c.ts + INTERVAL 1 HOUR < w.wm
+  AND NOT EXISTS (SELECT 1 FROM p WHERE {_SQL_CLICK_BEFORE})"""
+
+
+def _sql_purchase_click(*unmatched: str) -> str:
+    """The oracle of a drained purchase-click join: the matched pairs,
+    plus each ``unmatched`` branch (``_SQL_NO_CLICK`` for a left join,
+    and ``_SQL_NO_PURCHASE`` too for a full join)."""
+    return f"""
+WITH p AS (
+  SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'
+), c AS (
+  SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'
+), w AS (
+  SELECT least((SELECT MAX(ts) FROM p), (SELECT MAX(ts) FROM c))
+         - INTERVAL 1 HOUR AS wm
+)
 SELECT p.event_id AS purchase_id, c.event_id AS click_id
-FROM events p JOIN events c
-  ON p.user_id = c.user_id
- AND p.event_type = 'purchase' AND c.event_type = 'click'
- AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts
-"""
+FROM p JOIN c ON {_SQL_CLICK_BEFORE}""" + "".join(
+        f"\nUNION ALL{branch}" for branch in unmatched) + "\n"
+
+
+STREAMING_STREAM_STREAM_JOIN_SQL = _sql_purchase_click()
 
 
 def streaming_stream_stream_left_join(spark: SparkSession,
@@ -442,28 +453,7 @@ def streaming_stream_stream_left_join(spark: SparkSession,
     return _purchase_click_join(spark, sf_dir, "left_outer")
 
 
-STREAMING_LEFT_JOIN_SQL = """
-WITH p AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'
-), c AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'
-), w AS (
-  SELECT least((SELECT MAX(ts) FROM p), (SELECT MAX(ts) FROM c))
-         - INTERVAL 1 HOUR AS wm
-)
-SELECT p.event_id AS purchase_id, c.event_id AS click_id
-FROM p JOIN c
-  ON p.user_id = c.user_id
- AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts
-UNION ALL
-SELECT p.event_id AS purchase_id, CAST(NULL AS BIGINT) AS click_id
-FROM p, w
-WHERE p.ts < w.wm
-  AND NOT EXISTS (
-    SELECT 1 FROM c
-    WHERE c.user_id = p.user_id
-      AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts)
-"""
+STREAMING_LEFT_JOIN_SQL = _sql_purchase_click(_SQL_NO_CLICK)
 
 
 def streaming_stream_stream_full_join(spark: SparkSession,
@@ -485,36 +475,7 @@ def streaming_stream_stream_full_join(spark: SparkSession,
     return _purchase_click_join(spark, sf_dir, "full_outer")
 
 
-STREAMING_FULL_JOIN_SQL = """
-WITH p AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'
-), c AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'
-), w AS (
-  SELECT least((SELECT MAX(ts) FROM p), (SELECT MAX(ts) FROM c))
-         - INTERVAL 1 HOUR AS wm
-)
-SELECT p.event_id AS purchase_id, c.event_id AS click_id
-FROM p JOIN c
-  ON p.user_id = c.user_id
- AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts
-UNION ALL
-SELECT p.event_id AS purchase_id, CAST(NULL AS BIGINT) AS click_id
-FROM p, w
-WHERE p.ts < w.wm
-  AND NOT EXISTS (
-    SELECT 1 FROM c
-    WHERE c.user_id = p.user_id
-      AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts)
-UNION ALL
-SELECT CAST(NULL AS BIGINT) AS purchase_id, c.event_id AS click_id
-FROM c, w
-WHERE c.ts + INTERVAL 1 HOUR < w.wm
-  AND NOT EXISTS (
-    SELECT 1 FROM p
-    WHERE p.user_id = c.user_id
-      AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts < p.ts)
-"""
+STREAMING_FULL_JOIN_SQL = _sql_purchase_click(_SQL_NO_CLICK, _SQL_NO_PURCHASE)
 
 
 def _session_count_kernel(key, pdf_iter, state):
@@ -721,19 +682,14 @@ def streaming_window_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same exactness trick as the batch twins: integer cents in, median*2
     out as BIGINT (a median of integers is at worst a .5 interpolation).
     Oracle = the batch median over the same hour buckets."""
-    stream = _events_stream(spark, sf_dir)
     c2 = (F.floor(F.col("value") * 100 + 0.5).cast("bigint") * 2)
-    agg = (
-        stream.withWatermark("ts", "1 hour")
-        .select(F.col("ts"), F.col("event_type"), c2.alias("c2"))
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.percentile(F.col("c2"), F.lit(0.5)).cast("bigint")
-             .alias("med2_cents"))
-        .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
-                .alias("window_start"),
-                "event_type", "n_events", "med2_cents")
-    )
+    agg = _window_agg(
+        _watermarked(spark, sf_dir).select(F.col("ts"), F.col("event_type"),
+                                           c2.alias("c2")),
+        F.window("ts", "1 hour"), ["event_type"],
+        [F.count(F.lit(1)).alias("n_events"),
+         F.percentile(F.col("c2"), F.lit(0.5)).cast("bigint")
+         .alias("med2_cents")])
     return _drain_to_memory(agg, "complete")
 
 
@@ -887,29 +843,11 @@ def metadata_streaming_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "session_start", ["user_id", "session_start", "n_events"])))
 
 
-METADATA_SESSION_SQL = """
-WITH wm AS (
-  SELECT MAX(epoch_us(ts)) - 3600000000 AS cutoff_us FROM events
-), flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000
-              THEN 1 ELSE 0 END AS is_new
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), islands AS (
-  SELECT user_id, ts,
-         SUM(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS sid
-  FROM flagged
-)
-SELECT user_id,
-       strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-       COUNT(*) AS n_events
-FROM islands, wm
-GROUP BY user_id, sid, cutoff_us
-HAVING MAX(epoch_us(ts)) + 1800000000 <= cutoff_us
-"""
+# a session is sealed once the final watermark (max ts - 1 hour) passes
+# its end (last event + the 30-minute gap)
+METADATA_SESSION_SQL = _sql_sessions(
+    _FIXED_GAP_FLAGGED, "MAX(epoch_us(ts)) + 1800000000 <= "
+    "(SELECT MAX(epoch_us(ts)) - 3600000000 FROM events)")
 
 
 METADATA_STREAMING_SQL = """
@@ -1048,7 +986,10 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str,
     import shutil
     import tempfile
 
-    from spark_kafka_airflow_pipeline_spark.io.sinks import upsert_sink
+    from spark_kafka_airflow_pipeline_spark.io.sinks import (
+        start_foreach_batch,
+        upsert_sink,
+    )
 
     src = table(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value")
@@ -1067,13 +1008,10 @@ def streaming_foreachbatch_upsert(spark: SparkSession, sf_dir: str,
 
     try:
         with _drain_scope(spark):
-            (spark.readStream.schema(src.schema)
-             .option("maxFilesPerTrigger", "1")
-             .parquet(f"{root}/in")
-             .writeStream.foreachBatch(merge)
-             .option("checkpointLocation", f"{root}/ckpt")
-             .trigger(availableNow=True)
-             .start().awaitTermination())
+            start_foreach_batch(
+                spark.readStream.schema(src.schema)
+                .option("maxFilesPerTrigger", "1").parquet(f"{root}/in"),
+                merge, f"{root}/ckpt", available_now=True).awaitTermination()
         if not Path(state_dir).exists():
             # empty source -> zero micro-batches -> no state was ever
             # written (module empty-input invariant: empty in, empty
@@ -1135,13 +1073,11 @@ def drift_binned_stream(stream: DataFrame) -> DataFrame:
     (1-hour window x value-bin) counting, append-mode emission as
     windows seal. Factored out so the restart-recovery test can run it
     against its own file source + checkpointed file sink."""
-    return (stream.withWatermark("ts", "1 hour")
-            .groupBy(F.window("ts", "1 hour").alias("w"),
-                     F.expr(f"CAST(LEAST(floor(value / 100), "
-                            f"{DRIFT_BINS - 1}) AS INT)").alias("bin"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.date_format("w.start", "yyyy-MM-dd HH:mm:ss")
-                    .alias("window_start"), "bin", "n"))
+    return _window_agg(stream.withWatermark("ts", "1 hour"),
+                       F.window("ts", "1 hour"),
+                       [F.expr(f"CAST(LEAST(floor(value / 100), "
+                               f"{DRIFT_BINS - 1}) AS INT)").alias("bin")],
+                       [F.count(F.lit(1)).alias("n")])
 
 
 def drift_psi_from_hist(spark: SparkSession, sf_dir: str,
@@ -1245,7 +1181,7 @@ ORACLES: dict[str, str] = {
     "streaming_python_source": _py_datasource_sql(),
     "streaming_window_median": STREAMING_WINDOW_MEDIAN_SQL,
     "streaming_tumbling_window": EVENTS_TUMBLING_SQL,
-    "streaming_sliding_window": STREAMING_SLIDING_SQL,
+    "streaming_sliding_window": EVENTS_SLIDING_SQL,
     "streaming_dedup_keys": STREAMING_DEDUP_SQL,
     "streaming_stateful_sessions": EVENTS_SESSIONIZE_SQL,
     "streaming_static_join": STREAMING_STATIC_JOIN_SQL,

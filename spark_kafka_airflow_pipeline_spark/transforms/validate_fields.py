@@ -32,20 +32,9 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from spark_kafka_airflow_pipeline_spark.metadata import Validation
+from spark_kafka_airflow_pipeline_spark.metadata import Validation, rule_args
 
 ERROR_COLUMN = "arraycoderrorbyfield"  # reference name, PipelineProcessor.scala:74
-
-# rule name -> (field -> pass-predicate Column); mirrors the match at
-# PipelineProcessor.scala:58-59, extended with engine rules.
-_RULES: dict[str, object] = {
-    "notEmpty": lambda f: F.col(f) != F.lit(""),
-    "notNull": lambda f: F.col(f).isNotNull(),
-    # engine extensions
-    "notBlank": lambda f: F.trim(F.col(f)) != F.lit(""),
-    "positive": lambda f: F.col(f) > F.lit(0),
-    "nonNegative": lambda f: F.col(f) >= F.lit(0),
-}
 
 
 def _unique_pred(f: str) -> Column:
@@ -58,22 +47,23 @@ def _unique_pred(f: str) -> Column:
     return F.count(F.lit(1)).over(Window.partitionBy(f)) == 1
 
 
-# parameterized rules, metadata syntax "name:arg[:arg]" (keeps the
-# reference's plain-string rule lists, Dataflow.scala:22-26)
-def _param_rule(field: str, rule: str) -> Column | None:
-    name, _, arg = rule.partition(":")
-    if name == "matches":          # matches:<regex>
-        return F.col(field).rlike(arg)
-    if name == "oneOf":            # oneOf:a|b|c
-        return F.col(field).isin(*arg.split("|"))
-    if name == "inRange":          # inRange:<lo>:<hi> (inclusive)
-        lo, _, hi = arg.partition(":")
-        return F.col(field).between(float(lo), float(hi))
-    if name == "minLength":        # minLength:<n>
-        return F.length(F.col(field)) >= int(arg)
-    if name == "maxLength":        # maxLength:<n>
-        return F.length(F.col(field)) <= int(arg)
-    return None
+# rule name -> (field, *arguments) -> pass-predicate Column, for each
+# rule of ``metadata.RULE_ARGS`` (which parses the arguments); mirrors
+# the match at PipelineProcessor.scala:58-59, extended with engine rules.
+_RULES: dict[str, object] = {
+    "notEmpty": lambda f: F.col(f) != F.lit(""),
+    "notNull": lambda f: F.col(f).isNotNull(),
+    # engine extensions
+    "notBlank": lambda f: F.trim(F.col(f)) != F.lit(""),
+    "positive": lambda f: F.col(f) > F.lit(0),
+    "nonNegative": lambda f: F.col(f) >= F.lit(0),
+    "unique": _unique_pred,
+    "matches": lambda f, regex: F.col(f).rlike(regex),
+    "oneOf": lambda f, *values: F.col(f).isin(*values),
+    "inRange": lambda f, lo, hi: F.col(f).between(lo, hi),
+    "minLength": lambda f, n: F.length(F.col(f)) >= n,
+    "maxLength": lambda f, n: F.length(F.col(f)) <= n,
+}
 
 
 def compile_rule(field: str, rule: str) -> tuple[Column, str]:
@@ -82,16 +72,8 @@ def compile_rule(field: str, rule: str) -> tuple[Column, str]:
     Error codes keep the reference's ``field-rule`` format; for
     parameterized rules the full rule string (args included) is the
     code, so a row failing ``age-inRange:0:120`` names its bound."""
-    if rule == "unique":
-        return _unique_pred(field), f"{field}-unique"
-    if rule in _RULES:
-        return _RULES[rule](field), f"{field}-{rule}"
-    if ":" in rule:
-        pred = _param_rule(field, rule)
-        if pred is not None:
-            return pred, f"{field}-{rule}"
-    raise ValueError(f"unknown validation rule {rule!r} for field {field!r}; "
-                     f"known: {sorted(_RULES) + ['unique', 'matches:<re>', 'oneOf:a|b', 'inRange:lo:hi', 'minLength:n', 'maxLength:n']}")
+    args = rule_args(field, rule)
+    return _RULES[rule.partition(":")[0]](field, *args), f"{field}-{rule}"
 
 
 def validate_fields_split(

@@ -1,10 +1,14 @@
 """One implementation per numeric convention: the fixed-point log is
 ``operators.base.ln_micros`` everywhere, it gives the same BIGINTs in
 Spark and DuckDB, and the oracles parse md5 hex with the ``'0x'`` cast
-only."""
+only. One copy of each query shape: the windowed aggregate, the
+session-id running sum, the purchase-click matched branch and the
+classifier-evaluation label are each written once, and only the sink
+layer and the memory drain start a stream."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -116,3 +120,47 @@ def test_ln_micros_same_in_spark_and_duckdb(spark):
     assert got_spark == got_duck
     assert dict(zip(pairs, got_spark))[(2, 1)] == 693147
     assert dict(zip(pairs, got_spark))[(1, 10 ** 6)] == -13815511
+
+
+#: (text of a shape with one implementation, the module of its one
+#: copy, whether to match it after ``_flatten`` so that a copy split
+#: over lines or string literals still counts). The window start is
+#: matched as written: the metadata specs spell it as config text.
+_ONE_COPY = [
+    ('date_format("w.start"', "operators/events.py", False),  # _window_agg
+    ("SUM(is_new) OVER", "operators/events.py", True),  # _SQL_SESSION_ID
+    ("SELECT p.event_id AS purchase_id, c.event_id AS click_id",
+     "streaming/pipelines.py", True),  # _sql_purchase_click
+    ("THEN 0 ELSE 1 END AS is_pos", "operators/evalops.py", True),
+    ('F.expr("CASE WHEN o_custkey IS NULL THEN 0 ELSE 1 END").alias("is_pos")',
+     "operators/evalops.py", True),  # _labelled_scores
+]
+
+
+def _stream_starts():
+    """``(file, top-level definition)`` of every ``.writeStream``
+    attribute in the package's code (docstrings do not count)."""
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        for top in ast.parse(path.read_text()).body:
+            if any(isinstance(node, ast.Attribute)
+                   and node.attr == "writeStream" for node in ast.walk(top)):
+                yield rel, getattr(top, "name", None)
+
+
+def test_one_copy_of_each_query_shape():
+    """Each shape of ``_ONE_COPY`` is spelled out once, in its module,
+    and only ``io/sinks.py`` and ``_drain_to_memory`` call
+    ``writeStream``."""
+    copies = {text: [] for text, _, _ in _ONE_COPY}
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        raw = path.read_text()
+        flat = _flatten(raw)[0]
+        for text, _, flatten in _ONE_COPY:
+            n = (flat.count(_flatten(text)[0]) if flatten
+                 else raw.count(text))
+            copies[text] += [rel] * n
+    assert copies == {text: [rel] for text, rel, _ in _ONE_COPY}
+    assert [site for site in _stream_starts() if site[0] != "io/sinks.py"] \
+        == [("streaming/pipelines.py", "_drain_to_memory")]

@@ -142,6 +142,16 @@ def test_unknown_rule_names_known_rules(spark):
         validate_fields(df, [Validation("f", ["nonsense"])])
 
 
+def test_every_rule_has_a_compiler():
+    """Every rule the parser accepts compiles to a predicate."""
+    from spark_kafka_airflow_pipeline_spark.metadata import RULE_ARGS
+    from spark_kafka_airflow_pipeline_spark.transforms.validate_fields import (
+        _RULES,
+    )
+
+    assert _RULES.keys() == RULE_ARGS.keys()
+
+
 def test_add_fields_expression_surface(fixture_df):
     out = add_fields(fixture_df, [
         AddField("dt", "current_timestamp"),
@@ -223,6 +233,28 @@ def test_union_by_name_with_schema_drift(spark, tmp_path):
     rows = {r["name"]: r.asDict() for r in nodes["__sources__"].collect()}
     assert rows["n1"]["office"] == "X" and rows["n1"].get("age") is None
     assert rows["n2"]["office"] == "Y" and rows["n2"]["age"] == 9
+
+
+def test_build_nodes_reads_each_source_once(spark, tmp_path):
+    """A JSON source without a schema costs one inference job per read,
+    and the sources' union is built from the frames already read: two
+    such sources run two jobs."""
+    sources = []
+    for name in ("sa", "sb"):
+        path = tmp_path / f"{name}.json"
+        path.write_text(json.dumps({"name": name}))
+        sources.append({"name": name, "path": str(path), "format": "json"})
+    meta = parse_metadata({"dataflows": [{
+        "name": "once", "sources": sources,
+        "transformations": [], "sinks": []}]})
+    sc = spark.sparkContext
+    sc.setJobGroup("read-each-source-once", "build_nodes")
+    try:
+        PipelineExecutor(spark).build_nodes(meta.dataflows[0])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("read-each-source-once")
+    assert len(jobs) == 2
 
 
 def test_kafka_serialization_format(spark):
@@ -1076,6 +1108,11 @@ def _sink(node, **keys):
     return {"input": node, "name": "out", "paths": ["/out"], **keys}
 
 
+def _rules(*rules):
+    return _step("v", "validate_fields",
+                 validations=[{"field": "f", "validations": list(rules)}])
+
+
 _COUNT = [{"name": "n", "function": "count(1)"}]
 
 
@@ -1108,11 +1145,19 @@ _COUNT = [{"name": "n", "function": "count(1)"}]
     # used to surface as a KeyError inside the first write
     (_spec(sinks=[_sink("s", format="upsert")]),
      "an upsert sink needs option 'keys'"),
+    # bad rules used to fail in the executor, one at a time, after the
+    # sources were read
+    (_spec([_rules("notEmty")]), "unknown validation rule 'notEmty'"),
+    (_spec([_rules("inRange:0:abc")]),
+     "rule 'inRange:0:abc' for field 'f' has a bad argument"),
+    (_spec([_rules("minLength:x")]),
+     "rule 'minLength:x' for field 'f' has a bad argument"),
 ], ids=["groupby_typo", "hash_family_case", "savemode_typo",
         "unknown_save_mode", "unknown_type", "string_n", "negative_limit",
         "zero_topk", "dangling_sink_input", "forward_input",
         "forward_split_input", "dangling_join_right",
-        "dangling_union_inputs", "upsert_without_options"])
+        "dangling_union_inputs", "upsert_without_options", "misspelt_rule",
+        "non_numeric_range", "non_integer_length"])
 def test_parse_rejects_malformed_spec(spec, problem):
     """Each malformed spec fails in ``parse_metadata`` itself, before any
     Spark session or job, with a SpecError naming the problem."""
